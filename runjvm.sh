@@ -1,7 +1,14 @@
 #!/bin/bash
 # Run a graft main with the same JVM options sbt's forked run uses,
 # without taking the sbt build lock (lets long Verify/ScaleUp runs
-# overlap with compilation).
+# overlap with compilation). Classes come from the checkout holding this
+# script; Spark's jars from $SPARK_HOME, else from the installation whose
+# spark-submit is on PATH.
+HERE="$(cd "$(dirname "${BASH_SOURCE[0]}")" && pwd)"
+if [ -z "$SPARK_HOME" ]; then
+  SUBMIT="$(command -v spark-submit)" || { echo "runjvm.sh: set SPARK_HOME" >&2; exit 1; }
+  SPARK_HOME="$(dirname "$(dirname "$(readlink -f "$SUBMIT")")")"
+fi
 OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
@@ -12,4 +19,4 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
 done
 exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$HERE/target/scala-2.13/classes:$SPARK_HOME/jars/*" "$@"

@@ -35,7 +35,7 @@ RUN_SBT = os.environ.get("SKIP_SBT", "") != "1"
 if RUN_SBT:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=5400)
+        cwd=os.path.dirname(os.path.abspath(__file__)), capture_output=True, text=True, timeout=5400)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-15:])
     if r.returncode != 0:
         print("VERIFY FAILED rc=", r.returncode, "\n", tail)

@@ -5,18 +5,22 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Model
+import graft.functions.RangeKernel
 
 /** `*_over_time` range-vector aggregations (avg/min/max/sum/count over the
   * samples in `(t - range, t]` per grid instant) — the PromQL range-function
   * family the reference does not implement but every Prometheus user leans
   * on; added as a natural extension with sample (not interpolated) semantics.
   *
-  * Distributed shape: instead of joining every grid instant against every
+  * avg/min/max/sum/count/last_over_time are [[graft.functions.RangeKernel]]s
+  * over the per-series arrays (see [[Resample]]): one partial-aggregated
+  * fold, then one map-only pass per series. The other functions keep the
+  * explode shape: instead of joining every grid instant against every
   * sample (a range join that degenerates at scale), each SAMPLE is exploded
   * to the grid windows it falls into — at most `ceil(range/step)` window
   * indices per sample, a bounded constant — and a single partial-aggregated
-  * `groupBy(series, window)` folds them. Shuffle key = (series, grid
-  * instant); grid instants with no samples produce no row.
+  * `groupBy(series, window)` folds them. Grid instants with no samples
+  * produce no row on either path.
   */
 object RangeAgg {
 
@@ -44,13 +48,13 @@ object RangeAgg {
   private[operators] def gridTs(grid: Grid): Column =
     lit(grid.start) + col("__k__").cast(DoubleType) * lit(grid.step)
 
-  def overTime(samples: DataFrame, grid: Grid, overRange: Double,
-               aggFn: Column => Column, outName: String = Model.ValueCol): DataFrame =
+  private def overTime(samples: DataFrame, grid: Grid, overRange: Double,
+                       aggFn: Column => Column): DataFrame =
     windowExplode(samples, grid, overRange)
       .groupBy(col(Model.SkeyCol), col("__k__"))
-      .agg(first(Model.LabelsCol).as(Model.LabelsCol), aggFn(col(Model.ValueCol)).as(outName))
+      .agg(first(Model.LabelsCol).as(Model.LabelsCol), aggFn(col(Model.ValueCol)).as(Model.ValueCol))
       .select(col(Model.SkeyCol), col(Model.LabelsCol),
-        gridTs(grid).as(Model.TsCol), col(outName))
+        gridTs(grid).as(Model.TsCol), col(Model.ValueCol))
 
   /** Least-squares regression over the window's samples, shared by `deriv`
     * and `predict_linear`. BOTH axes are centered before the sums:
@@ -118,7 +122,7 @@ object RangeAgg {
 
   /** `last_over_time` / `present_over_time`. */
   def lastOverTime(samples: DataFrame, grid: Grid, overRange: Double): DataFrame =
-    overTime(samples, grid, overRange, v => max_by(v, col(Model.TsCol)))
+    Resample.kernel(samples, grid, RangeKernel.LastOverTime, overRange, 0.0)
   def presentOverTime(samples: DataFrame, grid: Grid, overRange: Double): DataFrame =
     overTime(samples, grid, overRange, _ => lit(1.0))
 
@@ -227,13 +231,13 @@ object RangeAgg {
     pairCounts(samples, grid, overRange, (prev, cur) => cur < prev)
 
   def avgOverTime(samples: DataFrame, grid: Grid, overRange: Double): DataFrame =
-    overTime(samples, grid, overRange, avg)
+    Resample.kernel(samples, grid, RangeKernel.AvgOverTime, overRange, 0.0)
   def minOverTime(samples: DataFrame, grid: Grid, overRange: Double): DataFrame =
-    overTime(samples, grid, overRange, min)
+    Resample.kernel(samples, grid, RangeKernel.MinOverTime, overRange, 0.0)
   def maxOverTime(samples: DataFrame, grid: Grid, overRange: Double): DataFrame =
-    overTime(samples, grid, overRange, max)
+    Resample.kernel(samples, grid, RangeKernel.MaxOverTime, overRange, 0.0)
   def sumOverTime(samples: DataFrame, grid: Grid, overRange: Double): DataFrame =
-    overTime(samples, grid, overRange, sum)
+    Resample.kernel(samples, grid, RangeKernel.SumOverTime, overRange, 0.0)
   def countOverTime(samples: DataFrame, grid: Grid, overRange: Double): DataFrame =
-    overTime(samples, grid, overRange, count)
+    Resample.kernel(samples, grid, RangeKernel.CountOverTime, overRange, 0.0)
 }

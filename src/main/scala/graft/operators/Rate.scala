@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Model
+import graft.functions.RangeKernel
 
 /** `rate()` and `irate()` over range vectors.
   *
@@ -18,41 +19,30 @@ import graft.Model
   *   - else `(interp(t) - v[i-1]) / (t - ts[i-1])`
   * negative deltas are rejected → NaN.
   *
-  * Both are a single probe-bracketing window pass (see [[Resample.bracket]])
-  * followed by pure column arithmetic; rate folds its two probes per grid
-  * instant with one partial-aggregated groupBy.
+  * All four are [[graft.functions.RangeKernel]]s over the per-series
+  * arrays (see [[Resample]]): one partial-aggregated fold, then a binary
+  * search per grid instant.
   */
 object Rate {
 
-  /** Shared two-probe endpoint machinery for rate/increase/delta. Both probe
-    * kinds ride the same inline bracket pass; the fold-by-instant groupBy
-    * reuses the skey partitioning (no extra exchange). */
-  private def endpoints(samples: DataFrame, grid: Grid, overRange: Double,
-                        offset: Double)(value: (Column, Column) => Column): DataFrame = {
-    val br = Resample.bracketInline(samples, grid,
-        Seq(("h", offset), ("l", offset + overRange)), withLag = false)
-      .withColumn("iv", Resample.interpolated(col("probe_ts"), col("prev"), col("next")))
-    br.groupBy(Model.SkeyCol, "out_ts")
-      .agg(first(Model.LabelsCol).as(Model.LabelsCol),
-        max(when(col("kind") === "h", col("iv"))).as("iv_hi"),
-        max(when(col("kind") === "l", col("iv"))).as("iv_lo"))
-      .select(col(Model.SkeyCol), col(Model.LabelsCol), col("out_ts").as(Model.TsCol),
-        value(col("iv_hi"), col("iv_lo")).as(Model.ValueCol))
-  }
-
   def rate(samples: DataFrame, grid: Grid, overRange: Double, offset: Double = 0.0): DataFrame =
-    endpoints(samples, grid, overRange, offset)((hi, lo) => (hi - lo) / lit(overRange))
+    Resample.kernel(samples, grid, RangeKernel.Rate, overRange, offset)
 
   /** `increase()` = rate * range — natural PromQL extension with the same
     * interpolated-endpoint semantics as the reference's rate. */
   def increase(samples: DataFrame, grid: Grid, overRange: Double, offset: Double = 0.0): DataFrame =
-    endpoints(samples, grid, overRange, offset)((hi, lo) => hi - lo)
+    Resample.kernel(samples, grid, RangeKernel.Increase, overRange, offset)
 
   /** `delta()` — identical endpoint difference (the reference has no counter
     * reset logic, so delta and increase coincide; kept as an alias for
     * PromQL-compatible spelling). */
   def delta(samples: DataFrame, grid: Grid, overRange: Double, offset: Double = 0.0): DataFrame =
     increase(samples, grid, overRange, offset)
+
+  /** `irate()`; the range only marks the argument as a range vector — the
+    * reference's irate math (timeseries.rs:116-161) never reads it. */
+  def irate(samples: DataFrame, grid: Grid, overRange: Double, offset: Double = 0.0): DataFrame =
+    Resample.kernel(samples, grid, RangeKernel.Irate, overRange, offset)
 
   /** Opt-in Prometheus-style counter-reset semantics (`rate_resets` /
     * `increase_resets` in the PromQL surface): every real Prometheus
@@ -126,33 +116,5 @@ object Rate {
     grouped.select(col(Model.SkeyCol), col(Model.LabelsCol),
       RangeAgg.gridTs(grid).as(Model.TsCol),
       (dv / (l("t") - p("t"))).as(Model.ValueCol))
-  }
-
-  def irate(samples: DataFrame, grid: Grid, overRange: Double, offset: Double = 0.0): DataFrame = {
-    // overRange is unused by the reference's irate math (timeseries.rs:116-161)
-    // beyond requiring a range-vector selector; kept for API parity.
-    val _ = overRange
-    val br = Resample.bracketInline(samples, grid, Seq(("i", offset)), withLag = true)
-
-    val t = col("probe_ts")
-    val prev = col("prev")
-    val next = col("next")
-    val nan = lit(Double.NaN)
-
-    val interpAt =
-      ((t - prev("ts")) * next("v") + (next("ts") - t) * prev("v")) / (next("ts") - prev("ts"))
-
-    val noPriorDv = next("v") - prev("v")
-    val noPrior = noPriorDv / (next("ts") - prev("ts"))
-    val dv = interpAt - prev("p_value")
-    val dt = t - prev("p_ts")
-
-    val value =
-      when(prev.isNull || next.isNull, nan) // Below / Above / NotFound → NaN
-        .when(prev("p_ts").isNull, when(noPriorDv < 0, nan).otherwise(noPrior))
-        .otherwise(when(dv < 0, nan).otherwise(dv / dt))
-
-    br.select(col(Model.SkeyCol), col(Model.LabelsCol),
-      col("out_ts").as(Model.TsCol), value.as(Model.ValueCol))
   }
 }

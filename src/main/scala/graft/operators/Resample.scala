@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, GraftExpr}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Model
+import graft.functions.RangeKernel
 
 /** The regular output grid of a range query (reference timevectors.rs:165-201).
   * `length = max(1, floor((end - start + step) / step))`, points
@@ -21,165 +21,46 @@ final case class Grid(start: Double, end: Double, step: Double) {
     transform(sequence(lit(0), lit(length - 1)), i => lit(start) + i.cast(DoubleType) * lit(step))
 }
 
-/** Resampling onto a regular grid with linear interpolation, plus the shared
-  * probe-bracketing machinery used by rate/irate.
+/** Resampling onto a regular grid with linear interpolation, plus the
+  * series-as-arrays evaluation shared by rate/irate and the
+  * `*_over_time` kernels.
   *
   * Interpolation semantics (reference timeseries.rs:164-191):
   * before-first → first value; after-last → last value; otherwise linear
-  * between the bracketing samples; NaN when the series is empty.
+  * between the bracketing samples.
   *
-  * Spark-first design: instead of per-series binary search, we union the
-  * sample rows with one probe row per (series, grid instant) and resolve each
-  * probe's bracketing samples with a single
-  * `Window.partitionBy(skey).orderBy(t)` pass using `last/first(ignoreNulls)`.
-  * One shuffle on the series key, whole-stage-codegen arithmetic, no UDFs, no
-  * driver-side loops — the same plan shape works at 100 TB because samples of
-  * a series are co-partitioned and each partition streams in time order.
+  * Evaluation model (the reference's): the selected samples fold into ONE
+  * `(skey, labels, ts[], v[])` row per series — a single partial-aggregated
+  * groupBy, so on a series-clustered collection (see
+  * [[graft.sources.TsIngest]]) each series collapses map-side and only one
+  * row per series crosses the exchange. A native codegen'd
+  * [[RangeKernel]] then evaluates the function per series with a binary
+  * search per grid instant, and `inline` explodes the result back to the
+  * long (skey, labels, ts, value) shape every downstream operator takes.
+  * No probe rows, no window sorts.
   */
 object Resample {
 
-  /** Sample struct carried through the probe-bracketing window.
-    * p_ts/p_value are the *previous* sample of the same series (needed by
-    * irate); populated only when `withLag`. */
-  private val svType = new StructType()
-    .add("ts", DoubleType).add("v", DoubleType)
-    .add("p_ts", DoubleType).add("p_value", DoubleType)
+  /** Fold samples (skey, labels, ts, value) into one row per series:
+    * (skey, labels, ts: array<double>, v: array<double>), ts ascending. */
+  private[operators] def series(samples: DataFrame): DataFrame =
+    samples.groupBy(Model.SkeyCol)
+      .agg(first(Model.LabelsCol).as(Model.LabelsCol),
+        sort_array(collect_list(struct(col(Model.TsCol), col(Model.ValueCol)))).as("__s__"))
+      .select(col(Model.SkeyCol), col(Model.LabelsCol),
+        col(s"__s__.${Model.TsCol}").as(Model.TsCol), col(s"__s__.${Model.ValueCol}").as("v"))
 
-  /** For each probe row, find `prev` = last sample with ts <= probe_ts and
-    * `next` = first sample with ts > probe_ts (strictly), mirroring
-    * `VecTimeRange::locate` (timevectors.rs:110-148).
-    *
-    * @param samples (skey, ts, value) — deduped, one row per (series, ts)
-    * @param probes  (skey, labels, out_ts, kind, probe_ts)
-    * @return probes + (prev, next) structs
-    */
-  def bracket(samples: DataFrame, probes: DataFrame, withLag: Boolean): DataFrame = {
-    val lagged =
-      if (withLag) {
-        val w = Window.partitionBy(Model.SkeyCol).orderBy(Model.TsCol)
-        samples.withColumn("p_ts", lag(Model.TsCol, 1).over(w))
-          .withColumn("p_value", lag(Model.ValueCol, 1).over(w))
-      } else
-        samples.withColumn("p_ts", lit(null).cast(DoubleType))
-          .withColumn("p_value", lit(null).cast(DoubleType))
-
-    val sampleRows = lagged.select(
-      col(Model.SkeyCol),
-      col(Model.TsCol).as("t"),
-      lit(0).as("ord"), // samples sort before probes at equal t: prev is inclusive, next strict
-      struct(col(Model.TsCol).as("ts"), col(Model.ValueCol).as("v"),
-        col("p_ts"), col("p_value")).as("sv"),
-      lit(null).cast(MapType(StringType, StringType)).as(Model.LabelsCol),
-      lit(null).cast(DoubleType).as("out_ts"),
-      lit(null).cast(StringType).as("kind"))
-
-    val probeRows = probes.select(
-      col(Model.SkeyCol), col("probe_ts").as("t"), lit(1).as("ord"),
-      lit(null).cast(svType).as("sv"),
-      col(Model.LabelsCol), col("out_ts"), col("kind"))
-
-    // Both window frames are RUNNING frames (upper bound fixed relative to
-    // the partition start) — Spark evaluates them incrementally. A naive
-    // `first(..., ignoreNulls) over (1, unboundedFollowing)` is a shrinking
-    // frame that Spark re-evaluates per row: O(n²) per partition (observed
-    // 137 s vs 4 s on a 100k-sample series). The "next sample strictly after
-    // t" is instead a running `last` over DESCENDING (t, ord) with the
-    // current row excluded.
-    val wAsc = Window.partitionBy(Model.SkeyCol).orderBy(col("t"), col("ord"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wDesc = Window.partitionBy(Model.SkeyCol).orderBy(col("t").desc, col("ord").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val unioned = sampleRows.unionByName(probeRows)
-      .withColumn("prev", last(col("sv"), ignoreNulls = true).over(wAsc))
-      .withColumn("next", last(col("sv"), ignoreNulls = true).over(wDesc))
-
-    unioned.filter(col("ord") === 1)
-      .select(col(Model.SkeyCol), col(Model.LabelsCol), col("out_ts"), col("kind"),
-        col("t").as("probe_ts"), col("prev"), col("next"))
-  }
-
-  /** `interpolated_at` (timeseries.rs:164-191) as a pure column expression. */
-  def interpolated(t: Column, prev: Column, next: Column): Column = {
-    val nan = lit(Double.NaN)
-    when(prev.isNull && next.isNull, nan)
-      .when(prev.isNull, next("v"))
-      .when(next.isNull, prev("v"))
-      .otherwise(
-        ((t - prev("ts")) * next("v") + (next("ts") - t) * prev("v")) / (next("ts") - prev("ts")))
-  }
-
-  /** One probe row per (series, grid instant); `probe_ts = out_ts - offset`
-    * implements the `offset` modifier (reference timeseries.rs:57-68). */
-  def gridProbes(samples: DataFrame, grid: Grid, offset: Double, kind: String = "i"): DataFrame = {
-    val series = samples.groupBy(Model.SkeyCol).agg(first(Model.LabelsCol).as(Model.LabelsCol))
-    series.select(
-      col(Model.SkeyCol), col(Model.LabelsCol),
-      explode(grid.pointsCol).as("out_ts"),
-      lit(kind).as("kind"))
-      .withColumn("probe_ts", col("out_ts") - lit(offset))
-  }
-
-  /** [[bracket]] with the probe rows generated INLINE from the samples: the
-    * first sample of each series (row_number over the same skey window)
-    * explodes into one probe per (kind, grid instant). Semantically identical
-    * to `bracket(samples, gridProbes(...))`, but the upstream pipeline is
-    * computed ONCE and shuffled ONCE — the two-branch formulation re-computed
-    * the whole input per branch (column pruning makes the branches
-    * non-canonical, so Spark's ReuseExchange never fires; observed 3 full
-    * input scans in the hist_quantile plan, and none after this).
-    *
-    * @param kinds (kind marker, total probe offset): `probe_ts = out_ts - off`
-    */
-  def bracketInline(samples: DataFrame, grid: Grid, kinds: Seq[(String, Double)],
-                    withLag: Boolean): DataFrame = {
-    val w0 = Window.partitionBy(Model.SkeyCol).orderBy(Model.TsCol)
-    val lagged = samples
-      .withColumn("p_ts", if (withLag) lag(Model.TsCol, 1).over(w0) else lit(null).cast(DoubleType))
-      .withColumn("p_value", if (withLag) lag(Model.ValueCol, 1).over(w0) else lit(null).cast(DoubleType))
-      .withColumn("__rn__", row_number().over(w0))
-
-    val mapT = MapType(StringType, StringType)
-    val sampleStruct = struct(
-      col(Model.TsCol).as("t"), lit(0).as("ord"),
-      struct(col(Model.TsCol).as("ts"), col(Model.ValueCol).as("v"),
-        col("p_ts"), col("p_value")).as("sv"),
-      lit(null).cast(mapT).as(Model.LabelsCol),
-      lit(null).cast(DoubleType).as("out_ts"),
-      lit(null).cast(StringType).as("kind"))
-    val probeArrays: Seq[Column] = kinds.map { case (k, off) =>
-      transform(grid.pointsCol, p => struct(
-        (p - lit(off)).as("t"), lit(1).as("ord"),
-        lit(null).cast(svType).as("sv"),
-        col(Model.LabelsCol).as(Model.LabelsCol),
-        p.as("out_ts"), lit(k).as("kind")))
-    }
-    val rowArr = when(col("__rn__") === 1, concat(array(sampleStruct) +: probeArrays: _*))
-      .otherwise(array(sampleStruct))
-    // explode preserves the skey partitioning: the bracketing windows below
-    // need only an intra-partition sort, no further exchange
-    val unioned = lagged
-      .select(col(Model.SkeyCol), explode(rowArr).as("__r__"))
-      .select(col(Model.SkeyCol), col("__r__.*"))
-
-    val wAsc = Window.partitionBy(Model.SkeyCol).orderBy(col("t"), col("ord"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wDesc = Window.partitionBy(Model.SkeyCol).orderBy(col("t").desc, col("ord").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    unioned
-      .withColumn("prev", last(col("sv"), ignoreNulls = true).over(wAsc))
-      .withColumn("next", last(col("sv"), ignoreNulls = true).over(wDesc))
-      .filter(col("ord") === 1)
-      .select(col(Model.SkeyCol), col(Model.LabelsCol), col("out_ts"), col("kind"),
-        col("t").as("probe_ts"), col("prev"), col("next"))
+  /** Evaluate `fn` per series and explode to (skey, labels, ts, value). */
+  private[operators] def kernel(samples: DataFrame, grid: Grid, fn: RangeKernel.Fn,
+                                range: Double, offset: Double): DataFrame = {
+    val k = RangeKernel(GraftExpr.expression(col(Model.TsCol)), GraftExpr.expression(col("v")),
+      fn, grid.start, grid.step, grid.length, range, offset)
+    series(samples).select(col(Model.SkeyCol), col(Model.LabelsCol), inline(GraftExpr.column(k)))
   }
 
   /** Resample each series onto the grid (reference `calculate_resampled_series`,
-    * timeseries.rs:57-68). Output: (skey, labels, ts, value). */
-  def resample(samples: DataFrame, grid: Grid, offset: Double = 0.0): DataFrame = {
-    val br = bracketInline(samples, grid, Seq(("i", offset)), withLag = false)
-    br.select(
-      col(Model.SkeyCol), col(Model.LabelsCol),
-      col("out_ts").as(Model.TsCol),
-      interpolated(col("probe_ts"), col("prev"), col("next")).as(Model.ValueCol))
-  }
+    * timeseries.rs:57-68); `offset` evaluates at `t - offset`. Output:
+    * (skey, labels, ts, value). */
+  def resample(samples: DataFrame, grid: Grid, offset: Double = 0.0): DataFrame =
+    kernel(samples, grid, RangeKernel.Resample, 0.0, offset)
 }

@@ -673,7 +673,9 @@ object TsQueries {
        |)""".stripMargin
   }
 
-  /** Probe-bracketing CTE (mirrors Resample.bracket + interpolated). */
+  /** Probe-bracketing CTE: prev = last sample with t <= probe, next = first
+    * with t > probe, plus prev's predecessor when `withLag` — the samples
+    * [[graft.functions.RangeKernel]] indexes per probe. */
   private def bracketCte(withLag: Boolean): String = {
     val sampleLag = if (withLag)
       """s2 AS (
@@ -707,7 +709,7 @@ object TsQueries {
        |)""".stripMargin
   }
 
-  /** Same expression tree as Resample.interpolated. */
+  /** Same expression tree as RangeKernel's `interpolated`. */
   private val interpExpr: String =
     """CASE
       |  WHEN pt IS NULL AND nt IS NULL THEN 'NaN'::DOUBLE

@@ -77,9 +77,20 @@ object TsIngest {
       case _ => df0
     }
 
+    // The dedup aggregation is hash-partitioned on the label columns alone,
+    // so every series lands whole in one partition (a label-less input is
+    // one series per metric: one partition). Per-series folds downstream
+    // (Resample.series) then collapse map-side. The partition count follows
+    // the cores and the scan, not spark.sql.shuffle.partitions: a cached
+    // collection is scanned by about one task per core.
     val deduped =
       if (opts.dedup) {
-        df.groupBy(col(timeCol) +: labelCols.map(col): _*)
+        val clustered =
+          if (labelCols.isEmpty) df.repartition(1)
+          else df.repartition(
+            math.max(df.sparkSession.sparkContext.defaultParallelism, df.rdd.getNumPartitions),
+            labelCols.map(col): _*)
+        clustered.groupBy(col(timeCol) +: labelCols.map(col): _*)
           .agg(avg(valueCols.head).as(valueCols.head),
                valueCols.tail.map(c => avg(c).as(c)): _*)
       } else df

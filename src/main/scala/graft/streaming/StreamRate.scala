@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.DoubleType
   *
   * This is the streaming-friendly cousin of [[graft.operators.Rate]]:
   * the full PromQL rate() interpolates at arbitrary grid points, which
-  * needs the resample bracketing pass; the windowed form trades that
+  * needs each series' whole sample arrays; the windowed form trades that
   * for a shape `max_by`/`min_by` can express — ONE shuffle on
   * (event_type, window), map-side combinable, state = one row per open
   * window in streaming.

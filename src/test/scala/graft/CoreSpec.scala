@@ -21,16 +21,12 @@ class CoreSpec extends SparkSpec {
         .toDF("ts", "value")
         .withColumn("labels", map(lit("__name__"), lit("m"))))
 
+  /** `interpolated_at` at each probe, through the resample kernel on a
+    * 0.5 s grid that holds every probe instant. */
   private def interpolateAt(ts: Double*): Map[Double, Double] = {
-    val probes = ts.toDF("probe_ts")
-      .withColumn("skey", Model.canonicalKey(map(lit("__name__"), lit("m"))))
-      .withColumn("labels", map(lit("__name__"), lit("m")))
-      .withColumn("out_ts", col("probe_ts"))
-      .withColumn("kind", lit("i"))
-    Resample.bracket(series, probes, withLag = false)
-      .select(col("probe_ts"),
-        Resample.interpolated(col("probe_ts"), col("prev"), col("next")).as("v"))
-      .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+    val at = Resample.resample(series, Grid(ts.min, ts.max, 0.5))
+      .select("ts", "value").as[(Double, Double)].collect().toMap
+    ts.map(t => t -> at(t)).toMap
   }
 
   test("interpolated_at matches reference values (timeseries.rs:573-613)") {

@@ -1,0 +1,68 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.window.WindowExecBase
+import org.apache.spark.sql.functions._
+
+import graft.sources.TsIngest
+
+/** Plan shape of the series-as-arrays evaluation over a cached,
+  * series-clustered collection: panels run one per-series fold and no
+  * window sort; ingest clusters each series into one partition. */
+class SeriesPlanSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** 3 hosts × 2 jobs, one sample a minute for 6 h, plus duplicate rows
+    * for the dedup to average; read back from parquet so ingest sees a
+    * file scan. */
+  private lazy val raw: DataFrame = {
+    val rows = for (h <- 0 until 3; j <- 0 until 2; i <- 0 until 360)
+      yield (s"h$h", s"j$j", 1704067200.0 + i * 60.0, (h * 10 + j + i).toDouble)
+    val dir = java.nio.file.Files.createTempDirectory("series-plan").toString + "/m.parquet"
+    (rows ++ rows.take(20)).toDF("host", "job", "ts", "value").write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private lazy val collection: DataFrame = {
+    val c = TsIngest.fromDataFrame(raw, "m").cache()
+    c.count()
+    c
+  }
+
+  /** Physical nodes of an executed frame, through AQE stages but not into
+    * the cached relation. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => nodes(s.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  test("rate, selector, irate and avg_over_time panels: no Window, at most one Exchange") {
+    val engine = new PromEngine(collection)
+    val start = 1704067200.0 + 3600.0
+    for (q <- Seq("""rate(m{host="h1"}[5m])""", """m{host="h1"}""",
+                  """irate(m{host="h1"}[5m])""", """avg_over_time(m{host="h1"}[1h])""")) {
+      val df = engine.queryRange(q, start, start + 4 * 3600.0, 300.0)
+      assert(df.collect().length === 2 * 49, q)
+      val executed = nodes(df.queryExecution.executedPlan)
+      assert(!executed.exists(_.isInstanceOf[WindowExecBase]), s"$q has a Window:\n$executed")
+      assert(executed.count(_.isInstanceOf[Exchange]) <= 1, s"$q has > 1 Exchange:\n$executed")
+    }
+  }
+
+  test("TsIngest clusters each series into one of max(defaultParallelism, scan) partitions") {
+    val want = math.max(spark.sparkContext.defaultParallelism, raw.rdd.getNumPartitions)
+    assert(collection.rdd.getNumPartitions === want)
+    val placed = collection
+      .select(col("labels")("__name__").as("n"), col("labels")("host").as("h"),
+        col("labels")("job").as("j"), spark_partition_id().as("p"))
+      .groupBy("n", "h", "j").agg(countDistinct("p").as("parts"), count(lit(1)).as("samples"))
+      .as[(String, String, String, Long, Long)].collect()
+    assert(placed.length === 6)
+    assert(placed.forall(_._4 == 1L), placed.mkString(", "))
+    assert(placed.map(_._5).sum === 6 * 360) // duplicates averaged away
+  }
+}
