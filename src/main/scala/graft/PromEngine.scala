@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.Grid
 import graft.promql.Eval
@@ -68,26 +69,41 @@ final class PromEngine(val collection: DataFrame, val queryStartTime: Option[Dou
     out.select(col(Model.LabelsCol), (col(Model.TsCol) + lit(off)).as(Model.TsCol), col(Model.ValueCol))
   }
 
-  /** Sorted distinct label names (timeseries.rs:459-476). */
-  def allLabelsDF: DataFrame =
-    collection.select(explode(map_keys(col(Model.LabelsCol))).as("label"))
-      .distinct().orderBy("label")
+  /** The label map of every series in `samples` (by default the whole
+    * collection), collected. One groupBy on the map: exchange-free on the
+    * partitioned [[graft.sources.TsIngest]] collection, so one Spark job
+    * that returns at most one row per series. The metadata calls below
+    * finish on the driver; their `*DF` forms return the same list as a
+    * one-column local frame. */
+  def seriesLabels(samples: DataFrame = collection): Seq[Map[String, String]] =
+    samples.groupBy(col(Model.LabelsCol)).count().collect()
+      .map(_.getMap[String, String](0).toMap).toSeq
 
-  def allLabels(): Seq[String] = allLabelsDF.collect().map(_.getString(0)).toSeq
+  /** Sorted distinct label names (timeseries.rs:459-476). */
+  def allLabels(): Seq[String] = seriesLabels().flatMap(_.keys).distinct.sorted(PromEngine.Utf8Order)
+
+  def allLabelsDF: DataFrame = toDF(allLabels(), "label")
 
   /** Distinct metric names (timeseries.rs:478-483). */
-  def allSeriesNamesDF: DataFrame =
-    collection.select(col(Model.LabelsCol).getItem(Model.NameLabel).as("name"))
-      .distinct().orderBy("name")
+  def allSeriesNames(): Seq[String] = labelValues(Model.NameLabel)
 
-  def allSeriesNames(): Seq[String] = allSeriesNamesDF.collect().map(_.getString(0)).toSeq
+  def allSeriesNamesDF: DataFrame = toDF(allSeriesNames(), "name")
 
-  /** Distinct values of one label (main.rs:407-416 supports only __name__;
-    * we generalize to any label). */
-  def labelValuesDF(label: String): DataFrame =
-    collection.select(col(Model.LabelsCol).getItem(label).as("value"))
-      .filter(col("value").isNotNull).distinct().orderBy("value")
-
+  /** Sorted distinct non-null values of one label (main.rs:407-416 supports
+    * only __name__; we generalize to any label). */
   def labelValues(label: String): Seq[String] =
-    labelValuesDF(label).collect().map(_.getString(0)).toSeq
+    seriesLabels().flatMap(_.get(label)).filter(_ != null).distinct.sorted(PromEngine.Utf8Order)
+
+  def labelValuesDF(label: String): DataFrame = toDF(labelValues(label), "value")
+
+  private def toDF(values: Seq[String], name: String): DataFrame = {
+    import collection.sparkSession.implicits._
+    values.toDF(name)
+  }
+}
+
+object PromEngine {
+  /** Spark's (and the oracles') string order: binary UTF-8, which differs
+    * from `String`'s UTF-16 order beyond the Basic Multilingual Plane. */
+  private val Utf8Order: Ordering[String] = Ordering.by(UTF8String.fromString)
 }

@@ -15,8 +15,11 @@ import org.apache.spark.sql.functions._
   * `Vec<f64>` (reference timeseries.rs:389-394) with a distributed, columnar
   * layout. The reference's label/string interning (labels.rs, stringuniverse.rs)
   * is a single-process optimization; the distributed analogue is parquet/Tungsten
-  * dictionary encoding plus the canonical series key below, which is the shuffle
-  * key for every per-series operator.
+  * dictionary encoding plus the canonical series key below. The per-series
+  * fold (`Resample.series`) keys on the label map itself — Spark groups and
+  * hash-partitions a map by its key-sorted form, and the cached
+  * `TsIngest` collection is partitioned on it — and derives the key once
+  * per series; binary operators, aggregations and outputs then use the key.
   */
 object Model {
   val NameLabel = "__name__"
@@ -28,8 +31,9 @@ object Model {
   val SkeyCol = "skey"
 
   /** Canonical, deterministic string form of a label map: sorted `k=v` pairs
-    * joined by commas. Used as grouping/shuffle key (maps are not directly
-    * groupable) and as the human-readable series identity in query outputs.
+    * joined by commas. Used as the join and grouping key of operators that
+    * match series across frames, and as the human-readable series identity
+    * in query outputs.
     * Mirrors the reference's `LabelValueMap::display_string` ordering
     * (labels.rs:317-321, BTreeMap = sorted by key).
     *

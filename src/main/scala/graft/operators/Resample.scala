@@ -30,10 +30,11 @@ final case class Grid(start: Double, end: Double, step: Double) {
   * between the bracketing samples.
   *
   * Evaluation model (the reference's): the selected samples fold into ONE
-  * `(skey, labels, ts[], v[])` row per series — a single partial-aggregated
-  * groupBy, so on a series-clustered collection (see
-  * [[graft.sources.TsIngest]]) each series collapses map-side and only one
-  * row per series crosses the exchange. A native codegen'd
+  * `(skey, labels, ts[], v[])` row per series — a single groupBy on the
+  * label map. The cached [[graft.sources.TsIngest]] collection is
+  * hash-partitioned on that map, so the fold needs no exchange there;
+  * any other input (a subquery, a computed frame) gets the one exchange
+  * Spark inserts. A native codegen'd
   * [[RangeKernel]] then evaluates the function per series with a binary
   * search per grid instant, and `inline` explodes the result back to the
   * long (skey, labels, ts, value) shape every downstream operator takes.
@@ -42,12 +43,16 @@ final case class Grid(start: Double, end: Double, step: Double) {
 object Resample {
 
   /** Fold samples (skey, labels, ts, value) into one row per series:
-    * (skey, labels, ts: array<double>, v: array<double>), ts ascending. */
+    * (skey, labels, ts: array<double>, v: array<double>), ts ascending.
+    * Groups on the label map itself (Spark compares maps by their
+    * key-sorted form, so key order does not split a series): the cached
+    * [[graft.sources.TsIngest]] collection is hash-partitioned on it, so
+    * the fold runs map-side with no exchange, and `skey` is derived once
+    * per series from the folded labels instead of once per sample. */
   private[operators] def series(samples: DataFrame): DataFrame =
-    samples.groupBy(Model.SkeyCol)
-      .agg(first(Model.LabelsCol).as(Model.LabelsCol),
-        sort_array(collect_list(struct(col(Model.TsCol), col(Model.ValueCol)))).as("__s__"))
-      .select(col(Model.SkeyCol), col(Model.LabelsCol),
+    samples.groupBy(col(Model.LabelsCol))
+      .agg(sort_array(collect_list(struct(col(Model.TsCol), col(Model.ValueCol)))).as("__s__"))
+      .select(Model.canonicalKey(col(Model.LabelsCol)).as(Model.SkeyCol), col(Model.LabelsCol),
         col(s"__s__.${Model.TsCol}").as(Model.TsCol), col(s"__s__.${Model.ValueCol}").as("v"))
 
   /** Evaluate `fn` per series and explode to (skey, labels, ts, value). */

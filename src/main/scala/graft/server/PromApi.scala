@@ -6,8 +6,9 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.lit
 
-import graft.{Model, PromEngine}
+import graft.PromEngine
 import graft.functions.TimeParse
 
 /** Prometheus-compatible HTTP API over a [[PromEngine]] (reference
@@ -27,7 +28,7 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
 
   def start(): PromApi = {
     server.createContext("/", exchange => safely(exchange) {
-      respond(exchange, 200, s"Got ${engine.collection.count()} time series")
+      respond(exchange, 200, s"Got ${engine.seriesLabels().length} time series")
     })
     server.createContext("/favicon.ico", exchange => safely(exchange) {
       // static embedded icon (reference main.rs:104,235,255-257): 200 +
@@ -143,21 +144,17 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
       return
     }
     try {
-      val frames = matchers.toSeq.map { sel =>
+      // one filter ORing the selectors, so the series grouping dedups
+      // series matched by more than one selector
+      val selected = matchers.map { sel =>
         graft.promql.Parser.parse(sel) match {
           case graft.promql.VectorSel(ms, None, None) =>
-            // distinct on the canonical key — Spark cannot set-op MAP columns
-            graft.operators.Selector.select(engine.collection, ms)
-              .select(
-                Model.canonicalKey(org.apache.spark.sql.functions.col(Model.LabelsCol))
-                  .as(Model.SkeyCol),
-                org.apache.spark.sql.functions.col(Model.LabelsCol))
+            ms.map(graft.operators.Selector.predicate).foldLeft(lit(true))(_ && _)
           case _ => throw new IllegalArgumentException(s"not a plain selector: $sel")
         }
-      }
-      val all = frames.reduce(_ unionByName _).dropDuplicates(Model.SkeyCol).collect()
-      val sets = all.map(_.getMap[String, String](1).toSeq.sorted)
-        .sortBy(_.mkString(",")).map { labels =>
+      }.reduce(_ || _)
+      val sets = engine.seriesLabels(engine.collection.filter(selected))
+        .map(_.toSeq.sorted).sortBy(_.mkString(",")).map { labels =>
           labels.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
             .mkString("{", ", ", "}")
         }

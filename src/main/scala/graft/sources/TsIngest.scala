@@ -10,8 +10,10 @@ import graft.Model
   *
   * Re-expresses the reference's metric classification (metricstore.rs:104-186)
   * Spark-first: the schema inspection is driver-side metadata only; the data
-  * path is a single projection with a `stack()` unpivot — no shuffle (unless
-  * deduplication is requested), filters and column pruning push to the scan.
+  * path is a single projection with a `stack()` unpivot followed by one
+  * hash repartition on the label map (plus the dedup aggregation's
+  * label-column repartition when deduplication is requested); filters and
+  * column pruning push through both to the scan.
   *
   * Classification per reference semantics:
   *  - exactly one of `time`/`timestamp`/`__time__` (we additionally accept
@@ -77,25 +79,31 @@ object TsIngest {
       case _ => df0
     }
 
-    // The dedup aggregation is hash-partitioned on the label columns alone,
-    // so every series lands whole in one partition (a label-less input is
-    // one series per metric: one partition). Per-series folds downstream
-    // (Resample.series) then collapse map-side. The partition count follows
-    // the cores and the scan, not spark.sql.shuffle.partitions: a cached
+    // Every series lands whole in one of n partitions, n following the
+    // cores and the scan, not spark.sql.shuffle.partitions: a cached
     // collection is scanned by about one task per core.
+    val n = math.max(df.sparkSession.sparkContext.defaultParallelism, df.rdd.getNumPartitions)
+
+    // The dedup aggregation runs on an explicit n-way hash repartition by
+    // the label columns (a label-less input: one partition): its own
+    // exchange would first partially aggregate in the scan's task(s),
+    // where duplicates are rare, and then be coalesced into fewer tasks
+    // than cores.
     val deduped =
       if (opts.dedup) {
         val clustered =
-          if (labelCols.isEmpty) df.repartition(1)
-          else df.repartition(
-            math.max(df.sparkSession.sparkContext.defaultParallelism, df.rdd.getNumPartitions),
-            labelCols.map(col): _*)
+          if (labelCols.isEmpty) df.repartition(1) else df.repartition(n, labelCols.map(col): _*)
         clustered.groupBy(col(timeCol) +: labelCols.map(col): _*)
           .agg(avg(valueCols.head).as(valueCols.head),
                valueCols.tail.map(c => avg(c).as(c)): _*)
       } else df
 
-    unpivot(deduped, timeCol, labelCols, metrics, opts.fixedLabels)
+    // Hash-partition the output on the label map so that the plan says the
+    // collection is series-clustered: Spark partitions a map on its
+    // key-sorted form, and a cached collection keeps this partitioning,
+    // which the per-series fold (Resample.series, grouping on labels) then
+    // satisfies without an exchange.
+    unpivot(deduped, timeCol, labelCols, metrics, opts.fixedLabels).repartition(n, col(Model.LabelsCol))
   }
 
   private def classify(schema: StructType, opts: IngestOptions): (String, Seq[String], Seq[String]) = {

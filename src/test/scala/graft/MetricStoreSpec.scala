@@ -123,20 +123,26 @@ class MetricStoreSpec extends SparkSpec {
     assert(!plan.contains("Exchange"), plan.linesIterator.take(12).mkString("\n"))
   }
 
-  test("dedup=false ingest is shuffle-free (trusted already-deduped source)") {
+  test("dedup=false ingest runs no dedup aggregation (trusted deduped source)") {
     import org.apache.spark.sql.functions._
     val raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select(col("ts").cast("timestamp").cast("double").as("time"),
         col("event_type"), col("value").cast("double").as("value"))
+    def exchanges(plan: String): Seq[String] =
+      plan.linesIterator.filter(_.contains("Exchange ")).toSeq
     val out = sources.TsIngest.fromDataFrame(raw, "events",
       sources.TsIngest.IngestOptions(dedup = false))
     out.write.format("noop").mode("overwrite").save()
     val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan.linesIterator.take(12).mkString("\n"))
-    // the defensive default still dedups (one groupBy exchange)
+    // only the series clustering shuffles: the label-map repartition
+    assert(!plan.contains("Aggregate"), plan.linesIterator.take(12).mkString("\n"))
+    assert(exchanges(plan).length == 1 && exchanges(plan).head.contains("mapsort(labels"),
+      plan.linesIterator.take(12).mkString("\n"))
+    // the defensive default still dedups: one more exchange, the dedup's
     val dd = sources.TsIngest.fromDataFrame(raw, "events")
     dd.write.format("noop").mode("overwrite").save()
-    assert(dd.queryExecution.executedPlan.toString.contains("Exchange"))
+    val ddPlan = dd.queryExecution.executedPlan.toString
+    assert(ddPlan.contains("Aggregate") && exchanges(ddPlan).length == 2, ddPlan)
   }
 
 }

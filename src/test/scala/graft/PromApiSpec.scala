@@ -32,6 +32,11 @@ class PromApiSpec extends SparkSpec {
     try {
       val port = api.boundPort
 
+      // series, not samples: 440 (event_type, props) pairs × 3 metrics
+      // hold 3,000 samples
+      val (c0, root) = get(port, "/")
+      assert(c0 == 200 && root == "Got 1320 time series", root)
+
       val (c1, labels) = get(port, "/api/v1/labels")
       assert(c1 == 200 && labels.contains("\"status\": \"success\""))
       assert(labels.contains("\"event_type\"") && labels.contains("\"__name__\""))
@@ -103,6 +108,11 @@ class PromApiSpec extends SparkSpec {
         enc("""events{event_type="purchase"}""") + "&match[]=" + enc("""events{event_type="click"}"""))
       assert(c3 == 200, sr.take(300))
       assert(sr.contains("\"event_type\": \"purchase\"") && sr.contains("\"event_type\": \"click\""))
+
+      // overlapping selectors: each series once, the same answer
+      val (c5, overlap) = get(port, "/api/v1/series?match[]=" +
+        enc("""events{event_type="purchase"}""") + "&match[]=" + enc("""events{event_type=~"purchase|click"}"""))
+      assert(c5 == 200 && overlap == sr, overlap.take(300))
 
       val (c4, _) = get(port, "/api/v1/series")
       assert(c4 == 400)

@@ -12,7 +12,9 @@ import graft.operators.{Grid, RangeAgg, Rate, Resample}
   * reference's series arithmetic (timeseries.rs:57-191) on generated
   * series. The point functions' model keeps the reference's expression
   * order, so resample/rate/increase/irate must match it bit for bit;
-  * the `*_over_time` model is the PromQL window `(t - range, t]`.
+  * the `*_over_time` model is the PromQL window `(t - range, t]`. The
+  * inputs also pin the fold's series identity (label-map key order, null
+  * and separator-bearing label values).
   */
 class RangeKernelSpec extends SparkSpec {
   import spark.implicits._
@@ -36,11 +38,22 @@ class RangeKernelSpec extends SparkSpec {
       Series("fractional", Vector(3.25, 17.5, 60.125), Vector(0.1, 0.7, -0.3)))
   }
 
-  private lazy val samples: DataFrame = Model.withSkey(
-    generated.flatMap(s => s.ts.zip(s.vs).map { case (t, v) => (s.name, t, v) })
-      .toDF("name", "ts", "value")
-      .withColumn("labels", map(lit("__name__"), lit("m"), lit("id"), col("name")))
-      .drop("name"))
+  /** A `zone` label per series: a null value on one, the canonical key's
+    * separators on another. */
+  private val zones: Map[String, String] =
+    Map("fractional" -> null, "falling" -> "x=1,y\\2").withDefaultValue("z")
+
+  /** Each series' samples alternate between two key insertion orders of
+    * one label map; the fold must still see one series per map. */
+  private lazy val samples: DataFrame = {
+    val rows = generated.flatMap(s => s.ts.zip(s.vs).zipWithIndex.map { case ((t, v), i) =>
+      (s.name, zones(s.name), t, v, i % 2 == 0) })
+    val forward = map(lit("__name__"), lit("m"), lit("id"), col("name"), lit("zone"), col("zone"))
+    val reversed = map(lit("zone"), col("zone"), lit("id"), col("name"), lit("__name__"), lit("m"))
+    Model.withSkey(rows.toDF("name", "zone", "ts", "value", "forward")
+      .withColumn("labels", when(col("forward"), forward).otherwise(reversed))
+      .drop("name", "zone", "forward"))
+  }
 
   private val grid = Grid(-20.0, 230.0, 5.0)
 
@@ -55,7 +68,7 @@ class RangeKernelSpec extends SparkSpec {
       val t = grid.start + k.toDouble * grid.step
       (s.name, t) -> model(s, t)
     }
-    assert(got.size === want.size, s"$name: row count")
+    assert(df.count() === want.size, s"$name: row count")
     want.foreach { case (key, w) =>
       val g = got(key).asInstanceOf[Double]
       assert(java.lang.Double.doubleToLongBits(g) === java.lang.Double.doubleToLongBits(w),
@@ -67,6 +80,17 @@ class RangeKernelSpec extends SparkSpec {
     assertBitIdentical("resample", Resample.resample(samples, grid), (s, t) => s.interp(t))
     assertBitIdentical("resample offset 7", Resample.resample(samples, grid, 7.0),
       (s, t) => s.interp(t - 7.0))
+  }
+
+  test("the fold keeps one series per label map; skey is Model.canonicalKey of its labels") {
+    val out = Resample.resample(samples, grid)
+    val keys = out.select(col("skey"), Model.canonicalKey(col("labels")).as("want"))
+      .distinct().as[(String, String)].collect()
+    assert(keys.length === generated.length)
+    keys.foreach { case (skey, want) => assert(skey === want) }
+    val skeys = keys.map(_._1).toSet
+    assert(skeys.contains("__name__=m,id=fractional")) // a null value drops its label
+    assert(skeys.contains("__name__=m,id=falling,zone=x\\=1\\,y\\\\2"))
   }
 
   test("rate and increase are bit-identical to the interpolated-endpoint model") {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.MapSort
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -10,8 +12,8 @@ import org.apache.spark.sql.functions._
 import graft.sources.TsIngest
 
 /** Plan shape of the series-as-arrays evaluation over a cached,
-  * series-clustered collection: panels run one per-series fold and no
-  * window sort; ingest clusters each series into one partition. */
+  * series-clustered collection: ingest hash-partitions on the label map,
+  * so panels fold each series with no exchange and no window sort. */
 class SeriesPlanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -40,16 +42,42 @@ class SeriesPlanSpec extends SparkSpec {
     case other => other +: other.children.flatMap(nodes)
   }
 
-  test("rate, selector, irate and avg_over_time panels: no Window, at most one Exchange") {
+  private def executed(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    nodes(df.queryExecution.executedPlan)
+  }
+
+  test("range panels and an instant rate over the cached collection: no Exchange") {
     val engine = new PromEngine(collection)
     val start = 1704067200.0 + 3600.0
-    for (q <- Seq("""rate(m{host="h1"}[5m])""", """m{host="h1"}""",
-                  """irate(m{host="h1"}[5m])""", """avg_over_time(m{host="h1"}[1h])""")) {
+    for (q <- Seq("""rate(m{host="h1"}[5m])""", """m{host="h1"}""", """irate(m{host="h1"}[5m])""",
+                  """increase(m{host="h1"}[5m])""", """avg_over_time(m{host="h1"}[1h])""")) {
       val df = engine.queryRange(q, start, start + 4 * 3600.0, 300.0)
-      assert(df.collect().length === 2 * 49, q)
-      val executed = nodes(df.queryExecution.executedPlan)
-      assert(!executed.exists(_.isInstanceOf[WindowExecBase]), s"$q has a Window:\n$executed")
-      assert(executed.count(_.isInstanceOf[Exchange]) <= 1, s"$q has > 1 Exchange:\n$executed")
+      assert(df.count() === 2 * 49, q)
+      val plan = executed(df)
+      assert(!plan.exists(_.isInstanceOf[WindowExecBase]), s"$q has a Window:\n$plan")
+      assert(!plan.exists(_.isInstanceOf[Exchange]), s"$q has an Exchange:\n$plan")
+    }
+    val instant = engine.queryInstant("""rate(m{host="h1"}[5m])""", start)
+    assert(instant.count() === 2)
+    assert(!executed(instant).exists(_.isInstanceOf[Exchange]), "instant rate has an Exchange")
+    val sumBy = engine.queryRange("""sum by (job) (rate(m[5m]))""", start, start + 3600.0, 300.0)
+    assert(executed(sumBy).count(_.isInstanceOf[Exchange]) <= 1, "sum by has > 1 Exchange")
+  }
+
+  test("TsIngest output is hash-partitioned on the label map, with and without dedup") {
+    val want = math.max(spark.sparkContext.defaultParallelism, raw.rdd.getNumPartitions)
+    for (dedup <- Seq(true, false)) {
+      val out = TsIngest.fromDataFrame(raw, "m", TsIngest.IngestOptions(dedup = dedup))
+      // the physical plan before adaptive execution wraps it: what a
+      // cached relation keeps
+      out.queryExecution.sparkPlan.outputPartitioning match {
+        case HashPartitioning(Seq(key), n) =>
+          assert(key.references.map(_.name).toSet === Set(Model.LabelsCol), s"dedup=$dedup: $key")
+          assert(key.isInstanceOf[MapSort], s"dedup=$dedup: $key")
+          assert(n === want)
+        case other => fail(s"dedup=$dedup: $other")
+      }
     }
   }
 
