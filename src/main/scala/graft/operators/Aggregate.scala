@@ -85,10 +85,11 @@ object Aggregate {
   def quantileBy(df: DataFrame, q: Double, by: Seq[String], without: Boolean = false): DataFrame =
     aggBy(df, by, without, quantileAgg(q))
 
-  /** The shared aggregation column for `quantile(...) by` and
-    * `quantile_over_time`: Prometheus out-of-range guards + exact
-    * linear-interpolated percentile. */
-  def quantileAgg(q: Double): Column => Column =
+  /** The aggregation column for `quantile(...) by`: Prometheus
+    * out-of-range guards + exact linear-interpolated percentile
+    * (`quantile_over_time` is the same arithmetic in
+    * [[graft.functions.RangeKernel]]). */
+  private def quantileAgg(q: Double): Column => Column =
     if (q.isNaN) _ => min(lit(Double.NaN))
     else if (q < 0) _ => min(lit(Double.NegativeInfinity))
     else if (q > 1) _ => min(lit(Double.PositiveInfinity))
@@ -102,24 +103,6 @@ object Aggregate {
       val vhi = element_at(arr, least(lo + 2, n))
       vlo + (vhi - vlo) * frac
     }
-
-  /** Median absolute deviation: median(|x − median(x)|), both medians
-    * linearly interpolated like [[quantileAgg]] (shared index arithmetic,
-    * so the DuckDB oracle's quantile_cont-based `mad()` reproduces it). */
-  def madAgg: Column => Column = v => {
-    def q50(arr: Column): Column = {
-      val n = size(arr)
-      val pos = (n - 1).cast(org.apache.spark.sql.types.DoubleType) * lit(0.5)
-      val lo = floor(pos).cast(org.apache.spark.sql.types.IntegerType)
-      val frac = pos - lo.cast(org.apache.spark.sql.types.DoubleType)
-      val vlo = element_at(arr, lo + 1)
-      val vhi = element_at(arr, least(lo + 2, n))
-      vlo + (vhi - vlo) * frac
-    }
-    val arr = sort_array(collect_list(v))
-    val med = q50(arr)
-    q50(sort_array(transform(arr, x => abs(x - med))))
-  }
 
   /** `count_values(label, v)`: per instant, one output series per distinct
     * value carrying that value (formatted like the wire format, integers

@@ -203,20 +203,46 @@ object NativeHistogram {
       transform(slice(bs, lit(1), size(bs) - 1), b => b("le")).as("nh_bounds"))
   }
 
+  /** Explode each histogram sample into the grid windows it falls into:
+    * window k holds sample t iff `grid_t - range < t <= grid_t`,
+    * `grid_t = start + k*step` — the [[graft.functions.RangeKernel]]
+    * membership rule, at most `ceil(range/step)` windows per sample.
+    * Histogram samples are structs, not doubles, so they take this
+    * row-per-window shape instead of the kernel. */
+  private def windowExplode(samples: DataFrame, grid: Grid, overRange: Double): DataFrame = {
+    require(overRange > 0, "range <= 0")
+    val start = lit(grid.start)
+    val step = lit(grid.step)
+    val kLo = ceil((col(Model.TsCol) - start) / step).cast(IntegerType)
+    val kHi = least(
+      floor((col(Model.TsCol) - start + lit(overRange)) / step -
+        // half-open upper bound: t == grid_t - range must NOT count
+        when((col(Model.TsCol) - start + lit(overRange)) % step === 0, 1).otherwise(0))
+        .cast(IntegerType),
+      lit(grid.length - 1))
+    val kLo0 = greatest(kLo, lit(0))
+    samples.withColumn("__k__", explode(
+      when(kLo0 <= kHi, sequence(kLo0, kHi))
+        .otherwise(array().cast(ArrayType(IntegerType)))))
+  }
+
+  private def gridTs(grid: Grid): Column =
+    lit(grid.start) + col("__k__").cast(DoubleType) * lit(grid.step)
+
   /** Snap native-histogram samples onto the query grid: for each (series,
     * grid instant), the LATEST histogram row whose ts falls in the
     * one-step lookback window `(grid_t - step, grid_t]` — Prometheus
     * staleness semantics with lookback = step. Linear interpolation (the
     * classic resample) is undefined between whole distributions, so
-    * last-known-value is the correct snap. Same bounded windowExplode +
-    * one groupBy shape as any `*_over_time`. */
+    * last-known-value is the correct snap. One bounded [[windowExplode]]
+    * + one groupBy. */
   def snapToGrid(nh0: DataFrame, grid: Grid): DataFrame = {
     val nh = normalized(nh0)
-    RangeAgg.windowExplode(nh, grid, grid.step)
+    windowExplode(nh, grid, grid.step)
       .groupBy(col(Model.SkeyCol), col("__k__"))
       .agg(max_by(struct((Model.LabelsCol +: Columns).map(col): _*),
         col(Model.TsCol)).as("h"))
-      .select(Seq(col(Model.SkeyCol), RangeAgg.gridTs(grid).as(Model.TsCol)) ++
+      .select(Seq(col(Model.SkeyCol), gridTs(grid).as(Model.TsCol)) ++
         (Model.LabelsCol +: Columns).map(c => col(s"h.$c")): _*)
   }
 
@@ -237,9 +263,9 @@ object NativeHistogram {
     * samples, or whose first/last samples carry different schemas (a
     * resolution change mid-window), emit nothing.
     *
-    * Plan shape: the same bounded windowExplode + one groupBy as any
-    * `*_over_time`; the subtraction is in-row map arithmetic over the
-    * sparse arrays — no extra shuffle. */
+    * Plan shape: one bounded [[windowExplode]] + one groupBy; the
+    * subtraction is in-row map arithmetic over the sparse arrays — no
+    * extra shuffle. */
   def rate(nh1: DataFrame, grid: Grid, overRange: Double): DataFrame =
     windowDelta(nh1, grid, overRange, overRange)
 
@@ -253,7 +279,7 @@ object NativeHistogram {
     val nh0 = normalized(nh1)
     val nh = if (nh0.columns.contains(Model.SkeyCol)) nh0 else Model.withSkey(nh0)
     val hCols = (Model.LabelsCol +: Columns).map(col)
-    val paired = RangeAgg.windowExplode(nh, grid, overRange)
+    val paired = windowExplode(nh, grid, overRange)
       .groupBy(col(Model.SkeyCol), col("__k__"))
       .agg(count(lit(1)).as("__n__"),
         min_by(struct(hCols: _*), col(Model.TsCol)).as("f"),
@@ -283,7 +309,7 @@ object NativeHistogram {
       .select(
         col(Model.SkeyCol),
         col(s"l.${Model.LabelsCol}").as(Model.LabelsCol),
-        RangeAgg.gridTs(grid).as(Model.TsCol),
+        gridTs(grid).as(Model.TsCol),
         col("l.nh_schema").as("nh_schema"),
         zero.as("nh_zero_count"),
         ((col("l.nh_sum") - col("f.nh_sum")) / r).as("nh_sum"),

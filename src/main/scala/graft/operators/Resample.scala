@@ -22,8 +22,7 @@ final case class Grid(start: Double, end: Double, step: Double) {
 }
 
 /** Resampling onto a regular grid with linear interpolation, plus the
-  * series-as-arrays evaluation shared by rate/irate and the
-  * `*_over_time` kernels.
+  * series-as-arrays evaluation every PromQL range function shares.
   *
   * Interpolation semantics (reference timeseries.rs:164-191):
   * before-first → first value; after-last → last value; otherwise linear
@@ -55,9 +54,11 @@ object Resample {
       .select(Model.canonicalKey(col(Model.LabelsCol)).as(Model.SkeyCol), col(Model.LabelsCol),
         col(s"__s__.${Model.TsCol}").as(Model.TsCol), col(s"__s__.${Model.ValueCol}").as("v"))
 
-  /** Evaluate `fn` per series and explode to (skey, labels, ts, value). */
-  private[operators] def kernel(samples: DataFrame, grid: Grid, fn: RangeKernel.Fn,
-                                range: Double, offset: Double): DataFrame = {
+  /** Evaluate `fn` per series and explode to (skey, labels, ts, value).
+    * `offset` moves the probes of point functions to `t - offset` and
+    * adds to every sample ts for windowed ones. */
+  def kernel(samples: DataFrame, grid: Grid, fn: RangeKernel.Fn,
+             range: Double, offset: Double): DataFrame = {
     val k = RangeKernel(GraftExpr.expression(col(Model.TsCol)), GraftExpr.expression(col("v")),
       fn, grid.start, grid.step, grid.length, range, offset)
     series(samples).select(col(Model.SkeyCol), col(Model.LabelsCol), inline(GraftExpr.column(k)))

@@ -3,6 +3,7 @@ package graft.promql
 import org.apache.spark.sql.DataFrame
 
 import graft.Model
+import graft.functions.RangeKernel
 import graft.operators._
 
 /** PromQL evaluator over the long-format collection DataFrame. Mirrors the
@@ -150,98 +151,35 @@ object Eval {
         case _ => throw EvalException("'@' expects an instant expression")
       }
 
-    case FuncCall("rate", args, agg) => evalRate(args, agg, collection, grid, Rate.rate)
-    case FuncCall("irate", args, agg) => evalRate(args, agg, collection, grid, Rate.irate)
-    case FuncCall("increase", args, agg) => evalRate(args, agg, collection, grid, Rate.increase)
-    case FuncCall("delta", args, agg) => evalRate(args, agg, collection, grid, Rate.delta)
-
-    case FuncCall("deriv", args, agg) => evalOverTime(args, agg, collection, grid, RangeAgg.derivOverTime)
-
-    case FuncCall("avg_over_time", args, agg) =>
-      rollupServed("avg_over_time", args, agg, collection, grid)
-        .getOrElse(evalOverTime(args, agg, collection, grid, RangeAgg.avgOverTime))
-    case FuncCall("min_over_time", args, agg) =>
-      rollupServed("min_over_time", args, agg, collection, grid)
-        .getOrElse(evalOverTime(args, agg, collection, grid, RangeAgg.minOverTime))
-    case FuncCall("max_over_time", args, agg) =>
-      rollupServed("max_over_time", args, agg, collection, grid)
-        .getOrElse(evalOverTime(args, agg, collection, grid, RangeAgg.maxOverTime))
-    case FuncCall("sum_over_time", args, agg) =>
-      rollupServed("sum_over_time", args, agg, collection, grid)
-        .getOrElse(evalOverTime(args, agg, collection, grid, RangeAgg.sumOverTime))
-    case FuncCall("count_over_time", args, agg) =>
-      rollupServed("count_over_time", args, agg, collection, grid)
-        .getOrElse(evalOverTime(args, agg, collection, grid, RangeAgg.countOverTime))
-    case FuncCall("last_over_time", args, agg) =>
-      rollupServed("last_over_time", args, agg, collection, grid)
-        .getOrElse(evalOverTime(args, agg, collection, grid, RangeAgg.lastOverTime))
-    case FuncCall("present_over_time", args, agg) => evalOverTime(args, agg, collection, grid, RangeAgg.presentOverTime)
-    case FuncCall("stddev_over_time", args, agg) => evalOverTime(args, agg, collection, grid, RangeAgg.stddevOverTime)
-    case FuncCall("stdvar_over_time", args, agg) => evalOverTime(args, agg, collection, grid, RangeAgg.stdvarOverTime)
-    // Opt-in counter-reset modes (the default rate/increase are
-    // reference-parity, which has no reset logic — see Rate.increaseResets).
-    case FuncCall("rate_resets", args, agg) => evalOverTime(args, agg, collection, grid, Rate.rateResets)
-    case FuncCall("increase_resets", args, agg) => evalOverTime(args, agg, collection, grid, Rate.increaseResets)
-    case FuncCall("irate_resets", args, agg) => evalOverTime(args, agg, collection, grid, Rate.irateResets)
-    case FuncCall("changes", args, agg) => evalOverTime(args, agg, collection, grid, RangeAgg.changesOverTime)
-    case FuncCall("resets", args, agg) => evalOverTime(args, agg, collection, grid, RangeAgg.resetsOverTime)
-    case FuncCall("mad_over_time", args, agg) => evalOverTime(args, agg, collection, grid, RangeAgg.madOverTime)
-    case FuncCall("idelta", args, agg) => evalOverTime(args, agg, collection, grid, RangeAgg.ideltaOverTime)
+    case FuncCall(name, args, agg) if RangeFns.contains(name) =>
+      rollupServed(name, args, agg, collection, grid)
+        .getOrElse(Processed(rangeFn(name, RangeFns(name), args, agg, collection, grid)))
 
     // absent_over_time: 1 at steps whose trailing window holds NO sample of
     // the selector (window-presence complement of absent()).
     case FuncCall("absent_over_time", args, agg) =>
-      if (agg.isDefined) throw EvalException("'absent_over_time' expects no aggregation")
-      if (args.length != 1) throw EvalException("'absent_over_time' expects a single argument")
-      val absentLabels: Map[String, String] = args.head match {
-        case VectorSel(ms, _, _) => ms.collect {
-          case Selector.Eq(l, v) if l != graft.Model.NameLabel => l -> v
-        }.toMap
-        case _ => Map.empty
-      }
-      eval(args.head, collection, grid) match {
-        case UnprocessedVector(df, overRange, offset) =>
-          val shifted = offset.fold(df)(off =>
-            df.withColumn(Model.TsCol, org.apache.spark.sql.functions.col(Model.TsCol) + off))
-          Processed(absentFrame(RangeAgg.presentSteps(shifted, grid, overRange),
-            absentLabels, grid))
-        case _ => throw EvalException("'absent_over_time' requires a range vector")
-      }
+      val present = rangeFn("absent_over_time", RangeKernel.PresentOverTime, args, agg, collection, grid)
+      Processed(absentFrame(present, selectorLabels(args.head), grid))
 
     // double_exponential_smoothing is the Prometheus 3.x name for the same
     // function (holt_winters kept as the classic alias).
     case FuncCall("double_exponential_smoothing", args, agg) =>
       eval(FuncCall("holt_winters", args, agg), collection, grid)
 
-    case FuncCall("holt_winters", args, agg) =>
-      if (agg.isDefined) throw EvalException("'holt_winters' expects no aggregation")
-      args match {
-        case Seq(inner, ScalarLit(sf), ScalarLit(tf)) =>
-          if (sf <= 0 || sf >= 1 || tf <= 0 || tf >= 1)
-            throw EvalException("holt_winters smoothing factors must be in (0, 1)")
-          eval(inner, collection, grid) match {
-            case UnprocessedVector(df, overRange, offset) =>
-              val shifted = offset.fold(df)(off =>
-                df.withColumn(Model.TsCol, org.apache.spark.sql.functions.col(Model.TsCol) + off))
-              Processed(RangeAgg.holtWinters(shifted, grid, overRange, sf, tf))
-            case _ => throw EvalException("'holt_winters' requires a vectorized time series")
-          }
-        case _ => throw EvalException("'holt_winters' expects (range vector, scalar sf, scalar tf)")
-      }
+    case FuncCall("holt_winters", args, agg) => args match {
+      case Seq(inner, ScalarLit(sf), ScalarLit(tf)) =>
+        if (sf <= 0 || sf >= 1 || tf <= 0 || tf >= 1)
+          throw EvalException("holt_winters smoothing factors must be in (0, 1)")
+        Processed(rangeFn("holt_winters", RangeKernel.HoltWinters(sf, tf), Seq(inner), agg, collection, grid))
+      case _ => throw EvalException("'holt_winters' expects (range vector, scalar sf, scalar tf)")
+    }
 
-    case FuncCall("predict_linear", args, agg) =>
-      if (agg.isDefined) throw EvalException("'predict_linear' expects no aggregation")
-      args match {
-        case Seq(inner, ScalarLit(horizon)) =>
-          eval(inner, collection, grid) match {
-            case UnprocessedVector(df, overRange, offset) =>
-              val shifted = offset.fold(df)(off =>
-                df.withColumn(Model.TsCol, org.apache.spark.sql.functions.col(Model.TsCol) + off))
-              Processed(RangeAgg.predictLinear(shifted, grid, overRange, horizon))
-            case _ => throw EvalException("'predict_linear' requires a vectorized time series")
-          }
-        case _ => throw EvalException("'predict_linear' expects (range vector, scalar horizon)")
-      }
+    case FuncCall("predict_linear", args, agg) => args match {
+      case Seq(inner, ScalarLit(horizon)) =>
+        Processed(rangeFn("predict_linear", RangeKernel.PredictLinear(horizon), Seq(inner), agg,
+          collection, grid))
+      case _ => throw EvalException("'predict_linear' expects (range vector, scalar horizon)")
+    }
 
     case FuncCall("label_replace", args, agg) =>
       if (agg.isDefined) throw EvalException("'label_replace' expects no aggregation")
@@ -289,15 +227,8 @@ object Eval {
     case FuncCall("absent", args, agg) =>
       if (agg.isDefined) throw EvalException("'absent' expects no aggregation")
       if (args.length != 1) throw EvalException("'absent' expects a single argument")
-      val absentLabels: Map[String, String] = args.head match {
-        // like Prometheus: only a plain selector's equality matchers carry over
-        case VectorSel(ms, _, _) => ms.collect {
-          case Selector.Eq(l, v) if l != graft.Model.NameLabel => l -> v
-        }.toMap
-        case _ => Map.empty
-      }
       resampled(eval(args.head, collection, grid), grid) match {
-        case Processed(df) => Processed(evalAbsent(df, absentLabels, grid))
+        case Processed(df) => Processed(absentFrame(df, selectorLabels(args.head), grid))
         case _ => throw EvalException("'absent' expects an instant vector")
       }
 
@@ -511,19 +442,12 @@ object Eval {
         case _ => throw EvalException("'round' expects (vector[, non-zero scalar to_nearest])")
       }
 
-    case FuncCall("quantile_over_time", args, agg) =>
-      if (agg.isDefined) throw EvalException("'quantile_over_time' expects no aggregation")
-      args match {
-        case Seq(ScalarLit(q), inner) =>
-          eval(inner, collection, grid) match {
-            case UnprocessedVector(df, overRange, offset) =>
-              val shifted = offset.fold(df)(off =>
-                df.withColumn(Model.TsCol, org.apache.spark.sql.functions.col(Model.TsCol) + off))
-              Processed(RangeAgg.quantileOverTime(shifted, grid, overRange, q))
-            case _ => throw EvalException("'quantile_over_time' requires a range vector")
-          }
-        case _ => throw EvalException("'quantile_over_time' expects (scalar q, range vector)")
-      }
+    case FuncCall("quantile_over_time", args, agg) => args match {
+      case Seq(ScalarLit(q), inner) =>
+        Processed(rangeFn("quantile_over_time", RangeKernel.QuantileOverTime(q), Seq(inner), agg,
+          collection, grid))
+      case _ => throw EvalException("'quantile_over_time' expects (scalar q, range vector)")
+    }
 
     case FuncCall("histogram_quantile", args, agg) =>
       if (args.length != 2)
@@ -593,17 +517,30 @@ object Eval {
     case FuncCall(other, _, _) => throw EvalException(s"Cannot handle function '$other'")
   }
 
-  private def evalRate(args: Seq[Node], agg: Option[AggMod], collection: Ctx,
-                       grid: Grid,
-                       fn: (DataFrame, Grid, Double, Double) => DataFrame): QR = {
-    if (agg.isDefined) throw EvalException("'rate' expects no aggregation")
-    if (args.length != 1) throw EvalException(s"'rate' expects a single argument, got ${args.length}")
+  /** The range functions whose single argument is a range vector, by
+    * PromQL name (`delta` is `increase`: the reference has no reset logic). */
+  private val RangeFns: Map[String, RangeKernel.Fn] = {
+    import RangeKernel._
+    Seq(Rate, Irate, Increase, Deriv, Idelta, Changes, Resets,
+      RateResets, IncreaseResets, IrateResets,
+      AvgOverTime, MinOverTime, MaxOverTime, SumOverTime, CountOverTime, LastOverTime,
+      PresentOverTime, StddevOverTime, StdvarOverTime, MadOverTime)
+      .map(fn => fn.name -> fn).toMap + ("delta" -> Increase)
+  }
+
+  /** A range function `fn` over its one range-vector argument, through the
+    * per-series [[RangeKernel]]; the selector's `offset` goes to the kernel.
+    * `name` is the function as the query spells it, for the errors. */
+  private def rangeFn(name: String, fn: RangeKernel.Fn, args: Seq[Node], agg: Option[AggMod],
+                      collection: Ctx, grid: Grid): DataFrame = {
+    if (agg.isDefined) throw EvalException(s"'$name' expects no aggregation")
+    if (args.length != 1) throw EvalException(s"'$name' expects a single argument, got ${args.length}")
     eval(args.head, collection, grid) match {
       case UnprocessedVector(df, overRange, offset) =>
-        Processed(fn(df, grid, overRange, offset.getOrElse(0.0)))
-      case Unprocessed(_, _) => throw EvalException("'rate' requires a vectorized time series")
-      case Processed(_) => throw EvalException("'rate' cannot process the processed yet")
-      case ScalarQ(_) | StepScalar(_) => throw EvalException("The rate over a scalar is not meaningful")
+        Resample.kernel(df, grid, fn, overRange, offset.getOrElse(0.0))
+      case Unprocessed(_, _) => throw EvalException(s"'$name' requires a vectorized time series")
+      case Processed(_) => throw EvalException(s"'$name' cannot process the processed yet")
+      case ScalarQ(_) | StepScalar(_) => throw EvalException(s"The $name over a scalar is not meaningful")
     }
   }
 
@@ -635,7 +572,7 @@ object Eval {
     * bucket filter (bucket labels ARE the series labels). */
   private def rollupServed(name: String, args: Seq[Node], agg: Option[AggMod],
                            collection: Ctx, grid: Grid): Option[QR] = {
-    if (agg.isDefined || collection.rollups.isEmpty) return None
+    if (agg.isDefined || collection.rollups.isEmpty || !RollupFns.contains(name)) return None
     args match {
       case Seq(VectorSel(ms, Some(range), None)) =>
         ms.filter(_.label == Model.NameLabel) match {
@@ -652,23 +589,6 @@ object Eval {
           case _ => None
         }
       case _ => None
-    }
-  }
-
-  /** `*_over_time` range functions (extension): sample-based aggregation
-    * over `(t - range, t]`. An `offset` shifts the window by shifting the
-    * sample timestamps (equivalent and cheaper than shifting every probe). */
-  private def evalOverTime(args: Seq[Node], agg: Option[AggMod], collection: Ctx,
-                           grid: Grid,
-                           fn: (DataFrame, Grid, Double) => DataFrame): QR = {
-    if (agg.isDefined) throw EvalException("'_over_time' expects no aggregation")
-    if (args.length != 1) throw EvalException(s"'_over_time' expects a single argument, got ${args.length}")
-    eval(args.head, collection, grid) match {
-      case UnprocessedVector(df, overRange, offset) =>
-        val shifted = offset.fold(df)(off =>
-          df.withColumn(graft.Model.TsCol, org.apache.spark.sql.functions.col(graft.Model.TsCol) + off))
-        Processed(fn(shifted, grid, overRange))
-      case _ => throw EvalException("'_over_time' requires a vectorized time series")
     }
   }
 
@@ -743,17 +663,20 @@ object Eval {
       case _ => throw EvalException("'timestamp' expects an instant vector")
     }
 
-  /** `absent(v)`: for each grid instant with NO series in `v`, one synthetic
-    * series (labels = the selector's equality matchers) with value 1.
-    * Distributed shape: a literal grid frame anti-joined against the input's
-    * instants — no driver-side emptiness check. */
-  private def evalAbsent(df: DataFrame, labels: Map[String, String], grid: Grid): DataFrame =
-    absentFrame(df.select(org.apache.spark.sql.functions.col(Model.TsCol)).distinct(),
-      labels, grid)
+  /** The labels `absent`/`absent_over_time` give their synthetic series:
+    * like Prometheus, only a plain selector's equality matchers carry over. */
+  private def selectorLabels(arg: Node): Map[String, String] = arg match {
+    case VectorSel(ms, _, _) => ms.collect {
+      case Selector.Eq(l, v) if l != graft.Model.NameLabel => l -> v
+    }.toMap
+    case _ => Map.empty
+  }
 
-  /** Grid steps NOT in `present` (a ts-column frame), as 1.0-valued rows
-    * under the matcher-derived label map — shared by absent (instant
-    * presence) and absent_over_time (window presence). */
+  /** `absent(v)`: for each grid instant with NO row in `present` (an
+    * instant vector, or absent_over_time's present_over_time windows), one
+    * synthetic series (labels = the selector's equality matchers) with
+    * value 1. Distributed shape: a literal grid frame anti-joined against
+    * the input's distinct instants — no driver-side emptiness check. */
   private def absentFrame(present: DataFrame, labels: Map[String, String], grid: Grid): DataFrame = {
     import org.apache.spark.sql.functions._
     val spark = present.sparkSession
@@ -766,7 +689,7 @@ object Eval {
         map().cast(org.apache.spark.sql.types.MapType(
           org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
       else map(labelPairs: _*)
-    gridDf.join(present, Seq(Model.TsCol), "left_anti")
+    gridDf.join(present.select(col(Model.TsCol)).distinct(), Seq(Model.TsCol), "left_anti")
       .select(Model.canonicalKey(labelMap).as(Model.SkeyCol), labelMap.as(Model.LabelsCol),
         col(Model.TsCol), lit(1.0).as(Model.ValueCol))
   }

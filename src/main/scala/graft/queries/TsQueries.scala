@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.{Model, PromEngine}
-import graft.functions.TimeParse
+import graft.functions.{RangeKernel, TimeParse}
 import graft.operators._
 import graft.sources.TsIngest
 
@@ -276,7 +276,7 @@ object TsQueries {
   def deriv1h(spark: SparkSession, dir: String): DataFrame = {
     val selected = Selector.select(Model.withSkey(events(spark, dir)), Seq(
       Selector.Eq(Model.NameLabel, "events"), Selector.Eq("event_type", "purchase")))
-    RangeAgg.derivOverTime(selected, grid, 3600.0)
+    Resample.kernel(selected, grid, RangeKernel.Deriv, 3600.0, 0.0)
       .select(
         col(Model.LabelsCol).getItem("event_type").as("event_type"),
         col(Model.LabelsCol).getItem("props").as("props"),
@@ -290,7 +290,7 @@ object TsQueries {
   def changes1h(spark: SparkSession, dir: String): DataFrame =
     flat(Eval("""changes(events{event_type="purchase"}[1h])""", spark, dir))
 
-  /** Opt-in counter-reset rate (see [[graft.operators.Rate.increaseResets]]):
+  /** Opt-in counter-reset rate (see [[graft.functions.RangeKernel.IncreaseResets]]):
     * the events series is non-monotonic, so every adjacent drop exercises
     * the reset-correction path on real data. */
   def rateResets1h(spark: SparkSession, dir: String): DataFrame =
@@ -1383,7 +1383,7 @@ object TsQueries {
        |SELECT event_type, round(gt, 6) AS ts, 1.0 AS value
        |FROM iv GROUP BY event_type, gt""".stripMargin
 
-  /** Same centered sums as RangeAgg.derivOverTime. */
+  /** Same centered sums as RangeKernel.Deriv. */
   def oracleDeriv1h: String =
     s"""WITH ${sCte("WHERE event_type = 'purchase'")},
        |w AS (SELECT event_type, props, t, v,

@@ -19,7 +19,7 @@ import graft.operators.Grid
   * Bucketing: bucket `wend` covers the LEFT-OPEN interval
   * `(wend − res, wend]`, i.e. `wend = ceil(ts / res) · res` — chosen so a
   * PromQL-convention window `(grid_t − range, grid_t]`
-  * ([[graft.operators.RangeAgg.windowExplode]]'s half-open rule) is an
+  * ([[graft.functions.RangeKernel]]'s half-open rule) is an
   * EXACT union of buckets whenever `grid_t` and `range` are multiples of
   * `res`. No partial-bucket edge correction exists or is needed.
   *
@@ -213,7 +213,7 @@ object RollupStore {
 
   /** Map each bucket to the grid windows `(grid_t − range, grid_t]` that
     * FULLY contain it: `grid_t ∈ [wend, wend + range − res]` — the rollup
-    * twin of [[graft.operators.RangeAgg.windowExplode]]. Alignment is a
+    * twin of [[graft.functions.RangeKernel]]'s window rule. Alignment is a
     * hard precondition (checked): grid start/step and range must be
     * multiples of `res`, otherwise windows would cut buckets. */
   private def bucketExplode(buckets: DataFrame, grid: Grid, range: Double,

@@ -140,7 +140,8 @@ class BinOpSpec extends SparkSpec {
       Seq.tabulate(20)(i => (1704067200.0 + i * 600.0, 3.0 * i * 600.0))
         .toDF("ts", "value")
         .withColumn("labels", map(lit("__name__"), lit("m"))))
-    val d = operators.RangeAgg.derivOverTime(lin, operators.Grid(1704067200.0, 1704074400.0, 3600.0), 3600.0)
+    val d = operators.Resample.kernel(lin, operators.Grid(1704067200.0, 1704074400.0, 3600.0),
+      functions.RangeKernel.Deriv, 3600.0, 0.0)
     val vals = d.select("value").as[Double].collect()
     assert(vals.nonEmpty && vals.forall(v => math.abs(v - 3.0) < 1e-9), vals.mkString(","))
   }
@@ -214,8 +215,8 @@ class BinOpSpec extends SparkSpec {
     val const = Model.withSkey(
       Seq.tabulate(10)(i => (1704067200.0 + i * 600.0, 42.0)).toDF("ts", "value")
         .withColumn("labels", map(lit("__name__"), lit("c"))))
-    val hw = operators.RangeAgg.holtWinters(const,
-      operators.Grid(1704067200.0, 1704074400.0, 3600.0), 3600.0, 0.5, 0.3)
+    val hw = operators.Resample.kernel(const, operators.Grid(1704067200.0, 1704074400.0, 3600.0),
+      functions.RangeKernel.HoltWinters(0.5, 0.3), 3600.0, 0.0)
     assert(hw.count() > 0)
     assert(hw.filter(abs(col("value") - 42.0) > 1e-12).count() == 0)
     // scalar reference recurrence (Prometheus funcHoltWinters shape)
@@ -234,8 +235,8 @@ class BinOpSpec extends SparkSpec {
       vs.zipWithIndex.map { case (v, i) => (1704067200.0 + 600.0 + i * 600.0, v) }
         .toDF("ts", "value")
         .withColumn("labels", map(lit("__name__"), lit("m"))))
-    val out = operators.RangeAgg.holtWinters(lin,
-      operators.Grid(1704067200.0, 1704070800.0, 3600.0), 3600.0, 0.4, 0.2)
+    val out = operators.Resample.kernel(lin, operators.Grid(1704067200.0, 1704070800.0, 3600.0),
+      functions.RangeKernel.HoltWinters(0.4, 0.2), 3600.0, 0.0)
       .filter(col("ts") === 1704070800.0)
       .select("value").as[Double].head()
     assert(math.abs(out - ref(vs, 0.4, 0.2)) < 1e-12, s"$out vs ${ref(vs, 0.4, 0.2)}")

@@ -60,6 +60,15 @@ class EngineSpec extends SparkSpec {
     assert(!keys.contains("props") && !keys.contains("__name__") && keys.contains("event_type"))
   }
 
+  test("range-function errors name the function") {
+    val grid = Grid(1704067200.0, 1704070800.0, 600.0)
+    for ((q, name) <- Seq("irate(events)" -> "irate", "deriv(events)" -> "deriv",
+                          "changes(events[1h], events[1h])" -> "changes")) {
+      val e = intercept[Eval.EvalException](Eval.run(collection, q, grid))
+      assert(e.getMessage.contains(s"'$name'"), s"$q: ${e.getMessage}")
+    }
+  }
+
   test("_over_time family through the PromQL pipeline") {
     val grid = Grid(1704067200.0, 1704074400.0, 3600.0)
     val cnt = Eval.run(collection, """count_over_time(events{event_type="purchase"}[1h])""", grid)

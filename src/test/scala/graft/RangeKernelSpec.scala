@@ -3,18 +3,22 @@ package graft
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
+import graft.functions.{RangeKernel => K}
 import graft.operators.{Grid, RangeAgg, Rate, Resample}
 
 /** The per-series range kernels against a plain-Scala model of the
   * reference's series arithmetic (timeseries.rs:57-191) on generated
   * series. The point functions' model keeps the reference's expression
   * order, so resample/rate/increase/irate must match it bit for bit;
-  * the `*_over_time` model is the PromQL window `(t - range, t]`. The
-  * inputs also pin the fold's series identity (label-map key order, null
-  * and separator-bearing label values).
+  * the window functions' model is the PromQL window `(t - range, t]`
+  * folded in time order, so the rest of the windowed family must match
+  * it bit for bit too. The inputs also pin the fold's series identity
+  * (label-map key order, null and separator-bearing label values).
   */
 class RangeKernelSpec extends SparkSpec {
   import spark.implicits._
@@ -148,6 +152,99 @@ class RangeKernelSpec extends SparkSpec {
     assert(gappy.map(_._2) === Set(0.0, 5.0, 150.0, 155.0))
   }
 
+  /** The windowed functions beyond the six above, quantile at every
+    * q regime. */
+  private val windowFns: Seq[K.Fn] =
+    Seq(Double.NaN, -0.5, 0.0, 0.5, 1.0, 1.5).map(K.QuantileOverTime) ++ Seq(
+      K.MadOverTime, K.StddevOverTime, K.StdvarOverTime, K.PresentOverTime,
+      K.Changes, K.Resets, K.Idelta, K.IncreaseResets, K.RateResets, K.IrateResets,
+      K.Deriv, K.PredictLinear(30.0), K.HoltWinters(0.4, 0.2))
+
+  /** Fixed shapes for the edge rules: a 1-ULP drop before a real counter
+    * reset, NaN samples, and two samples 0.1 ms apart. */
+  private val edges: Seq[Series] = Seq(
+    Series("counter", Vector(0.0, 10.0, 20.0, 30.0, 40.0, 50.0),
+      Vector(10.0, 20.0, math.nextDown(20.0), 25.0, 3.0, 8.0)),
+    Series("nan", Vector(0.0, 10.0, 20.0, 30.0, 40.0),
+      Vector(1.0, Double.NaN, Double.NaN, 2.0, 1.0)),
+    Series("clustered", Vector(96.0, 96.0001), Vector(1.0, 2.0)))
+
+  /** `fn` computed by the kernel on one series, outside Spark. */
+  private def direct(fn: K.Fn, s: Series, g: Grid, range: Double,
+                     offset: Double = 0.0): Map[Double, Any] = {
+    val none = Literal(null, ArrayType(DoubleType))
+    val out = K(none, none, fn, g.start, g.step, g.length, range, offset)
+      .compute(ArrayData.toArrayData(s.ts.toArray), ArrayData.toArrayData(s.vs.toArray))
+    (0 until out.numElements()).map { i =>
+      val row = out.getStruct(i, 2)
+      row.getDouble(0) -> (if (fn == K.CountOverTime) row.getLong(1) else row.getDouble(1))
+    }.toMap
+  }
+
+  private def assertModel(what: String, got: Map[Double, Any], want: Map[Double, Double]): Unit = {
+    assert(got.keySet === want.keySet, s"$what: window set")
+    want.foreach { case (t, w) =>
+      val g = got(t).asInstanceOf[Double]
+      assert(java.lang.Double.doubleToLongBits(g) === java.lang.Double.doubleToLongBits(w),
+        s"$what at $t: $g vs model $w")
+    }
+  }
+
+  test("the windowed family is bit-identical to the window model, with and without offset") {
+    for (s <- generated ++ edges; fn <- windowFns;
+         (range, off) <- Seq((5.0, 0.0), (12.0, 7.0), (60.0, 0.0), (60.0, -3.0)))
+      assertModel(s"${s.name} $fn[$range] offset $off", direct(fn, s, grid, range, off),
+        s.windowFn(fn, grid, range, off))
+  }
+
+  test("the windowed family through the Spark fold matches the model") {
+    for (fn <- windowFns) {
+      val got = byPoint(Resample.kernel(samples, grid, fn, 12.0, 7.0))
+      for (s <- generated)
+        assertModel(s"${s.name} $fn", got.collect { case ((id, t), v) if id == s.name => t -> v },
+          s.windowFn(fn, grid, 12.0, 7.0))
+    }
+  }
+
+  test("counter resets skip a 1-ULP drop; NaN compares like Spark; degenerate fits emit nothing") {
+    val Seq(counter, nan, clustered) = edges
+    val at50 = Grid(50.0, 50.5, 1.0)
+    // 25 → 3 is a reset; 20 → nextDown(20) is not
+    assert(direct(K.IncreaseResets, counter, at50, 60.0) === Map(50.0 -> 23.0))
+    assert(direct(K.RateResets, counter, at50, 60.0) === Map(50.0 -> 23.0 / 60.0))
+    assert(direct(K.Resets, counter, at50, 60.0) === Map(50.0 -> 2.0)) // no epsilon
+    assert(direct(K.IrateResets, counter, Grid(40.0, 40.5, 1.0), 60.0) === Map(40.0 -> 0.3))
+    assert(direct(K.IrateResets, counter, Grid(20.0, 20.5, 1.0), 60.0) ===
+      Map(20.0 -> (math.nextDown(20.0) - 20.0) / 10.0))
+    // 1 → NaN → NaN → 2 → 1: NaN equals NaN and is the largest value
+    assert(direct(K.Changes, nan, Grid(40.0, 40.5, 1.0), 60.0) === Map(40.0 -> 3.0))
+    assert(direct(K.Resets, nan, Grid(40.0, 40.5, 1.0), 60.0) === Map(40.0 -> 2.0))
+    // two samples 0.1 ms apart, 4 s before the instant: den below 1e-9·n·Σtc²
+    val at100 = Grid(100.0, 100.5, 1.0)
+    assert(direct(K.Deriv, clustered, at100, 10.0).isEmpty)
+    assert(direct(K.PredictLinear(60.0), clustered, at100, 10.0).isEmpty)
+    val spread = Series("spread", Vector(90.0, 96.0), Vector(1.0, 2.0))
+    assert(direct(K.Deriv, spread, at100, 20.0) === Map(100.0 -> 1.0 / 6.0))
+  }
+
+  test("one-sample windows: idelta and the fits emit nothing, the rest fold the one value") {
+    val single = generated.find(_.name == "single").get
+    val at100 = Grid(100.0, 100.5, 1.0)
+    for (fn <- Seq(K.Idelta, K.Deriv, K.PredictLinear(1.0), K.HoltWinters(0.5, 0.5),
+                   K.IncreaseResets, K.RateResets, K.IrateResets))
+      assert(direct(fn, single, at100, 5.0).isEmpty, fn)
+    for ((fn, want) <- Seq(K.QuantileOverTime(0.5) -> 4.0, K.QuantileOverTime(-0.5) -> Double.NegativeInfinity,
+                           K.MadOverTime -> 0.0, K.StdvarOverTime -> 0.0, K.PresentOverTime -> 1.0,
+                           K.Changes -> 0.0, K.Resets -> 0.0))
+      assert(direct(fn, single, at100, 5.0) === Map(100.0 -> want), fn)
+  }
+
+  test("a sample 2^32 ± 5 steps from the grid start lands in no window") {
+    // converting the window bounds to int before clamping wraps both to window 5
+    val far = Series("far", Vector(-4294967291.0, 4294967301.0), Vector(1.0, 1.0))
+    assert(direct(K.CountOverTime, far, Grid(0.0, 9.0, 1.0), 1.0).isEmpty)
+  }
+
   test("a single-sample series is flat for resample, zero for rate, NaN for irate") {
     val one = samples.filter(col("labels")("id") === "single")
     val g = Grid(90.0, 110.0, 5.0)
@@ -186,5 +283,104 @@ object RangeKernelSpec {
     /** Sample values in `(t - range, t]`, in time order. */
     def window(t: Double, range: Double): Seq[Double] =
       ts.indices.filter(i => ts(i) > t - range && ts(i) <= t).map(vs)
+
+    /** A windowed function per grid instant, with every ts shifted by
+      * `off`; instants whose window emits no row are absent. */
+    def windowFn(fn: K.Fn, g: Grid, range: Double, off: Double): Map[Double, Double] = {
+      val shifted = ts.map(_ + off)
+      val windows = (0 until g.length).map { k =>
+        val t = g.start + k.toDouble * g.step
+        t -> shifted.indices.filter(i => shifted(i) > t - range && shifted(i) <= t)
+      }
+      val inAny = windows.flatMap(_._2).distinct
+      val c0 = if (inAny.isEmpty) 0.0 else inAny.map(vs).min(Ordering.Double.TotalOrdering)
+      windows.flatMap { case (t, idx) =>
+        if (idx.isEmpty) None
+        else Series.fold(fn, idx.map(shifted), idx.map(vs), t, c0, range).map(t -> _)
+      }.toMap
+    }
+  }
+
+  object Series {
+    /** Spark's double comparison: NaN equals NaN and is the largest. */
+    private def cmp(a: Double, b: Double): Int =
+      if (a == b) 0 else java.lang.Double.compare(a, b)
+
+    private def sum(xs: Seq[Double]): Double = xs.foldLeft(0.0)(_ + _)
+
+    private def quantile(w: Seq[Double], q: Double): Double =
+      if (q.isNaN) Double.NaN
+      else if (q < 0) Double.NegativeInfinity
+      else if (q > 1) Double.PositiveInfinity
+      else {
+        val a = w.sorted(Ordering.Double.TotalOrdering)
+        val pos = (a.length - 1) * q
+        val lo = pos.floor.toInt
+        a(lo) + (a(math.min(lo + 1, a.length - 1)) - a(lo)) * (pos - lo)
+      }
+
+    private def stdvar(w: Seq[Double]): Double =
+      sum(w.map(v => v * v)) / w.length - (sum(w) / w.length) * (sum(w) / w.length)
+
+    /** `(prev - cur) > |prev|·1e-9`: a counter reset. */
+    private def drop(prev: Double, cur: Double): Boolean = cmp(prev - cur, math.abs(prev) * 1e-9) > 0
+
+    private def increaseResets(w: Seq[Double]): Double =
+      w.last - w.head + sum(w.zip(w.tail).collect { case (p, c) if drop(p, c) => p })
+
+    /** Prometheus funcHoltWinters: s1 the smoothed value, b the trend. */
+    private def holtWinters(w: Seq[Double], sf: Double, tf: Double): Double = {
+      var (s0, s1, b) = (0.0, w(0), w(1) - w(0))
+      for (i <- 1 until w.length) {
+        val x = sf * w(i)
+        b = if (i == 1) b else tf * (s1 - s0) + (1 - tf) * b
+        val y = (1 - sf) * (s1 + b)
+        s0 = s1; s1 = x + y
+      }
+      s1
+    }
+
+    /** One window `(wt, w)` (shifted ts, values) at grid instant t; c0 is
+      * the minimum over the samples in any window. */
+    def fold(fn: K.Fn, wt: Seq[Double], w: Seq[Double], t: Double, c0: Double,
+             range: Double): Option[Double] = {
+      val n = w.length
+      val pairs = w.zip(w.tail)
+      fn match {
+        case K.QuantileOverTime(q) => Some(quantile(w, q))
+        case K.MadOverTime =>
+          val m = quantile(w, 0.5)
+          Some(quantile(w.map(x => math.abs(x - m)), 0.5))
+        case K.StdvarOverTime => Some(stdvar(w))
+        case K.StddevOverTime => Some(math.sqrt(stdvar(w)))
+        case K.PresentOverTime => Some(1.0)
+        case K.Changes => Some(pairs.count { case (p, c) => cmp(c, p) != 0 }.toDouble)
+        case K.Resets => Some(pairs.count { case (p, c) => cmp(c, p) < 0 }.toDouble)
+        case _ if n < 2 => None
+        case K.Idelta => Some(w(n - 1) - w(n - 2))
+        case K.IncreaseResets => Some(increaseResets(w))
+        case K.RateResets => Some(increaseResets(w) / range)
+        case K.IrateResets =>
+          val dv = if (drop(w(n - 2), w(n - 1))) w(n - 1) else w(n - 1) - w(n - 2)
+          Some(dv / (wt(n - 1) - wt(n - 2)))
+        case K.HoltWinters(sf, tf) => Some(holtWinters(w, sf, tf))
+        case K.Deriv | K.PredictLinear(_) =>
+          val tc = wt.map(_ - t)
+          val vc = w.map(_ - c0)
+          val (st, sv) = (sum(tc), sum(vc))
+          val stv = sum(tc.zip(vc).map { case (a, b) => a * b })
+          val stt = sum(tc.map(a => a * a))
+          val den = n.toDouble * stt - st * st
+          if (cmp(den, 1e-9 * n.toDouble * stt) <= 0) None
+          else {
+            val slope = (n.toDouble * stv - st * sv) / den
+            fn match {
+              case K.PredictLinear(h) => Some((sv - slope * st) / n + slope * h + c0)
+              case _ => Some(slope)
+            }
+          }
+        case other => throw new IllegalArgumentException(other.name)
+      }
+    }
   }
 }

@@ -13,7 +13,8 @@ import graft.sources.TsIngest
 
 /** Plan shape of the series-as-arrays evaluation over a cached,
   * series-clustered collection: ingest hash-partitions on the label map,
-  * so panels fold each series with no exchange and no window sort. */
+  * so range-function panels fold each series with no exchange and no
+  * window sort. */
 class SeriesPlanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -51,7 +52,10 @@ class SeriesPlanSpec extends SparkSpec {
     val engine = new PromEngine(collection)
     val start = 1704067200.0 + 3600.0
     for (q <- Seq("""rate(m{host="h1"}[5m])""", """m{host="h1"}""", """irate(m{host="h1"}[5m])""",
-                  """increase(m{host="h1"}[5m])""", """avg_over_time(m{host="h1"}[1h])""")) {
+                  """increase(m{host="h1"}[5m])""", """avg_over_time(m{host="h1"}[1h])""",
+                  """quantile_over_time(0.9, m{host="h1"}[1h])""", """deriv(m{host="h1"}[1h])""",
+                  """changes(m{host="h1"}[1h])""", """holt_winters(m{host="h1"}[1h], 0.5, 0.3)""",
+                  """rate_resets(m{host="h1"}[5m])""", """idelta(m{host="h1"}[5m])""")) {
       val df = engine.queryRange(q, start, start + 4 * 3600.0, 300.0)
       assert(df.count() === 2 * 49, q)
       val plan = executed(df)
