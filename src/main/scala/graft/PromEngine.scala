@@ -1,15 +1,28 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.operators.Grid
+import graft.operators.{Grid, Resample}
 import graft.promql.Eval
 
 /** The engine facade — the Spark-native analogue of the reference's
   * `TimeSeriesCollection` + query entry points (timeseries.rs:389-484,
   * query.rs:583-596).
+  *
+  * A ''served'' engine — one whose collection is cached
+  * (`collection.storageLevel != NONE`, as `graft.Serve` sets it up) —
+  * answers from the reference's shape: one `(skey, labels, ts[], v[])` row
+  * per series ([[graft.operators.Resample.Folded]]), built by the first
+  * request that needs it and persisted beside the collection. Range
+  * functions and implicit resamples then filter series rows and run the
+  * kernel, and the metadata calls read one label-map list collected from
+  * it. An engine over an uncached collection (the gates, `graft.Query`)
+  * filters samples first, so the selectors push into the parquet scan,
+  * and folds only what they keep. Construction runs no Spark job either
+  * way; the `with*` variants share their parent's fold.
   *
   * @param collection long-format samples (labels map incl __name__, ts, value)
   * @param queryStartTime when set, queries behave as if the data started at
@@ -17,25 +30,35 @@ import graft.promql.Eval
   *        grid instants are shifted back by `queryTimeOffset` before
   *        evaluation and shifted forward again in the output.
   */
-final class PromEngine(val collection: DataFrame, val queryStartTime: Option[Double] = None,
-                       val nativeHistograms: Map[String, DataFrame] = Map.empty,
-                       val rollupStores: Map[String, graft.sources.RollupStore.Registered] = Map.empty) {
+final class PromEngine private (val collection: DataFrame, val queryStartTime: Option[Double],
+                                val nativeHistograms: Map[String, DataFrame],
+                                val rollupStores: Map[String, graft.sources.RollupStore.Registered],
+                                folded: Option[Resample.Folded]) {
+
+  def this(collection: DataFrame, queryStartTime: Option[Double] = None,
+           nativeHistograms: Map[String, DataFrame] = Map.empty,
+           rollupStores: Map[String, graft.sources.RollupStore.Registered] = Map.empty) =
+    this(collection, queryStartTime, nativeHistograms, rollupStores,
+      if (collection.storageLevel == StorageLevel.NONE) None else Some(new Resample.Folded(collection)))
+
+  /** Whether this engine answers from a resident per-series fold. */
+  def served: Boolean = folded.isDefined
 
   private lazy val keyed = Model.withSkey(collection)
-  private lazy val ctx = Eval.Ctx(keyed, nativeHistograms, rollupStores)
+  private lazy val ctx = Eval.Ctx(keyed, nativeHistograms, rollupStores, folded)
 
   /** Register native-histogram frames ([[graft.operators.NativeHistogram]]
     * layout) by metric name; `histogram_quantile` over a registered name
     * dispatches to the map-only native walk. */
   def withNativeHistograms(m: Map[String, DataFrame]): PromEngine =
-    new PromEngine(collection, queryStartTime, m, rollupStores)
+    new PromEngine(collection, queryStartTime, m, rollupStores, folded)
 
   /** Register [[graft.sources.RollupStore]] handles by metric name:
     * aligned avg/min/max/sum/count/last_over_time range queries are then
     * served from the downsampled store instead of raw samples (identical
     * results — see [[Eval.Ctx]]); everything else falls back to raw. */
   def withRollups(m: Map[String, graft.sources.RollupStore.Registered]): PromEngine =
-    new PromEngine(collection, queryStartTime, nativeHistograms, m)
+    new PromEngine(collection, queryStartTime, nativeHistograms, m, folded)
 
   lazy val (minTime, maxTime): (Double, Double) = {
     val r: Row = collection.agg(min(Model.TsCol), max(Model.TsCol)).head()
@@ -46,7 +69,7 @@ final class PromEngine(val collection: DataFrame, val queryStartTime: Option[Dou
   def queryTimeOffset: Option[Double] = queryStartTime.map(_ - minTime)
 
   def withStartTime(t: Double): PromEngine =
-    new PromEngine(collection, Some(t), nativeHistograms, rollupStores)
+    new PromEngine(collection, Some(t), nativeHistograms, rollupStores, folded)
 
   /** Run a PromQL range query; start/end/step in the *query* time frame.
     * Output (labels, ts, value) with ts back in the query time frame. */
@@ -69,15 +92,29 @@ final class PromEngine(val collection: DataFrame, val queryStartTime: Option[Dou
     out.select(col(Model.LabelsCol), (col(Model.TsCol) + lit(off)).as(Model.TsCol), col(Model.ValueCol))
   }
 
-  /** The label map of every series in `samples` (by default the whole
-    * collection), collected. One groupBy on the map: exchange-free on the
-    * partitioned [[graft.sources.TsIngest]] collection, so one Spark job
-    * that returns at most one row per series. The metadata calls below
-    * finish on the driver; their `*DF` forms return the same list as a
-    * one-column local frame. */
-  def seriesLabels(samples: DataFrame = collection): Seq[Map[String, String]] =
+  /** The label map of every series in the collection. A served engine
+    * collects it from its fold once and keeps it; otherwise each call
+    * groups the collection's samples. The metadata calls
+    * below finish on the driver; their `*DF` forms return the same list
+    * as a one-column local frame. */
+  def seriesLabels(): Seq[Map[String, String]] = folded.fold(seriesLabels(collection))(_.labels)
+
+  /** The label map of every series in `samples`, collected. One groupBy on
+    * the map: exchange-free on the partitioned [[graft.sources.TsIngest]]
+    * collection, so one Spark job that returns at most one row per series. */
+  def seriesLabels(samples: DataFrame): Seq[Map[String, String]] =
     samples.groupBy(col(Model.LabelsCol)).count().collect()
       .map(_.getMap[String, String](0).toMap).toSeq
+
+  /** The label map of every series whose labels satisfy `predicate` (a
+    * condition on the `labels` column, e.g. ORed
+    * [[graft.operators.Selector.predicate]]s). A served engine filters the
+    * fold's series rows; otherwise the samples are filtered and grouped. */
+  def seriesMatching(predicate: Column): Seq[Map[String, String]] = folded match {
+    case Some(f) => f.rows.filter(predicate).select(col(Model.LabelsCol)).collect()
+      .map(_.getMap[String, String](0).toMap).toSeq
+    case None => seriesLabels(collection.filter(predicate))
+  }
 
   /** Sorted distinct label names (timeseries.rs:459-476). */
   def allLabels(): Seq[String] = seriesLabels().flatMap(_.keys).distinct.sorted(PromEngine.Utf8Order)

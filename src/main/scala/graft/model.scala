@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions._
   * hash-partitions a map by its key-sorted form, and the cached
   * `TsIngest` collection is partitioned on it — and derives the key once
   * per series; binary operators, aggregations and outputs then use the key.
+  *
+  * A served [[PromEngine]] (cached collection) also keeps that fold of the
+  * whole collection resident — the reference's shape, one
+  * `(skey, labels, ts[], v[])` row per series ([[graft.operators.Resample.Folded]]) —
+  * and answers selectors from it; the long frame stays the collection of
+  * record, and what consumes samples reads it.
   */
 object Model {
   val NameLabel = "__name__"

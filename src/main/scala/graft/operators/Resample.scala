@@ -38,6 +38,10 @@ final case class Grid(start: Double, end: Double, step: Double) {
   * search per grid instant, and `inline` explodes the result back to the
   * long (skey, labels, ts, value) shape every downstream operator takes.
   * No probe rows, no window sorts.
+  *
+  * A served engine (one whose collection is cached) keeps that fold of the
+  * whole collection resident ([[Folded]]), so a request filters series
+  * rows and runs the kernel — no scan of sample rows, no aggregation.
   */
 object Resample {
 
@@ -48,20 +52,27 @@ object Resample {
     * [[graft.sources.TsIngest]] collection is hash-partitioned on it, so
     * the fold runs map-side with no exchange, and `skey` is derived once
     * per series from the folded labels instead of once per sample. */
-  private[operators] def series(samples: DataFrame): DataFrame =
+  private[graft] def series(samples: DataFrame): DataFrame =
     samples.groupBy(col(Model.LabelsCol))
       .agg(sort_array(collect_list(struct(col(Model.TsCol), col(Model.ValueCol)))).as("__s__"))
       .select(Model.canonicalKey(col(Model.LabelsCol)).as(Model.SkeyCol), col(Model.LabelsCol),
         col(s"__s__.${Model.TsCol}").as(Model.TsCol), col(s"__s__.${Model.ValueCol}").as("v"))
 
-  /** Evaluate `fn` per series and explode to (skey, labels, ts, value).
-    * `offset` moves the probes of point functions to `t - offset` and
-    * adds to every sample ts for windowed ones. */
+  /** Evaluate `fn` per series of `samples` and explode to
+    * (skey, labels, ts, value): [[seriesKernel]] over [[series]]. */
   def kernel(samples: DataFrame, grid: Grid, fn: RangeKernel.Fn,
-             range: Double, offset: Double): DataFrame = {
+             range: Double, offset: Double): DataFrame =
+    seriesKernel(series(samples), grid, fn, range, offset)
+
+  /** Evaluate `fn` over rows already folded by [[series]] and explode to
+    * (skey, labels, ts, value). `offset` moves the probes of point
+    * functions to `t - offset` and adds to every sample ts for windowed
+    * ones. */
+  def seriesKernel(folded: DataFrame, grid: Grid, fn: RangeKernel.Fn,
+                   range: Double, offset: Double): DataFrame = {
     val k = RangeKernel(GraftExpr.expression(col(Model.TsCol)), GraftExpr.expression(col("v")),
       fn, grid.start, grid.step, grid.length, range, offset)
-    series(samples).select(col(Model.SkeyCol), col(Model.LabelsCol), inline(GraftExpr.column(k)))
+    folded.select(col(Model.SkeyCol), col(Model.LabelsCol), inline(GraftExpr.column(k)))
   }
 
   /** Resample each series onto the grid (reference `calculate_resampled_series`,
@@ -69,4 +80,19 @@ object Resample {
     * (skey, labels, ts, value). */
   def resample(samples: DataFrame, grid: Grid, offset: Double = 0.0): DataFrame =
     kernel(samples, grid, RangeKernel.Resample, 0.0, offset)
+
+  /** The per-series fold of a whole cached collection, shared by every
+    * engine over that collection. [[rows]] is [[series]] of it, persisted
+    * at the collection's storage level; nothing runs until the first
+    * request that reads it, whose job fills the cache (the collection is
+    * partitioned on its label map, so the fill needs no exchange).
+    * Selecting a series here selects all of its samples, so
+    * `Selector.select(rows, ms)` equals `series(Selector.select(collection, ms))`
+    * row for row. [[labels]] is every series' label map, collected once. */
+  final class Folded(collection: DataFrame) {
+    lazy val rows: DataFrame = series(collection).persist(collection.storageLevel)
+
+    lazy val labels: Seq[Map[String, String]] =
+      rows.select(col(Model.LabelsCol)).collect().map(_.getMap[String, String](0).toMap).toSeq
+  }
 }

@@ -9,7 +9,10 @@ import graft.Model
   *
   * Pure Catalyst expressions over the label map — equality/`rlike` on
   * `labels[name]`, so Catalyst can push the name-equality conjunct into the
-  * parquet scan when the collection is stored long-form.
+  * parquet scan when the collection is stored long-form (Spark infers the
+  * `IsNotNull` conjunct itself). The same predicates select series rows of
+  * a served engine's per-series fold ([[Resample.Folded]]): a filter over
+  * one row per series instead of one per sample.
   *
   * Reference quirks preserved:
   *  - a series lacking the matched label NEVER matches, whatever the operator
@@ -25,15 +28,19 @@ object Selector {
   final case class Re(label: String, pattern: String) extends Matcher
   final case class Nre(label: String, pattern: String) extends Matcher
 
+  /** One matcher as a filter condition. A series lacking the label reads
+    * `labels[name]` as null, so every operator's test is null there and a
+    * filter drops the row: no separate `isNotNull` probe of the map. The
+    * result is null, never false, for such a row — combine predicates only
+    * with AND/OR inside a filter, never under a NOT. */
   def predicate(m: Matcher): Column = {
     val v = col(Model.LabelsCol).getItem(m.label)
-    val test = m match {
+    m match {
       case Eq(_, x) => v === x
       case Ne(_, x) => v =!= x
       case Re(_, p) => v.rlike(p)
       case Nre(_, p) => !v.rlike(p)
     }
-    v.isNotNull && test
   }
 
   def select(df: DataFrame, matchers: Seq[Matcher]): DataFrame =

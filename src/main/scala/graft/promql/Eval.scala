@@ -10,16 +10,29 @@ import graft.operators._
   * reference's `QueryResult` state machine (query.rs:41-125) so the same
   * queries succeed/fail in the same ways, but every state carries a lazily
   * planned DataFrame: Catalyst fuses the whole pipeline (selector filters push
-  * into the parquet scan; one shuffle per window/agg stage).
+  * into the parquet scan; one shuffle per window/agg stage). On a served
+  * engine selectors read the resident per-series fold instead ([[Ctx]]).
   */
 object Eval {
   final case class EvalException(msg: String) extends RuntimeException(msg)
 
   sealed trait QR
+  /** Selected samples `df` (skey, labels, ts, value), not yet folded into
+    * series. `series` holds the same selection as rows of the served
+    * engine's fold when a plain selector made them; the kernels read
+    * those, and fold `df` only when it is absent. */
+  sealed trait Samples extends QR {
+    def df: DataFrame
+    def series: Option[DataFrame]
+    /** One (skey, labels, ts[], v[]) row per selected series. */
+    def folded: DataFrame = series.getOrElse(Resample.series(df))
+  }
   /** filtered, not yet resampled (query.rs:44) */
-  final case class Unprocessed(df: DataFrame, offset: Option[Double]) extends QR
+  final case class Unprocessed(df: DataFrame, offset: Option[Double],
+                               series: Option[DataFrame] = None) extends Samples
   /** filtered + `[range]`-vectorized (query.rs:45) */
-  final case class UnprocessedVector(df: DataFrame, overRange: Double, offset: Option[Double]) extends QR
+  final case class UnprocessedVector(df: DataFrame, overRange: Double, offset: Option[Double],
+                                     series: Option[DataFrame] = None) extends Samples
   /** resampled onto the grid (query.rs:46) */
   final case class Processed(df: DataFrame) extends QR
   final case class ScalarQ(value: Double) extends QR
@@ -43,9 +56,21 @@ object Eval {
     * of every raw sample — and is bit-identical to the raw-sample path
     * (the store's left-open buckets union exactly to the PromQL window;
     * EngineSpec pins equality). Misaligned queries, offsets, and every
-    * other function fall back to raw samples transparently. */
+    * other function fall back to raw samples transparently.
+    *
+    * `fold` is the per-series fold of `df` that a served engine keeps
+    * ([[graft.operators.Resample.Folded]]). With it, a plain selector
+    * also selects its series rows there, and every range function and
+    * implicit resample over that selector runs the kernel on them: no
+    * scan of sample rows, no aggregation per request. Without it (an
+    * uncached collection) selectors filter the samples, so the filters
+    * still push into a parquet scan, and the kernel folds what they
+    * keep. `limitk`/`limit_ratio` on a selector consume samples and read
+    * `df` either way; a subquery's input is an evaluated frame, folded
+    * per request. */
   final case class Ctx(df: DataFrame, native: Map[String, DataFrame] = Map.empty,
-                       rollups: Map[String, graft.sources.RollupStore.Registered] = Map.empty)
+                       rollups: Map[String, graft.sources.RollupStore.Registered] = Map.empty,
+                       fold: Option[Resample.Folded] = None)
 
   /** Evaluate `query` against the collection and resample onto `grid`.
     * Output columns: (skey, labels, ts, value). */
@@ -73,7 +98,8 @@ object Eval {
 
   /** Final/implicit resample (query.rs:109-124). */
   private def resampled(qr: QR, grid: Grid): QR = qr match {
-    case Unprocessed(df, offset) => Processed(Resample.resample(df, grid, offset.getOrElse(0.0)))
+    case u: Unprocessed =>
+      Processed(Resample.seriesKernel(u.folded, grid, RangeKernel.Resample, 0.0, u.offset.getOrElse(0.0)))
     case p: Processed => p
     case s: ScalarQ => s
     case s: StepScalar => s // already one value per grid instant
@@ -103,9 +129,10 @@ object Eval {
         case ms => throw EvalException(s"Having a single label name filter is mandatory, got ${ms.length}")
       }
       val filtered = Selector.select(collection.df, matchers)
+      val series = collection.fold.map(f => Selector.select(f.rows, matchers))
       range match {
-        case None => Unprocessed(filtered, offset)
-        case Some(r) => UnprocessedVector(filtered, r, offset)
+        case None => Unprocessed(filtered, offset, series)
+        case Some(r) => UnprocessedVector(filtered, r, offset, series)
       }
 
     // Subquery `expr[range:step]`: evaluate the inner expression as an
@@ -371,7 +398,7 @@ object Eval {
       if (k != math.rint(k) || k < 1) throw EvalException(s"limitk k must be a positive integer, got $k")
       val group = by.map { case ByMod(ls) => (ls, false); case WithoutMod(ls) => (ls, true) }
       eval(inner, collection, grid) match {
-        case Unprocessed(df, offset) => Unprocessed(Aggregate.limitk(df, k.toInt, group), offset)
+        case Unprocessed(df, offset, _) => Unprocessed(Aggregate.limitk(df, k.toInt, group), offset)
         case other => resampled(other, grid) match {
           case Processed(df) => Processed(Aggregate.limitk(df, k.toInt, group))
           case _ => throw EvalException("'limitk' expects an instant vector")
@@ -382,7 +409,7 @@ object Eval {
       val (r, inner) = scalarAndVector("limit_ratio", args)
       if (r < -1.0 || r > 1.0) throw EvalException(s"limit_ratio must be in [-1, 1], got $r")
       eval(inner, collection, grid) match {
-        case Unprocessed(df, offset) => Unprocessed(Aggregate.limitRatio(df, r), offset)
+        case Unprocessed(df, offset, _) => Unprocessed(Aggregate.limitRatio(df, r), offset)
         case other => resampled(other, grid) match {
           case Processed(df) => Processed(Aggregate.limitRatio(df, r))
           case _ => throw EvalException("'limit_ratio' expects an instant vector")
@@ -536,9 +563,9 @@ object Eval {
     if (agg.isDefined) throw EvalException(s"'$name' expects no aggregation")
     if (args.length != 1) throw EvalException(s"'$name' expects a single argument, got ${args.length}")
     eval(args.head, collection, grid) match {
-      case UnprocessedVector(df, overRange, offset) =>
-        Resample.kernel(df, grid, fn, overRange, offset.getOrElse(0.0))
-      case Unprocessed(_, _) => throw EvalException(s"'$name' requires a vectorized time series")
+      case v: UnprocessedVector =>
+        Resample.seriesKernel(v.folded, grid, fn, v.overRange, v.offset.getOrElse(0.0))
+      case _: Unprocessed => throw EvalException(s"'$name' requires a vectorized time series")
       case Processed(_) => throw EvalException(s"'$name' cannot process the processed yet")
       case ScalarQ(_) | StepScalar(_) => throw EvalException(s"The $name over a scalar is not meaningful")
     }

@@ -153,7 +153,7 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
           case _ => throw new IllegalArgumentException(s"not a plain selector: $sel")
         }
       }.reduce(_ || _)
-      val sets = engine.seriesLabels(engine.collection.filter(selected))
+      val sets = engine.seriesMatching(selected)
         .map(_.toSeq.sorted).sortBy(_.mkString(",")).map { labels =>
           labels.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
             .mkString("{", ", ", "}")

@@ -21,6 +21,23 @@ class EngineSpec extends SparkSpec {
     assert(Selector.select(df, Seq(Selector.Ne("host", "x"))).count() == 0)
     assert(Selector.select(df, Seq(Selector.Nre("host", "x"))).count() == 0)
     assert(Selector.select(df, Seq(Selector.Eq("__name__", "m"))).count() == 1)
+    // through the engine: an unserved one filters samples, a served one
+    // (cached collection) filters the series rows of its fold
+    val two = Seq((Map("__name__" -> "m"), 1.0, 1.0), (Map("__name__" -> "m", "host" -> "y"), 1.0, 2.0))
+      .toDF(Model.LabelsCol, Model.TsCol, Model.ValueCol)
+    val unserved = new PromEngine(two) // before cache(): Spark matches cached data by plan
+    val cached = two.cache()
+    for ((engine, how) <- Seq(unserved -> "unserved", new PromEngine(cached) -> "served")) {
+      assert(engine.served === (how == "served"))
+      for ((q, want) <- Seq("""m{host="x"}""" -> Nil, """m{host!="x"}""" -> Seq("y"),
+                            """m{host=~".*"}""" -> Seq("y"), """m{host!~"x"}""" -> Seq("y"),
+                            """m{host=""}""" -> Nil)) {
+        val hosts = engine.queryRange(q, 1.0, 2.0, 1.0).select(col(Model.LabelsCol)("host"))
+          .distinct().collect().map(_.getString(0)).toSeq
+        assert(hosts === want, s"$how $q")
+      }
+    }
+    cached.unpersist()
   }
 
   test("promql parser: full grammar shapes") {

@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.MapSort
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.window.WindowExecBase
 import org.apache.spark.sql.functions._
@@ -13,8 +15,10 @@ import graft.sources.TsIngest
 
 /** Plan shape of the series-as-arrays evaluation over a cached,
   * series-clustered collection: ingest hash-partitions on the label map,
-  * so range-function panels fold each series with no exchange and no
-  * window sort. */
+  * so the per-series fold needs no exchange and no window sort, and a
+  * served engine keeps that fold resident, so its panels run no
+  * aggregation either. An uncached collection still pushes the selector
+  * into the parquet scan. */
 class SeriesPlanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -67,6 +71,51 @@ class SeriesPlanSpec extends SparkSpec {
     assert(!executed(instant).exists(_.isInstanceOf[Exchange]), "instant rate has an Exchange")
     val sumBy = engine.queryRange("""sum by (job) (rate(m[5m]))""", start, start + 3600.0, 300.0)
     assert(executed(sumBy).count(_.isInstanceOf[Exchange]) <= 1, "sum by has > 1 Exchange")
+  }
+
+  test("served panels: no Aggregate and no Exchange above the fold's InMemoryTableScan") {
+    val engine = new PromEngine(collection)
+    assert(engine.served)
+    val start = 1704067200.0 + 3600.0
+    def foldScans(plan: Seq[SparkPlan]) = plan.collect {
+      case s: InMemoryTableScanExec if s.output.exists(_.name == "v") => s
+    }
+    val panels = Seq("""rate(m{host="h1"}[5m])""", """m{host="h1"}""", """irate(m{host="h1"}[5m])""",
+      """increase(m{host="h1"}[1h])""", """avg_over_time(m{host="h1"}[1h])""")
+    for (q <- panels) {
+      val plan = executed(engine.queryRange(q, start, start + 4 * 3600.0, 300.0))
+      assert(foldScans(plan).length === 1, s"$q does not read the fold:\n${plan.head}")
+      assert(!plan.exists(_.isInstanceOf[BaseAggregateExec]), s"$q has an Aggregate:\n${plan.head}")
+      assert(!plan.exists(_.isInstanceOf[Exchange]), s"$q has an Exchange:\n${plan.head}")
+    }
+    for (q <- Seq("""rate(m{host="h1"}[5m])""", """increase(m{host="h1"}[1h])""")) {
+      val plan = executed(engine.queryInstant(q, start))
+      assert(foldScans(plan).length === 1 && !plan.exists(_.isInstanceOf[BaseAggregateExec]), q)
+    }
+    // sum by aggregates only its own sum (partial and final), topk none:
+    // neither re-folds samples
+    val sumBy = executed(engine.queryRange("""sum by (job) (rate(m[5m]))""", start, start + 3600.0, 300.0))
+    assert(foldScans(sumBy).length === 1)
+    assert(sumBy.count(_.isInstanceOf[BaseAggregateExec]) === 2, sumBy.head)
+    val topk = executed(engine.queryRange("""topk(2, rate(m[5m]))""", start, start + 3600.0, 300.0))
+    assert(foldScans(topk).length === 1 && !topk.exists(_.isInstanceOf[BaseAggregateExec]), topk.head)
+  }
+
+  test("an uncached engine over raw parquet keeps the selector in PushedFilters") {
+    // its own metric name: Spark reports a frame as cached when an equal
+    // plan is, and the suite's cached collection ingests the same raw rows
+    val engine = new PromEngine(TsIngest.fromDataFrame(raw, "g"))
+    assert(!engine.served)
+    val start = 1704067200.0 + 3600.0
+    for (q <- Seq("""rate(g{host="h1"}[5m])""", """g{host="h1"}""")) {
+      val scans = executed(engine.queryRange(q, start, start + 3600.0, 300.0))
+        .collect { case s: FileSourceScanExec => s }
+      assert(scans.nonEmpty, q)
+      for (s <- scans) {
+        val pushed = s.metadata("PushedFilters")
+        assert(pushed.contains("EqualTo(host,h1)") && pushed.contains("IsNotNull(host)"), s"$q: $pushed")
+      }
+    }
   }
 
   test("TsIngest output is hash-partitioned on the label map, with and without dedup") {
