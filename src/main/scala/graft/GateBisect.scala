@@ -175,11 +175,11 @@ object GateBisect {
         ts.filter(col(graft.Model.TsCol) <= mid), store, 300.0))
       val (ta, _) = time(graft.sources.RollupStore.append(store,
         ts.filter(col(graft.Model.TsCol) > mid)))
-      val (tq, _) = time(graft.sources.RollupStore.avgOverTime(
-        spark, store, "events", grid, 3600.0)
+      val (tq, _) = time(graft.sources.RollupStore.overTime(
+        spark, store, "events", grid, 3600.0, graft.functions.RangeKernel.AvgOverTime)
         .write.format("noop").mode("overwrite").save())
-      val (tl, _) = time(graft.sources.RollupStore.lastOverTime(
-        spark, store, "events", grid, 3600.0)
+      val (tl, _) = time(graft.sources.RollupStore.overTime(
+        spark, store, "events", grid, 3600.0, graft.functions.RangeKernel.LastOverTime)
         .write.format("noop").mode("overwrite").save())
       (tb, ta, tq, tl)
     }

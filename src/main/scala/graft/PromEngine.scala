@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -72,12 +73,15 @@ final class PromEngine private (val collection: DataFrame, val queryStartTime: O
     new PromEngine(collection, Some(t), nativeHistograms, rollupStores, folded)
 
   /** Run a PromQL range query; start/end/step in the *query* time frame.
-    * Output (labels, ts, value) with ts back in the query time frame. */
+    * Output (labels, ts, value) with ts back in the query time frame and
+    * `value` a double, the wire type (`count_over_time` evaluates to a
+    * long; [[queryRangeRaw]] keeps it). */
   def queryRange(query: String, start: Double, end: Double, step: Double): DataFrame = {
     val off = queryTimeOffset.getOrElse(0.0)
     val grid = Grid(start - off, end - off, step)
     val out = Eval.run(ctx, query, grid)
-    out.select(col(Model.LabelsCol), (col(Model.TsCol) + lit(off)).as(Model.TsCol), col(Model.ValueCol))
+    out.select(col(Model.LabelsCol), (col(Model.TsCol) + lit(off)).as(Model.TsCol),
+      col(Model.ValueCol).cast(DoubleType).as(Model.ValueCol))
   }
 
   /** Internal-frame variant used by the correctness harness. */
@@ -89,7 +93,8 @@ final class PromEngine private (val collection: DataFrame, val queryStartTime: O
     val off = queryTimeOffset.getOrElse(0.0)
     val grid = Grid(t - off, t - off + 0.5, 1.0) // length 1 → the instant itself
     val out = Eval.run(ctx, query, grid)
-    out.select(col(Model.LabelsCol), (col(Model.TsCol) + lit(off)).as(Model.TsCol), col(Model.ValueCol))
+    out.select(col(Model.LabelsCol), (col(Model.TsCol) + lit(off)).as(Model.TsCol),
+      col(Model.ValueCol).cast(DoubleType).as(Model.ValueCol))
   }
 
   /** The label map of every series in the collection. A served engine

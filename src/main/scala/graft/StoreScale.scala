@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.llm.{AnnIndex, CentroidStore, DedupIndex, SearchIndex,
   SketchStore, SubstrIndex}
+import graft.functions.RangeKernel
 import graft.operators.Grid
 import graft.sources.{MergeStore, RollupStore, StoreOps}
 
@@ -280,15 +281,15 @@ object StoreScale {
       // 3600 s step keeps every later point aligned
       val g0 = math.ceil((t0 + 3600) / 300.0) * 300.0
       timed(f, "RollupStore", "probe")(
-        RollupStore.avgOverTime(spark, dir, "events",
-          Grid(g0, g0 + 3600 * 23, 3600.0), 3600.0))
+        RollupStore.overTime(spark, dir, "events",
+          Grid(g0, g0 + 3600 * 23, 3600.0), 3600.0, RangeKernel.AvgOverTime))
       timed(f, "RollupStore", "retention")(
         RollupStore.retention(dir, math.ceil((t0 + day) / 300.0) * 300.0))
       timed(f, "RollupStore", "compact")(RollupStore.compact(dir))
       val g1 = math.ceil((t0 + day + 3600) / 300.0) * 300.0
       timed(f, "RollupStore", "probe_compacted")(
-        RollupStore.avgOverTime(spark, dir, "events",
-          Grid(g1, g1 + 3600 * 23, 3600.0), 3600.0))
+        RollupStore.overTime(spark, dir, "events",
+          Grid(g1, g1 + 3600 * 23, 3600.0), 3600.0, RangeKernel.AvgOverTime))
       physicals(spark, f, "RollupStore", s"$dir/rollup.parquet",
         Some("__metric__"))
     }

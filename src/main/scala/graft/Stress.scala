@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Grid, Rate}
+import graft.functions.RangeKernel
+import graft.operators.{Grid, Resample}
 
 /** Scale-stress sweep: blow the collection up by replica factors (a `replica`
   * label multiplies the series count; samples per series stay fixed) and run
@@ -56,7 +57,7 @@ object Stress {
       val samples = Model.withSkey(blown)
       def once(): Double = {
         val t0 = System.nanoTime()
-        Rate.rate(samples, grid, 3600.0).write.format("noop").mode("overwrite").save()
+        Resample.kernel(samples, grid, RangeKernel.Rate, 3600.0, 0.0).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
       val secs = math.min(once(), once()) // best-of-2: first run pays codegen warmup

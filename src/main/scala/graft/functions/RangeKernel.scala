@@ -9,7 +9,9 @@ import org.apache.spark.sql.types._
 /** PromQL range functions evaluated the way the reference does
   * (timeseries.rs:57-191): per series, over its ascending time vector
   * `ts[]` and value vector `v[]`, by indexing into them. This is the one
-  * evaluation path for range functions over float samples.
+  * evaluation path for range functions: float series fold their samples
+  * into `ts[]`/`v[]`, a RollupStore series its bucket ends and partial
+  * aggregates, a native-histogram series its element indices.
   * `RangeKernel(ts, v, fn, …)` returns the series' output points as
   * array<struct<ts: double, value: double>> (`value` is a long for
   * `count_over_time`, like Spark's `count`); callers `inline` it back to
@@ -33,8 +35,11 @@ import org.apache.spark.sql.types._
   * Window functions fold the samples in `(t - range, t]`, after `offset`
   * is added to every sample ts. Window k holds sample t iff
   * `ceil((t - start) / step) <= k <= floor(x / step - [x % step == 0])`,
-  * `x = t - start + range` (the RollupStore alignment twin uses the same
-  * half-open rule, and so do the DuckDB oracles). Both bounds grow with
+  * `x = t - start + range` (the DuckDB oracles use the same half-open
+  * rule). Applied to a RollupStore series' bucket ends `wend` on a grid
+  * whose start, step and range are multiples of the store resolution
+  * `res`, the rule is bucket containment: `wend` lies in `(t - range, t]`
+  * exactly when the bucket `(wend - res, wend]` does. Both bounds grow with
   * t, so each window is a contiguous slice `[lo, hi]` of the series, and
   * each function folds its slice in time order. A window with fewer than
   * [[RangeKernel.Fn.minSamples]] samples emits nothing. Comparisons follow

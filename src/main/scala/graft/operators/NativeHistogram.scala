@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Model
+import graft.functions.RangeKernel
 
 /** Native (exponential/sparse) histograms — the Prometheus data model that
   * succeeds classic `Le`-bucket histograms: ONE sample per (series,
@@ -36,6 +37,11 @@ import graft.Model
   *    zero shuffles, fully codegen-compatible, embarrassingly parallel at
   *    any corpus size (contrast classic histogram_quantile, which must
   *    first group bucket SERIES by instant).
+  *  - [[snapToGrid]], [[rate]] and [[increase]] take the float range
+  *    functions' path: ONE groupBy folds each series' rows into an array
+  *    sorted by ts, and [[graft.functions.RangeKernel]]'s window rule over
+  *    the element indices picks each window's first/last histogram — no
+  *    per-window rows, no second shuffle.
   *  - [[merge]] is the classic-shape aggregation (sum of histograms
   *    across series): explode the sparse arrays, ONE groupBy on
   *    (group-labels, ts, bucket-idx) — group size bounded by series
@@ -203,48 +209,37 @@ object NativeHistogram {
       transform(slice(bs, lit(1), size(bs) - 1), b => b("le")).as("nh_bounds"))
   }
 
-  /** Explode each histogram sample into the grid windows it falls into:
-    * window k holds sample t iff `grid_t - range < t <= grid_t`,
-    * `grid_t = start + k*step` — the [[graft.functions.RangeKernel]]
-    * membership rule, at most `ceil(range/step)` windows per sample.
-    * Histogram samples are structs, not doubles, so they take this
-    * row-per-window shape instead of the kernel. */
-  private def windowExplode(samples: DataFrame, grid: Grid, overRange: Double): DataFrame = {
-    require(overRange > 0, "range <= 0")
-    val start = lit(grid.start)
-    val step = lit(grid.step)
-    val kLo = ceil((col(Model.TsCol) - start) / step).cast(IntegerType)
-    val kHi = least(
-      floor((col(Model.TsCol) - start + lit(overRange)) / step -
-        // half-open upper bound: t == grid_t - range must NOT count
-        when((col(Model.TsCol) - start + lit(overRange)) % step === 0, 1).otherwise(0))
-        .cast(IntegerType),
-      lit(grid.length - 1))
-    val kLo0 = greatest(kLo, lit(0))
-    samples.withColumn("__k__", explode(
-      when(kLo0 <= kHi, sequence(kLo0, kHi))
-        .otherwise(array().cast(ArrayType(IntegerType)))))
+  /** Each series' histogram rows folded into one row (skey, labels, ts,
+    * `__h__`, v): `__h__` holds the rows' [[Columns]] as structs in ts
+    * order, `ts` their timestamps and `v` each element's index as a double
+    * — the value array [[RangeKernel]] windows, so a window's
+    * `min_over_time`/`last_over_time` of `v` is the index of its first/last
+    * histogram. One groupBy on skey. */
+  private def folded(nh1: DataFrame): DataFrame = {
+    val nh0 = normalized(nh1)
+    val nh = if (nh0.columns.contains(Model.SkeyCol)) nh0 else Model.withSkey(nh0)
+    nh.groupBy(col(Model.SkeyCol))
+      .agg(first(Model.LabelsCol).as(Model.LabelsCol),
+        sort_array(collect_list(struct((Model.TsCol +: Columns).map(col): _*))).as("__h__"))
+      .select(col(Model.SkeyCol), col(Model.LabelsCol),
+        col(s"__h__.${Model.TsCol}").as(Model.TsCol), col("__h__"),
+        transform(col("__h__"), (_, i) => i.cast(DoubleType)).as("v"))
   }
-
-  private def gridTs(grid: Grid): Column =
-    lit(grid.start) + col("__k__").cast(DoubleType) * lit(grid.step)
 
   /** Snap native-histogram samples onto the query grid: for each (series,
     * grid instant), the LATEST histogram row whose ts falls in the
     * one-step lookback window `(grid_t - step, grid_t]` — Prometheus
     * staleness semantics with lookback = step. Linear interpolation (the
     * classic resample) is undefined between whole distributions, so
-    * last-known-value is the correct snap. One bounded [[windowExplode]]
-    * + one groupBy. */
-  def snapToGrid(nh0: DataFrame, grid: Grid): DataFrame = {
-    val nh = normalized(nh0)
-    windowExplode(nh, grid, grid.step)
-      .groupBy(col(Model.SkeyCol), col("__k__"))
-      .agg(max_by(struct((Model.LabelsCol +: Columns).map(col): _*),
-        col(Model.TsCol)).as("h"))
-      .select(Seq(col(Model.SkeyCol), gridTs(grid).as(Model.TsCol)) ++
-        (Model.LabelsCol +: Columns).map(c => col(s"h.$c")): _*)
-  }
+    * last-known-value is the correct snap. `offset` shifts the samples
+    * like a selector's offset. */
+  def snapToGrid(nh0: DataFrame, grid: Grid, offset: Double = 0.0): DataFrame =
+    folded(nh0)
+      .select(col(Model.SkeyCol), col(Model.LabelsCol), col("__h__"),
+        inline(Resample.kernelCol(col("v"), grid, RangeKernel.LastOverTime, grid.step, offset)))
+      .withColumn("__e__", col("__h__")(col(Model.ValueCol).cast(IntegerType)))
+      .select(Seq(col(Model.SkeyCol), col(Model.TsCol), col(Model.LabelsCol)) ++
+        Columns.map(c => col(s"__e__.$c").as(c)): _*)
 
   /** `rate(m[range])` over native-histogram series: for each (series, grid
     * instant), the BUCKET-WISE per-second delta between the LAST and FIRST
@@ -261,30 +256,34 @@ object NativeHistogram {
     * as zero + Σ kept buckets so the output is a self-consistent
     * distribution for the downstream walks. Windows with fewer than two
     * samples, or whose first/last samples carry different schemas (a
-    * resolution change mid-window), emit nothing.
+    * resolution change mid-window), emit nothing. `offset` shifts the
+    * samples like a selector's offset.
     *
-    * Plan shape: one bounded [[windowExplode]] + one groupBy; the
-    * subtraction is in-row map arithmetic over the sparse arrays — no
-    * extra shuffle. */
-  def rate(nh1: DataFrame, grid: Grid, overRange: Double): DataFrame =
-    windowDelta(nh1, grid, overRange, overRange)
+    * The subtraction is in-row map arithmetic over the sparse arrays of
+    * the two elements the window's indices pick — no shuffle beyond the
+    * per-series fold. */
+  def rate(nh1: DataFrame, grid: Grid, overRange: Double, offset: Double = 0.0): DataFrame =
+    windowDelta(nh1, grid, overRange, offset, overRange)
 
   /** `increase(m[range])`: the same bucket-wise window delta as [[rate]]
     * but un-normalized (counts, not counts/second) — rate × range. */
-  def increase(nh1: DataFrame, grid: Grid, overRange: Double): DataFrame =
-    windowDelta(nh1, grid, overRange, 1.0)
+  def increase(nh1: DataFrame, grid: Grid, overRange: Double, offset: Double = 0.0): DataFrame =
+    windowDelta(nh1, grid, overRange, offset, 1.0)
 
-  private def windowDelta(nh1: DataFrame, grid: Grid, overRange: Double,
+  private def windowDelta(nh1: DataFrame, grid: Grid, overRange: Double, offset: Double,
                           divisor: Double): DataFrame = {
-    val nh0 = normalized(nh1)
-    val nh = if (nh0.columns.contains(Model.SkeyCol)) nh0 else Model.withSkey(nh0)
-    val hCols = (Model.LabelsCol +: Columns).map(col)
-    val paired = windowExplode(nh, grid, overRange)
-      .groupBy(col(Model.SkeyCol), col("__k__"))
-      .agg(count(lit(1)).as("__n__"),
-        min_by(struct(hCols: _*), col(Model.TsCol)).as("f"),
-        max_by(struct(hCols: _*), col(Model.TsCol)).as("l"))
-      .filter(col("__n__") >= 2 && col("l.nh_schema") === col("f.nh_schema") &&
+    val paired = folded(nh1)
+      .select(col(Model.SkeyCol), col(Model.LabelsCol), col("__h__"),
+        inline(zip_with(
+          Resample.kernelCol(col("v"), grid, RangeKernel.MinOverTime, overRange, offset),
+          Resample.kernelCol(col("v"), grid, RangeKernel.LastOverTime, overRange, offset),
+          (f, l) => struct(f(Model.TsCol).as(Model.TsCol),
+            f(Model.ValueCol).cast(IntegerType).as("__lo__"),
+            l(Model.ValueCol).cast(IntegerType).as("__hi__")))))
+      .filter(col("__hi__") > col("__lo__"))
+      .select(col(Model.SkeyCol), col(Model.LabelsCol), col(Model.TsCol),
+        col("__h__")(col("__lo__")).as("f"), col("__h__")(col("__hi__")).as("l"))
+      .filter(col("l.nh_schema") === col("f.nh_schema") &&
         col("l.nh_bounds") === col("f.nh_bounds")) // NHCB: bounds change = resolution change
     val r = lit(divisor)
     def spectrumDelta(li: Column, lc: Column, fi: Column, fc: Column): Column = {
@@ -308,8 +307,8 @@ object NativeHistogram {
       .withColumn("__p__", pos).withColumn("__ng__", neg)
       .select(
         col(Model.SkeyCol),
-        col(s"l.${Model.LabelsCol}").as(Model.LabelsCol),
-        gridTs(grid).as(Model.TsCol),
+        col(Model.LabelsCol),
+        col(Model.TsCol),
         col("l.nh_schema").as("nh_schema"),
         zero.as("nh_zero_count"),
         ((col("l.nh_sum") - col("f.nh_sum")) / r).as("nh_sum"),

@@ -69,11 +69,17 @@ object Resample {
     * functions to `t - offset` and adds to every sample ts for windowed
     * ones. */
   def seriesKernel(folded: DataFrame, grid: Grid, fn: RangeKernel.Fn,
-                   range: Double, offset: Double): DataFrame = {
-    val k = RangeKernel(GraftExpr.expression(col(Model.TsCol)), GraftExpr.expression(col("v")),
-      fn, grid.start, grid.step, grid.length, range, offset)
-    folded.select(col(Model.SkeyCol), col(Model.LabelsCol), inline(GraftExpr.column(k)))
-  }
+                   range: Double, offset: Double): DataFrame =
+    folded.select(col(Model.SkeyCol), col(Model.LabelsCol),
+      inline(kernelCol(col("v"), grid, fn, range, offset)))
+
+  /** The [[RangeKernel]] of `fn` over a folded row's `ts` array and the
+    * value array `v`: array<struct<ts, value>>, one element per emitting
+    * grid instant. */
+  private[graft] def kernelCol(v: Column, grid: Grid, fn: RangeKernel.Fn,
+                               range: Double, offset: Double): Column =
+    GraftExpr.column(RangeKernel(GraftExpr.expression(col(Model.TsCol)), GraftExpr.expression(v),
+      fn, grid.start, grid.step, grid.length, range, offset))
 
   /** Resample each series onto the grid (reference `calculate_resampled_series`,
     * timeseries.rs:57-68); `offset` evaluates at `t - offset`. Output:

@@ -20,6 +20,13 @@ import graft.Model
   *  - the `__name__` matcher must be a single equality
   *    (timeseries.rs:491-519); enforced by [[graft.promql.Eval]], while this
   *    operator accepts any matcher combination for standalone use.
+  *
+  * Deliberate divergence from Prometheus: `=~`/`!~` use `rlike`, which
+  * FINDS a match anywhere in the value, where Prometheus anchors label
+  * regexes as `^(?:re)$`. The `select_regex` gate and its DuckDB
+  * `regexp_matches` oracle (also unanchored) rely on it; write `^…$` for
+  * an anchored match. One consequence: `m{l!~""}` matches no series that
+  * carries `l`, since every value contains the empty string.
   */
 object Selector {
   sealed trait Matcher { def label: String }

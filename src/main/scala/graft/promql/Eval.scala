@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import graft.Model
 import graft.functions.RangeKernel
 import graft.operators._
+import graft.sources.RollupStore
 
 /** PromQL evaluator over the long-format collection DataFrame. Mirrors the
   * reference's `QueryResult` state machine (query.rs:41-125) so the same
@@ -69,7 +70,7 @@ object Eval {
     * `df` either way; a subquery's input is an evaluated frame, folded
     * per request. */
   final case class Ctx(df: DataFrame, native: Map[String, DataFrame] = Map.empty,
-                       rollups: Map[String, graft.sources.RollupStore.Registered] = Map.empty,
+                       rollups: Map[String, RollupStore.Registered] = Map.empty,
                        fold: Option[Resample.Folded] = None)
 
   /** Evaluate `query` against the collection and resample onto `grid`.
@@ -179,8 +180,9 @@ object Eval {
       }
 
     case FuncCall(name, args, agg) if RangeFns.contains(name) =>
-      rollupServed(name, args, agg, collection, grid)
-        .getOrElse(Processed(rangeFn(name, RangeFns(name), args, agg, collection, grid)))
+      val fn = RangeFns(name)
+      rollupServed(fn, args, agg, collection, grid)
+        .getOrElse(Processed(rangeFn(name, fn, args, agg, collection, grid)))
 
     // absent_over_time: 1 at steps whose trailing window holds NO sample of
     // the selector (window-presence complement of absent()).
@@ -571,20 +573,6 @@ object Eval {
     }
   }
 
-  /** The `*_over_time` functions the rollup store can answer (its partial
-    * rows carry exactly cnt/sum/min/max/first/last). */
-  private val RollupFns: Map[String, (org.apache.spark.sql.SparkSession,
-      String, String, Grid, Double, DataFrame => DataFrame) => DataFrame] = {
-    import graft.sources.RollupStore
-    Map(
-      "avg_over_time" -> (RollupStore.avgOverTime _),
-      "min_over_time" -> (RollupStore.minOverTime _),
-      "max_over_time" -> (RollupStore.maxOverTime _),
-      "sum_over_time" -> (RollupStore.sumOverTime _),
-      "count_over_time" -> (RollupStore.countOverTime _),
-      "last_over_time" -> (RollupStore.lastOverTime _))
-  }
-
   /** Rollup-store dispatch (the recording-rule serving path): Some(result)
     * when the call is a supported `*_over_time` over a PLAIN range selector
     * whose metric has a registered [[graft.sources.RollupStore]] and whose
@@ -597,9 +585,9 @@ object Eval {
     * so registration is purely an optimization, never a semantics change.
     * Non-name matchers are pushed into the store scan as a series-level
     * bucket filter (bucket labels ARE the series labels). */
-  private def rollupServed(name: String, args: Seq[Node], agg: Option[AggMod],
+  private def rollupServed(fn: RangeKernel.Fn, args: Seq[Node], agg: Option[AggMod],
                            collection: Ctx, grid: Grid): Option[QR] = {
-    if (agg.isDefined || collection.rollups.isEmpty || !RollupFns.contains(name)) return None
+    if (agg.isDefined || collection.rollups.isEmpty || !RollupStore.OverTimeFns(fn)) return None
     args match {
       case Seq(VectorSel(ms, Some(range), None)) =>
         ms.filter(_.label == Model.NameLabel) match {
@@ -609,8 +597,8 @@ object Eval {
                 grid.start % reg.res == 0 && grid.step % reg.res == 0)
               .map { reg =>
                 val others = ms.filterNot(_.label == Model.NameLabel)
-                Processed(RollupFns(name)(
-                  collection.df.sparkSession, reg.dir, metric, grid, range,
+                Processed(RollupStore.overTime(
+                  collection.df.sparkSession, reg.dir, metric, grid, range, fn,
                   df => Selector.select(df, others)))
               }
           case _ => None
@@ -839,21 +827,17 @@ object Eval {
     * gridded. None → not native-addressable (callers fall back to the
     * classic path or raise). */
   private def nativeGridFrame(node: Node, collection: Ctx, grid: Grid): Option[DataFrame] = {
-    def resolve(ms: Seq[Selector.Matcher], offset: Option[Double]): Option[DataFrame] =
+    def resolve(ms: Seq[Selector.Matcher]): Option[DataFrame] =
       ms.collectFirst { case Selector.Eq(l, n)
           if l == Model.NameLabel && collection.native.contains(n) => n }
-        .map { name =>
-          val filtered = Selector.select(Model.withSkey(collection.native(name)), ms)
-          offset.fold(filtered)(off => filtered.withColumn(Model.TsCol,
-            org.apache.spark.sql.functions.col(Model.TsCol) + off))
-        }
+        .map(name => Selector.select(Model.withSkey(collection.native(name)), ms))
     node match {
       case VectorSel(ms, None, offset) =>
-        resolve(ms, offset).map(NativeHistogram.snapToGrid(_, grid))
+        resolve(ms).map(NativeHistogram.snapToGrid(_, grid, offset.getOrElse(0.0)))
       case FuncCall("rate", Seq(VectorSel(ms, Some(r), offset)), None) =>
-        resolve(ms, offset).map(NativeHistogram.rate(_, grid, r))
+        resolve(ms).map(NativeHistogram.rate(_, grid, r, offset.getOrElse(0.0)))
       case FuncCall("increase", Seq(VectorSel(ms, Some(r), offset)), None) =>
-        resolve(ms, offset).map(NativeHistogram.increase(_, grid, r))
+        resolve(ms).map(NativeHistogram.increase(_, grid, r, offset.getOrElse(0.0)))
       // sum [by (...)] over a native frame merges whole distributions —
       // the canonical histogram_quantile(q, sum by (l) (rate(m[5m]))).
       case FuncCall("sum", Seq(inner), byMod) =>

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Model
-import graft.operators.Grid
+import graft.functions.RangeKernel
+import graft.operators.{Grid, Resample}
 
 /** Persistent downsampling store — recording rules / Thanos-compact-style
   * rollups for the time-series side: pre-aggregate raw samples into
@@ -35,9 +36,14 @@ import graft.operators.Grid
   * per (skey, wend) at read time — every merge is EXACT (count/sum add,
   * min/max idempotent, first/last = lexicographic struct min/max on the
   * unique-per-series ts), so build+append ≡ one-pass rollup bit-for-bit
-  * and the read-side groupBy is bounded by buckets-per-window, not batch
-  * count (a periodic compaction can rewrite partials as merged rows with
-  * the SAME semantics; correctness never depends on it).
+  * (a periodic compaction can rewrite partials as merged rows with the
+  * SAME semantics; correctness never depends on it).
+  *
+  * Read plan ([[overTime]]): a scan filtered on the metric partition, the
+  * label matchers and the grid's bucket span; the (skey, wend) merge; one
+  * fold per series into `wend[]` plus partial arrays; then one
+  * [[graft.functions.RangeKernel]] pass per row — two aggregations, no
+  * per-window rows.
   */
 object RollupStore {
 
@@ -54,7 +60,7 @@ object RollupStore {
   /** Partial rollup rows for one batch of samples (the write-side shape). */
   def rollup(samples: DataFrame, res: Double): DataFrame = {
     // res == 0 would divide to null/infinite wend and silently corrupt the
-    // store, surfacing only later as a bucketExplode alignment failure
+    // store, surfacing only later as an overTime alignment failure
     require(res > 0, s"rollup resolution must be positive, got $res")
     val s = Model.withSkey(samples)
       .withColumn(MetricCol, col(Model.LabelsCol).getItem(Model.NameLabel))
@@ -211,84 +217,62 @@ object RollupStore {
         col("__f__.t").as("first_ts"), col("__f__.v").as("first_v"),
         col("__l__.t").as("last_ts"), col("__l__.v").as("last_v"))
 
-  /** Map each bucket to the grid windows `(grid_t − range, grid_t]` that
-    * FULLY contain it: `grid_t ∈ [wend, wend + range − res]` — the rollup
-    * twin of [[graft.functions.RangeKernel]]'s window rule. Alignment is a
-    * hard precondition (checked): grid start/step and range must be
-    * multiples of `res`, otherwise windows would cut buckets. */
-  private def bucketExplode(buckets: DataFrame, grid: Grid, range: Double,
-                            res: Double): DataFrame = {
+  /** The `*_over_time` functions [[overTime]] answers: exactly the ones
+    * the partial rows (cnt/sum/min/max/last) determine. */
+  val OverTimeFns: Set[RangeKernel.Fn] = {
+    import RangeKernel._
+    Set(AvgOverTime, SumOverTime, CountOverTime, MinOverTime, MaxOverTime, LastOverTime)
+  }
+
+  /** `fn(metric[range])` over `grid`, answered from the store: each
+    * series' merged buckets fold into one row of ascending `wend[]` plus
+    * one array per partial, and [[graft.functions.RangeKernel]] runs over
+    * them with `ts = wend` — sum and count are `sum_over_time` of the
+    * bucket sums and counts, avg their quotient (the exact sample mean,
+    * never an average of bucket averages), min/max the extremes of the
+    * bucket extremes, last the latest bucket's last sample. On a grid
+    * aligned to `res`, the kernel's window `(t − range, t]` holds `wend`
+    * exactly when the bucket `(wend − res, wend]` lies inside the window,
+    * so the answer equals the raw-sample kernel's (checked: grid start,
+    * step and range must be multiples of `res`). Only buckets that can
+    * fall in a window are read: `grid.start − range < wend ≤ grid.end`
+    * filters the scan beside `where`'s label matchers. Output (skey,
+    * labels, ts, value), `value` typed as the raw kernel types it. */
+  def overTime(spark: SparkSession, dir: String, metric: String,
+               grid: Grid, range: Double, fn: RangeKernel.Fn,
+               where: DataFrame => DataFrame = identity): DataFrame = {
+    import RangeKernel.{AvgOverTime, CountOverTime, LastOverTime, MaxOverTime, MinOverTime,
+      SumOverTime}
+    val res = readRes(spark, dir)
     require(range > 0 && range % res == 0,
       s"range $range not a multiple of rollup resolution $res")
     require(grid.start % res == 0 && grid.step % res == 0,
       s"grid not aligned to rollup resolution $res")
-    val kLo = ceil((col("wend") - lit(grid.start)) / lit(grid.step))
-      .cast(IntegerType)
-    val kHi = least(
-      floor((col("wend") + lit(range - res) - lit(grid.start)) / lit(grid.step))
-        .cast(IntegerType),
-      lit(grid.length - 1))
-    val kLo0 = greatest(kLo, lit(0))
-    buckets.withColumn("__k__", explode(
-      when(kLo0 <= kHi, sequence(kLo0, kHi))
-        .otherwise(array().cast(ArrayType(IntegerType)))))
-  }
-
-  private def gridTs(grid: Grid): Column =
-    lit(grid.start) + col("__k__").cast(DoubleType) * lit(grid.step)
-
-  private def overWindows(spark: SparkSession, dir: String, metric: String,
-                          grid: Grid, range: Double,
-                          aggs: Seq[Column], value: Column,
-                          where: DataFrame => DataFrame): DataFrame = {
-    val res = readRes(spark, dir)
-    bucketExplode(mergedBuckets(spark, dir, metric, where), grid, range, res)
-      .groupBy(col(Model.SkeyCol), col("__k__"))
-      .agg(first(Model.LabelsCol).as(Model.LabelsCol), aggs: _*)
+    val span = col("wend") > grid.start - range && col("wend") <= grid.end
+    val series = mergedBuckets(spark, dir, metric, df => where(df).filter(span))
+      .groupBy(col(Model.SkeyCol))
+      .agg(first(Model.LabelsCol).as(Model.LabelsCol),
+        sort_array(collect_list(struct(col("wend"), col("sum"),
+          col("cnt").cast(DoubleType).as("cnt"), col("min"), col("max"), col("last_v"))))
+          .as("__b__"))
       .select(col(Model.SkeyCol), col(Model.LabelsCol),
-        gridTs(grid).as(Model.TsCol), value.as(Model.ValueCol))
+        col("__b__.wend").as(Model.TsCol), col("__b__"))
+    def over(partial: String, f: RangeKernel.Fn): Column =
+      Resample.kernelCol(col(s"__b__.$partial"), grid, f, range, 0.0)
+    def point(ts: Column, value: Column): Column =
+      struct(ts.as(Model.TsCol), value.as(Model.ValueCol))
+    val points = fn match {
+      case AvgOverTime => zip_with(over("sum", SumOverTime), over("cnt", SumOverTime),
+        (s, c) => point(s(Model.TsCol), s(Model.ValueCol) / c(Model.ValueCol)))
+      case SumOverTime => over("sum", SumOverTime)
+      case CountOverTime => transform(over("cnt", SumOverTime),
+        c => point(c(Model.TsCol), c(Model.ValueCol).cast(LongType)))
+      case MinOverTime => over("min", MinOverTime)
+      case MaxOverTime => over("max", MaxOverTime)
+      case LastOverTime => over("last_v", LastOverTime)
+      case other => throw new IllegalArgumentException(
+        s"${other.name} is not answerable from rollup partials")
+    }
+    series.select(col(Model.SkeyCol), col(Model.LabelsCol), inline(points))
   }
-
-  /** `avg_over_time` answered from the store: Σ bucket sums / Σ bucket
-    * counts per window — the exact sample mean (weighting falls out of the
-    * sums; never an average of bucket averages). */
-  def avgOverTime(spark: SparkSession, dir: String, metric: String,
-                  grid: Grid, range: Double,
-                  where: DataFrame => DataFrame = identity): DataFrame =
-    overWindows(spark, dir, metric, grid, range,
-      Seq(sum("sum").as("__s__"), sum("cnt").as("__c__")),
-      col("__s__") / col("__c__").cast(DoubleType), where)
-
-  def sumOverTime(spark: SparkSession, dir: String, metric: String,
-                  grid: Grid, range: Double,
-                  where: DataFrame => DataFrame = identity): DataFrame =
-    overWindows(spark, dir, metric, grid, range,
-      Seq(sum("sum").as("__s__")), col("__s__"), where)
-
-  def countOverTime(spark: SparkSession, dir: String, metric: String,
-                    grid: Grid, range: Double,
-                    where: DataFrame => DataFrame = identity): DataFrame =
-    overWindows(spark, dir, metric, grid, range,
-      Seq(sum("cnt").as("__c__")), col("__c__").cast(DoubleType), where)
-
-  def minOverTime(spark: SparkSession, dir: String, metric: String,
-                  grid: Grid, range: Double,
-                  where: DataFrame => DataFrame = identity): DataFrame =
-    overWindows(spark, dir, metric, grid, range,
-      Seq(min("min").as("__m__")), col("__m__"), where)
-
-  def maxOverTime(spark: SparkSession, dir: String, metric: String,
-                  grid: Grid, range: Double,
-                  where: DataFrame => DataFrame = identity): DataFrame =
-    overWindows(spark, dir, metric, grid, range,
-      Seq(max("max").as("__m__")), col("__m__"), where)
-
-  /** `last_over_time` from the store: the window's latest bucket's last
-    * sample — float-arithmetic-free, so the gate is bit-exact. */
-  def lastOverTime(spark: SparkSession, dir: String, metric: String,
-                   grid: Grid, range: Double,
-                   where: DataFrame => DataFrame = identity): DataFrame =
-    overWindows(spark, dir, metric, grid, range,
-      Seq(max(struct(col("last_ts").as("t"), col("last_v").as("v"))).as("__l__")),
-      col("__l__.v"), where)
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.DoubleType
   * data carries tied timestamps (ScaleUp's sf1 has 100k ties). Null
   * rate when the window has a single distinct timestamp.
   *
-  * This is the streaming-friendly cousin of [[graft.operators.Rate]]:
+  * This is the streaming-friendly cousin of PromQL `rate()` ([[graft.functions.RangeKernel]]):
   * the full PromQL rate() interpolates at arbitrary grid points, which
   * needs each series' whole sample arrays; the windowed form trades that
   * for a shape `max_by`/`min_by` can express — ONE shuffle on

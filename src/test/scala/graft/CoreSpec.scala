@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.TimeParse
-import graft.operators.{Grid, Rate, Resample}
+import graft.functions.{RangeKernel, TimeParse}
+import graft.operators.{Grid, Resample}
 
 /** Mirrors the reference's own unit tests: interpolation values
   * (timeseries.rs:573-613), grid construction (timevectors.rs:377-419),
@@ -60,13 +60,13 @@ class CoreSpec extends SparkSpec {
 
   test("rate = interpolated endpoint slope (timeseries.rs:104-113)") {
     // rate over [100,120] at t=120: (3 - 1) / 20 = 0.1
-    val out = Rate.rate(series, Grid(120.0, 120.5, 10.0), overRange = 20.0)
+    val out = Resample.kernel(series, Grid(120.0, 120.5, 10.0), RangeKernel.Rate, 20.0, 0.0)
       .select("ts", "value").as[(Double, Double)].collect().toMap
     assert(math.abs(out(120.0) - 0.1) < 1e-12)
   }
 
   test("irate semantics incl. edges (timeseries.rs:116-161)") {
-    val out = Rate.irate(series, Grid(90.0, 125.0, 2.5), overRange = 20.0)
+    val out = Resample.kernel(series, Grid(90.0, 125.0, 2.5), RangeKernel.Irate, 20.0, 0.0)
       .select("ts", "value").as[(Double, Double)].collect().toMap
     assert(out(90.0).isNaN)  // Below range
     assert(out(95.0).isNaN)

@@ -148,6 +148,54 @@ class NativeHistogramSpec extends SparkSpec {
     assert(srBy.toSeq == Seq(3.0))
   }
 
+  test("window edges: half-open windows, offset, resolution changes, empty snaps") {
+    import graft.operators.Grid
+    // series a: one schema-0 bucket counting 1, 2, 4, 7 at ts 60, 120, 180, 300;
+    // series b switches schema between ts 60 and 120
+    val lat = frame(Seq(
+      (60.0, "a", 0, 0.0, 1.0, 1.0, Seq(1), Seq(1.0)),
+      (120.0, "a", 0, 0.0, 2.0, 2.0, Seq(1), Seq(2.0)),
+      (180.0, "a", 0, 0.0, 4.0, 4.0, Seq(1), Seq(4.0)),
+      (300.0, "a", 0, 0.0, 7.0, 7.0, Seq(1), Seq(7.0)),
+      (60.0, "b", 0, 0.0, 1.0, 1.0, Seq(1), Seq(1.0)),
+      (120.0, "b", 1, 0.0, 3.0, 3.0, Seq(2), Seq(3.0)),
+      (180.0, "b", 1, 0.0, 5.0, 5.0, Seq(2), Seq(5.0))))
+    // NHCB series c: its bounds change between ts 60 and 120
+    val cb = Seq(
+        (60.0, Seq(1.0, 2.0), 1.0), (120.0, Seq(1.0, 5.0), 2.0), (180.0, Seq(1.0, 5.0), 4.0))
+      .toDF("ts", "nh_bounds", "nh_count")
+      .select(col("ts"), lit(NativeHistogram.CustomSchema).as("nh_schema"),
+        lit(0.0).as("nh_zero_count"), lit(0.0).as("nh_sum"), col("nh_count"),
+        array(lit(0)).as("nh_pos_idx"), array(col("nh_count")).as("nh_pos_cnt"),
+        col("nh_bounds"), map(lit("__name__"), lit("cb"), lit("h"), lit("c")).as("labels"))
+    val coll = Seq((60.0, 1.0)).toDF("ts", "value")
+      .withColumn("labels", map(lit("__name__"), lit("other")))
+    val eng = new PromEngine(coll).withNativeHistograms(Map("lat" -> lat, "cb" -> cb))
+    val g = Grid(120.0, 360.0, 60.0) // instants 120, 180, 240, 300, 360
+    def counts(q: String): Map[(String, Double), Double] =
+      eng.queryRangeRaw(q, g)
+        .select(col("labels").getItem("h"), col("ts"), col("value"))
+        .as[(String, Double, Double)].collect().map { case (h, t, v) => (h, t) -> v }.toMap
+
+    // (t - 2m, t]: the sample at t - 2m is out, the one at t is in — at 180
+    // the window holds 120 and 180 (4 - 2), not 60 (4 - 1); b's window at
+    // 120 spans its schema change and c's its bounds change: no row
+    assert(counts("histogram_count(increase(lat[2m]))") ==
+      Map(("a", 120.0) -> 1.0, ("a", 180.0) -> 2.0, ("b", 180.0) -> 2.0))
+    assert(counts("histogram_count(increase(cb[2m]))") == Map(("c", 180.0) -> 2.0))
+    // offset 1m moves every sample 60 s later
+    assert(counts("""histogram_count(increase(lat{h="a"}[2m] offset 1m))""") ==
+      Map(("a", 180.0) -> 1.0, ("a", 240.0) -> 2.0))
+    val rate = counts("""histogram_count(rate(lat{h="a"}[2m] offset 1m))""")
+    assert(rate.keySet == Set(("a", 180.0), ("a", 240.0)))
+    assert(math.abs(rate(("a", 240.0)) - 2.0 / 120.0) < 1e-15)
+    // snap: the latest sample in (t - 1m, t]; 240 and 360 have none
+    assert(counts("""histogram_count(lat{h="a"})""") ==
+      Map(("a", 120.0) -> 2.0, ("a", 180.0) -> 4.0, ("a", 300.0) -> 7.0))
+    assert(counts("""histogram_count(lat{h="a"} offset 1m)""") ==
+      Map(("a", 120.0) -> 1.0, ("a", 180.0) -> 2.0, ("a", 240.0) -> 4.0, ("a", 360.0) -> 7.0))
+  }
+
   test("merge: sparse union across series, scalar sums, schema guard") {
     val two = frame(Seq(
       (60.0, "a", 0, 1.0, 10.0, 5.0, Seq(1, 3), Seq(2.0, 2.0)),

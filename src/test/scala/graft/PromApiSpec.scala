@@ -119,6 +119,21 @@ class PromApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("count_over_time serves as a double over query_range and query") {
+    val engine = new PromEngine(queries.TsQueries.events(spark, "/root/testdata/sf0.001"))
+    val api = PromApi(engine, port = 0).start()
+    try {
+      val q = java.net.URLEncoder.encode(
+        """count_over_time(events{event_type="purchase"}[1h])""", "UTF-8")
+      val (c1, range) = get(api.boundPort,
+        s"/api/v1/query_range?query=$q&start=1704067200&end=1704078000&step=1h")
+      assert(c1 == 200 && range.contains("\"resultType\": \"matrix\""), range.take(300))
+      assert(range.contains("[1704070800, \"1\"]"), range.take(300))
+      val (c2, inst) = get(api.boundPort, s"/api/v1/query?query=$q&time=1704070800")
+      assert(c2 == 200 && inst.contains("\"value\": [1704070800, \"1\"]"), inst.take(300))
+    } finally api.stop()
+  }
+
   test("native-histogram quantile serves over query_range") {
     val nh = { // scoped: functions.get would shadow this suite's HTTP get
       import org.apache.spark.sql.functions.{lit, map}

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
 import graft.functions.{RangeKernel => K}
-import graft.operators.{Grid, RangeAgg, Rate, Resample}
+import graft.operators.{Grid, RangeAgg, Resample}
 
 /** The per-series range kernels against a plain-Scala model of the
   * reference's series arithmetic (timeseries.rs:57-191) on generated
@@ -100,19 +100,19 @@ class RangeKernelSpec extends SparkSpec {
   test("rate and increase are bit-identical to the interpolated-endpoint model") {
     // a range that is not a multiple of the step, with an offset
     for ((range, off) <- Seq((12.0, 0.0), (30.0, 7.0))) {
-      assertBitIdentical(s"rate[$range] offset $off", Rate.rate(samples, grid, range, off),
+      assertBitIdentical(s"rate[$range] offset $off", Resample.kernel(samples, grid, K.Rate, range, off),
         (s, t) => (s.interp(t - off) - s.interp(t - (off + range))) / range)
-      assertBitIdentical(s"increase[$range] offset $off", Rate.increase(samples, grid, range, off),
+      assertBitIdentical(s"increase[$range] offset $off", Resample.kernel(samples, grid, K.Increase, range, off),
         (s, t) => s.interp(t - off) - s.interp(t - (off + range)))
     }
   }
 
   test("irate is bit-identical to the reference model, NaN on negative deltas and edges") {
-    assertBitIdentical("irate", Rate.irate(samples, grid, 12.0), (s, t) => s.irate(t))
-    assertBitIdentical("irate offset 7", Rate.irate(samples, grid, 12.0, 7.0),
+    assertBitIdentical("irate", Resample.kernel(samples, grid, K.Irate, 12.0, 0.0), (s, t) => s.irate(t))
+    assertBitIdentical("irate offset 7", Resample.kernel(samples, grid, K.Irate, 12.0, 7.0),
       (s, t) => s.irate(t - 7.0))
-    val falling = byPoint(Rate.irate(samples.filter(col("labels")("id") === "falling"),
-      Grid(10.0, 45.0, 5.0), 10.0))
+    val falling = byPoint(Resample.kernel(samples.filter(col("labels")("id") === "falling"),
+      Grid(10.0, 45.0, 5.0), K.Irate, 10.0, 0.0))
     def at(t: Double): Double = falling(("falling", t)).asInstanceOf[Double]
     assert(at(15.0).isNaN) // 9 → 7 with no prior sample: negative
     assert(at(25.0).isNaN) // interp 7.5 - prior 9: negative
@@ -249,8 +249,8 @@ class RangeKernelSpec extends SparkSpec {
     val one = samples.filter(col("labels")("id") === "single")
     val g = Grid(90.0, 110.0, 5.0)
     assert(byPoint(Resample.resample(one, g)).values.toSet === Set(4.0))
-    assert(byPoint(Rate.rate(one, g, 10.0)).values.toSet === Set(0.0))
-    assert(byPoint(Rate.irate(one, g, 10.0)).values.forall(_.asInstanceOf[Double].isNaN))
+    assert(byPoint(Resample.kernel(one, g, K.Rate, 10.0, 0.0)).values.toSet === Set(0.0))
+    assert(byPoint(Resample.kernel(one, g, K.Irate, 10.0, 0.0)).values.forall(_.asInstanceOf[Double].isNaN))
   }
 }
 

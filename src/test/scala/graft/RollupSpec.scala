@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Grid, RangeAgg}
+import graft.functions.RangeKernel
+import graft.operators.{Grid, RangeAgg, Resample}
 import graft.sources.RollupStore
 
 class RollupSpec extends SparkSpec {
@@ -42,25 +43,26 @@ class RollupSpec extends SparkSpec {
     assert(got == want)
   }
 
+  private def collectMap(df: DataFrame): Map[Double, Double] =
+    df.select("ts", "value").collect()
+      .map(r => r.getDouble(0) -> (r.get(1) match { // count is LONG from RangeAgg
+        case d: Double => d
+        case l: Long => l.toDouble
+      })).toMap
+
   test("avg/min/max/count from store equal RangeAgg over raw samples on an aligned grid") {
     val all = Model.withSkey(samples((1 to 40).map(i => (i * 77.0, math.sin(i) * 10)): _*))
     val dir = tmp("graft-ru-law")
     RollupStore.build(all, dir, 300.0)
     val g = Grid(600.0, 3000.0, 600.0)
-    def collectMap(df: DataFrame): Map[Double, Double] =
-      df.select("ts", "value").collect()
-        .map(r => r.getDouble(0) -> (r.get(1) match { // count is LONG from RangeAgg
-          case d: Double => d
-          case l: Long => l.toDouble
-        })).toMap
     val cases = Seq[((DataFrame, DataFrame))](
-      (RollupStore.avgOverTime(spark, dir, "m", g, 600.0),
+      (RollupStore.overTime(spark, dir, "m", g, 600.0, RangeKernel.AvgOverTime),
         RangeAgg.avgOverTime(all, g, 600.0)),
-      (RollupStore.minOverTime(spark, dir, "m", g, 600.0),
+      (RollupStore.overTime(spark, dir, "m", g, 600.0, RangeKernel.MinOverTime),
         RangeAgg.minOverTime(all, g, 600.0)),
-      (RollupStore.maxOverTime(spark, dir, "m", g, 600.0),
+      (RollupStore.overTime(spark, dir, "m", g, 600.0, RangeKernel.MaxOverTime),
         RangeAgg.maxOverTime(all, g, 600.0)),
-      (RollupStore.countOverTime(spark, dir, "m", g, 600.0),
+      (RollupStore.overTime(spark, dir, "m", g, 600.0, RangeKernel.CountOverTime),
         RangeAgg.countOverTime(all, g, 600.0)))
     for (((fromStore, fromRaw), i) <- cases.zipWithIndex) {
       val s = collectMap(fromStore); val r = collectMap(fromRaw)
@@ -69,12 +71,32 @@ class RollupSpec extends SparkSpec {
     }
   }
 
+  test("buckets far outside the grid: all six functions equal the raw kernel") {
+    // a day of extreme values before the grid and after it, a sample on the
+    // first window's open edge (bucket wend = start - range) and buckets on
+    // both closed edges (wend = start - range + res, wend = last instant)
+    val inGrid = (1 to 40).map(i => (86400.0 + i * 77.0, math.sin(i) * 10))
+    val outside = Seq((10.0, 1e6), (43200.0, -1e6), (86350.0, 3.5), (86400.0, -7.25),
+      (95000.0, 5e6), (200000.0, -5e6))
+    val all = Model.withSkey(samples(inGrid ++ outside: _*))
+    val dir = tmp("graft-ru-span")
+    RollupStore.build(all, dir, 300.0)
+    val g = Grid(87000.0, 89400.0, 600.0)
+    for (fn <- Seq(RangeKernel.AvgOverTime, RangeKernel.SumOverTime, RangeKernel.CountOverTime,
+                   RangeKernel.MinOverTime, RangeKernel.MaxOverTime, RangeKernel.LastOverTime)) {
+      val s = collectMap(RollupStore.overTime(spark, dir, "m", g, 600.0, fn))
+      val r = collectMap(Resample.kernel(all, g, fn, 600.0, 0.0))
+      assert(s.nonEmpty && s.keySet == r.keySet, s"${fn.name} instants")
+      s.keys.foreach(k => assert(math.abs(s(k) - r(k)) < 1e-9, s"${fn.name} @ $k"))
+    }
+  }
+
   test("lastOverTime picks the window's latest sample across bucket partials") {
     val dir = tmp("graft-ru-last")
     RollupStore.build(Model.withSkey(samples(100.0 -> 1.0, 250.0 -> 2.0)), dir, 300.0)
     RollupStore.append(dir, Model.withSkey(samples(280.0 -> 7.0, 550.0 -> 3.0)))
     val g = Grid(300.0, 600.0, 300.0)
-    val out = RollupStore.lastOverTime(spark, dir, "m", g, 300.0)
+    val out = RollupStore.overTime(spark, dir, "m", g, 300.0, RangeKernel.LastOverTime)
       .select("ts", "value").collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     // window (0,300]: last sample 280→7 (appended partial beats built 250→2)
     assert(out == Map(300.0 -> 7.0, 600.0 -> 3.0))
@@ -103,7 +125,10 @@ class RollupSpec extends SparkSpec {
       // the served plan reads the bucket store, never the raw collection
       assert(served.queryExecution.executedPlan.toString.contains(dir),
         s"$q not store-served")
-      val raw = rows(eng.queryRangeRaw(q, g))
+      val rawDf = eng.queryRangeRaw(q, g)
+      assert(served.schema(Model.ValueCol).dataType == rawDf.schema(Model.ValueCol).dataType,
+        s"$q value type")
+      val raw = rows(rawDf)
       val got = rows(served)
       assert(got.keySet == raw.keySet, s"$q instants")
       // min/max/count/last are copied values — exact; avg/sum are float
@@ -129,11 +154,11 @@ class RollupSpec extends SparkSpec {
     val dir = tmp("graft-ru-align")
     RollupStore.build(Model.withSkey(samples(100.0 -> 1.0)), dir, 300.0)
     intercept[IllegalArgumentException] {
-      RollupStore.avgOverTime(spark, dir, "m", Grid(300.0, 600.0, 300.0), 450.0)
+      RollupStore.overTime(spark, dir, "m", Grid(300.0, 600.0, 300.0), 450.0, RangeKernel.AvgOverTime)
         .collect()
     }
     intercept[IllegalArgumentException] {
-      RollupStore.avgOverTime(spark, dir, "m", Grid(150.0, 450.0, 300.0), 300.0)
+      RollupStore.overTime(spark, dir, "m", Grid(150.0, 450.0, 300.0), 300.0, RangeKernel.AvgOverTime)
         .collect()
     }
   }
