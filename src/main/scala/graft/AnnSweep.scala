@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.Ann
@@ -22,13 +22,8 @@ object AnnSweep {
     val phases = args.lift(2).map(_.split(",").map(_.trim).toSet)
       .getOrElse(Set("all"))
     def phase(p: String): Boolean = phases("all") || phases(p)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-annsweep")
+    Harness.warmUp(spark)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
     val corpusN = emb.count()
@@ -38,11 +33,11 @@ object AnnSweep {
     truth.count()
 
     def recallAndTime(approx: => DataFrame): (Double, Double, Long) = {
-      val t0 = System.nanoTime()
-      val got = approx.select(col("query_id"), col("neighbor_id"))
-      val hits = truth.join(got, Seq("query_id", "neighbor_id")).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      (hits.toDouble / (nQ * 5.0), secs, hits)
+      val r = Harness.run(spark) {
+        truth.join(approx.select(col("query_id"), col("neighbor_id")),
+          Seq("query_id", "neighbor_id")).count()
+      }
+      (r.value.toDouble / (nQ * 5.0), r.secs, r.value)
     }
 
     // candidate counts: the work a 100 TB run would actually pay per query
@@ -149,11 +144,11 @@ object AnnSweep {
     }.cache()
     anisoTruth.count()
     def recallAniso(approx: => DataFrame): (Double, Double) = {
-      val t0 = System.nanoTime()
-      val hits = anisoTruth.join(
-        approx.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id")).count()
-      (hits.toDouble / (nQ * 5.0), (System.nanoTime() - t0) / 1e9)
+      val r = Harness.run(spark) {
+        anisoTruth.join(approx.select(col("query_id"), col("neighbor_id")),
+          Seq("query_id", "neighbor_id")).count()
+      }
+      (r.value.toDouble / (nQ * 5.0), r.secs)
     }
     // pit = PCA power-iteration count: the 0.82-decay spectrum has
     // adjacent-eigenvalue ratio 0.82, so per-deflation convergence goes

@@ -36,28 +36,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bench")
+    Harness.warmUp(spark)
 
-    // JVM/codegen warmup: exercise the same physical operators the queries
-    // use (HashAggregate with sum/avg, window, sort-merge artifacts), not
-    // just a range-sum — the first queries in alphabetical order otherwise
-    // pay the JIT cost for the whole fleet and read 30-40% slow.
-    spark.range(1000000).selectExpr("id % 97 as k", "id as v")
-      .groupBy("k").agg(org.apache.spark.sql.functions.expr("sum(v)"),
-        org.apache.spark.sql.functions.expr("avg(v)"),
-        org.apache.spark.sql.functions.expr("max(v)"))
-      .selectExpr("sum(`sum(v)`)").collect()
-
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum
     // Queries must not inherit each other's heap: operators that checkpoint
     // (duplicateClusters) leave their final frame persisted, and 50+ queries
     // of leftovers turn into GC stalls attributed to whichever query runs
@@ -76,13 +57,11 @@ object Bench {
     // and after the fleet. If the two disagree wildly, or either is far off
     // its historical ~0.1-0.2 s, the whole artifact was taken under load
     // and totals should not be compared round-over-round.
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
+    def calibrate(): Double = Harness.run(spark) {
       spark.range(20000000).selectExpr("id % 1021 as k", "id as v")
         .groupBy("k").agg(org.apache.spark.sql.functions.expr("sum(v)"))
         .selectExpr("sum(`sum(v)`)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
+    }.secs
     // Clean-machine historical band for the probe is ~0.48-0.66 s
     // (r8-r12 quiet runs). A probe beyond 2× that ceiling means the next
     // span would be timed under external load (r12 published three ×7-8
@@ -110,12 +89,14 @@ object Bench {
     }
     val (_, calibPre) = probeGated("pre-fleet")
 
+    val gcPerQuery = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       clearState()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); return -1.0 }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        val r = Harness.run(spark)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        gcPerQuery(name) = gcPerQuery.getOrElse(name, 0.0) + r.gcMs / 1e3
+        r.secs
+      } catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); -1.0 }
     }
     def median(rs: Seq[Double]): Double =
       if (rs.exists(_ < 0)) -1.0 else rs.sorted.apply(rs.size / 2)
@@ -140,7 +121,6 @@ object Bench {
     val spanBracket = scala.collection.mutable.Map.empty[Int, (Double, Double)]
     val spanOf = scala.collection.mutable.Map.empty[String, Int]
 
-    val gcPerQuery = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val fleet = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val results = fleet.map { case (name, fn) =>
@@ -152,7 +132,6 @@ object Bench {
       // publish the tightest attempt, so no published row carries a >3×
       // spread unless the machine never calmed down. GC time is attributed
       // across all runs so a stall shows up next to the query it hit.
-      val gc0 = gcMillis()
       def attempt(): Seq[Double] = Seq.fill(runsN)(timeOne(name, fn))
       var runs = attempt()
       var retries = 0
@@ -167,7 +146,6 @@ object Bench {
       val secs = median(runs)
       System.err.println("[bench] " + name + " runs: " +
         runs.map(r => f"$r%.3f").mkString(","))
-      gcPerQuery(name) = (gcMillis() - gc0) / 1e3
       spanOf(name) = spanId
       sinceProbe += 1
       if (sinceProbe >= CalibEvery) {

@@ -63,8 +63,16 @@ object GraftExtensions {
   /** Register the same functions as temp functions on an EXISTING
     * session — the programmatic twin of the config route. */
   def registerAll(spark: SparkSession): Unit =
-    functions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
+    functions.foreach { case (name, _, builder) => register(spark, name, builder) }
+
+  /** Registers `name` on `spark` unless the session already has it, so
+    * the per-query `register(spark)` calls register each function once
+    * per session instead of replacing it (and logging the replacement)
+    * on every call. Every object in `graft.functions` registers here. */
+  def register(spark: SparkSession, name: String,
+               builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+  }
 }

@@ -138,14 +138,7 @@ object Pipeline {
     val withEmb = args.contains("--embeddings")
     val noStats = args.contains("--no-stats")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-pipeline", Harness.ServePartitions)
 
     val docs = spark.read.parquet(s"$docsDir/documents.parquet")
     run(spark, docs, outDir, budget, minQuality,
@@ -279,9 +272,10 @@ object Pipeline {
         require(warc || paged.filter(col("html").isNull).isEmpty,
           "--extract-html requires non-null html (found null rows)")
         // the ROW variant: spec-pinned ≡ mainContent, measured parity at
-        // sf0.1 (ExtractBench §6) — and it carries zero shuffle, which is
-        // what matters on a real cluster where the explode twin's
-        // groupBy(doc_id) re-join moves the whole corpus over the network
+        // sf0.1 (SURVEY §6's ExtractBench table) — and it carries zero
+        // shuffle, which is what matters on a real cluster where the
+        // explode twin's groupBy(doc_id) re-join moves the whole corpus
+        // over the network
         pin("after_extract_html",
           paged.drop("text").join(
             graft.llm.Extract.mainContentRow(paged)

@@ -1,12 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{ExplainMode, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.{ExplainMode, SortExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExecBase
 
@@ -14,12 +10,13 @@ import org.apache.spark.sql.execution.window.WindowExecBase
   * query, runs it once (noop sink), then writes
   * `<outDir>/<query>_<tag>.txt` holding the `.explain("formatted")` tree
   * (the [[Plans]] format) under a summary line: the number of Spark jobs
-  * the whole gate executed (SparkListener count) — the observable a
+  * the whole gate executed ([[Harness.run]]) — the observable a
   * lifecycle optimization moves when the plan shape of the declared query
   * is unchanged (store builds/appends are side effects outside the
   * returned frame's plan, so job count is where sequential-vs-overlapped
   * commits show) — and the shuffle Exchange, Window and Sort nodes of the
-  * physical plan. The same summaries, one table row per gate, go to
+  * executed plan ([[Harness.executedNodes]]: a cached relation's build
+  * plan counts once). The same summaries, one table row per gate, go to
   * `<outDir>/summary_<tag>.md`.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <q1,q2,...>
@@ -28,43 +25,22 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, qcsv) = args.take(4)
     val queries = qcsv.split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-plandump")
+    Harness.warmUp(spark)
     Files.createDirectories(Paths.get(outDir))
 
-    val jobs = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
-
     val rows = queries.map { name =>
-      val fn = SparkEntry.queries(name)
-      jobs.set(0)
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // listener events drain asynchronously; poll until the count settles
-      var nJobs = jobs.get()
-      var settled = false
-      while (!settled) {
-        Thread.sleep(200)
-        val now = jobs.get()
-        settled = now == nJobs
-        nJobs = now
+      // the gate's construction (store builds, collects) counts too
+      val run = Harness.run(spark) {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        df
       }
-      val physical = df.queryExecution.executedPlan
-      def count(p: PartialFunction[SparkPlan, Unit]): Int = Nodes.collect(physical)(p).length
-      val exchanges = count { case _: ShuffleExchangeExec => }
-      val windows = count { case _: WindowExecBase => }
-      val sorts = count { case _: SortExec => }
+      val (df, nJobs, sec) = (run.value, run.jobs, run.secs)
+      val nodes = Harness.executedNodes(df.queryExecution.executedPlan)
+      val exchanges = nodes.count(_.isInstanceOf[ShuffleExchangeExec])
+      val windows = nodes.count(_.isInstanceOf[WindowExecBase])
+      val sorts = nodes.count(_.isInstanceOf[SortExec])
       val summary = f"$nJobs Spark jobs, $exchanges Exchange, $windows Window, $sorts Sort; $sec%.2f s"
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       val lines = plan.split("\n")
@@ -79,7 +55,7 @@ object PlanDump {
       val full = sys.env.get("SPARK_GRAFT_PLAN_FULL").contains("1")
       val shown = if (full) lines else tree
       val body = s"## $name ($tag)\n\n" +
-        s"gate: $summary (end to end, single cold run)\n\n" +
+        s"gate: $summary (end to end, one run after the warm-up)\n\n" +
         "```\n" + shown.mkString("\n").trim +
         (if (!full && pushed.nonEmpty) "\n\n" + pushed.mkString("\n") else "") +
         "\n```\n"
@@ -93,6 +69,3 @@ object PlanDump {
     spark.stop()
   }
 }
-
-/** Plan traversal through adaptive plans and their query stages. */
-private object Nodes extends AdaptiveSparkPlanHelper

@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Regenerates PLANS.md: `.explain("formatted")` evidence for the headline
   * queries plus executed-plan scan/exchange counts (post-AQE, after one run).
@@ -115,13 +116,7 @@ object Plans {
     // scan/exchange counts to stdout WITHOUT rewriting PLANS.md (targeted
     // plan iteration; the committed file only regenerates on a full run).
     val only = args.lift(1).map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-plans")
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan evidence for the headline queries\n\n")
@@ -157,68 +152,27 @@ object Plans {
     sb.append("  `TsSink`-partitioned store plans zero Exchange nodes; the regression is\n")
     sb.append("  pinned by MetricStoreSpec (\"no Exchange in the readMetric plan\").\n")
 
-    // Tree-walk the post-run plan instead of grepping its toString: a
-    // cached frame (InMemoryTableScan) PRINTS its child plan under every
-    // consumer, so string counting would bill a once-materialized subtree
-    // once per consumer (mix_perplexity's shared perplexity frame showed
-    // 2× its real scans). The walk counts each cached relation's build
-    // plan ONCE and skips ReusedExchange subtrees, matching what actually
-    // executes.
-    def countExecuted(root: org.apache.spark.sql.execution.SparkPlan): (Int, Int, Int) = {
-      import org.apache.spark.sql.execution._
-      val seenCaches = scala.collection.mutable.Set[AnyRef]()
-      var scans, exchanges, broadcasts = 0
-      def walk(p: SparkPlan): Unit = p match {
-        case a: adaptive.AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case a: adaptive.QueryStageExec => walk(a.plan)
-        case _: exchange.ReusedExchangeExec => ()
-        case m: columnar.InMemoryTableScanExec =>
-          if (seenCaches.add(m.relation.cacheBuilder)) walk(m.relation.cachedPlan)
-        case s: FileSourceScanExec if s.relation.fileFormat.toString.contains("Parquet") =>
-          scans += 1
-        case e: exchange.BroadcastExchangeExec =>
-          exchanges += 1; broadcasts += 1; e.children.foreach(walk)
-        case e: exchange.ShuffleExchangeExec =>
-          exchanges += 1; e.children.foreach(walk)
-        case other =>
-          other.children.foreach(walk)
-          other.subqueries.foreach(walk)
-      }
-      walk(root)
-      (scans, exchanges, broadcasts)
-    }
-
-    // every WindowExec with NO partition spec in the post-run plan: a
-    // single-task sort whose input must be model-bounded to survive scale
-    def partitionlessWindows(root: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
-      import org.apache.spark.sql.execution._
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      val seenCaches = scala.collection.mutable.Set[AnyRef]()
-      def walk(p: SparkPlan): Unit = p match {
-        case a: adaptive.AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case a: adaptive.QueryStageExec => walk(a.plan)
-        case _: exchange.ReusedExchangeExec => ()
-        case m: columnar.InMemoryTableScanExec =>
-          if (seenCaches.add(m.relation.cacheBuilder)) walk(m.relation.cachedPlan)
-        case w: window.WindowExec =>
-          if (w.partitionSpec.isEmpty)
-            out += w.windowExpression.map(_.name).mkString(",")
-          w.children.foreach(walk)
-        case other =>
-          other.children.foreach(walk)
-          other.subqueries.foreach(walk)
-      }
-      walk(root)
-      out.toSeq.distinct
-    }
     val globalWindows = scala.collection.mutable.ArrayBuffer[(String, String)]()
 
     Headline.filter(n => only.forall(_.contains(n))).foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.write.format("noop").mode("overwrite").save()
-      partitionlessWindows(df.queryExecution.executedPlan)
+      // count over the walked post-run plan, not its printed string: a
+      // cached frame (InMemoryTableScan) PRINTS its child plan under every
+      // consumer, so string counting would bill a once-materialized
+      // subtree once per consumer (mix_perplexity's shared perplexity
+      // frame showed 2× its real scans)
+      val nodes = Harness.executedNodes(df.queryExecution.executedPlan)
+      // every WindowExec with NO partition spec: a single-task sort whose
+      // input must be model-bounded to survive scale
+      nodes.collect { case w: WindowExec if w.partitionSpec.isEmpty =>
+        w.windowExpression.map(_.name).mkString(",") }.distinct
         .foreach(cols => globalWindows += ((name, cols)))
-      val (scans, exchanges, broadcasts) = countExecuted(df.queryExecution.executedPlan)
+      val scans = nodes.count {
+        case s: FileSourceScanExec => s.relation.fileFormat.toString.contains("Parquet")
+        case _ => false }
+      val broadcasts = nodes.count(_.isInstanceOf[BroadcastExchangeExec])
+      val exchanges = broadcasts + nodes.count(_.isInstanceOf[ShuffleExchangeExec])
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       sb.append(s"\n## $name\n\n")
       sb.append(s"executed: $scans parquet scan(s), $exchanges exchange(s) " +

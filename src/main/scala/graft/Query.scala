@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.functions.TimeParse
 import graft.sources.MetricStore
 
@@ -28,14 +26,7 @@ object Query {
     val end = orDie(TimeParse.parseTimestamp(endS))
     val step = orDie(TimeParse.parseDuration(stepS))
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-query")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-query", Harness.ServePartitions)
 
     val collection =
       if (store.endsWith(".zip")) flagValue("--config") match {

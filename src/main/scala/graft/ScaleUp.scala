@@ -47,13 +47,7 @@ object ScaleUp {
       .map(_.split(",").toSet)
       .getOrElse(Set("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings"))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-scaleup")
     derive(spark, src, dst, factor, tables)
     spark.stop()
   }

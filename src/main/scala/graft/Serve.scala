@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.server.PromApi
 import graft.sources.MetricStore
 
@@ -33,14 +31,7 @@ object Serve {
       "usage: Serve <store.zip|dir> [port] [--config <yaml>] [--shift-to-midnight <epoch>] [--assume-deduped]"))
     val port = positional.lift(1).map(_.toInt).getOrElse(3003)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-serve", Harness.ServePartitions)
 
     // --assume-deduped: trust the store to hold one row per (series, ts)
     // and skip the ingest dedup shuffle (curated/TsSink-produced archives)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.llm.{AnnIndex, CentroidStore, DedupIndex, SearchIndex,
@@ -47,18 +47,17 @@ object StoreScale {
   private val results = scala.collection.mutable.ArrayBuffer
     .empty[(Int, String, String, Double, Long)] // factor, store, phase, sec, rows
 
-  private def timed[T](factor: Int, store: String, phase: String)
-                      (body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    val rows = r match {
-      case df: DataFrame => df.count() // force lazy probes
-      case _ => -1L
+  private def timed(factor: Int, store: String, phase: String)
+                   (body: => Any): Unit = {
+    val run = Harness.run(SparkSession.active) {
+      body match {
+        case df: Dataset[_] => df.count() // force lazy probes
+        case _ => -1L
+      }
     }
-    val sec = (System.nanoTime() - t0) / 1e9
+    val (sec, rows) = (run.secs, run.value)
     results += ((factor, store, phase, math.rint(sec * 1000) / 1000, rows))
-    println(f"""{"factor":$factor,"store":"$store","phase":"$phase","sec":$sec%.3f,"rows":$rows}""")
-    r
+    println(f"""{"factor":$factor,"store":"$store","phase":"$phase","sec":$sec%.3f,"rows":$rows,"jobs":${run.jobs}}""")
   }
 
   /** Physical observables after the lifecycle: total parquet files, store
@@ -87,14 +86,8 @@ object StoreScale {
     val work = args(1)
     val factors = args.lift(2).map(_.split(",").map(_.toInt).toSeq)
       .getOrElse(Seq(10, 100))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "48g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-storescale")
+    Harness.warmUp(spark)
 
     for (f <- factors) {
       val data = s"$work/sf_x$f"
@@ -281,14 +274,14 @@ object StoreScale {
       // 3600 s step keeps every later point aligned
       val g0 = math.ceil((t0 + 3600) / 300.0) * 300.0
       timed(f, "RollupStore", "probe")(
-        RollupStore.overTime(spark, dir, "events",
+        RollupStore.overTime(spark, RollupStore.register(spark, dir), "events",
           Grid(g0, g0 + 3600 * 23, 3600.0), 3600.0, RangeKernel.AvgOverTime))
       timed(f, "RollupStore", "retention")(
         RollupStore.retention(dir, math.ceil((t0 + day) / 300.0) * 300.0))
       timed(f, "RollupStore", "compact")(RollupStore.compact(dir))
       val g1 = math.ceil((t0 + day + 3600) / 300.0) * 300.0
       timed(f, "RollupStore", "probe_compacted")(
-        RollupStore.overTime(spark, dir, "events",
+        RollupStore.overTime(spark, RollupStore.register(spark, dir), "events",
           Grid(g1, g1 + 3600 * 23, 3600.0), 3600.0, RangeKernel.AvgOverTime))
       physicals(spark, f, "RollupStore", s"$dir/rollup.parquet",
         Some("__metric__"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.RangeKernel
@@ -27,15 +26,8 @@ object Stress {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factors = args.lift(1).getOrElse("1,8,32").split(",").map(_.trim.toInt).toSeq
     val axis = args.lift(2).getOrElse("series")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // warmup
+    val spark = Harness.session("graft-stress")
+    Harness.warmUp(spark)
 
     val base = queries.TsQueries.events(spark, sfDir)
     val grid = queries.TsQueries.grid
@@ -55,11 +47,9 @@ object Stress {
               map_concat(col("labels"), map(lit("replica"), col("__r__"))))
             .drop("__r__")
       val samples = Model.withSkey(blown)
-      def once(): Double = {
-        val t0 = System.nanoTime()
+      def once(): Double = Harness.run(spark) {
         Resample.kernel(samples, grid, RangeKernel.Rate, 3600.0, 0.0).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      }.secs
       val secs = math.min(once(), once()) // best-of-2: first run pays codegen warmup
       val nSeries = samples.select("skey").distinct().count()
       val nSamples = samples.count()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,14 +11,7 @@ object Verify {
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       // repartition(1), NOT coalesce(1): coalesce collapses the query's

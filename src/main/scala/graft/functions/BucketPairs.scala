@@ -79,8 +79,7 @@ object BucketPairScores {
   /** Register as a session function so `expr("graft_bucket_pairs(ds)")`
     * works (the [[CosineSimilarity.register]] convention). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "built-in")
+    graft.GraftExtensions.register(spark, FunctionName, builder)
 
   def builder: Seq[Expression] => Expression = { args =>
     require(args.length == 1, s"$FunctionName expects 1 argument")

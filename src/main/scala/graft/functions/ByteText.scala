@@ -105,8 +105,7 @@ object ByteEnc {
     ByteEnc(args.head)
   }
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "built-in")
+    graft.GraftExtensions.register(spark, FunctionName, builder)
 }
 
 /** `graft_byte_dec(s)` — inverse of [[ByteEnc]]; fails loudly on any
@@ -130,6 +129,5 @@ object ByteDec {
     ByteDec(args.head)
   }
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "built-in")
+    graft.GraftExtensions.register(spark, FunctionName, builder)
 }

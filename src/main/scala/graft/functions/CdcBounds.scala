@@ -73,8 +73,7 @@ object CdcBounds {
   /** Register as `graft_cdc_bounds(text, w, div)` — w and div must be
     * integer literals (they parameterize the generated code). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "built-in")
+    graft.GraftExtensions.register(spark, FunctionName, builder)
 
   def builder: Seq[Expression] => Expression = { args =>
     require(args.length == 3, s"$FunctionName expects (text, w, div)")

@@ -66,8 +66,7 @@ object CosineSimilarity {
 
   /** Register as a session function so `expr("graft_cosine(a, b)")` works. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "built-in")
+    graft.GraftExtensions.register(spark, FunctionName, builder)
 
   /** Expression builder — shared by [[register]] (temp function on an
     * existing session) and [[graft.GraftExtensions]] (config-based

@@ -77,8 +77,7 @@ object Hash60Array {
   }
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "built-in")
+    graft.GraftExtensions.register(spark, FunctionName, builder)
 
   /** Expression builder — shared by [[register]] (temp function on an
     * existing session) and [[graft.GraftExtensions]] (config-based

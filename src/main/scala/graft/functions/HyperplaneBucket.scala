@@ -74,8 +74,7 @@ object HyperplaneBucket {
     * derived plane matrix is materialized driver-side from the literal
     * offset/count (see [[graft.llm.Ann.planeComponent]]). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "built-in")
+    graft.GraftExtensions.register(spark, FunctionName, builder)
 
   /** Expression builder — shared by [[register]] (temp function on an
     * existing session) and [[graft.GraftExtensions]] (config-based

@@ -65,8 +65,7 @@ object MinHash60 {
   }
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "built-in")
+    graft.GraftExtensions.register(spark, FunctionName, builder)
 
   /** Expression builder — shared by [[register]] (temp function on an
     * existing session) and [[graft.GraftExtensions]] (config-based

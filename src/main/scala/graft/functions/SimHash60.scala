@@ -73,8 +73,7 @@ object SimHash60 {
   val FunctionName = "graft_simhash"
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "built-in")
+    graft.GraftExtensions.register(spark, FunctionName, builder)
 
   /** Expression builder — shared by [[register]] (temp function on an
     * existing session) and [[graft.GraftExtensions]] (config-based

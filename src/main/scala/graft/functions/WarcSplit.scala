@@ -132,6 +132,5 @@ object WarcSplit {
   }
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "built-in")
+    graft.GraftExtensions.register(spark, FunctionName, builder)
 }

@@ -598,7 +598,7 @@ object Eval {
               .map { reg =>
                 val others = ms.filterNot(_.label == Model.NameLabel)
                 Processed(RollupStore.overTime(
-                  collection.df.sparkSession, reg.dir, metric, grid, range, fn,
+                  collection.df.sparkSession, reg, metric, grid, range, fn,
                   df => Selector.select(df, others)))
               }
           case _ => None

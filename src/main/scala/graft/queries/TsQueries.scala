@@ -144,12 +144,14 @@ object TsQueries {
       noNegZero(round(col(Model.ValueCol), 6)).as("value"))
 
   def rollupAvg1h(spark: SparkSession, dir: String): DataFrame =
-    rollupOut(graft.sources.RollupStore.overTime(
-      spark, rollupStore(spark, dir), "events", grid, 3600.0, RangeKernel.AvgOverTime))
+    rollupOut(graft.sources.RollupStore.overTime(spark,
+      graft.sources.RollupStore.register(spark, rollupStore(spark, dir)),
+      "events", grid, 3600.0, RangeKernel.AvgOverTime))
 
   def rollupLast1h(spark: SparkSession, dir: String): DataFrame =
-    rollupOut(graft.sources.RollupStore.overTime(
-      spark, rollupStore(spark, dir), "events", grid, 3600.0, RangeKernel.LastOverTime))
+    rollupOut(graft.sources.RollupStore.overTime(spark,
+      graft.sources.RollupStore.register(spark, rollupStore(spark, dir)),
+      "events", grid, 3600.0, RangeKernel.LastOverTime))
 
   /** The recording-rule SERVING path end-to-end: the PromQL string goes
     * through [[graft.promql.Eval]] with the rollup store REGISTERED, so

@@ -50,8 +50,9 @@ object RollupStore {
   private val MetricCol = "__metric__"
 
   /** A store handle with its frozen resolution pre-read — what
-    * [[graft.promql.Eval]] keys its dispatch table on (reading res per
-    * query would add a parquet round-trip to every eval). */
+    * [[graft.promql.Eval]] keys its dispatch table on and [[overTime]]
+    * reads (reading res per query would add a parquet round-trip, a Spark
+    * job, to every read). */
   final case class Registered(dir: String, res: Double)
 
   def register(spark: SparkSession, dir: String): Registered =
@@ -238,18 +239,18 @@ object RollupStore {
     * fall in a window are read: `grid.start − range < wend ≤ grid.end`
     * filters the scan beside `where`'s label matchers. Output (skey,
     * labels, ts, value), `value` typed as the raw kernel types it. */
-  def overTime(spark: SparkSession, dir: String, metric: String,
+  def overTime(spark: SparkSession, store: Registered, metric: String,
                grid: Grid, range: Double, fn: RangeKernel.Fn,
                where: DataFrame => DataFrame = identity): DataFrame = {
     import RangeKernel.{AvgOverTime, CountOverTime, LastOverTime, MaxOverTime, MinOverTime,
       SumOverTime}
-    val res = readRes(spark, dir)
+    val res = store.res
     require(range > 0 && range % res == 0,
       s"range $range not a multiple of rollup resolution $res")
     require(grid.start % res == 0 && grid.step % res == 0,
       s"grid not aligned to rollup resolution $res")
     val span = col("wend") > grid.start - range && col("wend") <= grid.end
-    val series = mergedBuckets(spark, dir, metric, df => where(df).filter(span))
+    val series = mergedBuckets(spark, store.dir, metric, df => where(df).filter(span))
       .groupBy(col(Model.SkeyCol))
       .agg(first(Model.LabelsCol).as(Model.LabelsCol),
         sort_array(collect_list(struct(col("wend"), col("sum"),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** The config-route (`spark.sql.extensions=graft.GraftExtensions`) and
   * the programmatic route (registerAll) must expose the same SQL
@@ -29,6 +30,20 @@ class GraftExtensionsSpec extends SparkSpec {
     val sh = spark.sql("SELECT graft_simhash(array(1L, 2L, 3L)) AS h")
       .head().getLong(0)
     assert(sh >= 0L)
+  }
+
+  test("a second register call keeps the first registration") {
+    val registry = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier(functions.CosineSimilarity.FunctionName)
+    functions.CosineSimilarity.register(spark)
+    val first = registry.lookupFunction(id)
+    functions.CosineSimilarity.register(spark)
+    GraftExtensions.registerAll(spark)
+    // a replacement stores a fresh ExpressionInfo; an unchanged entry is
+    // the same instance
+    assert(first.isDefined && (registry.lookupFunction(id).get eq first.get))
+    assert(spark.sql("SELECT graft_cosine(array(3.0F, 4.0F), array(3.0F, 4.0F)) AS c")
+      .head().getDouble(0) == 1.0)
   }
 
   test("session built with the extensions class resolves the functions at analysis") {

@@ -56,13 +56,13 @@ class RollupSpec extends SparkSpec {
     RollupStore.build(all, dir, 300.0)
     val g = Grid(600.0, 3000.0, 600.0)
     val cases = Seq[((DataFrame, DataFrame))](
-      (RollupStore.overTime(spark, dir, "m", g, 600.0, RangeKernel.AvgOverTime),
+      (RollupStore.overTime(spark, RollupStore.register(spark, dir), "m", g, 600.0, RangeKernel.AvgOverTime),
         RangeAgg.avgOverTime(all, g, 600.0)),
-      (RollupStore.overTime(spark, dir, "m", g, 600.0, RangeKernel.MinOverTime),
+      (RollupStore.overTime(spark, RollupStore.register(spark, dir), "m", g, 600.0, RangeKernel.MinOverTime),
         RangeAgg.minOverTime(all, g, 600.0)),
-      (RollupStore.overTime(spark, dir, "m", g, 600.0, RangeKernel.MaxOverTime),
+      (RollupStore.overTime(spark, RollupStore.register(spark, dir), "m", g, 600.0, RangeKernel.MaxOverTime),
         RangeAgg.maxOverTime(all, g, 600.0)),
-      (RollupStore.overTime(spark, dir, "m", g, 600.0, RangeKernel.CountOverTime),
+      (RollupStore.overTime(spark, RollupStore.register(spark, dir), "m", g, 600.0, RangeKernel.CountOverTime),
         RangeAgg.countOverTime(all, g, 600.0)))
     for (((fromStore, fromRaw), i) <- cases.zipWithIndex) {
       val s = collectMap(fromStore); val r = collectMap(fromRaw)
@@ -84,7 +84,7 @@ class RollupSpec extends SparkSpec {
     val g = Grid(87000.0, 89400.0, 600.0)
     for (fn <- Seq(RangeKernel.AvgOverTime, RangeKernel.SumOverTime, RangeKernel.CountOverTime,
                    RangeKernel.MinOverTime, RangeKernel.MaxOverTime, RangeKernel.LastOverTime)) {
-      val s = collectMap(RollupStore.overTime(spark, dir, "m", g, 600.0, fn))
+      val s = collectMap(RollupStore.overTime(spark, RollupStore.register(spark, dir), "m", g, 600.0, fn))
       val r = collectMap(Resample.kernel(all, g, fn, 600.0, 0.0))
       assert(s.nonEmpty && s.keySet == r.keySet, s"${fn.name} instants")
       s.keys.foreach(k => assert(math.abs(s(k) - r(k)) < 1e-9, s"${fn.name} @ $k"))
@@ -96,7 +96,7 @@ class RollupSpec extends SparkSpec {
     RollupStore.build(Model.withSkey(samples(100.0 -> 1.0, 250.0 -> 2.0)), dir, 300.0)
     RollupStore.append(dir, Model.withSkey(samples(280.0 -> 7.0, 550.0 -> 3.0)))
     val g = Grid(300.0, 600.0, 300.0)
-    val out = RollupStore.overTime(spark, dir, "m", g, 300.0, RangeKernel.LastOverTime)
+    val out = RollupStore.overTime(spark, RollupStore.register(spark, dir), "m", g, 300.0, RangeKernel.LastOverTime)
       .select("ts", "value").collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     // window (0,300]: last sample 280→7 (appended partial beats built 250→2)
     assert(out == Map(300.0 -> 7.0, 600.0 -> 3.0))
@@ -150,15 +150,30 @@ class RollupSpec extends SparkSpec {
       .queryExecution.executedPlan.toString.contains(dir))
   }
 
+  test("building a read of a registered store runs one Spark job") {
+    // the one job infers rollup.parquet's schema. The registered handle
+    // carries res, so the read no longer re-reads meta.parquet, which cost
+    // two more jobs (its schema inference and its head()): 3 → 1
+    val dir = tmp("graft-ru-jobs")
+    RollupStore.build(Model.withSkey(samples(100.0 -> 1.0, 400.0 -> 2.0)), dir, 300.0)
+    val reg = RollupStore.register(spark, dir)
+    val read = Harness.run(spark) {
+      RollupStore.overTime(spark, reg, "m", Grid(300.0, 600.0, 300.0), 300.0,
+        RangeKernel.AvgOverTime)
+    }
+    assert(read.jobs === 1)
+    assert(read.value.count() === 2L)
+  }
+
   test("misaligned range or grid is rejected") {
     val dir = tmp("graft-ru-align")
     RollupStore.build(Model.withSkey(samples(100.0 -> 1.0)), dir, 300.0)
     intercept[IllegalArgumentException] {
-      RollupStore.overTime(spark, dir, "m", Grid(300.0, 600.0, 300.0), 450.0, RangeKernel.AvgOverTime)
+      RollupStore.overTime(spark, RollupStore.register(spark, dir), "m", Grid(300.0, 600.0, 300.0), 450.0, RangeKernel.AvgOverTime)
         .collect()
     }
     intercept[IllegalArgumentException] {
-      RollupStore.overTime(spark, dir, "m", Grid(150.0, 450.0, 300.0), 300.0, RangeKernel.AvgOverTime)
+      RollupStore.overTime(spark, RollupStore.register(spark, dir), "m", Grid(150.0, 450.0, 300.0), 300.0, RangeKernel.AvgOverTime)
         .collect()
     }
   }

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -41,20 +38,6 @@ class ServedEngineSpec extends SparkSpec with BeforeAndAfterAll {
     Model.withSkey(df).select(col(Model.SkeyCol), col(Model.TsCol), col(Model.ValueCol)).collect()
       .map(r => (r.getString(0), r.getDouble(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
       .toSeq.sorted
-
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try body
-    finally {
-      org.apache.spark.ListenerDrain(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(l)
-    }
-    jobs.get
-  }
 
   test("served and unserved engines: bit-identical rows for the panel shapes") {
     assert(served.served && !unserved.served)
@@ -112,11 +95,11 @@ class ServedEngineSpec extends SparkSpec with BeforeAndAfterAll {
     base.count()
     val before = spark.sparkContext.getPersistentRDDs.size
     var engines: Seq[PromEngine] = Nil
-    val constructionJobs = jobsDuring {
+    val constructionJobs = Harness.run(spark) {
       val e0 = new PromEngine(base)
       engines = Seq(e0, e0.withStartTime(2000000000.0), e0.withNativeHistograms(Map.empty),
         e0.withRollups(Map.empty))
-    }
+    }.jobs
     assert(constructionJobs === 0)
     assert(spark.sparkContext.getPersistentRDDs.size === before) // nothing filled yet
     val q = """rate(events{event_type="purchase"}[1h])"""

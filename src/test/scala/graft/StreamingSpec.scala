@@ -577,7 +577,8 @@ class StreamingSpec extends SparkSpec {
       .drop("labels").collect().map(_.toSeq).toSet
     assert(rows(dir).nonEmpty && rows(dir) == rows(onePass))
     val g = operators.Grid(300.0, 1500.0, 300.0)
-    def avg(d: String) = sources.RollupStore.overTime(spark, d, "m", g, 300.0, functions.RangeKernel.AvgOverTime)
+    def avg(d: String) = sources.RollupStore.overTime(spark, sources.RollupStore.register(spark, d),
+      "m", g, 300.0, functions.RangeKernel.AvgOverTime)
       .select("skey", "ts", "value").collect().map(_.toSeq).toSet
     assert(avg(dir) == avg(onePass))
   }
