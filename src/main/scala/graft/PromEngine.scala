@@ -17,10 +17,14 @@ import graft.promql.Eval
   * (`collection.storageLevel != NONE`, as `graft.Serve` sets it up) —
   * answers from the reference's shape: one `(skey, labels, ts[], v[])` row
   * per series ([[graft.operators.Resample.Folded]]), built by the first
-  * request that needs it and persisted beside the collection. Range
-  * functions and implicit resamples then filter series rows and run the
-  * kernel, and the metadata calls read one label-map list collected from
-  * it. An engine over an uncached collection (the gates, `graft.Query`)
+  * request that needs it and kept beside the collection as a locally
+  * checkpointed leaf relation. Range functions and implicit resamples then
+  * filter series rows and run the kernel over that leaf, so a request's
+  * plan carries neither cached relation nor the ingest lineage, and the
+  * metadata calls read one label-map list collected from it. A local
+  * checkpoint cannot recompute a lost block: served engines run in local
+  * mode, where the fold's blocks live in the driver. An engine over an
+  * uncached collection (the gates, `graft.Query`)
   * filters samples first, so the selectors push into the parquet scan,
   * and folds only what they keep. Construction runs no Spark job either
   * way; the `with*` variants share their parent's fold.

@@ -40,8 +40,9 @@ final case class Grid(start: Double, end: Double, step: Double) {
   * No probe rows, no window sorts.
   *
   * A served engine (one whose collection is cached) keeps that fold of the
-  * whole collection resident ([[Folded]]), so a request filters series
-  * rows and runs the kernel — no scan of sample rows, no aggregation.
+  * whole collection resident as a leaf relation ([[Folded]]), so a request
+  * filters series rows and runs the kernel — no scan of sample rows, no
+  * aggregation, no cached lineage in its plan.
   */
 object Resample {
 
@@ -88,15 +89,25 @@ object Resample {
     kernel(samples, grid, RangeKernel.Resample, 0.0, offset)
 
   /** The per-series fold of a whole cached collection, shared by every
-    * engine over that collection. [[rows]] is [[series]] of it, persisted
-    * at the collection's storage level; nothing runs until the first
-    * request that reads it, whose job fills the cache (the collection is
-    * partitioned on its label map, so the fill needs no exchange).
+    * engine over that collection. [[rows]] is [[series]] of it, locally
+    * checkpointed at the collection's storage level: a leaf relation
+    * (`Scan ExistingRDD`) without the fold's lineage, so a request's plan
+    * holds neither the cached collection nor the ingest below it, and a
+    * plain panel runs as one whole-stage-codegen stage with no adaptive
+    * wrapper. Nothing runs until the first request that reads it, whose
+    * job fills the blocks (the collection is partitioned on its label map,
+    * so the fill needs no exchange).
+    *
+    * The trade: a local checkpoint cannot recompute a lost block. A served
+    * engine runs in local mode (`graft.Serve`'s default), where the
+    * blocks live in the driver and are lost only with it.
+    *
     * Selecting a series here selects all of its samples, so
     * `Selector.select(rows, ms)` equals `series(Selector.select(collection, ms))`
     * row for row. [[labels]] is every series' label map, collected once. */
   final class Folded(collection: DataFrame) {
-    lazy val rows: DataFrame = series(collection).persist(collection.storageLevel)
+    lazy val rows: DataFrame =
+      series(collection).localCheckpoint(eager = true, collection.storageLevel)
 
     lazy val labels: Seq[Map[String, String]] =
       rows.select(col(Model.LabelsCol)).collect().map(_.getMap[String, String](0).toMap).toSeq

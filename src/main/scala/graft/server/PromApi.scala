@@ -22,7 +22,9 @@ import graft.functions.TimeParse
   * the API layer only collects the (grid-sized) query result.
   */
 final class PromApi(engine: PromEngine, port: Int = 3003) {
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  import PromApi.{fmt, jsonString, serializeMatrix}
+
+  private val server = PromApi.bind(port)
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -164,23 +166,6 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
     }
   }
 
-  /** Group collected (labels, ts, value) rows into per-series value lists. */
-  private def serializeMatrix(rows: Array[Row]): String = {
-    val bySeries = rows.groupBy(r => r.getMap[String, String](0).toSeq.sorted)
-    val series = bySeries.toSeq.sortBy(_._1.mkString(",")).map { case (labels, rs) =>
-      val metric = labels.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
-        .mkString("{", ", ", "}")
-      val values = rs.sortBy(_.getDouble(1))
-        .map(r => s"[${fmt(r.getDouble(1))}, ${jsonString(fmt(r.getDouble(2)))}]")
-        .mkString("[", ", ", "]")
-      s"""{"metric": $metric, "values": $values}"""
-    }
-    series.mkString("[", ", ", "]")
-  }
-
-  private def fmt(d: Double): String =
-    if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) d.toLong.toString else d.toString
-
   /** Reads (and discards) the request body, reporting whether it exceeds the
     * reference's 4096-byte POST cap (main.rs:349). Bounded read — a larger
     * body is never buffered past the limit. */
@@ -226,16 +211,6 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
   private def failure(errorType: String, error: String): String =
     s"""{"status": "error", "errorType": ${jsonString(errorType)}, "error": ${jsonString(error)}}"""
   private def jsonArray(items: Seq[String]): String = items.mkString("[", ", ", "]")
-  private def jsonString(s: String): String =
-    "\"" + Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def safely(exchange: HttpExchange)(body: => Unit): Unit =
     try body
@@ -265,8 +240,82 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
 }
 
 object PromApi {
+  // The JDK HttpServer writes a response's headers and body separately;
+  // with Nagle's algorithm on, the body waits for the client's delayed
+  // ACK of the headers (about 40 ms) on every small response. The server
+  // reads this property once per JVM, when the first HttpServer is
+  // created, so it is set here, before [[bind]] creates one.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
   /** Bind on an ephemeral port with port=0. */
   def apply(engine: PromEngine, port: Int = 3003): PromApi = new PromApi(engine, port)
+
+  private def bind(port: Int): HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
+
+  /** The `query_range` result array: collected (labels, ts, value) rows
+    * grouped into one `{"metric": {...}, "values": [[ts, "v"], ...]}` per
+    * series, series ordered by their sorted label pairs and values by ts.
+    * One pass into one buffer: rows group on their label map, and each
+    * series sorts its labels once. */
+  private[graft] def serializeMatrix(rows: Array[Row]): String = {
+    val series = rows.groupBy(_.getMap[String, String](0)).toArray
+      .map { case (labels, rs) =>
+        val sorted = labels.toSeq.sorted
+        (sorted.mkString(","), sorted, rs.sortBy(_.getDouble(1)))
+      }
+      .sortBy(_._1)
+    val sb = new StringBuilder(64 + rows.length * 32)
+    sb.append('[')
+    for (((_, labels, rs), i) <- series.iterator.zipWithIndex) {
+      if (i > 0) sb.append(", ")
+      sb.append("{\"metric\": {")
+      for (((k, v), j) <- labels.iterator.zipWithIndex) {
+        if (j > 0) sb.append(", ")
+        appendString(sb, k)
+        sb.append(": ")
+        appendString(sb, v)
+      }
+      sb.append("}, \"values\": [")
+      for ((r, j) <- rs.iterator.zipWithIndex) {
+        if (j > 0) sb.append(", ")
+        sb.append('[').append(fmt(r.getDouble(1))).append(", \"")
+          .append(fmt(r.getDouble(2))).append("\"]")
+      }
+      sb.append("]}")
+    }
+    sb.append(']').toString
+  }
+
+  /** A sample's wire form: integral values below 1e15 without a fraction. */
+  private def fmt(d: Double): String =
+    if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) d.toLong.toString else d.toString
+
+  private def jsonString(s: String): String = {
+    val sb = new StringBuilder
+    appendString(sb, s)
+    sb.toString
+  }
+
+  /** Append `s` as a JSON string literal (null as `""`). */
+  private def appendString(sb: StringBuilder, s: String): Unit = {
+    sb.append('"')
+    if (s != null) {
+      var i = 0
+      while (i < s.length) {
+        s.charAt(i) match {
+          case '"' => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+          case c => sb.append(c)
+        }
+        i += 1
+      }
+    }
+    sb.append('"')
+  }
 
   final class PayloadTooLarge(limit: Int)
     extends RuntimeException(s"request body exceeds $limit bytes")

@@ -82,6 +82,21 @@ object RollupStore {
         col("__l__.t").as("last_ts"), col("__l__.v").as("last_v"))
   }
 
+  /** The schema of `rollup.parquet` as read back: [[rollup]]'s columns,
+    * with the `__metric__` partition column last, where partition
+    * discovery puts it. Reading with it skips the footer read that would
+    * otherwise infer it, a Spark job on every read, compaction and
+    * retention. */
+  private[graft] val StoreSchema: StructType = StructType(
+    Seq(Model.SkeyCol -> StringType, Model.LabelsCol -> MapType(StringType, StringType),
+      "wend" -> DoubleType, "cnt" -> LongType, "sum" -> DoubleType, "min" -> DoubleType,
+      "max" -> DoubleType, "first_ts" -> DoubleType, "first_v" -> DoubleType,
+      "last_ts" -> DoubleType, "last_v" -> DoubleType, MetricCol -> StringType)
+      .map { case (name, t) => StructField(name, t) })
+
+  private def readStore(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(StoreSchema).parquet(s"$dir/rollup.parquet")
+
   /** Roll `samples` up at `res` seconds and write the store. */
   def build(samples: DataFrame, dir: String, res: Double): Unit =
     StoreOps.Lease.withLease(samples.sparkSession, dir) {
@@ -132,7 +147,7 @@ object RollupStore {
   def compact(dir: String): Unit =
     StoreOps.Lease.withLease(SparkSession.active, dir) {
     val spark = SparkSession.active
-    val merged = spark.read.parquet(s"$dir/rollup.parquet")
+    val merged = readStore(spark, dir)
       .groupBy(col(MetricCol), col(Model.SkeyCol), col("wend"))
       .agg(
         first(Model.LabelsCol).as(Model.LabelsCol),
@@ -170,7 +185,7 @@ object RollupStore {
     require(math.abs(q - math.round(q)) < 1e-9 * math.max(1.0, math.abs(q)),
       s"retention cutoff $cutoff not aligned to rollup resolution $res")
     StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/rollup.parquet")
+      readStore(spark, dir)
         .filter(col("wend") > cutoff)
         .repartition(col(MetricCol)),
       s"$dir/rollup.parquet", Seq(MetricCol))
@@ -202,7 +217,7 @@ object RollupStore {
     * predicate sits directly on the scan instead of above the aggregate. */
   def mergedBuckets(spark: SparkSession, dir: String, metric: String,
                     where: DataFrame => DataFrame = identity): DataFrame =
-    where(spark.read.parquet(s"$dir/rollup.parquet")
+    where(readStore(spark, dir)
       .filter(col(MetricCol) === metric))
       .groupBy(col(Model.SkeyCol), col("wend"))
       .agg(

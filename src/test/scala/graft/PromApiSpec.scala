@@ -3,6 +3,8 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import org.apache.spark.sql.Row
+
 import graft.server.PromApi
 
 /** HTTP API shapes (reference main.rs:227-424). */
@@ -188,4 +190,83 @@ class PromApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  /** The `query_range` serializer before the one-pass rewrite (sort each
+    * row's labels, group on the sorted pairs, interpolate, escape per
+    * char), kept as the oracle the rewrite must match byte for byte. */
+  private def referenceMatrix(rows: Array[Row]): String = {
+    def fmt(d: Double): String =
+      if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) d.toLong.toString else d.toString
+    def jsonString(s: String): String =
+      "\"" + Option(s).getOrElse("").flatMap {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case '\n' => "\\n"
+        case '\r' => "\\r"
+        case '\t' => "\\t"
+        case c if c < ' ' => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      } + "\""
+    val bySeries = rows.groupBy(r => r.getMap[String, String](0).toSeq.sorted)
+    val series = bySeries.toSeq.sortBy(_._1.mkString(",")).map { case (labels, rs) =>
+      val metric = labels.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+        .mkString("{", ", ", "}")
+      val values = rs.sortBy(_.getDouble(1))
+        .map(r => s"[${fmt(r.getDouble(1))}, ${jsonString(fmt(r.getDouble(2)))}]")
+        .mkString("[", ", ", "]")
+      s"""{"metric": $metric, "values": $values}"""
+    }
+    series.mkString("[", ", ", "]")
+  }
+
+  test("query_range JSON: byte-identical to the reference serializer") {
+    val odd = "q\"b\\s\nc\u0001e\uD83D\uDE00" // quote, backslash, newline, control, non-BMP
+    val rows = Array(
+      Row(Map("__name__" -> "m", "k" -> odd), 30.0, Double.NaN),
+      Row(Map("k" -> odd, "__name__" -> "m"), 10.0, Double.PositiveInfinity),
+      Row(Map("__name__" -> "m", "k" -> odd), 20.0, Double.NegativeInfinity),
+      Row(Map("__name__" -> "m"), 5.0, -0.0),
+      Row(Map("__name__" -> "m"), 1.0, 1e15),
+      Row(Map("__name__" -> "m"), 3.0, 999999999999999.0),
+      Row(Map("__name__" -> "m"), 2.0, 1e16),
+      Row(Map("__name__" -> "m"), 4.0, -1e15),
+      Row(Map("__name__" -> "m"), 6.0, 0.1),
+      Row(Map("__name__" -> "m"), 1704067200.5, 42.0),
+      Row(Map("a\"" -> "x\ty\r", "__name__" -> "m"), 1704067200.0, -7.0),
+      Row(Map.empty[String, String], 7.0, 1.5),
+      Row(Map.empty[String, String], -1.0, 2.5))
+    val rnd = new scala.util.Random(7)
+    for (order <- Seq(rows, rows.reverse) ++ Seq.fill(4)(rnd.shuffle(rows.toSeq).toArray)) {
+      val got = PromApi.serializeMatrix(order)
+      assert(got === referenceMatrix(order))
+    }
+    val got = PromApi.serializeMatrix(rows)
+    assert(got.contains("\\u0001") && got.contains("\uD83D\uDE00") && got.contains("\"NaN\""), got)
+    assert(PromApi.serializeMatrix(Array.empty) === "[]")
+  }
+
+  test("a response that runs no Spark job returns without a delayed-ACK stall") {
+    val collection = { // scoped: functions.get would shadow this suite's HTTP get
+      import org.apache.spark.sql.functions.{lit, map}
+      import spark.implicits._
+      Seq((1704067200.0, 1.0)).toDF("ts", "value")
+        .select(map(lit("__name__"), lit("rtt")).as("labels"), $"ts", $"value").cache()
+    }
+    val api = PromApi(new PromEngine(collection), port = 0).start()
+    try {
+      // one keep-alive connection, as a dashboard client holds; the first
+      // request fills the served engine's label list
+      val client = HttpClient.newHttpClient()
+      val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${api.boundPort}/")).GET().build()
+      assert(client.send(req, HttpResponse.BodyHandlers.ofString()).body() == "Got 1 time series")
+      val ms = Seq.fill(11) {
+        val t0 = System.nanoTime
+        client.send(req, HttpResponse.BodyHandlers.ofString())
+        (System.nanoTime - t0) / 1e6
+      }.sorted
+      assert(ms(5) < 20.0, ms.mkString(", "))
+    } finally {
+      api.stop()
+      collection.unpersist()
+    }
+  }
 }

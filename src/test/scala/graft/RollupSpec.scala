@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.RangeKernel
 import graft.operators.{Grid, RangeAgg, Resample}
@@ -150,10 +151,11 @@ class RollupSpec extends SparkSpec {
       .queryExecution.executedPlan.toString.contains(dir))
   }
 
-  test("building a read of a registered store runs one Spark job") {
-    // the one job infers rollup.parquet's schema. The registered handle
-    // carries res, so the read no longer re-reads meta.parquet, which cost
-    // two more jobs (its schema inference and its head()): 3 → 1
+  test("building a read of a registered store runs no Spark job") {
+    // the registered handle carries res, so the read does not re-read
+    // meta.parquet (two jobs: its schema inference and its head()), and
+    // rollup.parquet is read with its known schema instead of inferring
+    // it (one job): 3 → 0
     val dir = tmp("graft-ru-jobs")
     RollupStore.build(Model.withSkey(samples(100.0 -> 1.0, 400.0 -> 2.0)), dir, 300.0)
     val reg = RollupStore.register(spark, dir)
@@ -161,8 +163,11 @@ class RollupSpec extends SparkSpec {
       RollupStore.overTime(spark, reg, "m", Grid(300.0, 600.0, 300.0), 300.0,
         RangeKernel.AvgOverTime)
     }
-    assert(read.jobs === 1)
+    assert(read.jobs === 0)
     assert(read.value.count() === 2L)
+    // the known schema is the one inference finds, column for column
+    def fields(s: StructType) = s.map(f => f.name -> f.dataType)
+    assert(fields(RollupStore.StoreSchema) === fields(spark.read.parquet(s"$dir/rollup.parquet").schema))
   }
 
   test("misaligned range or grid is rejected") {

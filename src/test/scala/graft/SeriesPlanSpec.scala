@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.MapSort
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -73,23 +73,32 @@ class SeriesPlanSpec extends SparkSpec {
     assert(executed(sumBy).count(_.isInstanceOf[Exchange]) <= 1, "sum by has > 1 Exchange")
   }
 
-  test("served panels: no Aggregate and no Exchange above the fold's InMemoryTableScan") {
+  test("served panels: one leaf scan of the fold, no Aggregate, no Exchange, no adaptive wrapper") {
     val engine = new PromEngine(collection)
     assert(engine.served)
     val start = 1704067200.0 + 3600.0
     def foldScans(plan: Seq[SparkPlan]) = plan.collect {
-      case s: InMemoryTableScanExec if s.output.exists(_.name == "v") => s
+      case s: RDDScanExec if s.output.exists(_.name == "v") => s
+    }
+    /** A plain panel or instant plans over the fold's checkpointed rows
+      * alone: no adaptive wrapper, no cached relation below it. */
+    def leafPlan(df: DataFrame, q: String): Seq[SparkPlan] = {
+      val plan = executed(df)
+      assert(!df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec],
+        s"$q runs adaptively:\n${df.queryExecution.executedPlan}")
+      assert(!plan.exists(_.isInstanceOf[InMemoryTableScanExec]), s"$q reads a cached relation:\n${plan.head}")
+      plan
     }
     val panels = Seq("""rate(m{host="h1"}[5m])""", """m{host="h1"}""", """irate(m{host="h1"}[5m])""",
       """increase(m{host="h1"}[1h])""", """avg_over_time(m{host="h1"}[1h])""")
     for (q <- panels) {
-      val plan = executed(engine.queryRange(q, start, start + 4 * 3600.0, 300.0))
+      val plan = leafPlan(engine.queryRange(q, start, start + 4 * 3600.0, 300.0), q)
       assert(foldScans(plan).length === 1, s"$q does not read the fold:\n${plan.head}")
       assert(!plan.exists(_.isInstanceOf[BaseAggregateExec]), s"$q has an Aggregate:\n${plan.head}")
       assert(!plan.exists(_.isInstanceOf[Exchange]), s"$q has an Exchange:\n${plan.head}")
     }
     for (q <- Seq("""rate(m{host="h1"}[5m])""", """increase(m{host="h1"}[1h])""")) {
-      val plan = executed(engine.queryInstant(q, start))
+      val plan = leafPlan(engine.queryInstant(q, start), q)
       assert(foldScans(plan).length === 1 && !plan.exists(_.isInstanceOf[BaseAggregateExec]), q)
     }
     // sum by aggregates only its own sum (partial and final), topk none:
