@@ -73,7 +73,7 @@ class SeriesPlanSpec extends SparkSpec {
     assert(executed(sumBy).count(_.isInstanceOf[Exchange]) <= 1, "sum by has > 1 Exchange")
   }
 
-  test("served panels: one leaf scan of the fold, no Aggregate, no Exchange, no adaptive wrapper") {
+  test("served panels: one leaf scan of the fold; no Aggregate, Exchange or AQE") {
     val engine = new PromEngine(collection)
     assert(engine.served)
     val start = 1704067200.0 + 3600.0
