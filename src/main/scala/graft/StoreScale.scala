@@ -64,6 +64,10 @@ object StoreScale {
     * bytes, and the largest single partition-key row count (the skew
     * gauge — one giant band/cluster/prefix is what melts an executor). */
   private def physicals(spark: SparkSession, factor: Int, store: String,
+                        dir: String, t: StoreOps.Table): Unit =
+    physicals(spark, factor, store, t.path(dir), t.partitionBy.headOption)
+
+  private def physicals(spark: SparkSession, factor: Int, store: String,
                         table: String, partKey: Option[String]): Unit = {
     val files = StoreOps.parquetFileCount(spark, table)
     val bytes = {
@@ -160,7 +164,7 @@ object StoreScale {
       timed(f, "DedupIndex", "probe_vacuumed")(
         DedupIndex.dedupAgainst(spark, dir, dProbe))
       timed(f, "DedupIndex", "compact")(DedupIndex.compact(dir))
-      physicals(spark, f, "DedupIndex", s"$dir/postings.parquet", Some("band"))
+      physicals(spark, f, "DedupIndex", dir, DedupIndex.Postings)
     }
 
     { // ---- SubstrIndex (counted gram store) ----
@@ -178,7 +182,7 @@ object StoreScale {
       timed(f, "SubstrIndex", "vacuum")(SubstrIndex.vacuum(dir))
       timed(f, "SubstrIndex", "probe_vacuumed")(
         SubstrIndex.dedupAgainst(spark, dir, dProbe))
-      physicals(spark, f, "SubstrIndex", s"$dir/postings.parquet", Some("hp"))
+      physicals(spark, f, "SubstrIndex", dir, SubstrIndex.Postings)
     }
 
     { // ---- CentroidStore (frozen k-means membership) ----
@@ -199,8 +203,7 @@ object StoreScale {
       timed(f, "CentroidStore", "probe_vacuumed")(
         CentroidStore.semDedupAgainst(spark, dir, eProbe, 0.95))
       timed(f, "CentroidStore", "compact")(CentroidStore.compact(dir))
-      physicals(spark, f, "CentroidStore", s"$dir/members.parquet",
-        Some("cent_id"))
+      physicals(spark, f, "CentroidStore", dir, CentroidStore.Members)
     }
 
     { // ---- AnnIndex (IVF×PQ codes) ----
@@ -219,7 +222,7 @@ object StoreScale {
       timed(f, "AnnIndex", "probe_vacuumed")(
         AnnIndex.query(spark, dir, q, 10, nprobe = 8))
       timed(f, "AnnIndex", "compact")(AnnIndex.compact(dir))
-      physicals(spark, f, "AnnIndex", s"$dir/codes.parquet", Some("cent_id"))
+      physicals(spark, f, "AnnIndex", dir, AnnIndex.Codes)
     }
 
     { // ---- SketchStore (HLL/CMS/quantile quartet; rebuild-only) ----
@@ -231,7 +234,7 @@ object StoreScale {
       timed(f, "SketchStore", "probe")(SketchStore.hllEstimates(spark, dir))
       timed(f, "SketchStore", "probe_quantiles")(
         SketchStore.quantiles(spark, dir))
-      physicals(spark, f, "SketchStore", s"$dir/hll.parquet", None)
+      physicals(spark, f, "SketchStore", dir, SketchStore.Hll)
     }
 
     { // ---- SearchIndex (BM25 inverted index) ----
@@ -251,7 +254,7 @@ object StoreScale {
       timed(f, "SearchIndex", "probe_vacuumed")(
         SearchIndex.search(spark, dir, qs, topK = 10))
       timed(f, "SearchIndex", "compact")(SearchIndex.compact(dir))
-      physicals(spark, f, "SearchIndex", s"$dir/postings.parquet", Some("pfx"))
+      physicals(spark, f, "SearchIndex", dir, SearchIndex.Postings)
     }
 
     { // ---- RollupStore (5m downsampling; time-split like production) ----
@@ -283,8 +286,7 @@ object StoreScale {
       timed(f, "RollupStore", "probe_compacted")(
         RollupStore.overTime(spark, RollupStore.register(spark, dir), "events",
           Grid(g1, g1 + 3600 * 23, 3600.0), 3600.0, RangeKernel.AvgOverTime))
-      physicals(spark, f, "RollupStore", s"$dir/rollup.parquet",
-        Some("__metric__"))
+      physicals(spark, f, "RollupStore", dir, RollupStore.Rollup)
     }
 
     { // ---- MergeStore (copy-on-write keyed upsert) ----

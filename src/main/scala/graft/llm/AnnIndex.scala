@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.StoreOps
+import graft.sources.StoreOps.Table
+
 /** Persistent IVF×PQ index: build once, store, append incrementally, query
   * from the store — the missing lifecycle around [[Ann.ivfPqTopK]], which
   * refits centroids and codebook from the corpus on every call. A real
@@ -36,6 +39,12 @@ import org.apache.spark.sql.types._
   * [[Ann.ivfPqTopK]]). */
 object AnnIndex {
 
+  private val Meta = Table("meta")
+  private val Centroids = Table("centroids")
+  private val Codebook = Table("codebook")
+  private val Rotation = Table("rotation")
+  private[graft] val Codes = Table("codes", Seq("cent_id"))
+
   /** Frozen index configuration. `codebookIters` only matters at [[build]]
     * time (the trained codebook is stored); gate callers pin 0 for oracle
     * reproducibility, the library default refines (see [[Ann.pqTopK]]).
@@ -52,7 +61,7 @@ object AnnIndex {
 
   /** Fit the model on `corpus` and write model + codes to `dir`. */
   def build(corpus: DataFrame, dir: String, p: Params = Params()): Unit =
-    graft.sources.StoreOps.Lease.withLease(corpus.sparkSession, dir) {
+    StoreOps.Lease.withLease(corpus.sparkSession, dir) {
     graft.functions.CosineSimilarity.register(corpus.sparkSession)
     val corpusR =
       if (!p.opq) corpus
@@ -68,24 +77,17 @@ object AnnIndex {
     // directories — submit concurrently (guide §2.6; StoreOps.overlap):
     // the r18 audit measured ~2 s/gate of sequential small-file commit
     // latency here
-    graft.sources.StoreOps.overlap(Seq(
-      () => corpus.sparkSession.createDataFrame(Seq(
-        (p.nCentroids, p.multiAssign, p.m, p.codebookSize, p.normalize,
-          p.opq)))
-        .toDF("n_centroids", "multi_assign", "m", "codebook_size",
-          "normalize", "opq")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.parquet"),
-      () => cents.coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/centroids.parquet"),
-      () => cb.coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/codebook.parquet"),
+    StoreOps.overlap(Seq(
+      () => Meta.write(corpus.sparkSession.createDataFrame(Seq(
+        (p.nCentroids, p.multiAssign, p.m, p.codebookSize, p.normalize, p.opq)))
+        .toDF("n_centroids", "multi_assign", "m", "codebook_size", "normalize", "opq")
+        .coalesce(1), dir),
+      () => Centroids.write(cents.coalesce(1), dir),
+      () => Codebook.write(cb.coalesce(1), dir),
       // one file per list (not tasks × lists): the repartition shuffles only
       // (vec_id, codes, cent_id) rows — m bytes + two ids each
-      () => encode(corpusR, cents, cb, p).repartition(col("cent_id"))
-        .write.mode("overwrite")
-        .partitionBy("cent_id").parquet(s"$dir/codes.parquet"),
-      () => graft.sources.StoreOps.Tombstones.writeEmpty(corpus.sparkSession,
-        dir, "vec_id")))
+      () => Codes.write(encode(corpusR, cents, cb, p), dir),
+      () => StoreOps.clearTombstones(corpus.sparkSession, dir, "vec_id")))
   }
 
   /** Logically remove `vecIds` (a (vec_id) frame) from the index —
@@ -100,38 +102,19 @@ object AnnIndex {
     * row-identical to an index whose appends never contained the removed
     * ids (the spec pins exactly that). */
   def remove(dir: String, vecIds: DataFrame): Unit =
-    graft.sources.StoreOps.Lease.withLease(vecIds.sparkSession, dir) {
-      graft.sources.StoreOps.Tombstones.add(dir, vecIds, "vec_id")
-    }
+    StoreOps.remove(dir, vecIds, "vec_id")
 
   /** Physically drop tombstoned codes and clear the tombstone list —
     * nothing observable changes ([[query]] already excluded them); the
     * per-list repartition doubles as small-file compaction of the append
-    * history. Write-aside-and-swap ([[graft.sources.StoreOps.swapWrite]]):
-    * the rewrite reads the files it replaces, and the codes table is
-    * corpus-sized — never materialized driver- or executor-side. */
-  def vacuum(dir: String): Unit =
-    graft.sources.StoreOps.Lease.withLease(SparkSession.active, dir) {
-    val spark = SparkSession.active
-    val tomb = graft.sources.StoreOps.Tombstones.read(spark, dir, "vec_id")
-      .localCheckpoint() // model-sized
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/codes.parquet")
-        .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-        .repartition(col("cent_id")),
-      s"$dir/codes.parquet", Seq("cent_id"))
-    graft.sources.StoreOps.Tombstones.writeEmpty(spark, dir, "vec_id")
-  }
+    * history. Write-aside-and-swap ([[StoreOps.vacuum]]): the rewrite
+    * reads the files it replaces, and the codes table is corpus-sized —
+    * never materialized driver- or executor-side. */
+  def vacuum(dir: String): Unit = StoreOps.vacuum(dir, "vec_id", Seq(Codes))
 
   /** Small-file compaction only: one file per inverted list, no logical
     * change — run it when append cadence outpaces removal cadence. */
-  def compact(dir: String): Unit =
-    graft.sources.StoreOps.Lease.withLease(SparkSession.active, dir) {
-    val spark = SparkSession.active
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/codes.parquet").repartition(col("cent_id")),
-      s"$dir/codes.parquet", Seq("cent_id"))
-  }
+  def compact(dir: String): Unit = StoreOps.compact(dir, Seq(Codes))
 
   /** Assign + encode `newVectors` against the FROZEN stored model and
     * append their codes. The model is never refit — append is a pure map
@@ -139,24 +122,17 @@ object AnnIndex {
     * aggregation), regardless of how large the existing index is.
     *
     * `batchId` commits the code files under batch-keyed names
-    * ([[graft.sources.StoreOps.appendKeyed]]), making the append
+    * ([[StoreOps.Table.append]]), making the append
     * idempotent on replay — the streaming path always passes the
     * foreachBatch id, so failure-recovery replays never double-index a
     * vector. */
   def append(dir: String, newVectors: DataFrame,
              batchId: Option[Long] = None): Unit =
-    graft.sources.StoreOps.Lease.withLease(newVectors.sparkSession, dir) {
+    StoreOps.Lease.withLease(newVectors.sparkSession, dir) {
     val spark = newVectors.sparkSession
     graft.functions.CosineSimilarity.register(spark)
     val (p, cents, cb) = readModel(spark, dir)
-    val codes = encode(rotated(spark, dir, p, newVectors), cents, cb, p)
-      .repartition(col("cent_id"))
-    batchId match {
-      case Some(id) => graft.sources.StoreOps.appendKeyed(codes,
-        s"$dir/codes.parquet", id, Seq("cent_id"))
-      case None => codes.write.mode("append")
-        .partitionBy("cent_id").parquet(s"$dir/codes.parquet")
-    }
+    Codes.append(encode(rotated(spark, dir, p, newVectors), cents, cb, p), dir, batchId)
   }
 
   /** Streaming index maintenance: [[append]] each micro-batch of vectors
@@ -171,9 +147,7 @@ object AnnIndex {
     * store. Caller starts the writer. */
   def streamingAppend(stream: DataFrame, dir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      append(dir, batch, Some(bid))
-    }
+    StoreOps.streamingAppend(stream)((batch, bid) => append(dir, batch, Some(bid)))
 
   /** ADC top-k from the stored index — [[Ann.ivfPqTopK]]'s scoring join
     * with the corpus-side state read from the store.
@@ -192,7 +166,7 @@ object AnnIndex {
     graft.functions.CosineSimilarity.register(spark)
     val (p, cents, cb) = readModel(spark, dir)
     val queriesR = rotated(spark, dir, p, queries)
-    val codes = spark.read.parquet(s"$dir/codes.parquet")
+    val codes = Codes.read(spark, dir)
     val probes = Ann.assignTo(queriesR, cents, nprobe)
       .select(col("vec_id").as("query_id"), col("cent_id"))
     val qside = probes.join(
@@ -213,11 +187,9 @@ object AnnIndex {
     // filtered set is still exact (filter-then-rank, not rank-then-filter).
     // Whether tombstones exist is a marker-file metadata check, not a
     // per-query Spark job.
-    val tombFree = if (!graft.sources.StoreOps.Tombstones.any(spark, dir))
-      scored0
+    val tombFree = if (!StoreOps.hasTombstones(spark, dir)) scored0
     else scored0.join(
-        broadcast(graft.sources.StoreOps.Tombstones.read(spark, dir, "vec_id")
-          .select(col("vec_id").as("neighbor_id"))),
+        broadcast(StoreOps.tombstones(spark, dir, "vec_id").select(col("vec_id").as("neighbor_id"))),
         Seq("neighbor_id"), "left_anti")
     val inList = allowed.fold(tombFree)(a =>
       tombFree.join(a.select(col("vec_id").as("neighbor_id")),
@@ -257,13 +229,12 @@ object AnnIndex {
 
   private def readModel(spark: SparkSession,
                         dir: String): (Params, DataFrame, DataFrame) = {
-    val m = spark.read.parquet(s"$dir/meta.parquet").head()
+    val m = Meta.read(spark, dir).head()
     val p = Params(m.getAs[Int]("n_centroids"), m.getAs[Int]("multi_assign"),
       m.getAs[Int]("m"), m.getAs[Int]("codebook_size"),
       m.getAs[Boolean]("normalize"),
       opq = m.schema.fieldNames.contains("opq") && m.getAs[Boolean]("opq"))
-    (p, spark.read.parquet(s"$dir/centroids.parquet"),
-      spark.read.parquet(s"$dir/codebook.parquet"))
+    (p, Centroids.read(spark, dir), Codebook.read(spark, dir))
   }
 
   /** Rotation persistence: one row per component (ci, v) plus the means
@@ -273,8 +244,7 @@ object AnnIndex {
                             rot: Pca.Model): Unit = {
     val rows = (-1, rot.means.toSeq) +:
       rot.components.zipWithIndex.map { case (v, ci) => (ci, v.toSeq) }.toSeq
-    spark.createDataFrame(rows).toDF("ci", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation.parquet")
+    Rotation.write(spark.createDataFrame(rows).toDF("ci", "v").coalesce(1), dir)
   }
 
   /** Apply the stored rotation when the index was built with one; no-op
@@ -284,7 +254,7 @@ object AnnIndex {
                       vecs: DataFrame): DataFrame =
     if (!p.opq) vecs
     else {
-      val rows = spark.read.parquet(s"$dir/rotation.parquet")
+      val rows = Rotation.read(spark, dir)
         .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
       val model = Pca.Model(rows(-1),
         Array.tabulate(Pca.Dims)(rows(_)), Array.fill(Pca.Dims)(0.0))

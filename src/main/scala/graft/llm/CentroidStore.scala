@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.sources.StoreOps
+import graft.sources.StoreOps.Table
+
 /** Persistent k-means centroid model: fit once, store, assign forever —
   * the frozen-model lifecycle around the two cluster-consuming operators,
   * [[Dedup.semDedup]] and [[Curation.mixByCluster]], which re-fit
@@ -37,31 +40,31 @@ import org.apache.spark.sql.types.LongType
   * same lowest-id-earlier-duplicate verdict. */
 object CentroidStore {
 
+  private val Meta = Table("meta")
+  private val Centroids = Table("centroids")
+  private[graft] val Members = Table("members", Seq("cent_id"))
+
   /** Fit the model on `vecs` ((vec_id, embedding)) and write model +
     * members to `dir`. `lloydIters > 0` refines the first-K seed with
     * [[Ann.lloydCentroids]] (off the gate path — the oracle replays the
     * deterministic seed, the refined fit is measured by AnnSweep). */
   def build(vecs: DataFrame, dir: String, nCentroids: Int = 16,
             lloydIters: Int = 0): Unit =
-    graft.sources.StoreOps.Lease.withLease(vecs.sparkSession, dir) {
+    StoreOps.Lease.withLease(vecs.sparkSession, dir) {
     val spark = vecs.sparkSession
     graft.functions.CosineSimilarity.register(spark)
     val seed = Ann.seedCentroids(vecs, nCentroids)
     val cents = if (lloydIters > 0) Ann.lloydCentroids(vecs, seed, lloydIters)
                 else seed
     // four disjoint-directory writes — concurrent (guide §2.6)
-    graft.sources.StoreOps.overlap(Seq(
-      () => spark.createDataFrame(Seq(Tuple1(nCentroids))).toDF("n_centroids")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.parquet"),
-      () => cents.coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/centroids.parquet"),
+    StoreOps.overlap(Seq(
+      () => Meta.write(spark.createDataFrame(Seq(Tuple1(nCentroids))).toDF("n_centroids")
+        .coalesce(1), dir),
+      () => Centroids.write(cents.coalesce(1), dir),
       // one file per cluster (not tasks × clusters): the repartition moves
       // only (vec_id, embedding, cent_id) rows
-      () => Ann.assignTo(vecs, cents, 1).repartition(col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id")
-        .parquet(s"$dir/members.parquet"),
-      () => graft.sources.StoreOps.Tombstones.writeEmpty(spark, dir,
-        "vec_id")))
+      () => Members.write(Ann.assignTo(vecs, cents, 1), dir),
+      () => StoreOps.clearTombstones(spark, dir, "vec_id")))
   }
 
   /** Logically remove `vecIds` (a (vec_id) frame) from the member store:
@@ -73,46 +76,23 @@ object CentroidStore {
     * remove-then-vacuum ≡ a store whose appends never contained the ids
     * (the [[AnnIndex.remove]] contract; RetentionSpec pins it). */
   def remove(dir: String, vecIds: DataFrame): Unit =
-    graft.sources.StoreOps.Lease.withLease(vecIds.sparkSession, dir) {
-      graft.sources.StoreOps.Tombstones.add(dir, vecIds, "vec_id")
-    }
+    StoreOps.remove(dir, vecIds, "vec_id")
 
   /** Physically drop tombstoned members and clear the list — observable
     * behaviour unchanged; per-cluster repartition doubles as small-file
     * compaction. Write-aside-and-swap. */
-  def vacuum(dir: String): Unit =
-    graft.sources.StoreOps.Lease.withLease(SparkSession.active, dir) {
-    val spark = SparkSession.active
-    val tomb = graft.sources.StoreOps.Tombstones.read(spark, dir, "vec_id")
-      .localCheckpoint() // model-sized
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/members.parquet")
-        .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-        .repartition(col("cent_id")),
-      s"$dir/members.parquet", Seq("cent_id"))
-    graft.sources.StoreOps.Tombstones.writeEmpty(spark, dir, "vec_id")
-  }
+  def vacuum(dir: String): Unit = StoreOps.vacuum(dir, "vec_id", Seq(Members))
 
   /** Small-file compaction only: one file per cluster directory. */
-  def compact(dir: String): Unit =
-    graft.sources.StoreOps.Lease.withLease(SparkSession.active, dir) {
-    val spark = SparkSession.active
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/members.parquet").repartition(col("cent_id")),
-      s"$dir/members.parquet", Seq("cent_id"))
-  }
+  def compact(dir: String): Unit = StoreOps.compact(dir, Seq(Members))
 
   /** Assign `newVecs` against the FROZEN centroids and add them to the
     * member store — a pure map over the batch regardless of store size
     * (centroids broadcast; the store is never read, let alone
     * reshuffled). */
   def append(dir: String, newVecs: DataFrame): Unit =
-    graft.sources.StoreOps.Lease.withLease(newVecs.sparkSession, dir) {
-    val spark = newVecs.sparkSession
-    Ann.assignTo(newVecs, centroids(spark, dir), 1)
-      .repartition(col("cent_id"))
-      .write.mode("append").partitionBy("cent_id")
-      .parquet(s"$dir/members.parquet")
+    StoreOps.Lease.withLease(newVecs.sparkSession, dir) {
+    Members.append(Ann.assignTo(newVecs, centroids(newVecs.sparkSession, dir), 1), dir)
   }
 
   /** (vec_id, cent_id) assignment of `vecs` under the stored model —
@@ -124,7 +104,7 @@ object CentroidStore {
 
   /** The stored coarse model. Bounded: nCentroids × Dims floats. */
   def centroids(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/centroids.parquet")
+    Centroids.read(spark, dir)
 
   /** SemDeDup a new batch against everything indexed plus the batch
     * itself: the (vec_id, cent_id, keep, min_dup, n_dups) contract of
@@ -149,7 +129,7 @@ object CentroidStore {
     val asg = if (sc.getCheckpointDir.isDefined) as0.checkpoint()
               else as0.localCheckpoint()
 
-    val members = spark.read.parquet(s"$dir/members.parquet")
+    val members = Members.read(spark, dir)
     val touched = asg.select("cent_id").distinct()
     // partition pruning: only the batch's cluster directories are read.
     // The tombstone anti-join sits AFTER the pruning join (so dynamic
@@ -157,10 +137,8 @@ object CentroidStore {
     // removed vectors drop out of both the pair candidates and the
     // maxCluster size guard below, exactly as if never appended.
     val storeM0 = members.join(broadcast(touched), Seq("cent_id"))
-    val storeM = if (!graft.sources.StoreOps.Tombstones.any(spark, dir))
-      storeM0
-    else storeM0.join(
-      broadcast(graft.sources.StoreOps.Tombstones.read(spark, dir, "vec_id")),
+    val storeM = if (!StoreOps.hasTombstones(spark, dir)) storeM0
+    else storeM0.join(broadcast(StoreOps.tombstones(spark, dir, "vec_id")),
       Seq("vec_id"), "left_anti")
 
     // the semDedup guard on TOTAL cluster size (store + batch members)

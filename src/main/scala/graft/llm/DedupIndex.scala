@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.StoreOps
+import graft.sources.StoreOps.Table
+
 /** Persistent MinHash-LSH dedup index: build once, store, append new
   * batches, dedup each incoming batch against everything already indexed —
   * the missing lifecycle around [[Dedup.minhashLsh]], which recomputes
@@ -74,16 +77,20 @@ object DedupIndex {
     * on-disk layout, unchanged. */
   private val MaxPfx = 32
 
+  private val Meta = Table("meta")
+  private[graft] val Postings = Table("postings", Seq("band", "bpfx"))
+  private val Grams = Table("grams", Seq("gpfx"))
+
   /** Gram rows are doc-count-sized and FAT (a doc's whole n-gram set in
     * one array cell, kilobytes a row), so the directory-sizing unit is
     * docs: 16 k docs ≈ tens of MB of gram payload per directory. */
   private val DocsPerPfx = 16 * 1024L
 
   private def layoutPfx(docs: Long): Int =
-    graft.sources.StoreOps.adaptiveFanout(docs, DocsPerPfx, MaxPfx)
+    StoreOps.adaptiveFanout(docs, DocsPerPfx, MaxPfx)
 
   private def layoutOf(spark: SparkSession, dir: String): Int =
-    graft.sources.StoreOps.readLayout(spark, dir, MaxPfx)
+    StoreOps.readLayout(spark, dir, MaxPfx)
 
   private def bpfxCol(npfx: Int): org.apache.spark.sql.Column =
     pmod(crc32(col("bkey")), lit(npfx)).cast(IntegerType)
@@ -92,7 +99,7 @@ object DedupIndex {
     pmod(id, lit(npfx)).cast(IntegerType)
 
   private def hasPfxLayout(spark: SparkSession, dir: String): Boolean =
-    spark.read.parquet(s"$dir/postings.parquet").columns.contains("bpfx")
+    Postings.read(spark, dir).columns.contains("bpfx")
 
   private def requirePfxLayout(spark: SparkSession, dir: String): Unit =
     require(hasPfxLayout(spark, dir),
@@ -105,18 +112,17 @@ object DedupIndex {
     * store's single-maintainer lease ([[graft.sources.StoreOps.Lease]]);
     * probes never take it. */
   def build(docs: DataFrame, dir: String, p: Params = Params()): Unit =
-    graft.sources.StoreOps.Lease.withLease(docs.sparkSession, dir) {
+    StoreOps.Lease.withLease(docs.sparkSession, dir) {
     val spark = docs.sparkSession
     // the sizing count is one cheap column-pruned job over the batch;
     // it buys the scale-adaptive modulus for the store's whole life
     val npfx = layoutPfx(docs.count())
-    graft.sources.StoreOps.writeLayout(spark, dir, npfx)
+    StoreOps.writeLayout(spark, dir, npfx)
     // meta, postings, grams and the tombstone reset land in disjoint
     // directories — submit concurrently (guide §2.6; StoreOps.overlap)
-    graft.sources.StoreOps.overlap(Seq(
-      () => spark.createDataFrame(Seq((p.n, p.k, p.bands, p.maxBucket)))
-        .toDF("n", "k", "bands", "max_bucket")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.parquet"),
+    StoreOps.overlap(Seq(
+      () => Meta.write(spark.createDataFrame(Seq((p.n, p.k, p.bands, p.maxBucket)))
+        .toDF("n", "k", "bands", "max_bucket").coalesce(1), dir),
       () => {
         val banded = Dedup.bandKeys(docs, p.n, p.k, p.bands)
         // build-time degenerate-bucket guard (see scaladoc above)
@@ -124,21 +130,12 @@ object DedupIndex {
           .agg(count(lit(1)).as("__c__")).filter(col("__c__") <= p.maxBucket)
           .select("band", "bkey")
         // one file per (band, bpfx) partition (not tasks × partitions)
-        banded.join(keep, Seq("band", "bkey"))
-          .select(col("doc_id"), col("bkey"), col("band"),
-            bpfxCol(npfx).as("bpfx"))
-          .repartition(col("band"), col("bpfx"))
-          .write.mode("overwrite").partitionBy("band", "bpfx")
-          .parquet(s"$dir/postings.parquet")
+        Postings.write(banded.join(keep, Seq("band", "bkey"))
+          .select(col("doc_id"), col("bkey"), col("band"), bpfxCol(npfx).as("bpfx")), dir)
       },
-      () => Dedup.withGramSet(docs, p.n)
-        .select(col("doc_id"), col("gs"),
-          gpfxCol(col("doc_id"), npfx).as("gpfx"))
-        .repartition(col("gpfx"))
-        .write.mode("overwrite").partitionBy("gpfx")
-        .parquet(s"$dir/grams.parquet"),
-      () => graft.sources.StoreOps.Tombstones.writeEmpty(spark, dir,
-        "doc_id")))
+      () => Grams.write(Dedup.withGramSet(docs, p.n)
+        .select(col("doc_id"), col("gs"), gpfxCol(col("doc_id"), npfx).as("gpfx")), dir),
+      () => StoreOps.clearTombstones(spark, dir, "doc_id")))
   }
 
   /** Logically remove `docIds` (a (doc_id) frame) from the index —
@@ -154,71 +151,41 @@ object DedupIndex {
     * append, which doesn't re-check the guard either; RetentionSpec pins
     * the equivalence on non-degenerate data). */
   def remove(dir: String, docIds: DataFrame): Unit =
-    graft.sources.StoreOps.Lease.withLease(docIds.sparkSession, dir) {
-      graft.sources.StoreOps.Tombstones.add(dir, docIds, "doc_id")
-    }
+    StoreOps.remove(dir, docIds, "doc_id")
 
   /** Physically drop tombstoned postings + gram sets and clear the list —
     * nothing observable changes ([[dedupAgainst]] already excluded them);
     * the per-band repartition doubles as small-file compaction.
     * Write-aside-and-swap: the rewrite reads the files it replaces. */
   def vacuum(dir: String): Unit =
-    graft.sources.StoreOps.Lease.withLease(SparkSession.active, dir) {
-    val spark = SparkSession.active
-    requirePfxLayout(spark, dir)
-    val tomb = graft.sources.StoreOps.Tombstones.read(spark, dir, "doc_id")
-      .localCheckpoint() // model-sized
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/postings.parquet")
-        .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-        .repartition(col("band"), col("bpfx")),
-      s"$dir/postings.parquet", Seq("band", "bpfx"))
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/grams.parquet")
-        .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-        .repartition(col("gpfx")),
-      s"$dir/grams.parquet", Seq("gpfx"))
-    graft.sources.StoreOps.Tombstones.writeEmpty(spark, dir, "doc_id")
-  }
+    StoreOps.Lease.withLease(SparkSession.active, dir) {
+      requirePfxLayout(SparkSession.active, dir)
+      StoreOps.vacuum(dir, "doc_id", Seq(Postings, Grams))
+    }
 
   /** Small-file compaction only (one file per partition dir) — run when
     * append cadence outpaces removals. */
   def compact(dir: String): Unit =
-    graft.sources.StoreOps.Lease.withLease(SparkSession.active, dir) {
-    val spark = SparkSession.active
-    requirePfxLayout(spark, dir)
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/postings.parquet")
-        .repartition(col("band"), col("bpfx")),
-      s"$dir/postings.parquet", Seq("band", "bpfx"))
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/grams.parquet").repartition(col("gpfx")),
-      s"$dir/grams.parquet", Seq("gpfx"))
-  }
+    StoreOps.Lease.withLease(SparkSession.active, dir) {
+      requirePfxLayout(SparkSession.active, dir)
+      StoreOps.compact(dir, Seq(Postings, Grams))
+    }
 
   /** Sign `newDocs` with the FROZEN scheme and append their postings and
     * gram sets — a pure map over the batch regardless of index size. */
   def append(dir: String, newDocs: DataFrame): Unit =
-    graft.sources.StoreOps.Lease.withLease(newDocs.sparkSession, dir) {
+    StoreOps.Lease.withLease(newDocs.sparkSession, dir) {
     val spark = newDocs.sparkSession
     requirePfxLayout(spark, dir)
     val p = readParams(spark, dir)
     // the BUILD's frozen modulus, not the batch's size (one-config rule)
     val npfx = layoutOf(spark, dir)
     // two pure appends into disjoint tables — concurrent (guide §2.6)
-    graft.sources.StoreOps.overlap(Seq(
-      () => Dedup.bandKeys(newDocs, p.n, p.k, p.bands)
-        .select(col("doc_id"), col("bkey"), col("band"),
-          bpfxCol(npfx).as("bpfx"))
-        .repartition(col("band"), col("bpfx"))
-        .write.mode("append").partitionBy("band", "bpfx")
-        .parquet(s"$dir/postings.parquet"),
-      () => Dedup.withGramSet(newDocs, p.n)
-        .select(col("doc_id"), col("gs"),
-          gpfxCol(col("doc_id"), npfx).as("gpfx"))
-        .repartition(col("gpfx"))
-        .write.mode("append").partitionBy("gpfx")
-        .parquet(s"$dir/grams.parquet")))
+    StoreOps.overlap(Seq(
+      () => Postings.append(Dedup.bandKeys(newDocs, p.n, p.k, p.bands)
+        .select(col("doc_id"), col("bkey"), col("band"), bpfxCol(npfx).as("bpfx")), dir),
+      () => Grams.append(Dedup.withGramSet(newDocs, p.n)
+        .select(col("doc_id"), col("gs"), gpfxCol(col("doc_id"), npfx).as("gpfx")), dir)))
   }
 
   /** Near-duplicates of `newDocs` among everything already in the store:
@@ -231,8 +198,8 @@ object DedupIndex {
     val p = readParams(spark, dir)
     val pfx = hasPfxLayout(spark, dir)
     val npfx = layoutOf(spark, dir)
-    val postings = spark.read.parquet(s"$dir/postings.parquet")
-    val storedGrams = spark.read.parquet(s"$dir/grams.parquet")
+    val postings = Postings.read(spark, dir)
+    val storedGrams = Grams.read(spark, dir)
     val probe = Dedup.bandKeys(newDocs, p.n, p.k, p.bands)
       .select(col("doc_id").as("doc_id"), col("band"), col("bkey"),
         bpfxCol(npfx).as("bpfx"))
@@ -250,10 +217,9 @@ object DedupIndex {
     // AFTER the broadcast probe join (candidate-sized, and the postings
     // scan keeps its pruning), marker-gated so unremoved-from stores add
     // neither a plan node nor a Spark job
-    val cand = if (!graft.sources.StoreOps.Tombstones.any(spark, dir)) cand0
+    val cand = if (!StoreOps.hasTombstones(spark, dir)) cand0
       else cand0.join(
-        broadcast(graft.sources.StoreOps.Tombstones.read(spark, dir, "doc_id")
-          .select(col("doc_id").as("dup_id"))),
+        broadcast(StoreOps.tombstones(spark, dir, "doc_id").select(col("doc_id").as("dup_id"))),
         Seq("dup_id"), "left_anti")
     val newGrams = Dedup.withGramSet(newDocs, p.n)
       .select(col("doc_id"), col("gs").as("__ga__"))
@@ -348,7 +314,7 @@ object DedupIndex {
     }
 
   private def readParams(spark: SparkSession, dir: String): Params = {
-    val m = spark.read.parquet(s"$dir/meta.parquet").head()
+    val m = Meta.read(spark, dir).head()
     Params(m.getAs[Int]("n"), m.getAs[Int]("k"), m.getAs[Int]("bands"),
       m.getAs[Int]("max_bucket"))
   }

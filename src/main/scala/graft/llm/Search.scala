@@ -5,6 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.StoreOps
+import graft.sources.StoreOps.Table
+
 /** Lexical retrieval over the document corpus: BM25 scoring plus the
   * persistent inverted-index lifecycle ([[SearchIndex]]). This is the
   * sparse half of the retrieval stack — [[Ann]] covers the dense half —
@@ -576,7 +579,7 @@ object Search {
   *     accumulated corpus (the gate pins exactly that, via the batch
   *     oracle SQL). Partials make append PURE WRITES — no table in the
   *     store is ever read-merge-overwritten, which is what lets the
-  *     batch-keyed append commit ([[graft.sources.StoreOps.appendKeyed]])
+  *     batch-keyed append commit ([[StoreOps.Table.append]])
   *     make the whole postings+doclens+stats triple idempotent on
   *     streaming replay.
   *   - `doclens.parquet` (doc_id, dl): one row per indexed doc — what
@@ -628,15 +631,20 @@ object SearchIndex {
   private val RowsPerPfx = 512 * 1024L
 
   private def layoutPfx(rows: Long): Int =
-    graft.sources.StoreOps.adaptiveFanout(rows, RowsPerPfx, MaxPfx)
-
-  private def writeLayout(spark: SparkSession, dir: String, npfx: Int): Unit =
-    graft.sources.StoreOps.writeLayout(spark, dir, npfx)
+    StoreOps.adaptiveFanout(rows, RowsPerPfx, MaxPfx)
 
   /** The store's frozen prefix modulus: `_layout` sidecar if present,
     * else 64 (every store written before the adaptive layout). */
-  private[llm] def layoutOf(spark: SparkSession, dir: String): Int =
-    graft.sources.StoreOps.readLayout(spark, dir, MaxPfx)
+  private def layoutOf(spark: SparkSession, dir: String): Int =
+    StoreOps.readLayout(spark, dir, MaxPfx)
+
+  private[graft] val Postings = Table("postings", Seq("pfx"))
+  private val Docvecs = Table("docvecs", Seq("dpfx"))
+  private val Stats = Table("stats")
+  private val Doclens = Table("doclens")
+  private val Postings2 = Table("postings2", Seq("pfx"))
+  private val Stats2 = Table("stats2")
+  private val Doclens2 = Table("doclens2")
 
   private def withPfx(post: DataFrame, npfx: Int): DataFrame =
     post.withColumn("pfx", pmod(crc32(col("token")), lit(npfx)).cast(IntegerType))
@@ -677,15 +685,28 @@ object SearchIndex {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   private def hasDocvecs(spark: SparkSession, dir: String): Boolean =
-    dirExists(spark, s"$dir/docvecs.parquet")
+    Docvecs.exists(spark, dir)
 
   private def hasBigrams(spark: SparkSession, dir: String): Boolean =
-    dirExists(spark, s"$dir/postings2.parquet")
+    Postings2.exists(spark, dir)
 
-  private def dirExists(spark: SparkSession, table: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(table)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
-  }
+  /** The row tables vacuum filters and compact rewrites as they are, in
+    * maintenance order: the docvecs twin and the bigram family only where
+    * the build made them (the store's table set is FROZEN at build — the
+    * one-config rule). The unigram doclens ledger and the stats follow. */
+  private def rowTables(spark: SparkSession, dir: String): Seq[Table] =
+    Seq(Postings) ++ (if (hasDocvecs(spark, dir)) Seq(Docvecs) else Nil) ++
+      (if (hasBigrams(spark, dir)) Seq(Postings2, Doclens2) else Nil)
+
+  /** Sum stored per-append stats partials to the one-row total. */
+  private def sumStats(partials: DataFrame): DataFrame =
+    partials.agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
+      coalesce(sum("sum_dl"), lit(0L)).as("sum_dl"))
+
+  /** The one-row stats of a (doc_id, dl) ledger. */
+  private def lensStats(doclens: DataFrame): DataFrame =
+    doclens.agg(count(lit(1)).cast(LongType).as("n_docs"),
+      coalesce(sum("dl"), lit(0L)).as("sum_dl"))
 
   /** (doc_id, dl) from a [[Search.tokenized]] frame — the removal ledger
     * rows ([[remove]]). */
@@ -706,41 +727,29 @@ object SearchIndex {
     * is the family default expansion and its twin is the same row count
     * as the postings). */
   def build(docs: DataFrame, dir: String, bigrams: Boolean = false): Unit =
-    graft.sources.StoreOps.Lease.withLease(docs.sparkSession, dir) {
+    StoreOps.Lease.withLease(docs.sparkSession, dir) {
     val spark = docs.sparkSession
     val tk = Search.pin(Search.tokenized(docs))
     val post = Search.pin(Search.postingsOf(tk)) // written twice (two layouts)
     // post is pinned, so the sizing count reads cached blocks — one cheap
     // job buys the scale-adaptive modulus for the store's whole life
     val npfx = layoutPfx(post.count())
-    writeLayout(spark, dir, npfx)
+    StoreOps.writeLayout(spark, dir, npfx)
     // the 4-7 table writes all fold from the two pinned frames into
     // DISJOINT directories — submit them concurrently so each write's
     // job-launch/commit latency overlaps its siblings' work instead of
     // serializing 4-7 job gaps (guide §2.6; StoreOps.overlap)
     val writes = Seq[() => Unit](
-      () => withPfx(post, npfx)
-        .repartition(col("pfx")) // one file per prefix, not tasks × prefixes
-        .write.mode("overwrite").partitionBy("pfx")
-        .parquet(s"$dir/postings.parquet"),
-      () => withDpfx(post, npfx)
-        .repartition(col("dpfx"))
-        .write.mode("overwrite").partitionBy("dpfx")
-        .parquet(s"$dir/docvecs.parquet"),
-      () => Search.corpusStatsOf(tk)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats.parquet"),
-      () => doclensOf(tk).write.mode("overwrite")
-        .parquet(s"$dir/doclens.parquet"),
-      () => graft.sources.StoreOps.Tombstones.writeEmpty(spark, dir, "doc_id")
+      () => Postings.write(withPfx(post, npfx), dir),
+      () => Docvecs.write(withDpfx(post, npfx), dir),
+      () => Stats.write(Search.corpusStatsOf(tk).coalesce(1), dir),
+      () => Doclens.write(doclensOf(tk), dir),
+      () => StoreOps.clearTombstones(spark, dir, "doc_id")
     ) ++ (if (!bigrams) Nil else Seq[() => Unit](
-      () => withPfx(Search.postings2Of(tk), npfx)
-        .repartition(col("pfx")).write.mode("overwrite").partitionBy("pfx")
-        .parquet(s"$dir/postings2.parquet"),
-      () => Search.corpusStats2Of(tk)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats2.parquet"),
-      () => doclens2Of(tk).write.mode("overwrite")
-        .parquet(s"$dir/doclens2.parquet")))
-    graft.sources.StoreOps.overlap(writes)
+      () => Postings2.write(withPfx(Search.postings2Of(tk), npfx), dir),
+      () => Stats2.write(Search.corpusStats2Of(tk).coalesce(1), dir),
+      () => Doclens2.write(doclens2Of(tk), dir)))
+    StoreOps.overlap(writes)
   }
 
   /** (doc_id, dl) over the BIGRAM stream (dl = max(tokens − 1, 0)) —
@@ -760,7 +769,7 @@ object SearchIndex {
     * (run the store's dedup step, or key batches by crawl snapshot).
     *
     * `batchId` makes the triple IDEMPOTENT: each table's files commit
-    * under batch-keyed names via [[graft.sources.StoreOps.appendKeyed]],
+    * under batch-keyed names via [[StoreOps.Table.append]],
     * so a replay (the Structured Streaming at-least-once recovery, or any
     * caller re-running a crawl snapshot) first undoes whatever the crashed
     * attempt committed and then re-commits — append twice ≡ append once,
@@ -770,66 +779,27 @@ object SearchIndex {
     * re-driven, so streaming paths always pass the foreachBatch id. */
   def append(dir: String, newDocs: DataFrame,
              batchId: Option[Long] = None): Unit =
-    graft.sources.StoreOps.Lease.withLease(newDocs.sparkSession, dir) {
+    StoreOps.Lease.withLease(newDocs.sparkSession, dir) {
+    val spark = newDocs.sparkSession
     // the BUILD's frozen modulus, not the batch's size — probes hash with
     // one modulus per store (the one-config rule)
-    val npfx = layoutOf(newDocs.sparkSession, dir)
+    val npfx = layoutOf(spark, dir)
     val tk = Search.pin(Search.tokenized(newDocs))
     val post0 = Search.pin(Search.postingsOf(tk))
-    val post = withPfx(post0, npfx).repartition(col("pfx"))
-    val dv = withDpfx(post0, npfx).repartition(col("dpfx"))
-    val dl = doclensOf(tk)
-    val stats = Search.corpusStatsOf(tk)
-    // legacy stores (pre-docvecs builds) stay legal for [[search]]:
-    // the twin is only appended where build created it
-    val withDv = hasDocvecs(newDocs.sparkSession, dir)
-    // the bigram family appends wherever build created it — the store's
-    // table set is FROZEN at build (the one-config rule)
-    val withBg = hasBigrams(newDocs.sparkSession, dir)
-    lazy val post2 = withPfx(Search.postings2Of(tk), npfx).repartition(col("pfx"))
-    lazy val dl2 = doclens2Of(tk)
-    lazy val stats2 = Search.corpusStats2Of(tk)
+    // the docvecs twin (absent from legacy pre-docvecs builds, which stay
+    // legal for [[search]]) and the bigram family append only where the
+    // build created them — the store's table set is FROZEN at build
+    val tables = Seq(Postings -> withPfx(post0, npfx), Doclens -> doclensOf(tk),
+        Stats -> Search.corpusStatsOf(tk).coalesce(1)) ++
+      (if (!hasDocvecs(spark, dir)) Nil else Seq(Docvecs -> withDpfx(post0, npfx))) ++
+      (if (!hasBigrams(spark, dir)) Nil else Seq(
+        Postings2 -> withPfx(Search.postings2Of(tk), npfx), Doclens2 -> doclens2Of(tk),
+        Stats2 -> Search.corpusStats2Of(tk).coalesce(1)))
     // the 3-7 per-table appends are pure writes into disjoint directories
     // (partials; nothing reads the store) — concurrent like build's
     // (guide §2.6). Idempotency is per (table, batchId) file name, so the
     // batch-keyed commits stay replayable submitted in any order.
-    val writes = batchId match {
-      case Some(id) =>
-        Seq[() => Unit](
-          () => graft.sources.StoreOps.appendKeyed(post,
-            s"$dir/postings.parquet", id, Seq("pfx")),
-          () => graft.sources.StoreOps.appendKeyed(dl,
-            s"$dir/doclens.parquet", id),
-          () => graft.sources.StoreOps.appendKeyed(stats.coalesce(1),
-            s"$dir/stats.parquet", id)) ++
-        (if (!withDv) Nil else Seq[() => Unit](
-          () => graft.sources.StoreOps.appendKeyed(dv,
-            s"$dir/docvecs.parquet", id, Seq("dpfx")))) ++
-        (if (!withBg) Nil else Seq[() => Unit](
-          () => graft.sources.StoreOps.appendKeyed(post2,
-            s"$dir/postings2.parquet", id, Seq("pfx")),
-          () => graft.sources.StoreOps.appendKeyed(dl2,
-            s"$dir/doclens2.parquet", id),
-          () => graft.sources.StoreOps.appendKeyed(stats2.coalesce(1),
-            s"$dir/stats2.parquet", id)))
-      case None =>
-        Seq[() => Unit](
-          () => post.write.mode("append").partitionBy("pfx")
-            .parquet(s"$dir/postings.parquet"),
-          () => dl.write.mode("append").parquet(s"$dir/doclens.parquet"),
-          () => stats.coalesce(1).write.mode("append")
-            .parquet(s"$dir/stats.parquet")) ++
-        (if (!withDv) Nil else Seq[() => Unit](
-          () => dv.write.mode("append").partitionBy("dpfx")
-            .parquet(s"$dir/docvecs.parquet"))) ++
-        (if (!withBg) Nil else Seq[() => Unit](
-          () => post2.write.mode("append").partitionBy("pfx")
-            .parquet(s"$dir/postings2.parquet"),
-          () => dl2.write.mode("append").parquet(s"$dir/doclens2.parquet"),
-          () => stats2.coalesce(1).write.mode("append")
-            .parquet(s"$dir/stats2.parquet")))
-    }
-    graft.sources.StoreOps.overlap(writes)
+    StoreOps.overlap(tables.map { case (t, df) => () => t.append(df, dir, batchId) })
   }
 
   /** Logically remove `docIds` (a (doc_id) frame) from the index: appends
@@ -840,17 +810,13 @@ object SearchIndex {
     * Removing an id that was never indexed (or removing twice) is a
     * no-op: the read paths intersect tombstones with doclens first. */
   def remove(dir: String, docIds: DataFrame): Unit =
-    graft.sources.StoreOps.Lease.withLease(docIds.sparkSession, dir) {
-      graft.sources.StoreOps.Tombstones.add(dir, docIds, "doc_id")
-    }
+    StoreOps.remove(dir, docIds, "doc_id")
 
   /** Fold the stored per-append stats partials to the one-row total —
     * exact LONG sums, a bounded read (one row per build/append until
     * vacuum re-collapses them). */
   private def storedStats(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/stats.parquet")
-      .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
-        coalesce(sum("sum_dl"), lit(0L)).as("sum_dl"))
+    sumStats(Stats.read(spark, dir))
 
   /** The one-row stats frame for the docs that actually participate in
     * scoring: the doclens ledger minus tombstones, restricted to the allow
@@ -862,13 +828,11 @@ object SearchIndex {
   private def effectiveStats(spark: SparkSession, dir: String,
                              tomb: Option[DataFrame],
                              allowed: Option[DataFrame]): DataFrame = {
-    val dl0 = spark.read.parquet(s"$dir/doclens.parquet")
+    val dl0 = Doclens.read(spark, dir)
     val dl1 = tomb.fold(dl0)(t =>
       dl0.join(broadcast(t), Seq("doc_id"), "left_anti"))
-    val dl = allowed.fold(dl1)(a =>
-      dl1.join(a.select(col("doc_id")), Seq("doc_id"), "left_semi"))
-    dl.agg(count(lit(1)).cast(LongType).as("n_docs"),
-      coalesce(sum("dl"), lit(0L)).as("sum_dl"))
+    lensStats(allowed.fold(dl1)(a =>
+      dl1.join(a.select(col("doc_id")), Seq("doc_id"), "left_semi")))
   }
 
   /** Physically rewrite the store without the tombstoned rows and clear
@@ -878,52 +842,20 @@ object SearchIndex {
     * tombstone anti-join and stats adjustment disappear from every later
     * query, and the per-prefix `repartition` makes this double as a
     * small-file compaction of the append history. One full-store pass,
-    * written aside and swapped in ([[graft.sources.StoreOps.swapWrite]] —
-    * the rewrite plan reads the files it replaces). */
-  def vacuum(dir: String): Unit =
-    graft.sources.StoreOps.Lease.withLease(
-        org.apache.spark.sql.SparkSession.active, dir) {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val tomb = graft.sources.StoreOps.Tombstones.read(spark, dir, "doc_id")
-      .localCheckpoint() // model-sized
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/postings.parquet")
-        .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-        .repartition(col("pfx")),
-      s"$dir/postings.parquet", Seq("pfx"))
-    if (hasDocvecs(spark, dir)) graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/docvecs.parquet")
-        .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-        .repartition(col("dpfx")),
-      s"$dir/docvecs.parquet", Seq("dpfx"))
-    if (hasBigrams(spark, dir)) {
-      graft.sources.StoreOps.swapWrite(
-        spark.read.parquet(s"$dir/postings2.parquet")
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .repartition(col("pfx")),
-        s"$dir/postings2.parquet", Seq("pfx"))
-      graft.sources.StoreOps.swapWrite(
-        spark.read.parquet(s"$dir/doclens2.parquet")
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti"),
-        s"$dir/doclens2.parquet")
-      val s2 = spark.read.parquet(s"$dir/doclens2.parquet")
-        .agg(count(lit(1)).cast(LongType).as("n_docs"),
-          coalesce(sum("dl"), lit(0L)).as("sum_dl"))
-        .localCheckpoint()
-      s2.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats2.parquet")
+    * written aside and swapped in ([[StoreOps.vacuum]] — the rewrite
+    * plan reads the files it replaces); the stats are then re-derived
+    * from the vacuumed ledgers — LONG sums, so identical to subtracting
+    * the removed rows from the stored stats. */
+  def vacuum(dir: String): Unit = {
+    val spark = SparkSession.active
+    StoreOps.Lease.withLease(spark, dir) {
+      val bigrams = hasBigrams(spark, dir)
+      StoreOps.vacuum(dir, "doc_id", rowTables(spark, dir) :+ Doclens, rederive = {
+        if (bigrams)
+          Stats2.write(lensStats(Doclens2.read(spark, dir)).localCheckpoint().coalesce(1), dir)
+        Stats.write(lensStats(Doclens.read(spark, dir)).localCheckpoint().coalesce(1), dir)
+      })
     }
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/doclens.parquet")
-        .join(broadcast(tomb), Seq("doc_id"), "left_anti"),
-      s"$dir/doclens.parquet")
-    // re-derive stats from the vacuumed ledger: LONG sums, so identical
-    // to subtracting the removed rows from the stored stats
-    val stats = spark.read.parquet(s"$dir/doclens.parquet")
-      .agg(count(lit(1)).cast(LongType).as("n_docs"),
-        coalesce(sum("dl"), lit(0L)).as("sum_dl"))
-      .localCheckpoint()
-    stats.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats.parquet")
-    graft.sources.StoreOps.Tombstones.writeEmpty(spark, dir, "doc_id")
   }
 
   /** Small-file compaction: rewrite postings (and doclens) so each prefix
@@ -931,34 +863,15 @@ object SearchIndex {
     * micro-batch appends otherwise leave the probe reading thousands of
     * footer-dominated files — and fold the per-append stats partials back
     * to one row. Pure rewrite, nothing observable changes. */
-  def compact(dir: String): Unit =
-    graft.sources.StoreOps.Lease.withLease(
-        org.apache.spark.sql.SparkSession.active, dir) {
-    val spark = org.apache.spark.sql.SparkSession.active
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/postings.parquet").repartition(col("pfx")),
-      s"$dir/postings.parquet", Seq("pfx"))
-    if (hasDocvecs(spark, dir)) graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/docvecs.parquet").repartition(col("dpfx")),
-      s"$dir/docvecs.parquet", Seq("dpfx"))
-    if (hasBigrams(spark, dir)) {
-      graft.sources.StoreOps.swapWrite(
-        spark.read.parquet(s"$dir/postings2.parquet").repartition(col("pfx")),
-        s"$dir/postings2.parquet", Seq("pfx"))
-      graft.sources.StoreOps.swapWrite(
-        spark.read.parquet(s"$dir/doclens2.parquet").coalesce(1),
-        s"$dir/doclens2.parquet")
-      graft.sources.StoreOps.swapWrite(
-        spark.read.parquet(s"$dir/stats2.parquet")
-          .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
-            coalesce(sum("sum_dl"), lit(0L)).as("sum_dl")).coalesce(1),
-        s"$dir/stats2.parquet")
+  def compact(dir: String): Unit = {
+    val spark = SparkSession.active
+    StoreOps.Lease.withLease(spark, dir) {
+      val ledgers = if (hasBigrams(spark, dir)) Seq(Stats2, Doclens, Stats) else Seq(Doclens, Stats)
+      StoreOps.compact(dir, rowTables(spark, dir) ++ ledgers, {
+        case Stats | Stats2 => sumStats
+        case _ => identity
+      })
     }
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/doclens.parquet").coalesce(1),
-      s"$dir/doclens.parquet")
-    graft.sources.StoreOps.swapWrite(
-      storedStats(spark, dir).coalesce(1), s"$dir/stats.parquet")
   }
 
   /** Streaming index maintenance: [[append]] each micro-batch of documents
@@ -969,16 +882,14 @@ object SearchIndex {
     * stats merge is exact, so stream-then-search ≡ whole-corpus
     * [[Search.bm25TopK]] bit-for-bit (StreamingSpec pins it). Every
     * micro-batch commits under its foreachBatch id
-    * ([[append]]'s `batchId` → [[graft.sources.StoreOps.appendKeyed]]),
+    * ([[append]]'s `batchId` → [[StoreOps.Table.append]]),
     * so the at-least-once replays of failure recovery are EXACTLY-ONCE at
     * the store: a replayed batch undoes its own partial commit and
     * re-commits, leaving the store identical to a single run. Caller
     * starts the writer. */
   def streamingBuild(stream: DataFrame, dir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      append(dir, batch, Some(bid))
-    }
+    StoreOps.streamingAppend(stream)((batch, bid) => append(dir, batch, Some(bid)))
 
   /** BM25 top-`topK` over everything indexed, answered FROM THE STORE:
     * the query's distinct terms pick their prefix partitions (static
@@ -1015,10 +926,8 @@ object SearchIndex {
     Search.scoreBm25(post, qterms, stats, topK, k1, b, maxDfFrac)
   }
 
-  private def readTombstones(spark: SparkSession,
-                             dir: String): Option[DataFrame] =
-    if (graft.sources.StoreOps.Tombstones.any(spark, dir))
-      Some(graft.sources.StoreOps.Tombstones.read(spark, dir, "doc_id"))
+  private def readTombstones(spark: SparkSession, dir: String): Option[DataFrame] =
+    if (StoreOps.hasTombstones(spark, dir)) Some(StoreOps.tombstones(spark, dir, "doc_id"))
     else None
 
   /** The pruned-postings slice for a DRIVER-COMPUTED prefix list — shared
@@ -1031,7 +940,7 @@ object SearchIndex {
   private def postSlice(spark: SparkSession, dir: String, pfxs: Seq[Int],
                         tomb: Option[DataFrame],
                         allowed: Option[DataFrame]): DataFrame = {
-    val post0 = spark.read.parquet(s"$dir/postings.parquet")
+    val post0 = Postings.read(spark, dir)
       .filter(col("pfx").isin(pfxs.map(Integer.valueOf): _*))
       .select("token", "doc_id", "tf", "dl")
     val post1 = tomb.fold(post0)(t =>
@@ -1098,7 +1007,7 @@ object SearchIndex {
     val fbDocIdx = fbwF.schema.fieldIndex("doc_id")
     val dpfxs = fbwRows
       .map(r => pfxOf(r.getLong(fbDocIdx).toString, npfx)).distinct.toSeq
-    val dvs = spark.read.parquet(s"$dir/docvecs.parquet")
+    val dvs = Docvecs.read(spark, dir)
       .filter(col("dpfx").isin(dpfxs.map(Integer.valueOf): _*))
       .select("token", "doc_id", "tf", "dl")
     // 2-4. the shared relevance-model arithmetic over the stored vectors —
@@ -1186,21 +1095,15 @@ object SearchIndex {
     * re-derived from the `doclens2` ledger when tombstones exist. */
   private def probe2(spark: SparkSession, dir: String, pfxs: Seq[Int],
                      tomb: Option[DataFrame]): (DataFrame, DataFrame) = {
-    val post0 = spark.read.parquet(s"$dir/postings2.parquet")
+    val post0 = Postings2.read(spark, dir)
       .filter(col("pfx").isin(pfxs.map(Integer.valueOf): _*))
       .select("token", "doc_id", "tf", "dl")
     val post = tomb.fold(post0)(t =>
       post0.join(broadcast(t), Seq("doc_id"), "left_anti"))
     val stats = tomb match {
-      case None =>
-        spark.read.parquet(s"$dir/stats2.parquet")
-          .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
-            coalesce(sum("sum_dl"), lit(0L)).as("sum_dl"))
+      case None => sumStats(Stats2.read(spark, dir))
       case Some(t) =>
-        spark.read.parquet(s"$dir/doclens2.parquet")
-          .join(broadcast(t), Seq("doc_id"), "left_anti")
-          .agg(count(lit(1)).cast(LongType).as("n_docs"),
-            coalesce(sum("dl"), lit(0L)).as("sum_dl"))
+        lensStats(Doclens2.read(spark, dir).join(broadcast(t), Seq("doc_id"), "left_anti"))
     }
     (post, broadcast(stats))
   }

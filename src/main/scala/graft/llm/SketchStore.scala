@@ -3,6 +3,9 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.StoreOps
+import graft.sources.StoreOps.Table
+
 /** Persistent corpus-statistics store — the [[Sketches]] quartet as a
   * rolling-crawl lifecycle ([[DedupIndex]] / [[CentroidStore]] are the
   * dedup/model siblings): build once, then fold every new crawl batch into
@@ -26,7 +29,7 @@ import org.apache.spark.sql.functions._
   *
   * Partials are what make [[append]] a PURE WRITE — the store is never
   * read-merge-overwritten, so a batch-keyed commit
-  * ([[graft.sources.StoreOps.appendKeyed]]) makes appends idempotent on
+  * ([[StoreOps.Table.append]]) makes appends idempotent on
   * streaming replay (the read-merge-overwrite alternative can never be:
   * replaying a fold after a crash between overwrite and checkpoint
   * double-counts the sum-merged sketches). Every fold is commutative,
@@ -47,21 +50,32 @@ import org.apache.spark.sql.functions._
   * the same bounded frames, scheduled at vacuum cadence. */
 object SketchStore {
 
+  private[graft] val Hll = Table("hll")
+  private val Cms = Table("cms")
+  private val Qbins = Table("qbins")
+  private val Kmv = Table("kmv")
+
   /** Sketch `docs` and write a fresh store (one partial per table).
     * `groupCol` keys the HLL and quantile sketches; `valueCol`
     * (non-negative integer) feeds the quantile bins. */
   def build(docs: DataFrame, dir: String, groupCol: String = "lang",
             valueCol: String = "n_chars", d: Int = 4, w: Int = 1024): Unit =
-    graft.sources.StoreOps.Lease.withLease(docs.sparkSession, dir) {
-    val toks = tokensOf(docs, groupCol)
+    StoreOps.Lease.withLease(docs.sparkSession, dir) {
     // four disjoint-table folds off the one pinned frame — concurrent
     // (guide §2.6; StoreOps.overlap)
-    graft.sources.StoreOps.overlap(Seq(
-      () => write(Sketches.hllRegistersOf(toks, groupCol), s"$dir/hll.parquet"),
-      () => write(Sketches.cmsCountersOf(toks, d, w), s"$dir/cms.parquet"),
-      () => write(Sketches.quantileBins(docs, valueCol, groupCol),
-        s"$dir/qbins.parquet"),
-      () => write(kmvRows(toks, groupCol), s"$dir/kmv.parquet")))
+    StoreOps.overlap(partials(docs, groupCol, valueCol, d, w).map { case (t, df) =>
+      () => t.write(df.coalesce(1), dir)
+    })
+  }
+
+  /** One batch's partial sketch per table. */
+  private def partials(docs: DataFrame, groupCol: String, valueCol: String,
+                       d: Int, w: Int): Seq[(Table, DataFrame)] = {
+    val toks = tokensOf(docs, groupCol)
+    Seq(Hll -> Sketches.hllRegistersOf(toks, groupCol),
+      Cms -> Sketches.cmsCountersOf(toks, d, w),
+      Qbins -> Sketches.quantileBins(docs, valueCol, groupCol),
+      Kmv -> kmvRows(toks, groupCol))
   }
 
   /** The batch's exploded (group, token) stream, PINNED: hll, cms and kmv
@@ -87,22 +101,12 @@ object SketchStore {
   def append(docs: DataFrame, dir: String, groupCol: String = "lang",
              valueCol: String = "n_chars", d: Int = 4, w: Int = 1024,
              batchId: Option[Long] = None): Unit =
-    graft.sources.StoreOps.Lease.withLease(docs.sparkSession, dir) {
-    val toks = tokensOf(docs, groupCol)
-    val tables = Seq(
-      Sketches.hllRegistersOf(toks, groupCol) -> s"$dir/hll.parquet",
-      Sketches.cmsCountersOf(toks, d, w) -> s"$dir/cms.parquet",
-      Sketches.quantileBins(docs, valueCol, groupCol) -> s"$dir/qbins.parquet",
-      kmvRows(toks, groupCol) -> s"$dir/kmv.parquet")
+    StoreOps.Lease.withLease(docs.sparkSession, dir) {
     // four pure partial appends into disjoint tables — concurrent
     // (guide §2.6); per-table idempotency is the batch-keyed file name,
     // unaffected by submission order
-    graft.sources.StoreOps.overlap(tables.map { case (df, path) =>
-      () => batchId match {
-        case Some(id) =>
-          graft.sources.StoreOps.appendKeyed(df.coalesce(1), path, id)
-        case None => df.coalesce(1).write.mode("append").parquet(path)
-      }
+    StoreOps.overlap(partials(docs, groupCol, valueCol, d, w).map { case (t, df) =>
+      () => t.append(df.coalesce(1), dir, batchId)
     })
   }
 
@@ -115,58 +119,45 @@ object SketchStore {
                      groupCol: String = "lang", valueCol: String = "n_chars",
                      d: Int = 4, w: Int = 1024)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      append(batch, dir, groupCol, valueCol, d, w, Some(bid))
-    }
+    StoreOps.streamingAppend(stream)((batch, bid) =>
+      append(batch, dir, groupCol, valueCol, d, w, Some(bid)))
 
   /** Collapse the per-batch partials back to one row per key (register
     * max / cell sum / bin sum — the exact merges, so nothing observable
     * changes) and one file per table. Write-aside-and-swap: the rewrite
     * reads the files it replaces. */
   def compact(dir: String, groupCol: String = "lang"): Unit =
-    graft.sources.StoreOps.Lease.withLease(SparkSession.active, dir) {
-    val spark = SparkSession.active
-    graft.sources.StoreOps.swapWrite(
-      foldHll(spark, dir, groupCol).coalesce(1), s"$dir/hll.parquet")
-    graft.sources.StoreOps.swapWrite(
-      foldCms(spark, dir).coalesce(1), s"$dir/cms.parquet")
-    graft.sources.StoreOps.swapWrite(
-      foldQbins(spark, dir, groupCol).coalesce(1), s"$dir/qbins.parquet")
-    graft.sources.StoreOps.swapWrite(
-      foldKmv(spark, dir, groupCol).select(col(groupCol), col("h"))
-        .coalesce(1), s"$dir/kmv.parquet")
-  }
+    StoreOps.compact(dir, Seq(Hll, Cms, Qbins, Kmv), {
+      case Hll => foldHll(_, groupCol)
+      case Cms => foldCms
+      case Qbins => foldQbins(_, groupCol)
+      case _ => foldKmv(_, groupCol).select(col(groupCol), col("h")) // Kmv
+    })
 
-  // ---- the read-side folds (bounded: keys × batches-since-compact) ----
-  private def foldHll(spark: SparkSession, dir: String,
-                      groupCol: String): DataFrame =
-    spark.read.parquet(s"$dir/hll.parquet")
-      .groupBy(col(groupCol), col("idx")).agg(max("mreg").as("mreg"))
+  // ---- the folds over stored partials (bounded: keys × batches-since-compact) ----
+  private def foldHll(hll: DataFrame, groupCol: String): DataFrame =
+    hll.groupBy(col(groupCol), col("idx")).agg(max("mreg").as("mreg"))
 
-  private def foldCms(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/cms.parquet")
-      .groupBy("j", "c").agg(sum("cnt").as("cnt"))
+  private def foldCms(cms: DataFrame): DataFrame =
+    cms.groupBy("j", "c").agg(sum("cnt").as("cnt"))
 
-  private def foldQbins(spark: SparkSession, dir: String,
-                        groupCol: String): DataFrame =
-    spark.read.parquet(s"$dir/qbins.parquet")
-      .groupBy(col(groupCol), col("bin")).agg(sum("cnt").as("cnt"))
+  private def foldQbins(qbins: DataFrame, groupCol: String): DataFrame =
+    qbins.groupBy(col(groupCol), col("bin")).agg(sum("cnt").as("cnt"))
 
   /** Per-group k-smallest distinct stored minima (+ their rank). The
     * window frame is groups × k × batches-since-compact — store-bounded,
     * never corpus-bounded. */
-  private def foldKmv(spark: SparkSession, dir: String, groupCol: String,
+  private def foldKmv(kmv: DataFrame, groupCol: String,
                       k: Int = Sketches.KmvK): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(groupCol).orderBy("h")
-    spark.read.parquet(s"$dir/kmv.parquet").distinct()
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    kmv.distinct().withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
   }
 
   /** Per-group distinct-count estimates from the stored registers. */
   def hllEstimates(spark: SparkSession, dir: String,
                    groupCol: String = "lang"): DataFrame =
-    Sketches.hllEstimateFromRegisters(foldHll(spark, dir, groupCol), groupCol)
+    Sketches.hllEstimateFromRegisters(foldHll(Hll.read(spark, dir), groupCol), groupCol)
 
   /** Per-group distinct-count estimates from the stored KMV minima:
     * exact size when the whole set fit under k, else (k−1)·M / h_k —
@@ -174,7 +165,7 @@ object SketchStore {
   def kmvEstimates(spark: SparkSession, dir: String,
                    groupCol: String = "lang",
                    k: Int = Sketches.KmvK): DataFrame =
-    foldKmv(spark, dir, groupCol, k)
+    foldKmv(Kmv.read(spark, dir), groupCol, k)
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_mins"),
         max(when(col("rk") === k, col("h"))).as("__hk__"))
@@ -186,13 +177,13 @@ object SketchStore {
   /** Per-group quantile estimates from the stored bins. */
   def quantiles(spark: SparkSession, dir: String, groupCol: String = "lang",
                 qs: Seq[Int] = Seq(50, 90, 99)): DataFrame =
-    Sketches.quantileEstimates(foldQbins(spark, dir, groupCol), groupCol, qs)
+    Sketches.quantileEstimates(foldQbins(Qbins.read(spark, dir), groupCol), groupCol, qs)
 
   /** Count-min estimates for a probe frame with a `token` column: min over
     * the d salted cells — counters broadcast, probe streams. */
   def freqLookup(spark: SparkSession, dir: String, probe: DataFrame,
                  d: Int = 4, w: Int = 1024): DataFrame = {
-    val counters = foldCms(spark, dir)
+    val counters = foldCms(Cms.read(spark, dir))
     probe.select(col("token")).distinct()
       .select(col("token"), explode(array((0 until d).map(lit): _*)).as("j"))
       .select(col("token"), col("j"),
@@ -201,7 +192,4 @@ object SketchStore {
       .groupBy("token")
       .agg(min(coalesce(col("cnt"), lit(0L))).as("est_cnt"))
   }
-
-  private def write(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").parquet(path)
 }

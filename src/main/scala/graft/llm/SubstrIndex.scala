@@ -3,6 +3,9 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.StoreOps
+import graft.sources.StoreOps.Table
+
 /** Persistent exact-substring dedup index: build once, store, append new
   * batches, score each incoming batch against everything already indexed —
   * the rolling-crawl lifecycle around [[Curation.dedupSubstr]], which
@@ -57,6 +60,10 @@ import org.apache.spark.sql.functions._
   * of small append files — documented cadence, not per-batch work. */
 object SubstrIndex {
 
+  private val Meta = Table("meta")
+  private[graft] val Postings = Table("postings", Seq("hp"))
+  private val Docids = Table("docids")
+
   /** Per-gram doc counts for a batch: (h, cnt) with cnt = number of batch
     * docs whose distinct-gram set contains h — one groupBy over the
     * (doc_id, h)-distinct grams, map-side combinable. */
@@ -65,12 +72,9 @@ object SubstrIndex {
       .select("doc_id", "h").distinct()
       .groupBy("h").agg(count(lit(1)).as("cnt"))
 
-  private def writeParts(cnts: DataFrame, dir: String, parts: Int,
-                         mode: String): Unit =
+  /** (h, cnt) rows keyed by their hash-prefix partition. */
+  private def withHp(cnts: DataFrame, parts: Int): DataFrame =
     cnts.withColumn("hp", pmod(col("h"), lit(parts.toLong)))
-      .repartition(col("hp")) // one file per prefix partition
-      .write.mode(mode).partitionBy("hp")
-      .parquet(s"$dir/postings.parquet")
 
   /** Gram rows (h, cnt) are 16 bytes: 1 M rows ≈ 16 MB per prefix
     * directory — the adaptive-fanout sizing unit ([[build]]). */
@@ -86,7 +90,7 @@ object SubstrIndex {
     * it back, so layouts never mix. */
   def build(docs: DataFrame, dir: String, k: Int = 15,
             parts: Int = 0): Unit =
-    graft.sources.StoreOps.Lease.withLease(docs.sparkSession, dir) {
+    StoreOps.Lease.withLease(docs.sparkSession, dir) {
     val spark = docs.sparkSession
     val cnts0 = gramDocCounts(docs, k)
     val (cnts, nparts) =
@@ -94,17 +98,14 @@ object SubstrIndex {
       else {
         // pinned: the sizing count and the write share one computation
         val c = cnts0.localCheckpoint()
-        (c, graft.sources.StoreOps.adaptiveFanout(c.count(), GramsPerPart, 64))
+        (c, StoreOps.adaptiveFanout(c.count(), GramsPerPart, 64))
       }
     // four disjoint-directory writes — concurrent (guide §2.6)
-    graft.sources.StoreOps.overlap(Seq(
-      () => spark.createDataFrame(Seq((k, nparts))).toDF("k", "parts")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.parquet"),
-      () => writeParts(cnts, dir, nparts, "overwrite"),
-      () => docs.select(col("doc_id")).write.mode("overwrite")
-        .parquet(s"$dir/docids.parquet"),
-      () => graft.sources.StoreOps.Tombstones.writeEmpty(spark, dir,
-        "doc_id")))
+    StoreOps.overlap(Seq(
+      () => Meta.write(spark.createDataFrame(Seq((k, nparts))).toDF("k", "parts").coalesce(1), dir),
+      () => Postings.write(withHp(cnts, nparts), dir),
+      () => Docids.write(docs.select(col("doc_id")), dir),
+      () => StoreOps.clearTombstones(spark, dir, "doc_id")))
   }
 
   /** Add `newDocs`' grams to the store under the FROZEN k — a pure map
@@ -115,15 +116,14 @@ object SubstrIndex {
     * [[remove]]. PRECONDITION ([[SearchIndex.append]]'s): batch doc_ids
     * must not already be indexed. */
   def append(dir: String, newDocs: DataFrame): Unit =
-    graft.sources.StoreOps.Lease.withLease(newDocs.sparkSession, dir) {
+    StoreOps.Lease.withLease(newDocs.sparkSession, dir) {
     val spark = newDocs.sparkSession
     requireCountedLayout(spark, dir, "append")
     val (k, parts) = readParams(spark, dir)
     // two pure appends into disjoint tables — concurrent (guide §2.6)
-    graft.sources.StoreOps.overlap(Seq(
-      () => writeParts(gramDocCounts(newDocs, k), dir, parts, "append"),
-      () => newDocs.select(col("doc_id")).write.mode("append")
-        .parquet(s"$dir/docids.parquet")))
+    StoreOps.overlap(Seq(
+      () => Postings.append(withHp(gramDocCounts(newDocs, k), parts), dir),
+      () => Docids.append(newDocs.select(col("doc_id")), dir)))
   }
 
   /** Logically remove docs (full (doc_id, text) rows — the gram store
@@ -134,22 +134,18 @@ object SubstrIndex {
     * the doc; RetentionSpec pins it). Ids not in the docids ledger (or
     * already removed) are ignored, making remove idempotent. */
   def remove(dir: String, docs: DataFrame): Unit =
-    graft.sources.StoreOps.Lease.withLease(docs.sparkSession, dir) {
+    StoreOps.Lease.withLease(docs.sparkSession, dir) {
     val spark = docs.sparkSession
     requireCountedLayout(spark, dir, "remove")
     val (k, parts) = readParams(spark, dir)
     val eligible = docs
-      .join(spark.read.parquet(s"$dir/docids.parquet"), Seq("doc_id"),
-        "left_semi")
-      .join(broadcast(
-        graft.sources.StoreOps.Tombstones.read(spark, dir, "doc_id")),
-        Seq("doc_id"), "left_anti")
+      .join(Docids.read(spark, dir), Seq("doc_id"), "left_semi")
+      .join(broadcast(StoreOps.tombstones(spark, dir, "doc_id")), Seq("doc_id"), "left_anti")
       .localCheckpoint() // read twice (grams + tombstone ids), and the
                          // tombstone write below must not re-plan it
-    writeParts(gramDocCounts(eligible, k)
-      .select(col("h"), (-col("cnt")).as("cnt")), dir, parts, "append")
-    graft.sources.StoreOps.Tombstones.add(dir, eligible.select("doc_id"),
-      "doc_id")
+    Postings.append(withHp(gramDocCounts(eligible, k)
+      .select(col("h"), (-col("cnt")).as("cnt")), parts), dir)
+    StoreOps.remove(dir, eligible.select("doc_id"), "doc_id")
   }
 
   /** Fold the partial rows to one (h, cnt) row per LIVE gram (Σcnt > 0),
@@ -157,23 +153,11 @@ object SubstrIndex {
     * nothing observable changes; the rewrite doubles as small-file
     * compaction. Write-aside-and-swap. */
   def vacuum(dir: String): Unit =
-    graft.sources.StoreOps.Lease.withLease(SparkSession.active, dir) {
-    val spark = SparkSession.active
-    requireCountedLayout(spark, dir, "vacuum")
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/postings.parquet")
-        .groupBy("h", "hp").agg(sum("cnt").as("cnt"))
-        .filter(col("cnt") > 0)
-        .repartition(col("hp")),
-      s"$dir/postings.parquet", Seq("hp"))
-    val tomb = graft.sources.StoreOps.Tombstones.read(spark, dir, "doc_id")
-      .localCheckpoint()
-    graft.sources.StoreOps.swapWrite(
-      spark.read.parquet(s"$dir/docids.parquet")
-        .join(broadcast(tomb), Seq("doc_id"), "left_anti"),
-      s"$dir/docids.parquet")
-    graft.sources.StoreOps.Tombstones.writeEmpty(spark, dir, "doc_id")
-  }
+    StoreOps.Lease.withLease(SparkSession.active, dir) {
+      requireCountedLayout(SparkSession.active, dir, "vacuum")
+      Postings.rewrite(dir)(_.groupBy("h", "hp").agg(sum("cnt").as("cnt")).filter(col("cnt") > 0))
+      StoreOps.vacuum(dir, "doc_id", Seq(Docids))
+    }
 
   /** Compaction alias: with counted partials, folding the append/remove
     * history IS the compaction — [[vacuum]] already does both. */
@@ -186,7 +170,7 @@ object SubstrIndex {
   def dedupAgainst(spark: SparkSession, dir: String,
                    newDocs: DataFrame): DataFrame = {
     val (k, _) = readParams(spark, dir)
-    val postings = spark.read.parquet(s"$dir/postings.parquet")
+    val postings = Postings.read(spark, dir)
     val toked = Curation.substrToked(newDocs)
     val grams = Curation.substrGrams(toked, k)
     val batchH = grams.select(col("h")).distinct()
@@ -197,7 +181,7 @@ object SubstrIndex {
     // postings scan is the broadcast-pruned slice, never the store.
     val hit = postings.join(broadcast(batchH), Seq("h"))
     val inStore =
-      if (graft.sources.StoreOps.Tombstones.any(spark, dir))
+      if (StoreOps.hasTombstones(spark, dir))
         hit.groupBy("h").agg(sum("cnt").as("__c__"))
           .filter(col("__c__") > 0).select("h")
       else hit.select("h").distinct()
@@ -279,15 +263,14 @@ object SubstrIndex {
     * from the retained corpus. Detection is one filesystem metadata op. */
   private def requireCountedLayout(spark: SparkSession, dir: String,
                                    op: String): Unit =
-    require(
-      graft.sources.StoreOps.markerExists(spark, s"$dir/docids.parquet"),
+    require(Docids.exists(spark, dir),
       s"SubstrIndex.$op($dir): store predates the counted-partial layout " +
         "(no docids.parquet ledger). Reads still work, but maintenance on " +
         "the old layout would silently drop grams. Migrate by rebuilding: " +
         "SubstrIndex.build(<retained corpus>, dir) — exact, one corpus pass.")
 
   private def readParams(spark: SparkSession, dir: String): (Int, Int) = {
-    val m = spark.read.parquet(s"$dir/meta.parquet").head()
+    val m = Meta.read(spark, dir).head()
     (m.getAs[Int]("k"), m.getAs[Int]("parts"))
   }
 }

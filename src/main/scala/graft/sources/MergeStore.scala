@@ -140,25 +140,17 @@ object MergeStore {
     * ABSENT and its content parked in the hidden `.bkt=i.bak` — which
     * Spark reads skip, so without this pass a re-run merge would read
     * the bucket as empty and silently drop every pre-existing row in
-    * it. Restore any .bak whose live dir is missing; a .bak whose live
-    * dir exists is a completed swap's leftover (crash between rename-in
-    * and cleanup) — the live dir already holds the merged rows, so the
-    * stale backup is deleted. After this pass the prefix-of-buckets-
-    * swapped crash state really is safe, as the idempotence contract
-    * requires. */
-  private def recoverBaks(fs: org.apache.hadoop.fs.FileSystem,
-                          path: String): Unit = {
-    val baks = fs.globStatus(new Path(s"${dataPath(path)}/.bkt=*.bak"))
-    if (baks == null) return
-    baks.foreach { st =>
-      val live = new Path(st.getPath.getParent,
-        st.getPath.getName.stripPrefix(".").stripSuffix(".bak"))
-      if (!fs.exists(live))
-        require(Committer.current.publishRename(fs, st.getPath, live),
-          s"merge recovery: restoring ${st.getPath} to $live failed")
-      else fs.delete(st.getPath, true)
-    }
-  }
+    * it. Every such backup goes through the shared swap-recovery rule
+    * ([[StoreOps.finishSwap]]): restored when its live dir is missing,
+    * deleted as a completed swap's leftover otherwise. After this pass
+    * the prefix-of-buckets-swapped crash state really is safe, as the
+    * idempotence contract requires. */
+  private def recoverBaks(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
+    Option(fs.globStatus(new Path(s"${dataPath(path)}/.bkt=*.bak"))).toSeq.flatten
+      .map(_.getPath).foreach { bak =>
+        StoreOps.finishSwap(fs,
+          new Path(bak.getParent, bak.getName.stripPrefix(".").stripSuffix(".bak")), bak)
+      }
 
   private def rewriteLocked(spark: SparkSession, path: String,
                             batch: DataFrame, deleteOnly: Boolean): Unit = {

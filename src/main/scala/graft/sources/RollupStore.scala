@@ -94,8 +94,8 @@ object RollupStore {
       "last_ts" -> DoubleType, "last_v" -> DoubleType, MetricCol -> StringType)
       .map { case (name, t) => StructField(name, t) })
 
-  private def readStore(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(StoreSchema).parquet(s"$dir/rollup.parquet")
+  private val Meta = StoreOps.Table("meta")
+  private[graft] val Rollup = StoreOps.Table("rollup", Seq(MetricCol), Some(StoreSchema))
 
   /** Roll `samples` up at `res` seconds and write the store. */
   def build(samples: DataFrame, dir: String, res: Double): Unit =
@@ -104,35 +104,24 @@ object RollupStore {
     // meta and the rollup table are disjoint directories — concurrent
     // (guide §2.6; StoreOps.overlap)
     StoreOps.overlap(Seq(
-      () => spark.createDataFrame(Seq(Tuple1(res))).toDF("res")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.parquet"),
-      () => rollup(samples, res)
-        .repartition(col(MetricCol))
-        .write.mode("overwrite").partitionBy(MetricCol)
-        .parquet(s"$dir/rollup.parquet")))
+      () => Meta.write(spark.createDataFrame(Seq(Tuple1(res))).toDF("res").coalesce(1), dir),
+      () => Rollup.write(rollup(samples, res), dir)))
   }
 
   /** Roll a new batch up with the FROZEN resolution and append its partial
     * rows — a bounded aggregation over the batch; the store is never read
     * or reshuffled. `batchId` commits the partial files under batch-keyed
-    * names ([[StoreOps.appendKeyed]]) so a replayed batch never
+    * names ([[StoreOps.Table.append]]) so a replayed batch never
     * double-counts its partials (the streaming path always passes the
     * foreachBatch id). */
   def append(dir: String, samples: DataFrame,
              batchId: Option[Long] = None): Unit =
     StoreOps.Lease.withLease(samples.sparkSession, dir) {
-    val rows = rollup(samples, readRes(samples.sparkSession, dir))
-      .repartition(col(MetricCol))
-    batchId match {
-      case Some(id) => StoreOps.appendKeyed(rows, s"$dir/rollup.parquet",
-        id, Seq(MetricCol))
-      case None => rows.write.mode("append").partitionBy(MetricCol)
-        .parquet(s"$dir/rollup.parquet")
-    }
+    Rollup.append(rollup(samples, readRes(samples.sparkSession, dir)), dir, batchId)
   }
 
   def readRes(spark: SparkSession, dir: String): Double =
-    spark.read.parquet(s"$dir/meta.parquet").head().getDouble(0)
+    Meta.read(spark, dir).head().getDouble(0)
 
   /** Compaction: rewrite the accumulated per-batch PARTIAL rows as fully
     * merged buckets — the Thanos/TSDB compaction job. Append never reads
@@ -145,36 +134,19 @@ object RollupStore {
     * store stays append-compatible (compacted rows ARE partial rows).
     * Write-aside-and-swap: the rewrite reads the files it replaces. */
   def compact(dir: String): Unit =
-    StoreOps.Lease.withLease(SparkSession.active, dir) {
-    val spark = SparkSession.active
-    val merged = readStore(spark, dir)
-      .groupBy(col(MetricCol), col(Model.SkeyCol), col("wend"))
-      .agg(
-        first(Model.LabelsCol).as(Model.LabelsCol),
-        sum("cnt").as("cnt"),
-        sum("sum").as("sum"),
-        min("min").as("min"),
-        max("max").as("max"),
-        min(struct(col("first_ts").as("t"), col("first_v").as("v"))).as("__f__"),
-        max(struct(col("last_ts").as("t"), col("last_v").as("v"))).as("__l__"))
-      .select(col(MetricCol), col(Model.SkeyCol), col(Model.LabelsCol),
-        col("wend"), col("cnt"), col("sum"), col("min"), col("max"),
-        col("__f__.t").as("first_ts"), col("__f__.v").as("first_v"),
-        col("__l__.t").as("last_ts"), col("__l__.v").as("last_v"))
-      .repartition(col(MetricCol))
-    StoreOps.swapWrite(merged, s"$dir/rollup.parquet", Seq(MetricCol))
-  }
+    StoreOps.compact(dir, Seq(Rollup), _ => partials => merge(partials, col(MetricCol))
+      .select(col(MetricCol) +: (Model.SkeyCol +: MergedCols).map(col): _*))
 
   /** Retention: drop every bucket with `wend` ≤ `cutoff` — the TSDB TTL
     * job. `cutoff` must be a multiple of the store resolution so the cut
     * falls on a bucket boundary; then (left-open bucketing) retention is
     * EXACTLY equivalent to having built the store from samples with
-    * `ts > cutoff` — no bucket ever straddles the cut (the spec pins the
-    * equivalence). Write-aside-and-swap, same as [[compact]]. */
+    * `ts > cutoff` — no bucket ever straddles the cut. RollupSpec pins
+    * the equivalence, and that a misaligned cutoff is rejected with the
+    * store left as it was. Write-aside-and-swap, same as [[compact]]. */
   def retention(dir: String, cutoff: Double): Unit =
     StoreOps.Lease.withLease(SparkSession.active, dir) {
-    val spark = SparkSession.active
-    val res = readRes(spark, dir)
+    val res = readRes(SparkSession.active, dir)
     // integral-multiplicity with RELATIVE tolerance, not IEEE `%` (which is
     // exact only for integral operands — res = 0.1, cutoff = 0.3 is aligned
     // but 0.3 % 0.1 != 0 in doubles). Relative, because for large quotients
@@ -184,11 +156,7 @@ object RollupStore {
     val q = cutoff / res
     require(math.abs(q - math.round(q)) < 1e-9 * math.max(1.0, math.abs(q)),
       s"retention cutoff $cutoff not aligned to rollup resolution $res")
-    StoreOps.swapWrite(
-      readStore(spark, dir)
-        .filter(col("wend") > cutoff)
-        .repartition(col(MetricCol)),
-      s"$dir/rollup.parquet", Seq(MetricCol))
+    Rollup.rewrite(dir)(_.filter(col("wend") > cutoff))
   }
 
   /** Streaming rollup maintenance: [[append]] each micro-batch's partial
@@ -200,13 +168,11 @@ object RollupStore {
     * one-pass rollup over the concatenation, bit-for-bit (RollupSpec +
     * StreamingSpec pin both laws). Each micro-batch commits its partial
     * files under the foreachBatch id ([[append]]'s `batchId` →
-    * [[StoreOps.appendKeyed]]), so failure-recovery replays are
+    * [[StoreOps.Table.append]]), so failure-recovery replays are
     * exactly-once at the store. Caller starts the writer. */
   def streamingBuild(stream: DataFrame, dir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      append(dir, batch, Some(bid))
-    }
+    StoreOps.streamingAppend(stream)((batch, bid) => append(dir, batch, Some(bid)))
 
   /** One metric's buckets with partials merged — the read-side contract.
     * The metric filter lands on the PARTITION column (TsSink's pruning
@@ -217,9 +183,18 @@ object RollupStore {
     * predicate sits directly on the scan instead of above the aggregate. */
   def mergedBuckets(spark: SparkSession, dir: String, metric: String,
                     where: DataFrame => DataFrame = identity): DataFrame =
-    where(readStore(spark, dir)
-      .filter(col(MetricCol) === metric))
-      .groupBy(col(Model.SkeyCol), col("wend"))
+    merge(where(Rollup.read(spark, dir).filter(col(MetricCol) === metric)))
+      .select((Model.SkeyCol +: MergedCols).map(col): _*)
+
+  /** The partial columns after the series key, in store order. */
+  private val MergedCols = Seq(Model.LabelsCol, "wend", "cnt", "sum", "min", "max",
+    "first_ts", "first_v", "last_ts", "last_v")
+
+  /** The exact merge of partial rows per (`keys`, skey, wend): count/sum
+    * add, min/max idempotent, first/last struct extrema. Compaction and
+    * every read run this one rule. */
+  private def merge(partials: DataFrame, keys: Column*): DataFrame =
+    partials.groupBy(keys ++ Seq(col(Model.SkeyCol), col("wend")): _*)
       .agg(
         first(Model.LabelsCol).as(Model.LabelsCol),
         sum("cnt").as("cnt"),
@@ -228,10 +203,8 @@ object RollupStore {
         max("max").as("max"),
         min(struct(col("first_ts").as("t"), col("first_v").as("v"))).as("__f__"),
         max(struct(col("last_ts").as("t"), col("last_v").as("v"))).as("__l__"))
-      .select(col(Model.SkeyCol), col(Model.LabelsCol), col("wend"),
-        col("cnt"), col("sum"), col("min"), col("max"),
-        col("__f__.t").as("first_ts"), col("__f__.v").as("first_v"),
-        col("__l__.t").as("last_ts"), col("__l__.v").as("last_v"))
+      .withColumn("first_ts", col("__f__.t")).withColumn("first_v", col("__f__.v"))
+      .withColumn("last_ts", col("__l__.t")).withColumn("last_v", col("__l__.v"))
 
   /** The `*_over_time` functions [[overTime]] answers: exactly the ones
     * the partial rows (cnt/sum/min/max/last) determine. */

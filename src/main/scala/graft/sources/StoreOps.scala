@@ -1,13 +1,26 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{LongType, StructType}
 
-/** Shared maintenance primitives for the persistent parquet stores
-  * (SearchIndex / AnnIndex / DedupIndex / CentroidStore / RollupStore).
+/** Shared maintenance for the seven persistent parquet stores
+  * (SearchIndex / AnnIndex / DedupIndex / CentroidStore / SubstrIndex /
+  * SketchStore / RollupStore).
   *
-  * The one primitive everything rests on is [[swapWrite]]: rewrite a store
-  * table that the rewrite plan itself READS. A plain
+  * Each store declares its tables once, as [[Table]] values: a table owns
+  * its path, its read, its build write, its append (batch-keyed or plain)
+  * and its rewrite. Next to it sit the store-level operations written
+  * once: [[remove]] (a tombstone append), [[vacuum]] (drop tombstoned
+  * rows, then clear the list), [[compact]] (rewrite each table, folding
+  * merge-on-read partials where the store supplies a fold) and the
+  * [[streamingAppend]] wrapper. A store keeps only its fold, probe and
+  * model code.
+  *
+  * The one primitive every rewrite rests on is [[swapWrite]]: rewrite a
+  * store table that the rewrite plan itself READS. A plain
   * `mode("overwrite")` would delete the input files mid-scan, and the
   * in-memory alternative (`localCheckpoint` before the overwrite — the
   * rule the model-sized stats/sketch tables use) materializes the whole
@@ -18,27 +31,161 @@ import org.apache.spark.sql.DataFrame
   * the compaction recipe every table format uses under the hood, kept
   * explicit here because the stores are plain parquet directories readable
   * by any engine. The swap is not atomic for concurrent readers (a reader
-  * between delete and rename sees a missing table); maintenance runs in
-  * the ingest job's write slot, which already owns exclusive write access.
+  * between the two renames sees a missing table); maintenance runs in
+  * the ingest job's write slot, which already owns exclusive write access
+  * ([[Lease]]), and taking the lease finishes any swap a crashed holder
+  * left half done ([[finishSwap]]).
   */
 object StoreOps {
+
+  /** One parquet table of a store: `<dir>/<name>.parquet`, partitioned
+    * by `partitionBy` (a pruning contract every write repeats), read with
+    * `schema` when one is given (no footer-inference job on the read).
+    *
+    * Writes of a partitioned table repartition on its partition columns,
+    * so each partition directory gets one file per write instead of one
+    * per task. Unpartitioned frames are written as the caller shaped
+    * them: the model-sized tables coalesce to one file, the corpus-sized
+    * ledgers keep their parallel write. */
+  final case class Table(name: String, partitionBy: Seq[String] = Nil,
+                         schema: Option[StructType] = None) {
+    def path(dir: String): String = s"$dir/$name.parquet"
+
+    /** One filesystem metadata op, no Spark job: the probe behind the
+      * legacy-layout checks (tables a store's build may not have made). */
+    def exists(spark: SparkSession, dir: String): Boolean =
+      markerExists(spark, path(dir))
+
+    def read(spark: SparkSession, dir: String): DataFrame =
+      schema.fold(spark.read)(spark.read.schema).parquet(path(dir))
+
+    private def laidOut(df: DataFrame): DataFrame =
+      if (partitionBy.isEmpty) df else df.repartition(partitionBy.map(col): _*)
+
+    private def writer(df: DataFrame) =
+      if (partitionBy.isEmpty) df.write else df.write.partitionBy(partitionBy: _*)
+
+    /** The build write: replaces the table. */
+    def write(df: DataFrame, dir: String): Unit =
+      writer(laidOut(df)).mode("overwrite").parquet(path(dir))
+
+    /** Append `df`. With a `batchId` the files commit under batch-keyed
+      * names ([[appendKeyed]]), so a replay of the same batch undoes its
+      * own partial commit first: append twice ≡ append once. Without
+      * one it is a plain parquet append. */
+    def append(df: DataFrame, dir: String, batchId: Option[Long] = None): Unit =
+      batchId match {
+        case Some(id) => appendKeyed(laidOut(df), path(dir), id, partitionBy)
+        case None => writer(laidOut(df)).mode("append").parquet(path(dir))
+      }
+
+    /** Replace the table with `fold` of its current rows, written aside
+      * and swapped in ([[swapWrite]]): repartitioned on its partition
+      * columns, or one file when it has none — one file per directory,
+      * which makes every rewrite a small-file compaction too. */
+    def rewrite(dir: String)(fold: DataFrame => DataFrame): Unit = {
+      val next = fold(read(SparkSession.active, dir))
+      swapWrite(if (partitionBy.isEmpty) next.coalesce(1) else laidOut(next),
+        path(dir), partitionBy)
+    }
+  }
+
+  /** The tombstone list — the logically removed ids of a store, a
+    * `(idCol)` parquet list — and its `_has_tombstones` marker, which lets
+    * the read paths decide whether to add the anti-join with ONE
+    * filesystem metadata op instead of a per-query Spark `isEmpty` job. */
+  private def tombMarker(dir: String) = s"$dir/_has_tombstones"
+  private def tombPath(dir: String) = s"$dir/tombstones.parquet"
+
+  /** Logically remove `ids` (a frame with `idCol`): append them,
+    * deduplicated and cast to long, to the tombstone list — a model-sized
+    * write bounded by vacuum cadence, independent of store size. Read
+    * paths subtract the list; [[vacuum]] later reclaims the rows.
+    *
+    * The marker is set BEFORE the parquet append: a crash between the two
+    * then leaves a spurious marker over an unchanged list (harmless —
+    * reads just pay the anti-join against the old tombstones), whereas
+    * the reverse order would leave tombstone rows on disk that every
+    * marker-gated read path ignores — removed docs silently served until
+    * the next remove/vacuum. */
+  def remove(dir: String, ids: DataFrame, idCol: String): Unit =
+    Lease.withLease(ids.sparkSession, dir) {
+      setMarker(ids.sparkSession, tombMarker(dir))
+      ids.select(col(idCol).cast(LongType).as(idCol))
+        .distinct().write.mode("append").parquet(tombPath(dir))
+    }
+
+  /** Does the store have tombstones? One metadata op, no Spark job: read
+    * paths add the [[tombstones]] anti-join only when it says yes. */
+  def hasTombstones(spark: SparkSession, dir: String): Boolean =
+    markerExists(spark, tombMarker(dir))
+
+  /** The distinct tombstoned ids; an empty frame when the store predates
+    * the tombstone layout (the store-migration rule). */
+  def tombstones(spark: SparkSession, dir: String, idCol: String): DataFrame =
+    if (markerExists(spark, tombPath(dir))) spark.read.parquet(tombPath(dir)).distinct()
+    else spark.range(0).select(col("id").as(idCol))
+
+  /** Reset the store to "no tombstones" — every build and vacuum writes
+    * this. coalesce(1): a 0-row frame otherwise writes one empty part file
+    * PER PARALLELISM partition (32 task launches and 32 footer files per
+    * store build — pure lifecycle overhead). */
+  def clearTombstones(spark: SparkSession, dir: String, idCol: String): Unit = {
+    spark.range(0).select(col("id").as(idCol))
+      .coalesce(1).write.mode("overwrite").parquet(tombPath(dir))
+    clearMarker(spark, tombMarker(dir))
+  }
+
+  /** Physically drop the tombstoned rows from `tables`, in order, then run
+    * `rederive` (stats a store derives from a vacuumed table), then clear
+    * the tombstone list — last, so a crash anywhere before leaves the
+    * read paths subtracting the list as before. Observable behaviour is
+    * unchanged; each table is [[Table.rewrite]]n, so the vacuum doubles
+    * as a compaction. */
+  def vacuum(dir: String, idCol: String, tables: Seq[Table],
+             rederive: => Unit = ()): Unit = {
+    val spark = SparkSession.active
+    Lease.withLease(spark, dir) {
+      val tomb = tombstones(spark, dir, idCol).localCheckpoint() // model-sized
+      tables.foreach(_.rewrite(dir)(_.join(broadcast(tomb), Seq(idCol), "left_anti")))
+      rederive
+      clearTombstones(spark, dir, idCol)
+    }
+  }
+
+  /** Small-file compaction: [[Table.rewrite]] each of `tables` in order,
+    * through `fold` — identity for plain tables, the exact merge for a
+    * table of merge-on-read partials. Nothing observable changes. */
+  def compact(dir: String, tables: Seq[Table],
+              fold: Table => DataFrame => DataFrame = _ => identity): Unit =
+    Lease.withLease(SparkSession.active, dir) {
+      tables.foreach(t => t.rewrite(dir)(fold(t)))
+    }
+
+  /** Streaming store maintenance: `append` each micro-batch under its
+    * foreachBatch id. State lives in the parquet store, not the state
+    * store, so every completed trigger is visible to the read paths and
+    * batch and stream ingestion compose freely; the batch-keyed commit
+    * makes the at-least-once replays of failure recovery exactly-once at
+    * the store. Caller starts the writer. */
+  def streamingAppend(stream: DataFrame)(append: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) => append(batch, bid) }
 
   /** Rewrite `path` with `df` via write-aside-and-swap. `partitionCols`
     * must repeat the table's layout (partition pruning contracts survive
     * the rewrite); the caller is responsible for `repartition`ing so each
-    * partition directory lands as one file — that is the point of calling
-    * this for compaction.
+    * partition directory lands as one file ([[Table.rewrite]] does).
     *
     * Swap order is rename-aside, not delete-then-rename: the old table is
     * renamed to `<path>.bak`, the replacement renamed in, THEN the backup
     * deleted — so the live path is absent only between two metadata
     * renames (never across a recursive delete, which on object-store
     * filesystems is a slow per-file walk), and a crash mid-swap leaves
-    * either the old table live or a recoverable `.bak` beside the new
-    * one instead of a missing store. A stale `.bak` from a previous
-    * failed swap is cleared first. */
-  def swapWrite(df: DataFrame, path: String,
-                partitionCols: Seq[String] = Nil): Unit = {
+    * either the old table live or a `.bak` that [[finishSwap]] restores
+    * the next time anyone takes the store's lease. */
+  private[graft] def swapWrite(df: DataFrame, path: String,
+                               partitionCols: Seq[String] = Nil): Unit = {
     val tmp = s"$path.tmp"
     val bak = s"$path.bak"
     val w = df.write.mode("overwrite")
@@ -46,7 +193,7 @@ object StoreOps {
       .parquet(tmp)
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
     val fs = new Path(tmp).getFileSystem(conf)
-    fs.delete(new Path(bak), true)
+    finishSwap(fs, new Path(path), new Path(bak))
     if (fs.exists(new Path(path)))
       require(Committer.current.publishRename(fs, new Path(path), new Path(bak)),
         s"swapWrite: rename-aside $path -> $bak failed")
@@ -54,6 +201,24 @@ object StoreOps {
       s"swapWrite: rename $tmp -> $path failed (old table at $bak)")
     fs.delete(new Path(bak), true)
   }
+
+  /** The crash-recovery rule for a rename-aside swap of `live` through
+    * `bak`. A crash between the two renames leaves `live` ABSENT and the
+    * old rows parked in `bak`: restore them — otherwise a later plain
+    * append would recreate `live` holding only its own batch, and the
+    * next swap would delete the only copy of the old rows. A `bak` beside
+    * a present `live` is a completed swap's leftover (crash between the
+    * rename-in and the cleanup): the live table already holds the new
+    * rows, so the backup is deleted. [[Lease]] runs this for every
+    * `<table>.bak` of a store when it is taken; [[MergeStore]] runs it for
+    * its bucket directories. */
+  def finishSwap(fs: FileSystem, live: Path, bak: Path): Unit =
+    if (fs.exists(bak)) {
+      if (!fs.exists(live))
+        require(Committer.current.publishRename(fs, bak, live),
+          s"swap recovery: restoring $bak to $live failed")
+      else fs.delete(bak, true)
+    }
 
   /** Layout sidecar (`_layout`): ONE integer — the scale-adaptive
     * partition fan-out a store froze at build time (r18, guide §2: derive
@@ -63,8 +228,7 @@ object StoreOps {
     * op (no Spark job — the tombstone-marker rule). Stores written before
     * the sidecar read as `default` (their hard-coded historical
     * fan-out), so on-disk layouts never mix. */
-  def writeLayout(spark: org.apache.spark.sql.SparkSession,
-                  dir: String, n: Int): Unit = {
+  def writeLayout(spark: SparkSession, dir: String, n: Int): Unit = {
     val p = new Path(s"$dir/_layout")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
@@ -72,8 +236,7 @@ object StoreOps {
     out.close()
   }
 
-  def readLayout(spark: org.apache.spark.sql.SparkSession,
-                 dir: String, default: Int): Int = {
+  def readLayout(spark: SparkSession, dir: String, default: Int): Int = {
     val p = new Path(s"$dir/_layout")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) default
@@ -140,75 +303,20 @@ object StoreOps {
     * filesystem metadata op instead of a Spark job (e.g. "does this store
     * have tombstones?"). `markerExists` doubles as a plain path-existence
     * probe for store-layout migration fallbacks. */
-  def setMarker(spark: org.apache.spark.sql.SparkSession,
-                path: String): Unit = {
+  def setMarker(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) fs.create(p, true).close()
   }
 
-  def clearMarker(spark: org.apache.spark.sql.SparkSession,
-                  path: String): Unit = {
+  def clearMarker(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
   }
 
-  def markerExists(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Boolean = {
+  def markerExists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Tombstone-list plumbing shared by the persistent stores
-    * (SearchIndex/AnnIndex/DedupIndex/CentroidStore): a (id) parquet list
-    * of logically-removed rows plus a `_has_tombstones` marker so read
-    * paths can decide whether to add the anti-join with ONE filesystem
-    * metadata op instead of a per-query Spark `isEmpty` job. Reads fall
-    * back to an empty frame when the list file predates the layout (the
-    * store-migration rule). */
-  object Tombstones {
-    private def marker(dir: String) = s"$dir/_has_tombstones"
-    private def path(dir: String) = s"$dir/tombstones.parquet"
-
-    /** Reset to "no tombstones" — build/vacuum call this. coalesce(1):
-      * a 0-row frame otherwise writes one empty part file PER PARALLELISM
-      * partition (32 task launches and 32 footer files per store build —
-      * pure lifecycle overhead the bench gates pay). */
-    def writeEmpty(spark: org.apache.spark.sql.SparkSession, dir: String,
-                   idCol: String): Unit = {
-      spark.range(0).select(org.apache.spark.sql.functions.col("id").as(idCol))
-        .coalesce(1).write.mode("overwrite").parquet(path(dir))
-      clearMarker(spark, marker(dir))
-    }
-
-    /** Append ids (deduplicated, cast to long) — a model-sized pure write
-      * bounded by vacuum cadence, independent of store size.
-      *
-      * Marker is set BEFORE the parquet append: a crash between the two
-      * then leaves a spurious marker over an unchanged list (harmless —
-      * reads just pay the anti-join against the old tombstones), whereas
-      * the reverse order would leave tombstone rows on disk that every
-      * marker-gated read path ignores — removed docs silently served
-      * until the next remove/vacuum. */
-    def add(dir: String, ids: DataFrame, idCol: String): Unit = {
-      setMarker(ids.sparkSession, marker(dir))
-      ids.select(org.apache.spark.sql.functions.col(idCol)
-          .cast(org.apache.spark.sql.types.LongType).as(idCol))
-        .distinct().write.mode("append").parquet(path(dir))
-    }
-
-    /** One metadata op, no Spark job. */
-    def any(spark: org.apache.spark.sql.SparkSession, dir: String): Boolean =
-      markerExists(spark, marker(dir))
-
-    /** The distinct tombstone list; empty frame when the store predates
-      * the tombstone layout. */
-    def read(spark: org.apache.spark.sql.SparkSession, dir: String,
-             idCol: String): DataFrame =
-      if (markerExists(spark, path(dir)))
-        spark.read.parquet(path(dir)).distinct()
-      else spark.range(0)
-        .select(org.apache.spark.sql.functions.col("id").as(idCol))
   }
 
   /** Exactly-once batch append — the idempotent-sink recipe every
@@ -246,7 +354,7 @@ object StoreOps {
     * batch-keyed FILE NAME. The same seam covers [[swapWrite]]
     * (directory-level swap) and the [[Lease]]. SURVEY §5 carries the
     * deployment-facing version of this contract. */
-  def appendKeyed(df: DataFrame, path: String, batchId: Long,
+  private[graft] def appendKeyed(df: DataFrame, path: String, batchId: Long,
                   partitionCols: Seq[String] = Nil): Unit = {
     val staging = new Path(s"$path.staging/b$batchId")
     val w = df.write.mode("overwrite")
@@ -322,7 +430,9 @@ object StoreOps {
     * generous against the measured storescale.json lifecycle times);
     * like every expiry-based lease, a holder paused PAST the ttl can
     * overlap its successor — the standard trade, documented not hidden.
-    * Reentrant per thread (vacuum may call compact on the same dir). */
+    * Reentrant per thread (vacuum may call compact on the same dir).
+    * Taking the lease finishes any swap its previous holder left half
+    * done, so every mutation starts from a store with all its tables. */
   object Lease {
     val DefaultTtlMs: Long = 15 * 60 * 1000L
     private def leasePath(dir: String) = new Path(s"$dir/_lease")
@@ -330,19 +440,29 @@ object StoreOps {
       override def initialValue(): Set[String] = Set.empty
     }
 
-    def withLease[T](spark: org.apache.spark.sql.SparkSession, dir: String,
+    def withLease[T](spark: SparkSession, dir: String,
                      ttlMs: Long = DefaultTtlMs)(body: => T): T =
       if (held.get.contains(dir)) body
       else {
         val token = acquire(spark, dir, ttlMs)
         held.set(held.get + dir)
-        try body
+        try { finishSwaps(spark, dir); body }
         finally { held.set(held.get - dir); release(spark, dir, token) }
       }
 
+    /** [[finishSwap]] for every `<table>.bak` a crashed holder left in
+      * `dir` — run once per acquisition, before the body reads anything. */
+    private def finishSwaps(spark: SparkSession, dir: String): Unit = {
+      val d = new Path(dir)
+      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(d).map(_.getPath).filter(_.getName.endsWith(".bak")).foreach { bak =>
+        finishSwap(fs, new Path(d, bak.getName.stripSuffix(".bak")), bak)
+      }
+    }
+
     /** Holder + age of the current lease, if any — for operators
       * deciding whether a takeover is safe. */
-    def holder(spark: org.apache.spark.sql.SparkSession,
+    def holder(spark: SparkSession,
                dir: String): Option[(String, Long)] = {
       val p = leasePath(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -351,7 +471,7 @@ object StoreOps {
       }
     }
 
-    private def readLease(fs: org.apache.hadoop.fs.FileSystem,
+    private def readLease(fs: FileSystem,
                           p: Path): Option[(String, Long)] =
       try {
         val in = fs.open(p)
@@ -369,7 +489,7 @@ object StoreOps {
         }
       } catch { case _: java.io.IOException => None } // vanished mid-read
 
-    private def acquire(spark: org.apache.spark.sql.SparkSession,
+    private def acquire(spark: SparkSession,
                         dir: String, ttlMs: Long): String = {
       val p = leasePath(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -403,7 +523,7 @@ object StoreOps {
         s"store $dir: lease churn — lost $attempt takeover races")
     }
 
-    private def release(spark: org.apache.spark.sql.SparkSession,
+    private def release(spark: SparkSession,
                         dir: String, token: String): Unit = {
       val p = leasePath(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -414,7 +534,7 @@ object StoreOps {
   /** Parquet files under `path` (recursively; excludes _SUCCESS etc.) —
     * the observable a compaction spec pins: results identical, file count
     * collapsed to one per partition directory. */
-  def parquetFileCount(spark: org.apache.spark.sql.SparkSession,
+  def parquetFileCount(spark: SparkSession,
                        path: String): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)

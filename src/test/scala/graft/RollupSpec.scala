@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.functions.RangeKernel
 import graft.operators.{Grid, RangeAgg, Resample}
-import graft.sources.RollupStore
+import graft.sources.{RollupStore, StoreOps}
 
 class RollupSpec extends SparkSpec {
   import spark.implicits._
@@ -168,6 +168,67 @@ class RollupSpec extends SparkSpec {
     // the known schema is the one inference finds, column for column
     def fields(s: StructType) = s.map(f => f.name -> f.dataType)
     assert(fields(RollupStore.StoreSchema) === fields(spark.read.parquet(s"$dir/rollup.parquet").schema))
+  }
+
+  /** Samples of two metrics, `m` and `n`, with values exact in binary so
+    * bucket partials add up the same in any grouping. */
+  private def twoMetrics(n: Int): DataFrame =
+    Model.withSkey((1 to n).flatMap(i =>
+        Seq(("m", i * 97.0, (i % 11) * 0.5), ("n", i * 61.0, (i % 5) * 2.0)))
+      .toDF("name", "ts", "value")
+      .select(map(lit(Model.NameLabel), $"name", lit("a"), lit("x")).as("labels"),
+        $"ts", $"value"))
+
+  /** A metric's merged buckets as sorted rows. */
+  private def bucketRows(dir: String, metric: String): Seq[Seq[Any]] =
+    RollupStore.mergedBuckets(spark, dir, metric).orderBy("skey", "wend")
+      .collect().map(_.toSeq).toSeq
+
+  private def metricDirs(dir: String): Seq[String] =
+    new java.io.File(s"$dir/rollup.parquet").listFiles().toSeq
+      .filter(_.getName.startsWith("__metric__=")).map(_.getPath).sorted
+
+  test("compact keeps all six over-time reads and leaves one file per metric directory") {
+    val all = twoMetrics(40)
+    val dir = tmp("graft-ru-compact")
+    RollupStore.build(all.filter($"ts" <= 1200), dir, 300.0)
+    RollupStore.append(dir, all.filter($"ts" > 1200 && $"ts" <= 2400))
+    RollupStore.append(dir, all.filter($"ts" > 2400))
+    val g = Grid(600.0, 3600.0, 300.0)
+    def reads(): Seq[Map[Double, Double]] =
+      for (metric <- Seq("m", "n"); fn <- RollupStore.OverTimeFns.toSeq.sortBy(_.name))
+        yield collectMap(RollupStore.overTime(spark, RollupStore.register(spark, dir),
+          metric, g, 900.0, fn))
+    val before = reads()
+    assert(before.forall(_.nonEmpty))
+    assert(metricDirs(dir).size === 2)
+    assert(metricDirs(dir).forall(StoreOps.parquetFileCount(spark, _) > 1))
+    RollupStore.compact(dir)
+    assert(reads() === before)
+    assert(metricDirs(dir).map(StoreOps.parquetFileCount(spark, _)) === Seq(1, 1))
+  }
+
+  test("retention at an aligned cutoff equals a store built from the later samples") {
+    val all = twoMetrics(40)
+    val dir = tmp("graft-ru-retain")
+    RollupStore.build(all.filter($"ts" <= 1800), dir, 300.0)
+    RollupStore.append(dir, all.filter($"ts" > 1800))
+    RollupStore.retention(dir, 900.0)
+    val fresh = tmp("graft-ru-retain-fresh")
+    RollupStore.build(all.filter($"ts" > 900.0), fresh, 300.0)
+    for (metric <- Seq("m", "n")) {
+      val kept = bucketRows(dir, metric)
+      assert(kept.nonEmpty)
+      assert(kept === bucketRows(fresh, metric))
+    }
+  }
+
+  test("retention rejects a cutoff off the bucket lattice and leaves the store as it was") {
+    val dir = tmp("graft-ru-retain-align")
+    RollupStore.build(twoMetrics(20), dir, 300.0)
+    val before = bucketRows(dir, "m")
+    intercept[IllegalArgumentException](RollupStore.retention(dir, 450.0))
+    assert(bucketRows(dir, "m") === before)
   }
 
   test("misaligned range or grid is rejected") {
