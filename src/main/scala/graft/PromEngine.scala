@@ -16,14 +16,17 @@ import graft.promql.Eval
   * A ''served'' engine — one whose collection is cached
   * (`collection.storageLevel != NONE`, as `graft.Serve` sets it up) —
   * answers from the reference's shape: one `(skey, labels, ts[], v[])` row
-  * per series ([[graft.operators.Resample.Folded]]), built by the first
-  * request that needs it and kept beside the collection as a locally
-  * checkpointed leaf relation. Range functions and implicit resamples then
-  * filter series rows and run the kernel over that leaf, so a request's
-  * plan carries neither cached relation nor the ingest lineage, and the
-  * metadata calls read one label-map list collected from it. A local
-  * checkpoint cannot recompute a lost block: served engines run in local
-  * mode, where the fold's blocks live in the driver. An engine over an
+  * per series ([[graft.operators.Resample.Folded]]), collected by the first
+  * request that needs it and kept in driver heap as a local relation
+  * (5.1 MB at sf0.1). Range functions and implicit resamples then filter
+  * series rows and run the kernel over it; a plain panel or instant, whose
+  * plan is only filters, projections and the kernel's `inline`, is
+  * evaluated while Spark optimizes it
+  * ([[graft.operators.LocalGenerate]]) and collects with no Spark job,
+  * while `sum by`, `topk` and other plans that reduce the kernel's rows
+  * run them on executors. The metadata calls read one label-map list
+  * collected from the fold. Keeping the fold on the driver assumes local
+  * mode, as `graft.Serve` runs. An engine over an
   * uncached collection (the gates, `graft.Query`)
   * filters samples first, so the selectors push into the parquet scan,
   * and folds only what they keep. Construction runs no Spark job either

@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -98,8 +99,15 @@ object DedupIndex {
                       npfx: Int): org.apache.spark.sql.Column =
     pmod(id, lit(npfx)).cast(IntegerType)
 
-  private def hasPfxLayout(spark: SparkSession, dir: String): Boolean =
-    Postings.read(spark, dir).columns.contains("bpfx")
+  /** Are the postings laid out by (band, bpfx)? Two directory listings
+    * (the table, then its first `band=` directory), no Spark job: a
+    * `bpfx=` directory there means the pfx layout. */
+  private[graft] def hasPfxLayout(spark: SparkSession, dir: String): Boolean = {
+    val table = new Path(Postings.path(dir))
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(table).find(s => s.isDirectory && s.getPath.getName.startsWith("band="))
+      .exists(band => fs.listStatus(band.getPath).exists(_.getPath.getName.startsWith("bpfx=")))
+  }
 
   private def requirePfxLayout(spark: SparkSession, dir: String): Unit =
     require(hasPfxLayout(spark, dir),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftExpr}
+import org.apache.spark.sql.{Column, DataFrame, GraftExpr, GraftPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -40,9 +40,9 @@ final case class Grid(start: Double, end: Double, step: Double) {
   * No probe rows, no window sorts.
   *
   * A served engine (one whose collection is cached) keeps that fold of the
-  * whole collection resident as a leaf relation ([[Folded]]), so a request
-  * filters series rows and runs the kernel — no scan of sample rows, no
-  * aggregation, no cached lineage in its plan.
+  * whole collection in driver heap as a local relation ([[Folded]]), so a
+  * request filters series rows and runs the kernel — no scan of sample
+  * rows, no aggregation, and for a plain panel no Spark job.
   */
 object Resample {
 
@@ -89,25 +89,35 @@ object Resample {
     kernel(samples, grid, RangeKernel.Resample, 0.0, offset)
 
   /** The per-series fold of a whole cached collection, shared by every
-    * engine over that collection. [[rows]] is [[series]] of it, locally
-    * checkpointed at the collection's storage level: a leaf relation
-    * (`Scan ExistingRDD`) without the fold's lineage, so a request's plan
-    * holds neither the cached collection nor the ingest below it, and a
-    * plain panel runs as one whole-stage-codegen stage with no adaptive
-    * wrapper. Nothing runs until the first request that reads it, whose
-    * job fills the blocks (the collection is partitioned on its label map,
-    * so the fill needs no exchange).
+    * engine over that collection. [[rows]] is [[series]] of it, collected
+    * once into driver heap and served as a `LocalRelation`: the first
+    * request that reads it runs the one fill job (the collection is
+    * partitioned on its label map, so the fill needs no exchange), and no
+    * Spark job runs before that.
     *
-    * The trade: a local checkpoint cannot recompute a lost block. A served
-    * engine runs in local mode (`graft.Serve`'s default), where the
-    * blocks live in the driver and are lost only with it.
+    * Over a local relation Spark's `ConvertToLocalRelation` evaluates a
+    * request's selector filter while optimizing, and [[LocalGenerate]]
+    * (installed on the session when the fold fills) evaluates the kernel's
+    * `inline`: a plain panel, an instant or a metadata call then collects
+    * from one `LocalTableScanExec` with no Spark job. A plan that
+    * aggregates, windows or joins the kernel's rows (`sum by`, `topk`)
+    * keeps that work on executors, over the selected series rows.
+    *
+    * The trade: the fold lives in driver heap (5.1 MB for the 1,500
+    * series of sf0.1), so a served engine runs in local mode
+    * (`graft.Serve`'s default), where the driver holds every block anyway.
     *
     * Selecting a series here selects all of its samples, so
     * `Selector.select(rows, ms)` equals `series(Selector.select(collection, ms))`
     * row for row. [[labels]] is every series' label map, collected once. */
   final class Folded(collection: DataFrame) {
-    lazy val rows: DataFrame =
-      series(collection).localCheckpoint(eager = true, collection.storageLevel)
+    lazy val rows: DataFrame = {
+      val spark = collection.sparkSession
+      val fold = series(collection)
+      val data = GraftPlan.collectInternal(fold).toSeq
+      GraftPlan.install(spark, LocalGenerate)
+      GraftPlan.localFrame(spark, fold.schema, data)
+    }
 
     lazy val labels: Seq[Map[String, String]] =
       rows.select(col(Model.LabelsCol)).collect().map(_.getMap[String, String](0).toMap).toSeq

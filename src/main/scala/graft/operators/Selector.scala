@@ -50,8 +50,10 @@ object Selector {
     }
   }
 
+  /** One `Filter`: the AND of the matchers' predicates (null where a
+    * label is missing, so such a row is dropped as before). */
   def select(df: DataFrame, matchers: Seq[Matcher]): DataFrame =
-    matchers.foldLeft(df)((d, m) => d.filter(predicate(m)))
+    matchers.map(predicate).reduceOption(_ && _).fold(df)(df.filter)
 
   /** Metric-name selector (reference timeseries.rs:447). */
   def byName(df: DataFrame, name: String): DataFrame =

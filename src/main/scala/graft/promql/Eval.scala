@@ -19,20 +19,22 @@ object Eval {
 
   sealed trait QR
   /** Selected samples `df` (skey, labels, ts, value), not yet folded into
-    * series. `series` holds the same selection as rows of the served
-    * engine's fold when a plain selector made them; the kernels read
-    * those, and fold `df` only when it is absent. */
+    * series, built from `samples` on first read. `series` holds the same
+    * selection as rows of the served engine's fold when a plain selector
+    * made them; the kernels read those, and fold `df` only when it is
+    * absent, so a served panel never builds `df` at all. */
   sealed trait Samples extends QR {
-    def df: DataFrame
+    protected def samples: () => DataFrame
+    lazy val df: DataFrame = samples()
     def series: Option[DataFrame]
     /** One (skey, labels, ts[], v[]) row per selected series. */
     def folded: DataFrame = series.getOrElse(Resample.series(df))
   }
   /** filtered, not yet resampled (query.rs:44) */
-  final case class Unprocessed(df: DataFrame, offset: Option[Double],
+  final case class Unprocessed(samples: () => DataFrame, offset: Option[Double],
                                series: Option[DataFrame] = None) extends Samples
   /** filtered + `[range]`-vectorized (query.rs:45) */
-  final case class UnprocessedVector(df: DataFrame, overRange: Double, offset: Option[Double],
+  final case class UnprocessedVector(samples: () => DataFrame, overRange: Double, offset: Option[Double],
                                      series: Option[DataFrame] = None) extends Samples
   /** resampled onto the grid (query.rs:46) */
   final case class Processed(df: DataFrame) extends QR
@@ -129,7 +131,7 @@ object Eval {
         case Seq(_) => throw EvalException("The name filter must be an equals filter")
         case ms => throw EvalException(s"Having a single label name filter is mandatory, got ${ms.length}")
       }
-      val filtered = Selector.select(collection.df, matchers)
+      val filtered = () => Selector.select(collection.df, matchers)
       val series = collection.fold.map(f => Selector.select(f.rows, matchers))
       range match {
         case None => Unprocessed(filtered, offset, series)
@@ -154,7 +156,7 @@ object Eval {
       if (tFirst > hi) throw EvalException("empty subquery range")
       val innerGrid = Grid(tFirst, hi, step)
       resampled(eval(inner, collection, innerGrid), innerGrid) match {
-        case Processed(df) => UnprocessedVector(df, range, offsetOpt)
+        case Processed(df) => UnprocessedVector(() => df, range, offsetOpt)
         case ScalarQ(_) => throw EvalException("subquery over a scalar is not meaningful")
         case _ => throw EvalException("subquery inner expression did not resample")
       }
@@ -400,7 +402,7 @@ object Eval {
       if (k != math.rint(k) || k < 1) throw EvalException(s"limitk k must be a positive integer, got $k")
       val group = by.map { case ByMod(ls) => (ls, false); case WithoutMod(ls) => (ls, true) }
       eval(inner, collection, grid) match {
-        case Unprocessed(df, offset, _) => Unprocessed(Aggregate.limitk(df, k.toInt, group), offset)
+        case u: Unprocessed => Unprocessed(() => Aggregate.limitk(u.df, k.toInt, group), u.offset)
         case other => resampled(other, grid) match {
           case Processed(df) => Processed(Aggregate.limitk(df, k.toInt, group))
           case _ => throw EvalException("'limitk' expects an instant vector")
@@ -411,7 +413,7 @@ object Eval {
       val (r, inner) = scalarAndVector("limit_ratio", args)
       if (r < -1.0 || r > 1.0) throw EvalException(s"limit_ratio must be in [-1, 1], got $r")
       eval(inner, collection, grid) match {
-        case Unprocessed(df, offset, _) => Unprocessed(Aggregate.limitRatio(df, r), offset)
+        case u: Unprocessed => Unprocessed(() => Aggregate.limitRatio(u.df, r), u.offset)
         case other => resampled(other, grid) match {
           case Processed(df) => Processed(Aggregate.limitRatio(df, r))
           case _ => throw EvalException("'limit_ratio' expects an instant vector")

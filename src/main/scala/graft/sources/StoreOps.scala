@@ -95,7 +95,11 @@ object StoreOps {
     * the read paths decide whether to add the anti-join with ONE
     * filesystem metadata op instead of a per-query Spark `isEmpty` job. */
   private def tombMarker(dir: String) = s"$dir/_has_tombstones"
-  private def tombPath(dir: String) = s"$dir/tombstones.parquet"
+
+  /** The list's table, read with its one-column `(idCol: long)` schema:
+    * a tombstone-aware read infers no footer. */
+  private def tombTable(idCol: String) =
+    Table("tombstones", schema = Some(new StructType().add(idCol, LongType)))
 
   /** Logically remove `ids` (a frame with `idCol`): append them,
     * deduplicated and cast to long, to the tombstone list — a model-sized
@@ -112,7 +116,7 @@ object StoreOps {
     Lease.withLease(ids.sparkSession, dir) {
       setMarker(ids.sparkSession, tombMarker(dir))
       ids.select(col(idCol).cast(LongType).as(idCol))
-        .distinct().write.mode("append").parquet(tombPath(dir))
+        .distinct().write.mode("append").parquet(tombTable(idCol).path(dir))
     }
 
   /** Does the store have tombstones? One metadata op, no Spark job: read
@@ -123,7 +127,7 @@ object StoreOps {
   /** The distinct tombstoned ids; an empty frame when the store predates
     * the tombstone layout (the store-migration rule). */
   def tombstones(spark: SparkSession, dir: String, idCol: String): DataFrame =
-    if (markerExists(spark, tombPath(dir))) spark.read.parquet(tombPath(dir)).distinct()
+    if (tombTable(idCol).exists(spark, dir)) tombTable(idCol).read(spark, dir).distinct()
     else spark.range(0).select(col("id").as(idCol))
 
   /** Reset the store to "no tombstones" — every build and vacuum writes
@@ -132,7 +136,7 @@ object StoreOps {
     * store build — pure lifecycle overhead). */
   def clearTombstones(spark: SparkSession, dir: String, idCol: String): Unit = {
     spark.range(0).select(col("id").as(idCol))
-      .coalesce(1).write.mode("overwrite").parquet(tombPath(dir))
+      .coalesce(1).write.mode("overwrite").parquet(tombTable(idCol).path(dir))
     clearMarker(spark, tombMarker(dir))
   }
 

@@ -12,8 +12,8 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions.{col, count, lit}
 
 /** The one harness the mains share: its session rule, its run helper's
-  * job count, its plan walker's cache rule, and that no main builds a
-  * session of its own. */
+  * job count, its plan walker's cache rule, that no main builds a
+  * session of its own, and that only one shim adds optimizer rules. */
 class HarnessSpec extends SparkSpec {
 
   test("master and shuffle partitions follow the environment") {
@@ -64,5 +64,15 @@ class HarnessSpec extends SparkSpec {
     val builders = files.filter((p: Path) => Files.readString(p).contains("SparkSession.builder"))
       .map(p => main.relativize(p).toString)
     assert(builders === Seq("graft/Harness.scala"))
+  }
+
+  test("only the GraftPlan shim assigns the session's extra optimizer rules") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main))
+    val assigns = """extraOptimizations(\s*=(?!=)|_=)""".r
+    val files = Files.walk(main).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val writers = files.filter((p: Path) => assigns.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => main.relativize(p).toString)
+    assert(writers === Seq("org/apache/spark/sql/GraftPlan.scala"))
   }
 }

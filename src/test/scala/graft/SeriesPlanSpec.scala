@@ -1,23 +1,28 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.MapSort
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, LocalTableScanExec, QueryExecution,
+  SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.window.WindowExecBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.operators.Selector
 import graft.sources.TsIngest
 
 /** Plan shape of the series-as-arrays evaluation over a cached,
   * series-clustered collection: ingest hash-partitions on the label map,
   * so the per-series fold needs no exchange and no window sort, and a
-  * served engine keeps that fold resident, so its panels run no
-  * aggregation either. An uncached collection still pushes the selector
+  * served engine keeps that fold in driver heap, so its plain panels
+  * collect with no Spark job and its `sum by` panels run no fold
+  * aggregation. An uncached collection still pushes the selector
   * into the parquet scan. */
 class SeriesPlanSpec extends SparkSpec {
   import spark.implicits._
@@ -78,36 +83,57 @@ class SeriesPlanSpec extends SparkSpec {
     assert(engine.served)
     val start = 1704067200.0 + 3600.0
     def foldScans(plan: Seq[SparkPlan]) = plan.collect {
-      case s: RDDScanExec if s.output.exists(_.name == "v") => s
+      case s: LocalTableScanExec if s.output.exists(_.name == "v") => s
     }
-    /** A plain panel or instant plans over the fold's checkpointed rows
-      * alone: no adaptive wrapper, no cached relation below it. */
-    def leafPlan(df: DataFrame, q: String): Seq[SparkPlan] = {
-      val plan = executed(df)
-      assert(!df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec],
-        s"$q runs adaptively:\n${df.queryExecution.executedPlan}")
-      assert(!plan.exists(_.isInstanceOf[InMemoryTableScanExec]), s"$q reads a cached relation:\n${plan.head}")
-      plan
+    /** Runs `body`: its Spark job count and the executed plan of every SQL
+      * action it ran. */
+    def traced(body: => Any): (Int, Seq[SparkPlan]) = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { plans.add(qe.executedPlan); () }
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val jobs = Harness.run(spark)(body).jobs
+        (jobs, plans.asScala.toSeq)
+      } finally spark.listenerManager.unregister(listener)
     }
+    /** A plain panel, an instant or a metadata call: evaluated while Spark
+      * optimizes it, so it collects from one local table scan of the
+      * selected fold rows, with no adaptive wrapper and no Spark job. */
+    def zeroJob(q: String)(body: => Any): Unit = {
+      val (jobs, plans) = traced(body)
+      assert(jobs === 0, q)
+      assert(plans.nonEmpty, q)
+      for (p <- plans) assert(p.isInstanceOf[LocalTableScanExec], s"$q:\n$p")
+    }
+    // the first read fills the fold: its one job, then a local scan
+    val (fillJobs, fillPlans) = traced(engine.allLabels())
+    assert(fillJobs === 1)
+    assert(fillPlans.last.isInstanceOf[LocalTableScanExec], fillPlans.last)
+    assert(Harness.run(spark)(engine.allLabels()).jobs === 0)
+    zeroJob("seriesMatching")(engine.seriesMatching(
+      Selector.predicate(Selector.Eq("host", "h1"))))
     val panels = Seq("""rate(m{host="h1"}[5m])""", """m{host="h1"}""", """irate(m{host="h1"}[5m])""",
       """increase(m{host="h1"}[1h])""", """avg_over_time(m{host="h1"}[1h])""")
     for (q <- panels) {
-      val plan = leafPlan(engine.queryRange(q, start, start + 4 * 3600.0, 300.0), q)
-      assert(foldScans(plan).length === 1, s"$q does not read the fold:\n${plan.head}")
-      assert(!plan.exists(_.isInstanceOf[BaseAggregateExec]), s"$q has an Aggregate:\n${plan.head}")
-      assert(!plan.exists(_.isInstanceOf[Exchange]), s"$q has an Exchange:\n${plan.head}")
+      val df = engine.queryRange(q, start, start + 4 * 3600.0, 300.0)
+      zeroJob(q)(assert(df.collect().length === 2 * 49, q))
     }
     for (q <- Seq("""rate(m{host="h1"}[5m])""", """increase(m{host="h1"}[1h])""")) {
-      val plan = leafPlan(engine.queryInstant(q, start), q)
-      assert(foldScans(plan).length === 1 && !plan.exists(_.isInstanceOf[BaseAggregateExec]), q)
+      val df = engine.queryInstant(q, start)
+      zeroJob(q)(assert(df.collect().length === 2, q))
     }
     // sum by aggregates only its own sum (partial and final), topk none:
-    // neither re-folds samples
+    // neither re-folds samples, and both run the kernel on executors
     val sumBy = executed(engine.queryRange("""sum by (job) (rate(m[5m]))""", start, start + 3600.0, 300.0))
     assert(foldScans(sumBy).length === 1)
     assert(sumBy.count(_.isInstanceOf[BaseAggregateExec]) === 2, sumBy.head)
+    assert(sumBy.exists(_.isInstanceOf[GenerateExec]), sumBy.head)
     val topk = executed(engine.queryRange("""topk(2, rate(m[5m]))""", start, start + 3600.0, 300.0))
     assert(foldScans(topk).length === 1 && !topk.exists(_.isInstanceOf[BaseAggregateExec]), topk.head)
+    assert(topk.exists(_.isInstanceOf[GenerateExec]), topk.head)
   }
 
   test("an uncached engine over raw parquet keeps the selector in PushedFilters") {

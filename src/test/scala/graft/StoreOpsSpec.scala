@@ -6,12 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
-import graft.llm.SearchIndex
+import graft.llm.{DedupIndex, SearchIndex}
 import graft.sources.{Committer, StoreOps}
 
 /** The shared table descriptor's rules: a swap that crashes between its
-  * two renames loses no rows, and no store spells its own table paths or
-  * calls the write-aside, keyed-append and tombstone primitives itself. */
+  * two renames loses no rows, the tombstone list is read with its known
+  * schema, and no store spells its own table paths or calls the
+  * write-aside, keyed-append and tombstone primitives itself. */
 class StoreOpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -59,6 +60,20 @@ class StoreOpsSpec extends SparkSpec {
     assert(want.map(_.head).distinct.size === 3)
     assert(ranked(crashed) === want)
     assert(!Files.list(Paths.get(crashed)).iterator.asScala.exists(_.toString.endsWith(".bak")))
+  }
+
+  test("a tombstone-aware read and the dedup layout probe run no Spark job") {
+    val dir = tmp()
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi"
+    DedupIndex.build(Seq(1L -> base, 2L -> (base + " pi"), 3L -> "sailing ships and ocean tides")
+      .toDF("doc_id", "text"), dir)
+    DedupIndex.remove(dir, Seq(2L).toDF("doc_id"))
+    assert(StoreOps.hasTombstones(spark, dir))
+    val read = Harness.run(spark)(StoreOps.tombstones(spark, dir, "doc_id"))
+    assert(read.jobs === 0)
+    assert(read.value.as[Long].collect().toSeq === Seq(2L))
+    val layout = Harness.run(spark)(DedupIndex.hasPfxLayout(spark, dir))
+    assert(layout.value && layout.jobs === 0)
   }
 
   test("only StoreOps swaps, keyed-appends and tombstones; stores spell no table path") {
