@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,12 +19,15 @@ import graft.promql.Eval
   * per series ([[graft.operators.Resample.Folded]]), collected by the first
   * request that needs it and kept in driver heap as a local relation
   * (5.1 MB at sf0.1). Range functions and implicit resamples then filter
-  * series rows and run the kernel over it; a plain panel or instant, whose
-  * plan is only filters, projections and the kernel's `inline`, is
-  * evaluated while Spark optimizes it
-  * ([[graft.operators.LocalGenerate]]) and collects with no Spark job,
-  * while `sum by`, `topk` and other plans that reduce the kernel's rows
-  * run them on executors. The metadata calls read one label-map list
+  * series rows and run the kernel over it. Results come in two shapes
+  * from one evaluation: one row per series ([[rangeSeries]],
+  * [[instantSeries]]; what the HTTP server writes) and long rows
+  * ([[queryRange]], [[queryInstant]]; what the gates compare). A plain
+  * panel or instant, whose plan is only filters, projections and (in the
+  * long shape) the kernel's `inline`, is evaluated while Spark optimizes
+  * it (`ConvertToLocalRelation`, [[graft.operators.LocalGenerate]]) and
+  * collects with no Spark job, while `sum by`, `topk` and other plans
+  * that reduce the kernel's rows run them on executors. The metadata calls read one label-map list
   * collected from the fold. Keeping the fold on the driver assumes local
   * mode, as `graft.Serve` runs. An engine over an
   * uncached collection (the gates, `graft.Query`)
@@ -82,26 +85,58 @@ final class PromEngine private (val collection: DataFrame, val queryStartTime: O
   /** Run a PromQL range query; start/end/step in the *query* time frame.
     * Output (labels, ts, value) with ts back in the query time frame and
     * `value` a double, the wire type (`count_over_time` evaluates to a
-    * long; [[queryRangeRaw]] keeps it). */
-  def queryRange(query: String, start: Double, end: Double, step: Double): DataFrame = {
-    val off = queryTimeOffset.getOrElse(0.0)
-    val grid = Grid(start - off, end - off, step)
-    val out = Eval.run(ctx, query, grid)
-    out.select(col(Model.LabelsCol), (col(Model.TsCol) + lit(off)).as(Model.TsCol),
-      col(Model.ValueCol).cast(DoubleType).as(Model.ValueCol))
-  }
+    * long; [[queryRangeRaw]] keeps it). [[rangeSeries]] is the same result
+    * one row per series. */
+  def queryRange(query: String, start: Double, end: Double, step: Double): DataFrame =
+    long(Eval.run(ctx, query, rangeGrid(start, end, step)))
+
+  /** [[queryRange]]'s result one row per series, as the HTTP writer takes
+    * it: (labels, points: array<struct<ts, value: double>>), ts in the
+    * query time frame ([[Eval.runSeries]]). A served plain panel plans as
+    * the selector filter and the kernel projection over the fold's local
+    * relation, which Spark evaluates while it optimizes: no `Generate`
+    * and no Spark job. */
+  def rangeSeries(query: String, start: Double, end: Double, step: Double): DataFrame =
+    series(Eval.runSeries(ctx, query, rangeGrid(start, end, step)))
 
   /** Internal-frame variant used by the correctness harness. */
   def queryRangeRaw(query: String, grid: Grid): DataFrame = Eval.run(ctx, query, grid)
 
   /** Instant query (extension — the reference's /api/v1/query only evaluates
     * "1+1", main.rs:399-405): evaluate on a single-instant grid at `t`. */
-  def queryInstant(query: String, t: Double): DataFrame = {
-    val off = queryTimeOffset.getOrElse(0.0)
-    val grid = Grid(t - off, t - off + 0.5, 1.0) // length 1 → the instant itself
-    val out = Eval.run(ctx, query, grid)
-    out.select(col(Model.LabelsCol), (col(Model.TsCol) + lit(off)).as(Model.TsCol),
+  def queryInstant(query: String, t: Double): DataFrame = long(Eval.run(ctx, query, instantGrid(t)))
+
+  /** [[queryInstant]]'s result one row per series, like [[rangeSeries]]. */
+  def instantSeries(query: String, t: Double): DataFrame = series(Eval.runSeries(ctx, query, instantGrid(t)))
+
+  private def offset: Double = queryTimeOffset.getOrElse(0.0)
+
+  private def rangeGrid(start: Double, end: Double, step: Double): Grid =
+    Grid(start - offset, end - offset, step)
+
+  private def instantGrid(t: Double): Grid = Grid(t - offset, t - offset + 0.5, 1.0) // length 1 → the instant itself
+
+  /** Long rows at the edge: the query-time offset added back, the value a
+    * double. */
+  private def long(out: DataFrame): DataFrame =
+    out.select(col(Model.LabelsCol), (col(Model.TsCol) + lit(offset)).as(Model.TsCol),
       col(Model.ValueCol).cast(DoubleType).as(Model.ValueCol))
+
+  /** [[long]]'s edge over series rows, point by point; a no-op (and no
+    * projection of the points) when there is no offset and the value is
+    * a double already. */
+  private def series(out: DataFrame): DataFrame = {
+    val off = offset
+    val points = col(Model.PointsCol)
+    val doubles = out.schema(Model.PointsCol).dataType match {
+      case ArrayType(StructType(Array(_, value)), _) => value.dataType == DoubleType
+      case _ => false
+    }
+    val edged =
+      if (off == 0.0 && doubles) points
+      else transform(points, p => struct((p(Model.TsCol) + lit(off)).as(Model.TsCol),
+        p(Model.ValueCol).cast(DoubleType).as(Model.ValueCol)))
+    out.select(col(Model.LabelsCol), edged.as(Model.PointsCol))
   }
 
   /** The label map of every series in the collection. A served engine

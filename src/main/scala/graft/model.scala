@@ -35,6 +35,8 @@ object Model {
   val TsCol = "ts"
   val ValueCol = "value"
   val SkeyCol = "skey"
+  /** A series' evaluated points, array<struct<ts, value>>, in series form. */
+  val PointsCol = "points"
 
   /** Canonical, deterministic string form of a label map: sorted `k=v` pairs
     * joined by commas. Used as the join and grouping key of operators that

@@ -35,8 +35,10 @@ final case class Grid(start: Double, end: Double, step: Double) {
   * any other input (a subquery, a computed frame) gets the one exchange
   * Spark inserts. A native codegen'd
   * [[RangeKernel]] then evaluates the function per series with a binary
-  * search per grid instant, and `inline` explodes the result back to the
-  * long (skey, labels, ts, value) shape every downstream operator takes.
+  * search per grid instant. The result keeps that shape, one
+  * `(skey, labels, points)` row per series ([[seriesPoints]]), up to the
+  * serving edge; `inline` explodes it to the long (skey, labels, ts, value)
+  * shape ([[seriesKernel]]) only for the operators that take that shape.
   * No probe rows, no window sorts.
   *
   * A served engine (one whose collection is cached) keeps that fold of the
@@ -74,6 +76,19 @@ object Resample {
     folded.select(col(Model.SkeyCol), col(Model.LabelsCol),
       inline(kernelCol(col("v"), grid, fn, range, offset)))
 
+  /** The same kernel over the same folded rows, left one row per series:
+    * (skey, labels, points: array<struct<ts, value>>); [[seriesKernel]] is
+    * its `inline`. Over a served fold the whole plan is a `Filter` and this
+    * `Project` over a local relation, which Spark's own
+    * `ConvertToLocalRelation` evaluates while it optimizes. The long form
+    * inlines the kernel over the folded rows rather than over these, so a
+    * plan that aggregates it keeps the kernel in its `Generate`, on
+    * executors. */
+  def seriesPoints(folded: DataFrame, grid: Grid, fn: RangeKernel.Fn,
+                   range: Double, offset: Double): DataFrame =
+    folded.select(col(Model.SkeyCol), col(Model.LabelsCol),
+      kernelCol(col("v"), grid, fn, range, offset).as(Model.PointsCol))
+
   /** The [[RangeKernel]] of `fn` over a folded row's `ts` array and the
     * value array `v`: array<struct<ts, value>>, one element per emitting
     * grid instant. */
@@ -96,12 +111,15 @@ object Resample {
     * Spark job runs before that.
     *
     * Over a local relation Spark's `ConvertToLocalRelation` evaluates a
-    * request's selector filter while optimizing, and [[LocalGenerate]]
-    * (installed on the session when the fold fills) evaluates the kernel's
-    * `inline`: a plain panel, an instant or a metadata call then collects
-    * from one `LocalTableScanExec` with no Spark job. A plan that
-    * aggregates, windows or joins the kernel's rows (`sum by`, `topk`)
-    * keeps that work on executors, over the selected series rows.
+    * request's selector filter while optimizing, and the kernel's
+    * projection too when a plain panel or instant is asked for in series
+    * form ([[seriesPoints]], as the HTTP server asks); [[LocalGenerate]]
+    * (installed on the session when the fold fills) evaluates the
+    * kernel's `inline` when the long form is asked for. Either way such a
+    * request, or a metadata call, collects from one `LocalTableScanExec`
+    * with no Spark job. A plan that aggregates, windows or joins the
+    * kernel's rows (`sum by`, `topk`) keeps that work on executors, over
+    * the selected series rows.
     *
     * The trade: the fold lives in driver heap (5.1 MB for the 1,500
     * series of sf0.1), so a served engine runs in local mode

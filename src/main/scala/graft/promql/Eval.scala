@@ -13,6 +13,13 @@ import graft.sources.RollupStore
   * planned DataFrame: Catalyst fuses the whole pipeline (selector filters push
   * into the parquet scan; one shuffle per window/agg stage). On a served
   * engine selectors read the resident per-series fold instead ([[Ctx]]).
+  *
+  * One evaluation, two shapes at the edge: [[run]] returns the long
+  * (skey, labels, ts, value) rows the gates and oracles compare, and
+  * [[runSeries]] the same result one row per series, as the range kernel
+  * leaves it, for the HTTP writer. A range kernel's result builds its long
+  * form only when something reads it (an aggregation, a binary operator,
+  * `topk`, `@`, [[run]]); see [[Processed]].
   */
 object Eval {
   final case class EvalException(msg: String) extends RuntimeException(msg)
@@ -36,8 +43,24 @@ object Eval {
   /** filtered + `[range]`-vectorized (query.rs:45) */
   final case class UnprocessedVector(samples: () => DataFrame, overRange: Double, offset: Option[Double],
                                      series: Option[DataFrame] = None) extends Samples
-  /** resampled onto the grid (query.rs:46) */
-  final case class Processed(df: DataFrame) extends QR
+  /** resampled onto the grid (query.rs:46): long rows `df`
+    * (skey, labels, ts, value), built on first read. `series`, set when a
+    * range kernel made the result, builds the same result one row per
+    * series, (skey, labels, points) ([[Resample.seriesPoints]]); `df` is
+    * then that kernel's `inline`. Matching `Processed(df)` reads `df`. */
+  final class Processed private (long: () => DataFrame, val series: Option[() => DataFrame]) extends QR {
+    lazy val df: DataFrame = long()
+  }
+  object Processed {
+    def apply(df: DataFrame): Processed = new Processed(() => df, None)
+    def unapply(p: Processed): Some[DataFrame] = Some(p.df)
+
+    /** `fn` over `folded` series rows: long form on first read, series form
+      * on request. */
+    def kernel(folded: DataFrame, grid: Grid, fn: RangeKernel.Fn, range: Double, offset: Double): Processed =
+      new Processed(() => Resample.seriesKernel(folded, grid, fn, range, offset),
+        Some(() => Resample.seriesPoints(folded, grid, fn, range, offset)))
+  }
   final case class ScalarQ(value: Double) extends QR
   /** per-step scalar (extension): one (ts, value) row per grid instant —
     * `time()`, `scalar(v)`. Composes with vectors by a broadcast join on ts
@@ -80,29 +103,50 @@ object Eval {
   def run(collection: DataFrame, query: String, grid: Grid): DataFrame =
     run(Ctx(collection), query, grid)
 
-  def run(ctx: Ctx, query: String, grid: Grid): DataFrame = {
+  def run(ctx: Ctx, query: String, grid: Grid): DataFrame = long(evaluate(ctx, query, grid))
+
+  /** Evaluate `query` like [[run]], one row per series: (skey, labels,
+    * points: array<struct<ts, value>>), points in ts order. A range
+    * kernel's result keeps the kernel's rows unexploded; a result that is
+    * long already (an aggregation, a rollup read, a per-step scalar) gives
+    * one single-point row per sample, which the writer groups on its label
+    * map. A series whose kernel emits no point has an empty `points`. */
+  def runSeries(ctx: Ctx, query: String, grid: Grid): DataFrame =
+    evaluate(ctx, query, grid) match {
+      case p: Processed => p.series.fold(onePoint(p.df))(_())
+      case qr => onePoint(long(qr))
+    }
+
+  private def evaluate(ctx: Ctx, query: String, grid: Grid): QR = {
     val keyed =
       if (ctx.df.columns.contains(Model.SkeyCol)) ctx
       else ctx.copy(df = Model.withSkey(ctx.df))
-    val ast = Parser.parse(query)
-    resampled(eval(ast, keyed, grid), grid) match {
-      case Processed(df) => df
-      case StepScalar(df) => // serialize like vector(...): one labelless series
-        import org.apache.spark.sql.functions._
-        val emptyLabels = map().cast(org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
-        df.withColumn(Model.LabelsCol, emptyLabels)
-          .withColumn(Model.SkeyCol, Model.canonicalKey(col(Model.LabelsCol)))
-          .select(Model.SkeyCol, Model.LabelsCol, Model.TsCol, Model.ValueCol)
-      case ScalarQ(_) => throw EvalException("scalar result")
-      case _ => throw EvalException("no processing")
-    }
+    resampled(eval(Parser.parse(query), keyed, grid), grid)
+  }
+
+  private def onePoint(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    df.select(col(Model.SkeyCol), col(Model.LabelsCol),
+      array(struct(col(Model.TsCol), col(Model.ValueCol))).as(Model.PointsCol))
+  }
+
+  private def long(qr: QR): DataFrame = qr match {
+    case Processed(df) => df
+    case StepScalar(df) => // serialize like vector(...): one labelless series
+      import org.apache.spark.sql.functions._
+      val emptyLabels = map().cast(org.apache.spark.sql.types.MapType(
+        org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
+      df.withColumn(Model.LabelsCol, emptyLabels)
+        .withColumn(Model.SkeyCol, Model.canonicalKey(col(Model.LabelsCol)))
+        .select(Model.SkeyCol, Model.LabelsCol, Model.TsCol, Model.ValueCol)
+    case ScalarQ(_) => throw EvalException("scalar result")
+    case _ => throw EvalException("no processing")
   }
 
   /** Final/implicit resample (query.rs:109-124). */
   private def resampled(qr: QR, grid: Grid): QR = qr match {
     case u: Unprocessed =>
-      Processed(Resample.seriesKernel(u.folded, grid, RangeKernel.Resample, 0.0, u.offset.getOrElse(0.0)))
+      Processed.kernel(u.folded, grid, RangeKernel.Resample, 0.0, u.offset.getOrElse(0.0))
     case p: Processed => p
     case s: ScalarQ => s
     case s: StepScalar => s // already one value per grid instant
@@ -156,7 +200,7 @@ object Eval {
       if (tFirst > hi) throw EvalException("empty subquery range")
       val innerGrid = Grid(tFirst, hi, step)
       resampled(eval(inner, collection, innerGrid), innerGrid) match {
-        case Processed(df) => UnprocessedVector(() => df, range, offsetOpt)
+        case p: Processed => UnprocessedVector(() => p.df, range, offsetOpt)
         case ScalarQ(_) => throw EvalException("subquery over a scalar is not meaningful")
         case _ => throw EvalException("subquery inner expression did not resample")
       }
@@ -184,13 +228,13 @@ object Eval {
     case FuncCall(name, args, agg) if RangeFns.contains(name) =>
       val fn = RangeFns(name)
       rollupServed(fn, args, agg, collection, grid)
-        .getOrElse(Processed(rangeFn(name, fn, args, agg, collection, grid)))
+        .getOrElse(rangeFn(name, fn, args, agg, collection, grid))
 
     // absent_over_time: 1 at steps whose trailing window holds NO sample of
     // the selector (window-presence complement of absent()).
     case FuncCall("absent_over_time", args, agg) =>
       val present = rangeFn("absent_over_time", RangeKernel.PresentOverTime, args, agg, collection, grid)
-      Processed(absentFrame(present, selectorLabels(args.head), grid))
+      Processed(absentFrame(present.df, selectorLabels(args.head), grid))
 
     // double_exponential_smoothing is the Prometheus 3.x name for the same
     // function (holt_winters kept as the classic alias).
@@ -201,14 +245,13 @@ object Eval {
       case Seq(inner, ScalarLit(sf), ScalarLit(tf)) =>
         if (sf <= 0 || sf >= 1 || tf <= 0 || tf >= 1)
           throw EvalException("holt_winters smoothing factors must be in (0, 1)")
-        Processed(rangeFn("holt_winters", RangeKernel.HoltWinters(sf, tf), Seq(inner), agg, collection, grid))
+        rangeFn("holt_winters", RangeKernel.HoltWinters(sf, tf), Seq(inner), agg, collection, grid)
       case _ => throw EvalException("'holt_winters' expects (range vector, scalar sf, scalar tf)")
     }
 
     case FuncCall("predict_linear", args, agg) => args match {
       case Seq(inner, ScalarLit(horizon)) =>
-        Processed(rangeFn("predict_linear", RangeKernel.PredictLinear(horizon), Seq(inner), agg,
-          collection, grid))
+        rangeFn("predict_linear", RangeKernel.PredictLinear(horizon), Seq(inner), agg, collection, grid)
       case _ => throw EvalException("'predict_linear' expects (range vector, scalar horizon)")
     }
 
@@ -475,8 +518,7 @@ object Eval {
 
     case FuncCall("quantile_over_time", args, agg) => args match {
       case Seq(ScalarLit(q), inner) =>
-        Processed(rangeFn("quantile_over_time", RangeKernel.QuantileOverTime(q), Seq(inner), agg,
-          collection, grid))
+        rangeFn("quantile_over_time", RangeKernel.QuantileOverTime(q), Seq(inner), agg, collection, grid)
       case _ => throw EvalException("'quantile_over_time' expects (scalar q, range vector)")
     }
 
@@ -563,14 +605,14 @@ object Eval {
     * per-series [[RangeKernel]]; the selector's `offset` goes to the kernel.
     * `name` is the function as the query spells it, for the errors. */
   private def rangeFn(name: String, fn: RangeKernel.Fn, args: Seq[Node], agg: Option[AggMod],
-                      collection: Ctx, grid: Grid): DataFrame = {
+                      collection: Ctx, grid: Grid): Processed = {
     if (agg.isDefined) throw EvalException(s"'$name' expects no aggregation")
     if (args.length != 1) throw EvalException(s"'$name' expects a single argument, got ${args.length}")
     eval(args.head, collection, grid) match {
       case v: UnprocessedVector =>
-        Resample.seriesKernel(v.folded, grid, fn, v.overRange, v.offset.getOrElse(0.0))
+        Processed.kernel(v.folded, grid, fn, v.overRange, v.offset.getOrElse(0.0))
       case _: Unprocessed => throw EvalException(s"'$name' requires a vectorized time series")
-      case Processed(_) => throw EvalException(s"'$name' cannot process the processed yet")
+      case _: Processed => throw EvalException(s"'$name' cannot process the processed yet")
       case ScalarQ(_) | StepScalar(_) => throw EvalException(s"The $name over a scalar is not meaningful")
     }
   }

@@ -5,7 +5,8 @@ import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, GraftPlan, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.lit
 
 import graft.PromEngine
@@ -19,10 +20,15 @@ import graft.functions.TimeParse
   * offset added back to the timestamps (timeseries.rs:227-249).
   *
   * Uses the JDK's built-in HttpServer — the engine is the Spark pipeline;
-  * the API layer only collects the (grid-sized) query result.
+  * the API layer only collects the (grid-sized) query result, one row per
+  * series ([[PromEngine.rangeSeries]]), as internal rows, and writes each
+  * series' `values` straight from its points array, as the reference
+  * writes a series from its value vector. A `query_range` grid must be
+  * finite and hold at most [[PromApi.MaxPoints]] points per series; a
+  * request that breaks that is refused before anything is evaluated.
   */
 final class PromApi(engine: PromEngine, port: Int = 3003) {
-  import PromApi.{fmt, jsonString, serializeMatrix}
+  import PromApi.{jsonString, writeResult}
 
   private val server = PromApi.bind(port)
 
@@ -89,23 +95,34 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
     val parsed = for {
       q <- params.get("query").toRight("missing 'query'")
       start <- params.get("start").toRight("missing 'start'").flatMap(TimeParse.parseTimestamp)
+        .flatMap(finite("start"))
       end <- params.get("end").toRight("missing 'end'").flatMap(TimeParse.parseTimestamp)
+        .flatMap(finite("end"))
       step <- params.get("step").toRight("missing 'step'").flatMap(TimeParse.parseDuration)
+        .flatMap(finite("step"))
+      _ <- PromApi.checkResolution(start, end, step)
     } yield (q, start, end, step)
 
     parsed match {
       case Left(err) => respondJson(exchange, 400, failure("queryError", err))
       case Right((q, start, end, step)) =>
-        try {
-          val df = engine.queryRange(q, start, end, step)
-          val rows = df.collect()
-          respondJson(exchange, 200, success(
-            s"""{"resultType": "matrix", "result": ${serializeMatrix(rows)}}"""))
-        } catch {
-          case e: Exception => respondJson(exchange, 400, failure("queryError", e.getMessage))
-        }
+        respondResult(exchange, vector = false, engine.rangeSeries(q, start, end, step))
     }
   }
+
+  /** Collect `series` (one row per series) and answer with its `result`
+    * as a vector or a matrix; an evaluation error is a 400. */
+  private def respondResult(exchange: HttpExchange, vector: Boolean, series: => DataFrame): Unit =
+    try {
+      val result = writeResult(GraftPlan.collectInternal(series), vector)
+      val resultType = if (vector) "vector" else "matrix"
+      respondJson(exchange, 200, success(s"""{"resultType": "$resultType", "result": $result}"""))
+    } catch {
+      case e: Exception => respondJson(exchange, 400, failure("queryError", e.getMessage))
+    }
+
+  private def finite(name: String)(t: Double): Either[String, Double] =
+    if (t.isFinite) Right(t) else Left(s"invalid parameter '$name': $t is not a finite number")
 
   /** Real instant query (extension beyond the reference's "1+1" quirk):
     * evaluate at `time` (default: the collection's max timestamp) and emit
@@ -114,25 +131,11 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
     val parsed = for {
       q <- params.get("query").toRight("missing 'query'")
       t <- params.get("time").map(TimeParse.parseTimestamp)
-        .getOrElse(Right(engine.maxTime))
+        .getOrElse(Right(engine.maxTime)).flatMap(finite("time"))
     } yield (q, t)
     parsed match {
       case Left(err) => respondJson(exchange, 400, failure("queryError", err))
-      case Right((q, t)) =>
-        try {
-          val rows = engine.queryInstant(q, t).collect()
-          val series = rows.sortBy(_.getMap[String, String](0).toSeq.sorted.mkString(","))
-            .map { r =>
-              val metric = r.getMap[String, String](0).toSeq.sorted
-                .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
-                .mkString("{", ", ", "}")
-              s"""{"metric": $metric, "value": [${fmt(r.getDouble(1))}, ${jsonString(fmt(r.getDouble(2)))}]}"""
-            }
-          respondJson(exchange, 200, success(
-            s"""{"resultType": "vector", "result": ${series.mkString("[", ", ", "]")}}"""))
-        } catch {
-          case e: Exception => respondJson(exchange, 400, failure("queryError", e.getMessage))
-        }
+      case Right((q, t)) => respondResult(exchange, vector = true, engine.instantSeries(q, t))
     }
   }
 
@@ -184,7 +187,8 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
   /** All (key, value) pairs — repeated keys (e.g. `match[]`) preserved.
     * Bodies are bounded (1 MiB robustness cap — the reference's explicit
     * 4096-byte cap applies only to the labels endpoint; query bodies are
-    * legitimate at a few KB but never megabytes). */
+    * legitimate at a few KB but never megabytes). A malformed
+    * percent-encoding is the client's error: [[PromApi.BadRequest]]. */
   private def parseParamList(exchange: HttpExchange): Seq[(String, String)] = {
     val maxBody = 1 << 20
     val fromQuery = Option(exchange.getRequestURI.getRawQuery).getOrElse("")
@@ -199,7 +203,8 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
     (fromQuery + "&" + fromBody).split("&").filter(_.contains("=")).toSeq
       .map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        URLDecoder.decode(k, "UTF-8") -> URLDecoder.decode(v, "UTF-8")
+        try URLDecoder.decode(k, "UTF-8") -> URLDecoder.decode(v, "UTF-8")
+        catch { case e: IllegalArgumentException => throw new PromApi.BadRequest(e.getMessage) }
       }
   }
 
@@ -215,6 +220,9 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
   private def safely(exchange: HttpExchange)(body: => Unit): Unit =
     try body
     catch {
+      case e: PromApi.BadRequest =>
+        try respondJson(exchange, 400, failure("queryError", e.getMessage))
+        catch { case _: Exception => () }
       case e: PromApi.PayloadTooLarge =>
         try {
           exchange.getResponseHeaders.set("Connection", "close") // unread body remainder
@@ -252,22 +260,76 @@ object PromApi {
 
   private def bind(port: Int): HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
 
-  /** The `query_range` result array: collected (labels, ts, value) rows
-    * grouped into one `{"metric": {...}, "values": [[ts, "v"], ...]}` per
-    * series, series ordered by their sorted label pairs and values by ts.
-    * One pass into one buffer: rows group on their label map, and each
-    * series sorts its labels once. */
-  private[graft] def serializeMatrix(rows: Array[Row]): String = {
-    val series = rows.groupBy(_.getMap[String, String](0)).toArray
-      .map { case (labels, rs) =>
-        val sorted = labels.toSeq.sorted
-        (sorted.mkString(","), sorted, rs.sortBy(_.getDouble(1)))
+  /** Prometheus's fixed limit on the points of one series in a
+    * `query_range` answer. */
+  val MaxPoints = 11000
+
+  /** Left(error) when `start`, `end` and `step` make a grid of more than
+    * [[MaxPoints]] points per series; counted in doubles, without building
+    * the grid. A grid that is not one at all (`end <= start`, `step <= 0`)
+    * is left to the evaluator's own error. */
+  private def checkResolution(start: Double, end: Double, step: Double): Either[String, Unit] =
+    if (step > 0 && end > start && math.floor((end - start + step) / step) > MaxPoints)
+      Left(s"exceeded maximum resolution of $MaxPoints points per timeseries. " +
+        "Try decreasing the query resolution (?step=XX)")
+    else Right(())
+
+  /** One series, or one collected row's share of it: its label pairs,
+    * sorted, and its points. */
+  private final case class Part(labels: Seq[(String, String)], ts: Array[Double], values: Array[Double])
+
+  /** A series row (labels, points: array<struct<ts, value: double>>). */
+  private def part(row: InternalRow): Part = {
+    val m = row.getMap(0)
+    val (keys, vals) = (m.keyArray, m.valueArray)
+    val labels = Array.tabulate(m.numElements()) { i =>
+      keys.getUTF8String(i).toString -> (if (vals.isNullAt(i)) null else vals.getUTF8String(i).toString)
+    }
+    val points = if (row.isNullAt(1)) null else row.getArray(1)
+    val n = if (points == null) 0 else points.numElements()
+    val ts = new Array[Double](n)
+    val values = new Array[Double](n)
+    for (i <- 0 until n) {
+      val p = points.getStruct(i, 2)
+      ts(i) = p.getDouble(0)
+      values(i) = p.getDouble(1)
+    }
+    Part(labels.sorted.toSeq, ts, values)
+  }
+
+  /** The `result` array of a `query_range` (matrix) or `query` (vector)
+    * answer, from series rows ([[PromEngine.rangeSeries]]). */
+  private[graft] def writeResult(rows: Array[InternalRow], vector: Boolean): String =
+    write(rows.map(part), vector)
+
+  /** The `query_range` result array of collected long (labels, ts, value)
+    * rows: each row a one-point series, through the same writer. */
+  private[graft] def serializeMatrix(rows: Array[Row]): String =
+    write(rows.map(r => Part(r.getMap[String, String](0).toSeq.sorted,
+      Array(r.getDouble(1)), Array(r.getDouble(2)))), vector = false)
+
+  /** The one writer. Parts with the same labels are one series; series
+    * order by their sorted label pairs, and points by ts (a stable sort,
+    * skipped when they are in order already, as a kernel emits them). A
+    * matrix series is `{"metric": {...}, "values": [[ts, "v"], ...]}`; a
+    * vector holds one `{"metric": {...}, "value": [ts, "v"]}` per point.
+    * A series with no point is left out, as the long form has no row for
+    * it. One pass into one buffer. */
+  private def write(parts: Array[Part], vector: Boolean): String = {
+    val series = parts.groupBy(_.labels).iterator
+      .map { case (labels, ps) =>
+        val (ts, values) = (ps.flatMap(_.ts), ps.flatMap(_.values))
+        if ((1 until ts.length).forall(i => java.lang.Double.compare(ts(i - 1), ts(i)) <= 0))
+          Part(labels, ts, values)
+        else {
+          val order = ts.indices.sortBy(ts(_))
+          Part(labels, order.map(ts(_)).toArray, order.map(values(_)).toArray)
+        }
       }
-      .sortBy(_._1)
-    val sb = new StringBuilder(64 + rows.length * 32)
-    sb.append('[')
-    for (((_, labels, rs), i) <- series.iterator.zipWithIndex) {
-      if (i > 0) sb.append(", ")
+      .filter(_.ts.nonEmpty).toArray
+      .sortBy(_.labels.mkString(","))
+    val sb = new StringBuilder(64 + parts.length * 32)
+    def metric(labels: Seq[(String, String)]): Unit = {
       sb.append("{\"metric\": {")
       for (((k, v), j) <- labels.iterator.zipWithIndex) {
         if (j > 0) sb.append(", ")
@@ -275,13 +337,30 @@ object PromApi {
         sb.append(": ")
         appendString(sb, v)
       }
-      sb.append("}, \"values\": [")
-      for ((r, j) <- rs.iterator.zipWithIndex) {
+      sb.append("}, ")
+    }
+    def point(s: Part, i: Int): Unit =
+      sb.append('[').append(fmt(s.ts(i))).append(", \"").append(fmt(s.values(i))).append("\"]")
+    sb.append('[')
+    for ((s, j) <- series.iterator.zipWithIndex) {
+      if (vector)
+        for (i <- s.ts.indices) {
+          if (j > 0 || i > 0) sb.append(", ")
+          metric(s.labels)
+          sb.append("\"value\": ")
+          point(s, i)
+          sb.append('}')
+        }
+      else {
         if (j > 0) sb.append(", ")
-        sb.append('[').append(fmt(r.getDouble(1))).append(", \"")
-          .append(fmt(r.getDouble(2))).append("\"]")
+        metric(s.labels)
+        sb.append("\"values\": [")
+        for (i <- s.ts.indices) {
+          if (i > 0) sb.append(", ")
+          point(s, i)
+        }
+        sb.append("]}")
       }
-      sb.append("]}")
     }
     sb.append(']').toString
   }
@@ -319,6 +398,9 @@ object PromApi {
 
   final class PayloadTooLarge(limit: Int)
     extends RuntimeException(s"request body exceeds $limit bytes")
+
+  /** A request the server cannot read (a malformed percent-encoding): 400. */
+  final class BadRequest(msg: String) extends RuntimeException(msg)
 
   /** A valid 16×16 32bpp ICO, generated (NOT copied from the reference's
     * embedded asset — only the route behavior is parity: 200 + image/x-icon,

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions.{col, count, lit}
 
 /** The one harness the mains share: its session rule, its run helper's
   * job count, its plan walker's cache rule, that no main builds a
-  * session of its own, and that only one shim adds optimizer rules. */
+  * session of its own, that only one shim adds optimizer rules, and that
+  * the HTTP server collects results one row per series. */
 class HarnessSpec extends SparkSpec {
 
   test("master and shuffle partitions follow the environment") {
@@ -74,5 +75,13 @@ class HarnessSpec extends SparkSpec {
     val writers = files.filter((p: Path) => assigns.findFirstIn(Files.readString(p)).isDefined)
       .map(p => main.relativize(p).toString)
     assert(writers === Seq("org/apache/spark/sql/GraftPlan.scala"))
+  }
+
+  test("PromApi collects series rows only: no long query, no collect()") {
+    val api = Files.readString(Paths.get("src/main/scala/graft/server/PromApi.scala"))
+    val long = """\b(queryRange|queryRangeRaw|queryInstant)\b|\.collect\(\)""".r
+    val found = long.findAllIn(api).toSeq
+    assert(found.isEmpty, found.mkString(", "))
+    assert(api.contains("GraftPlan.collectInternal(series)"))
   }
 }

@@ -269,4 +269,126 @@ class PromApiSpec extends SparkSpec {
       collection.unpersist()
     }
   }
+
+  test("query_range refuses a non-finite or over-11,000-point grid before evaluating") {
+    val engine = new PromEngine(queries.TsQueries.events(spark, "/root/testdata/sf0.001"))
+    val api = PromApi(engine, port = 0).start()
+    try {
+      val q = java.net.URLEncoder.encode("""rate(events{event_type="purchase"}[5m])""", "UTF-8")
+      for ((grid, why) <- Seq(
+             "start=Infinity&end=1704070800&step=60" -> "not a finite number",
+             "start=1704067200&end=NaN&step=60" -> "not a finite number",
+             "start=1704067200&end=1e300&step=60" -> "maximum resolution of 11000 points",
+             "start=-Infinity&end=Infinity&step=1" -> "not a finite number",
+             "start=1704067200&end=1704067200.5&step=1e-300" -> "maximum resolution",
+             "start=0&end=11000&step=1" -> "maximum resolution")) {
+        val ((code, body), jobs) = {
+          val r = Harness.run(spark)(get(api.boundPort, s"/api/v1/query_range?query=$q&$grid"))
+          (r.value, r.jobs)
+        }
+        assert(code == 400 && body.contains("\"errorType\": \"queryError\"") && body.contains(why),
+          s"$grid: $code ${body.take(300)}")
+        assert(jobs === 0, grid)
+      }
+      // 11,000 points is the limit itself: answered
+      val nope = java.net.URLEncoder.encode("""events{event_type="nope"}""", "UTF-8")
+      val (ok, body) = get(api.boundPort, s"/api/v1/query_range?query=$nope&start=0&end=10999&step=1")
+      assert(ok == 200 && body.contains("\"result\": []"), body.take(300))
+    } finally api.stop()
+  }
+
+  test("a malformed percent-encoding is a 400 queryError, not a 500") {
+    val engine = new PromEngine(queries.TsQueries.events(spark, "/root/testdata/sf0.001"))
+    val api = PromApi(engine, port = 0).start()
+    try {
+      // form bodies: a client's URI parser refuses these in a query string
+      for ((path, form) <- Seq("/api/v1/query_range" -> "query=%zz&start=0&end=1&step=1",
+                               "/api/v1/query" -> "query=ok&time=%", "/api/v1/query" -> "query=%G1",
+                               "/api/v1/series" -> "match%5B%5D=%e")) {
+        val (code, body) = post(api.boundPort, path, form)
+        assert(code == 400 && body.contains("\"errorType\": \"queryError\""), s"$form: $code ${body.take(300)}")
+      }
+    } finally api.stop()
+  }
+
+  /** The `query` vector body before the one-writer rewrite: long rows
+    * ordered by their sorted label pairs, one entry per row. */
+  private def referenceVector(rows: Array[Row]): String = {
+    def fmt(d: Double): String =
+      if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) d.toLong.toString else d.toString
+    def str(s: String): String = {
+      val sb = new StringBuilder
+      sb.append('"')
+      for (c <- Option(s).getOrElse("")) c match {
+        case '"' => sb.append("\\\"")
+        case '\\' => sb.append("\\\\")
+        case '\n' => sb.append("\\n")
+        case '\r' => sb.append("\\r")
+        case '\t' => sb.append("\\t")
+        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+        case c => sb.append(c)
+      }
+      sb.append('"').toString
+    }
+    rows.sortBy(_.getMap[String, String](0).toSeq.sorted.mkString(",")).map { r =>
+      val metric = r.getMap[String, String](0).toSeq.sorted
+        .map { case (k, v) => s"${str(k)}: ${str(v)}" }.mkString("{", ", ", "}")
+      s"""{"metric": $metric, "value": [${fmt(r.getDouble(1))}, ${str(fmt(r.getDouble(2)))}]}"""
+    }.mkString("[", ", ", "]")
+  }
+
+  test("served engine: HTTP bodies equal the long path byte for byte") {
+    val cached = queries.TsQueries.events(spark, "/root/testdata/sf0.001").cache()
+    cached.count()
+    val served = new PromEngine(cached)
+    val shifted = served.withStartTime(1800000000.0)
+    assert(served.served && shifted.served)
+    val enc = (s: String) => java.net.URLEncoder.encode(s, "UTF-8")
+    val sel = """events{event_type="purchase"}"""
+    val start = 1704067200.0 + 86400.0
+    val end = start + 6 * 3600.0
+    val apis = Seq(served, shifted).map(e => e -> PromApi(e, port = 0).start())
+    try {
+      def body(kind: String, result: String) =
+        s"""{"status": "success", "data": {"resultType": "$kind", "result": $result}}"""
+      def range(e: PromEngine, api: PromApi, q: String, s: Double, t: Double, step: Double): String = {
+        val (code, got) = get(api.boundPort,
+          s"/api/v1/query_range?query=${enc(q)}&start=$s&end=$t&step=$step")
+        assert(code == 200, s"$q: ${got.take(300)}")
+        assert(got === body("matrix", PromApi.serializeMatrix(e.queryRange(q, s, t, step).collect())), q)
+        assert(!got.contains("\"values\": []"), q)
+        got
+      }
+      val (e0, api0) = apis.head
+      val panels = Seq(s"rate($sel[5m])", sel, s"sum by (event_type) (rate($sel[5m]))", s"irate($sel[5m])",
+        s"avg_over_time($sel[1h])", s"increase($sel[1h])", s"topk(3, rate($sel[1h]))",
+        s"rate($sel[1h] offset 2h)", s"count_over_time($sel[1h])", "time()", """events{event_type="nope"}""")
+      for (q <- panels) range(e0, api0, q, start, end, 300.0)
+      assert(range(e0, api0, "time()", start, end, 300.0).contains("\"metric\": {}"))
+      assert(range(e0, api0, """events{event_type="nope"}""", start, end, 300.0).contains("\"result\": []"))
+      // count_over_time evaluates to a long; the wire value is a double
+      assert(e0.rangeSeries(s"count_over_time($sel[1h])", start, end, 300.0).schema.simpleString
+        .contains("value:double"))
+      // before the data every selected series' kernel emits no point: the
+      // series rows are there with empty points, the answer holds none
+      val early = s"max_over_time($sel[1m])"
+      val empty = e0.rangeSeries(early, 1600000000.0, 1600003600.0, 300.0).collect()
+      assert(empty.nonEmpty && empty.forall(_.getSeq[Row](1).isEmpty))
+      assert(range(e0, api0, early, 1600000000.0, 1600003600.0, 300.0).contains("\"result\": []"))
+      // query-time shift: the grid moves back by the offset, the answer forward
+      val (e1, api1) = apis(1)
+      val off = e1.queryTimeOffset.get
+      for (q <- Seq(sel, s"rate($sel[5m])", s"count_over_time($sel[1h])", s"sum by (event_type) (rate($sel[5m]))"))
+        assert(range(e1, api1, q, start + off, end + off, 300.0).contains("\"values\": [["), q)
+      for ((e, api) <- apis; q <- Seq(s"rate($sel[5m])", s"increase($sel[1h])", s"count_over_time($sel[1d])")) {
+        val t = start + 3 * 3600.0 + 60.0 + e.queryTimeOffset.getOrElse(0.0)
+        val (code, got) = get(api.boundPort, s"/api/v1/query?query=${enc(q)}&time=$t")
+        assert(code == 200 && got.contains("\"value\": ["), s"$q: ${got.take(300)}")
+        assert(got === body("vector", referenceVector(e.queryInstant(q, t).collect())), q)
+      }
+    } finally {
+      apis.foreach(_._2.stop())
+      cached.unpersist(blocking = true)
+    }
+  }
 }

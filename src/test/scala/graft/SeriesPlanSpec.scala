@@ -2,8 +2,9 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftPlan}
 import org.apache.spark.sql.catalyst.expressions.MapSort
+import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, LocalTableScanExec, QueryExecution,
   SparkPlan}
@@ -134,6 +135,24 @@ class SeriesPlanSpec extends SparkSpec {
     val topk = executed(engine.queryRange("""topk(2, rate(m[5m]))""", start, start + 3600.0, 300.0))
     assert(foldScans(topk).length === 1 && !topk.exists(_.isInstanceOf[BaseAggregateExec]), topk.head)
     assert(topk.exists(_.isInstanceOf[GenerateExec]), topk.head)
+  }
+
+  test("served series form: panels and instants run no job and plan no Generate") {
+    val engine = new PromEngine(collection)
+    engine.allLabels() // fills the fold: its one job
+    val start = 1704067200.0 + 3600.0
+    val panels = Seq("""rate(m{host="h1"}[5m])""", """m{host="h1"}""", """irate(m{host="h1"}[5m])""",
+      """increase(m{host="h1"}[1h])""", """avg_over_time(m{host="h1"}[1h])""")
+      .map(q => (q, engine.rangeSeries(q, start, start + 4 * 3600.0, 300.0), 49))
+    val instants = Seq("""rate(m{host="h1"}[5m])""", """increase(m{host="h1"}[1h])""")
+      .map(q => (q, engine.instantSeries(q, start), 1))
+    for ((q, df, points) <- panels ++ instants) {
+      val run = Harness.run(spark)(GraftPlan.collectInternal(df))
+      assert(run.jobs === 0, q)
+      assert(run.value.map(_.getArray(1).numElements()).toSeq === Seq(points, points), q)
+      assert(df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec], s"$q:\n${df.queryExecution.executedPlan}")
+      assert(!df.queryExecution.optimizedPlan.exists(_.isInstanceOf[Generate]), s"$q:\n${df.queryExecution.optimizedPlan}")
+    }
   }
 
   test("an uncached engine over raw parquet keeps the selector in PushedFilters") {
