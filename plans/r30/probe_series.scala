@@ -23,14 +23,14 @@ def writeSeries(rows: Array[InternalRow], vector: Boolean): String =
 def writeLong(rows: Array[Row]): String = matrix.invoke(api, rows).asInstanceOf[String]
 val analyst = sys.env.get("SHAPES").contains("analyst")
 val sel = """events{event_type="view"}"""
-val (start, end, step, runs) =
+val (start, end, step, runs) = (
   if (analyst) (1704067200.0, 1704067200.0 + 30 * 86400.0 - 3600.0, 3600.0, 7)
-  else (1704067200.0 + 86400.0 * 3 - 6 * 3600.0, 1704067200.0 + 86400.0 * 3, 300.0, 30)
+  else (1704067200.0 + 86400.0 * 3 - 6 * 3600.0, 1704067200.0 + 86400.0 * 3, 300.0, 30))
 val panels = Seq(s"rate($sel[5m])", sel, s"sum by (event_type) (rate($sel[5m]))",
   s"irate($sel[5m])", s"avg_over_time($sel[1h])", s"increase($sel[1h])", s"topk(3, rate($sel[1h]))")
-val shapes =
+val shapes = (
   if (analyst) Seq("quantile_over_time(0.9, events[1h])", """rate(events{event_type="purchase"}[5m])""").map(_ -> false)
-  else panels.map(_ -> false) ++ Seq(s"rate($sel[5m])", s"increase($sel[1h])").map(_ -> true)
+  else panels.map(_ -> false) ++ Seq(s"rate($sel[5m])", s"increase($sel[1h])").map(_ -> true))
 def ms(t: Long): Double = (System.nanoTime - t) / 1e6
 def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
 for ((q, instant) <- shapes; form <- Seq("long", "series")) {
