@@ -1,12 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlan, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, MapType, StringType, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.operators.{Grid, Resample}
+import graft.operators.{Grid, Resample, Selector}
 import graft.promql.Eval
 
 /** The engine facade — the Spark-native analogue of the reference's
@@ -20,20 +23,24 @@ import graft.promql.Eval
   * request that needs it and kept in driver heap as a local relation
   * (5.1 MB at sf0.1). Range functions and implicit resamples then filter
   * series rows and run the kernel over it. Results come in two shapes
-  * from one evaluation: one row per series ([[rangeSeries]],
-  * [[instantSeries]]; what the HTTP server writes) and long rows
-  * ([[queryRange]], [[queryInstant]]; what the gates compare). A plain
-  * panel or instant, whose plan is only filters, projections and (in the
-  * long shape) the kernel's `inline`, is evaluated while Spark optimizes
-  * it (`ConvertToLocalRelation`, [[graft.operators.LocalGenerate]]) and
-  * collects with no Spark job, while `sum by`, `topk` and other plans
-  * that reduce the kernel's rows run them on executors. The metadata calls read one label-map list
-  * collected from the fold. Keeping the fold on the driver assumes local
-  * mode, as `graft.Serve` runs. An engine over an
-  * uncached collection (the gates, `graft.Query`)
-  * filters samples first, so the selectors push into the parquet scan,
-  * and folds only what they keep. Construction runs no Spark job either
-  * way; the `with*` variants share their parent's fold.
+  * from one evaluation: one row per series ([[rangeRows]],
+  * [[instantRows]]; what the HTTP server writes) and long rows
+  * ([[queryRange]], [[queryInstant]]; what the gates compare). In the
+  * series shape a plain panel or instant, a range kernel over one
+  * selector's series, runs straight from the fold's heap rows: no
+  * Dataset, no Catalyst planning, no Spark query per request. In the long
+  * shape its plan is only filters, projections and the kernel's `inline`,
+  * which Spark evaluates while it optimizes (`ConvertToLocalRelation`,
+  * [[graft.operators.LocalGenerate]]) with no Spark job, while `sum by`,
+  * `topk` and other plans that reduce the kernel's rows run them on
+  * executors in either shape. `/api/v1/series` ([[seriesMatching]])
+  * filters the heap rows too, and the other metadata calls read one
+  * label-map list collected from the fold. Keeping the fold on the driver
+  * assumes local mode, as `graft.Serve` runs. An engine over an uncached
+  * collection (the gates, `graft.Query`) filters samples first, so the
+  * selectors push into the parquet scan, and folds only what they keep.
+  * Construction runs no Spark job either way; the `with*` variants share
+  * their parent's fold.
   *
   * @param collection long-format samples (labels map incl __name__, ts, value)
   * @param queryStartTime when set, queries behave as if the data started at
@@ -85,19 +92,22 @@ final class PromEngine private (val collection: DataFrame, val queryStartTime: O
   /** Run a PromQL range query; start/end/step in the *query* time frame.
     * Output (labels, ts, value) with ts back in the query time frame and
     * `value` a double, the wire type (`count_over_time` evaluates to a
-    * long; [[queryRangeRaw]] keeps it). [[rangeSeries]] is the same result
+    * long; [[queryRangeRaw]] keeps it). [[rangeRows]] is the same result
     * one row per series. */
   def queryRange(query: String, start: Double, end: Double, step: Double): DataFrame =
     long(Eval.run(ctx, query, rangeGrid(start, end, step)))
 
   /** [[queryRange]]'s result one row per series, as the HTTP writer takes
-    * it: (labels, points: array<struct<ts, value: double>>), ts in the
-    * query time frame ([[Eval.runSeries]]). A served plain panel plans as
-    * the selector filter and the kernel projection over the fold's local
-    * relation, which Spark evaluates while it optimizes: no `Generate`
-    * and no Spark job. */
+    * it: internal rows (labels, points: array<struct<ts, value: double>>),
+    * ts in the query time frame ([[Eval.seriesRows]]). A served plain
+    * panel comes straight from the fold's heap rows; anything else is
+    * collected from [[Eval.runSeries]]'s frame. */
+  def rangeRows(query: String, start: Double, end: Double, step: Double): Array[InternalRow] =
+    edge(Eval.seriesRows(ctx, query, rangeGrid(start, end, step)))
+
+  /** [[rangeRows]] as a driver-local frame of [[PromEngine.SeriesSchema]]. */
   def rangeSeries(query: String, start: Double, end: Double, step: Double): DataFrame =
-    series(Eval.runSeries(ctx, query, rangeGrid(start, end, step)))
+    localFrame(rangeRows(query, start, end, step))
 
   /** Internal-frame variant used by the correctness harness. */
   def queryRangeRaw(query: String, grid: Grid): DataFrame = Eval.run(ctx, query, grid)
@@ -106,8 +116,11 @@ final class PromEngine private (val collection: DataFrame, val queryStartTime: O
     * "1+1", main.rs:399-405): evaluate on a single-instant grid at `t`. */
   def queryInstant(query: String, t: Double): DataFrame = long(Eval.run(ctx, query, instantGrid(t)))
 
-  /** [[queryInstant]]'s result one row per series, like [[rangeSeries]]. */
-  def instantSeries(query: String, t: Double): DataFrame = series(Eval.runSeries(ctx, query, instantGrid(t)))
+  /** [[queryInstant]]'s result one row per series, like [[rangeRows]]. */
+  def instantRows(query: String, t: Double): Array[InternalRow] = edge(Eval.seriesRows(ctx, query, instantGrid(t)))
+
+  /** [[instantRows]] as a driver-local frame, like [[rangeSeries]]. */
+  def instantSeries(query: String, t: Double): DataFrame = localFrame(instantRows(query, t))
 
   private def offset: Double = queryTimeOffset.getOrElse(0.0)
 
@@ -122,22 +135,27 @@ final class PromEngine private (val collection: DataFrame, val queryStartTime: O
     out.select(col(Model.LabelsCol), (col(Model.TsCol) + lit(offset)).as(Model.TsCol),
       col(Model.ValueCol).cast(DoubleType).as(Model.ValueCol))
 
-  /** [[long]]'s edge over series rows, point by point; a no-op (and no
-    * projection of the points) when there is no offset and the value is
-    * a double already. */
-  private def series(out: DataFrame): DataFrame = {
+  /** [[long]]'s edge over (skey, labels, points) rows, point by point:
+    * (labels, points) rows, the offset added to each ts and each value
+    * cast to a double; the points are passed through when there is no
+    * offset and the values are doubles already. */
+  private def edge(series: Resample.SeriesRows): Array[InternalRow] = {
     val off = offset
-    val points = col(Model.PointsCol)
-    val doubles = out.schema(Model.PointsCol).dataType match {
-      case ArrayType(StructType(Array(_, value)), _) => value.dataType == DoubleType
-      case _ => false
+    val value = Cast(BoundReference(1, series.valueType, nullable = true), DoubleType)
+    val same = off == 0.0 && series.valueType == DoubleType
+    series.rows.map { r =>
+      val points = r.getArray(2)
+      InternalRow(r.getMap(1),
+        if (same || points == null) points
+        else new GenericArrayData(Array.tabulate[Any](points.numElements()) { i =>
+          val p = points.getStruct(i, 2)
+          InternalRow(p.getDouble(0) + off, value.eval(p))
+        }))
     }
-    val edged =
-      if (off == 0.0 && doubles) points
-      else transform(points, p => struct((p(Model.TsCol) + lit(off)).as(Model.TsCol),
-        p(Model.ValueCol).cast(DoubleType).as(Model.ValueCol)))
-    out.select(col(Model.LabelsCol), edged.as(Model.PointsCol))
   }
+
+  private def localFrame(rows: Array[InternalRow]): DataFrame =
+    GraftPlan.localFrame(collection.sparkSession, PromEngine.SeriesSchema, rows.toSeq)
 
   /** The label map of every series in the collection. A served engine
     * collects it from its fold once and keeps it; otherwise each call
@@ -156,11 +174,22 @@ final class PromEngine private (val collection: DataFrame, val queryStartTime: O
   /** The label map of every series whose labels satisfy `predicate` (a
     * condition on the `labels` column, e.g. ORed
     * [[graft.operators.Selector.predicate]]s). A served engine filters the
-    * fold's series rows; otherwise the samples are filtered and grouped. */
+    * fold's local relation; otherwise the samples are filtered and
+    * grouped. */
   def seriesMatching(predicate: Column): Seq[Map[String, String]] = folded match {
     case Some(f) => f.rows.filter(predicate).select(col(Model.LabelsCol)).collect()
       .map(_.getMap[String, String](0).toMap).toSeq
     case None => seriesLabels(collection.filter(predicate))
+  }
+
+  /** The label map of every series matched by any of `selectors`, each a
+    * plain selector's matchers ([[graft.operators.Selector.anyOf]]): what
+    * `/api/v1/series` answers. A served engine filters the fold's heap
+    * rows, with no Spark query; otherwise the same condition filters the
+    * samples and groups them. */
+  def seriesMatching(selectors: Seq[Seq[Selector.Matcher]]): Seq[Map[String, String]] = folded match {
+    case Some(f) => f.matching(selectors)
+    case None => seriesLabels(collection.filter(Selector.anyOf(selectors)))
   }
 
   /** Sorted distinct label names (timeseries.rs:459-476). */
@@ -190,4 +219,9 @@ object PromEngine {
   /** Spark's (and the oracles') string order: binary UTF-8, which differs
     * from `String`'s UTF-16 order beyond the Basic Multilingual Plane. */
   private val Utf8Order: Ordering[String] = Ordering.by(UTF8String.fromString)
+
+  /** The series form's rows: (labels, points: array<struct<ts, value: double>>). */
+  private val SeriesSchema: StructType = new StructType()
+    .add(Model.LabelsCol, MapType(StringType, StringType))
+    .add(Model.PointsCol, ArrayType(new StructType().add(Model.TsCol, DoubleType).add(Model.ValueCol, DoubleType)))
 }

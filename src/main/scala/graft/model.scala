@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.functions._
 
 /** Core data model of the engine.
@@ -37,6 +38,15 @@ object Model {
   val SkeyCol = "skey"
   /** A series' evaluated points, array<struct<ts, value>>, in series form. */
   val PointsCol = "points"
+
+  /** A label map's pairs, read from a row in Catalyst's internal form (a
+    * null value stays null). */
+  def labelPairs(m: MapData): Array[(String, String)] = {
+    val (keys, vals) = (m.keyArray(), m.valueArray())
+    Array.tabulate(m.numElements()) { i =>
+      keys.getUTF8String(i).toString -> (if (vals.isNullAt(i)) null else vals.getUTF8String(i).toString)
+    }
+  }
 
   /** Canonical, deterministic string form of a label map: sorted `k=v` pairs
     * joined by commas. Used as the join and grouping key of operators that

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftExpr, GraftPlan}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -42,9 +44,10 @@ final case class Grid(start: Double, end: Double, step: Double) {
   * No probe rows, no window sorts.
   *
   * A served engine (one whose collection is cached) keeps that fold of the
-  * whole collection in driver heap as a local relation ([[Folded]]), so a
-  * request filters series rows and runs the kernel — no scan of sample
-  * rows, no aggregation, and for a plain panel no Spark job.
+  * whole collection in driver heap ([[Folded]]), so a request filters
+  * series rows and runs the kernel — no scan of sample rows, no
+  * aggregation, and for a plain panel in series form no Spark query at
+  * all: the kernel runs over the heap rows ([[Folded.points]]).
   */
 object Resample {
 
@@ -103,23 +106,39 @@ object Resample {
   def resample(samples: DataFrame, grid: Grid, offset: Double = 0.0): DataFrame =
     kernel(samples, grid, RangeKernel.Resample, 0.0, offset)
 
+  /** Series rows `(skey, labels, points)` in driver heap, with the type of
+    * a point's `value` (a long for `count_over_time`, else a double). */
+  final case class SeriesRows(rows: Array[InternalRow], valueType: DataType)
+
+  /** The type of a point's `value` in a points array type. */
+  private[graft] def valueType(points: DataType): DataType = points match {
+    case ArrayType(StructType(Array(_, value)), _) => value.dataType
+    case other => throw new IllegalArgumentException(s"not a points array: ${other.catalogString}")
+  }
+
   /** The per-series fold of a whole cached collection, shared by every
-    * engine over that collection. [[rows]] is [[series]] of it, collected
-    * once into driver heap and served as a `LocalRelation`: the first
-    * request that reads it runs the one fill job (the collection is
-    * partitioned on its label map, so the fill needs no exchange), and no
-    * Spark job runs before that.
+    * engine over that collection: [[series]] of it, collected once into
+    * driver heap. The first request that reads it runs the one fill job
+    * (the collection is partitioned on its label map, so the fill needs
+    * no exchange), and no Spark job runs before that.
     *
-    * Over a local relation Spark's `ConvertToLocalRelation` evaluates a
-    * request's selector filter while optimizing, and the kernel's
-    * projection too when a plain panel or instant is asked for in series
-    * form ([[seriesPoints]], as the HTTP server asks); [[LocalGenerate]]
-    * (installed on the session when the fold fills) evaluates the
-    * kernel's `inline` when the long form is asked for. Either way such a
-    * request, or a metadata call, collects from one `LocalTableScanExec`
-    * with no Spark job. A plan that aggregates, windows or joins the
-    * kernel's rows (`sum by`, `topk`) keeps that work on executors, over
-    * the selected series rows.
+    * A plain panel or instant, a range kernel over one selector's series,
+    * is evaluated straight from those heap rows ([[points]]): the
+    * selector's matcher conditions ([[Selector.condition]]) and the
+    * [[RangeKernel]] expression are bound to the fold's row layout per
+    * request, the rows filtered and the kernel evaluated, with no Dataset
+    * and no Spark query. The same `compute` runs when Spark evaluates the
+    * kernel, so the points are bit-identical to [[seriesPoints]] over
+    * [[rows]]. Binding per request leaves no interpreted `RLike` state
+    * shared between threads.
+    *
+    * [[rows]] serves the same heap rows as a `LocalRelation` for every
+    * plan that reads a frame: an aggregation, a binary operator, `topk`,
+    * `@`, the long form. Spark's `ConvertToLocalRelation` evaluates its
+    * filters and projections while optimizing, and [[LocalGenerate]]
+    * (installed on the session when the fold fills) the kernel's `inline`;
+    * a plan that aggregates, windows or joins the kernel's rows (`sum by`,
+    * `topk`) keeps that work on executors, over the selected series rows.
     *
     * The trade: the fold lives in driver heap (5.1 MB for the 1,500
     * series of sf0.1), so a served engine runs in local mode
@@ -129,15 +148,57 @@ object Resample {
     * `Selector.select(rows, ms)` equals `series(Selector.select(collection, ms))`
     * row for row. [[labels]] is every series' label map, collected once. */
   final class Folded(collection: DataFrame) {
-    lazy val rows: DataFrame = {
-      val spark = collection.sparkSession
+    private lazy val (schema, data): (StructType, Array[InternalRow]) = {
       val fold = series(collection)
-      val data = GraftPlan.collectInternal(fold).toSeq
-      GraftPlan.install(spark, LocalGenerate)
-      GraftPlan.localFrame(spark, fold.schema, data)
+      val data = GraftPlan.collectInternal(fold)
+      GraftPlan.install(collection.sparkSession, LocalGenerate)
+      (fold.schema, data)
     }
+
+    lazy val rows: DataFrame = GraftPlan.localFrame(collection.sparkSession, schema, data.toSeq)
 
     lazy val labels: Seq[Map[String, String]] =
       rows.select(col(Model.LabelsCol)).collect().map(_.getMap[String, String](0).toMap).toSeq
+
+    /** A fold column bound to the heap rows' layout. */
+    private def ref(name: String): BoundReference = {
+      val i = schema.fieldIndex(name)
+      BoundReference(i, schema(i).dataType, schema(i).nullable)
+    }
+
+    /** The heap rows whose label map satisfies `cond`, bound per call. */
+    private def where(cond: Expression => Expression): Iterator[InternalRow] = {
+      val p = cond(ref(Model.LabelsCol))
+      data.iterator.filter(r => p.eval(r) == true)
+    }
+
+    /** `fn` over the series `matchers` select, from the heap rows:
+      * [[seriesPoints]]'s rows over `Selector.select(rows, matchers)`,
+      * `(skey, labels, points)`, one per selected series. */
+    def points(matchers: Seq[Selector.Matcher], grid: Grid, fn: RangeKernel.Fn,
+               range: Double, offset: Double): SeriesRows = {
+      val kernel = RangeKernel(ref(Model.TsCol), ref("v"), fn, grid.start, grid.step, grid.length, range, offset)
+      val (skey, labels) = (ref(Model.SkeyCol).ordinal, ref(Model.LabelsCol).ordinal)
+      val out = where(Selector.allOf(_, matchers))
+        .map(r => InternalRow(r.getUTF8String(skey), r.getMap(labels), kernel.eval(r))).toArray
+      SeriesRows(out, valueType(kernel.dataType))
+    }
+
+    /** The label map of every series matched by any of `selectors`
+      * ([[Selector.anyOf]]), from the heap rows. */
+    def matching(selectors: Seq[Seq[Selector.Matcher]]): Seq[Map[String, String]] = {
+      val labels = ref(Model.LabelsCol).ordinal
+      where(Selector.anyOf(_, selectors)).map(r => Model.labelPairs(r.getMap(labels)).toMap).toSeq
+    }
+  }
+
+  /** A plain selector's series of a served fold, kept as a value: a
+    * kernel over them runs from the heap rows ([[Folded.points]]), and the
+    * frame, a `Filter` over the fold's local relation, is built only when
+    * something reads a frame. */
+  final case class Selection(fold: Folded, matchers: Seq[Selector.Matcher]) {
+    lazy val frame: DataFrame = Selector.select(fold.rows, matchers)
+    def points(grid: Grid, fn: RangeKernel.Fn, range: Double, offset: Double): SeriesRows =
+      fold.points(matchers, grid, fn, range, offset)
   }
 }

@@ -1,6 +1,6 @@
 package graft.promql
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftPlan}
 
 import graft.Model
 import graft.functions.RangeKernel
@@ -17,9 +17,12 @@ import graft.sources.RollupStore
   * One evaluation, two shapes at the edge: [[run]] returns the long
   * (skey, labels, ts, value) rows the gates and oracles compare, and
   * [[runSeries]] the same result one row per series, as the range kernel
-  * leaves it, for the HTTP writer. A range kernel's result builds its long
-  * form only when something reads it (an aggregation, a binary operator,
-  * `topk`, `@`, [[run]]); see [[Processed]].
+  * leaves it, for the HTTP writer; [[seriesRows]] is that result as rows.
+  * A range kernel's result builds its long form only when something
+  * reads it (an aggregation, a binary operator, `topk`, `@`, [[run]]);
+  * see [[Processed]]. On a served engine a range kernel over a plain
+  * selector's series builds no frame at all for [[seriesRows]]: it runs
+  * from the fold's heap rows ([[Resample.Selection]]).
   */
 object Eval {
   final case class EvalException(msg: String) extends RuntimeException(msg)
@@ -27,39 +30,47 @@ object Eval {
   sealed trait QR
   /** Selected samples `df` (skey, labels, ts, value), not yet folded into
     * series, built from `samples` on first read. `series` holds the same
-    * selection as rows of the served engine's fold when a plain selector
-    * made them; the kernels read those, and fold `df` only when it is
-    * absent, so a served panel never builds `df` at all. */
+    * selection as the served engine's fold and the selector's matchers
+    * when a plain selector made them; the kernels read those, and fold
+    * `df` only when it is absent, so a served panel never builds `df` at
+    * all. */
   sealed trait Samples extends QR {
     protected def samples: () => DataFrame
     lazy val df: DataFrame = samples()
-    def series: Option[DataFrame]
+    def series: Option[Resample.Selection]
     /** One (skey, labels, ts[], v[]) row per selected series. */
-    def folded: DataFrame = series.getOrElse(Resample.series(df))
+    def folded: DataFrame = series.fold(Resample.series(df))(_.frame)
   }
   /** filtered, not yet resampled (query.rs:44) */
   final case class Unprocessed(samples: () => DataFrame, offset: Option[Double],
-                               series: Option[DataFrame] = None) extends Samples
+                               series: Option[Resample.Selection] = None) extends Samples
   /** filtered + `[range]`-vectorized (query.rs:45) */
   final case class UnprocessedVector(samples: () => DataFrame, overRange: Double, offset: Option[Double],
-                                     series: Option[DataFrame] = None) extends Samples
+                                     series: Option[Resample.Selection] = None) extends Samples
   /** resampled onto the grid (query.rs:46): long rows `df`
     * (skey, labels, ts, value), built on first read. `series`, set when a
     * range kernel made the result, builds the same result one row per
     * series, (skey, labels, points) ([[Resample.seriesPoints]]); `df` is
-    * then that kernel's `inline`. Matching `Processed(df)` reads `df`. */
-  final class Processed private (long: () => DataFrame, val series: Option[() => DataFrame]) extends QR {
+    * then that kernel's `inline`. `heap`, set when the kernel's input is
+    * exactly a served selector's fold rows, evaluates those series rows
+    * from driver heap instead ([[Resample.Folded.points]]). Matching
+    * `Processed(df)` reads `df`. */
+  final class Processed private (long: () => DataFrame, val series: Option[() => DataFrame],
+                                 val heap: Option[() => Resample.SeriesRows]) extends QR {
     lazy val df: DataFrame = long()
   }
   object Processed {
-    def apply(df: DataFrame): Processed = new Processed(() => df, None)
+    def apply(df: DataFrame): Processed = new Processed(() => df, None, None)
     def unapply(p: Processed): Some[DataFrame] = Some(p.df)
 
-    /** `fn` over `folded` series rows: long form on first read, series form
-      * on request. */
-    def kernel(folded: DataFrame, grid: Grid, fn: RangeKernel.Fn, range: Double, offset: Double): Processed =
+    /** `fn` over the series of `in`: long form on first read, series form
+      * on request, from heap when `in` is a served selector's series. */
+    def kernel(in: Samples, grid: Grid, fn: RangeKernel.Fn, range: Double, offset: Double): Processed = {
+      lazy val folded = in.folded
       new Processed(() => Resample.seriesKernel(folded, grid, fn, range, offset),
-        Some(() => Resample.seriesPoints(folded, grid, fn, range, offset)))
+        Some(() => Resample.seriesPoints(folded, grid, fn, range, offset)),
+        in.series.map(s => () => s.points(grid, fn, range, offset)))
+    }
   }
   final case class ScalarQ(value: Double) extends QR
   /** per-step scalar (extension): one (ts, value) row per grid instant —
@@ -88,7 +99,9 @@ object Eval {
     * ([[graft.operators.Resample.Folded]]). With it, a plain selector
     * also selects its series rows there, and every range function and
     * implicit resample over that selector runs the kernel on them: no
-    * scan of sample rows, no aggregation per request. Without it (an
+    * scan of sample rows, no aggregation per request, and in series form
+    * ([[seriesRows]]) no Spark query either, since the kernel then runs
+    * over the fold's heap rows. Without it (an
     * uncached collection) selectors filter the samples, so the filters
     * still push into a parquet scan, and the kernel folds what they
     * keep. `limitk`/`limit_ratio` on a selector consume samples and read
@@ -111,11 +124,25 @@ object Eval {
     * long already (an aggregation, a rollup read, a per-step scalar) gives
     * one single-point row per sample, which the writer groups on its label
     * map. A series whose kernel emits no point has an empty `points`. */
-  def runSeries(ctx: Ctx, query: String, grid: Grid): DataFrame =
+  def runSeries(ctx: Ctx, query: String, grid: Grid): DataFrame = seriesFrame(evaluate(ctx, query, grid))
+
+  /** [[runSeries]]'s rows, (skey, labels, points), with the type of a
+    * point's value. A range kernel over a served selector's series comes
+    * straight from the fold's heap rows: no Dataset, no Catalyst planning,
+    * no Spark query. Any other result is [[runSeries]]'s frame, collected
+    * as internal rows. */
+  def seriesRows(ctx: Ctx, query: String, grid: Grid): Resample.SeriesRows =
     evaluate(ctx, query, grid) match {
-      case p: Processed => p.series.fold(onePoint(p.df))(_())
-      case qr => onePoint(long(qr))
+      case p: Processed if p.heap.isDefined => p.heap.get()
+      case qr =>
+        val df = seriesFrame(qr)
+        Resample.SeriesRows(GraftPlan.collectInternal(df), Resample.valueType(df.schema(Model.PointsCol).dataType))
     }
+
+  private def seriesFrame(qr: QR): DataFrame = qr match {
+    case p: Processed => p.series.fold(onePoint(p.df))(_())
+    case _ => onePoint(long(qr))
+  }
 
   private def evaluate(ctx: Ctx, query: String, grid: Grid): QR = {
     val keyed =
@@ -146,7 +173,7 @@ object Eval {
   /** Final/implicit resample (query.rs:109-124). */
   private def resampled(qr: QR, grid: Grid): QR = qr match {
     case u: Unprocessed =>
-      Processed.kernel(u.folded, grid, RangeKernel.Resample, 0.0, u.offset.getOrElse(0.0))
+      Processed.kernel(u, grid, RangeKernel.Resample, 0.0, u.offset.getOrElse(0.0))
     case p: Processed => p
     case s: ScalarQ => s
     case s: StepScalar => s // already one value per grid instant
@@ -176,7 +203,7 @@ object Eval {
         case ms => throw EvalException(s"Having a single label name filter is mandatory, got ${ms.length}")
       }
       val filtered = () => Selector.select(collection.df, matchers)
-      val series = collection.fold.map(f => Selector.select(f.rows, matchers))
+      val series = collection.fold.map(Resample.Selection(_, matchers))
       range match {
         case None => Unprocessed(filtered, offset, series)
         case Some(r) => UnprocessedVector(filtered, r, offset, series)
@@ -610,7 +637,7 @@ object Eval {
     if (args.length != 1) throw EvalException(s"'$name' expects a single argument, got ${args.length}")
     eval(args.head, collection, grid) match {
       case v: UnprocessedVector =>
-        Processed.kernel(v.folded, grid, fn, v.overRange, v.offset.getOrElse(0.0))
+        Processed.kernel(v, grid, fn, v.overRange, v.offset.getOrElse(0.0))
       case _: Unprocessed => throw EvalException(s"'$name' requires a vectorized time series")
       case _: Processed => throw EvalException(s"'$name' cannot process the processed yet")
       case ScalarQ(_) | StepScalar(_) => throw EvalException(s"The $name over a scalar is not meaningful")

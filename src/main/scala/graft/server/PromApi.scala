@@ -5,9 +5,8 @@ import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, GraftPlan, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions.lit
 
 import graft.PromEngine
 import graft.functions.TimeParse
@@ -20,9 +19,10 @@ import graft.functions.TimeParse
   * offset added back to the timestamps (timeseries.rs:227-249).
   *
   * Uses the JDK's built-in HttpServer — the engine is the Spark pipeline;
-  * the API layer only collects the (grid-sized) query result, one row per
-  * series ([[PromEngine.rangeSeries]]), as internal rows, and writes each
-  * series' `values` straight from its points array, as the reference
+  * the API layer only reads the (grid-sized) query result, one internal
+  * row per series ([[PromEngine.rangeRows]], [[PromEngine.instantRows]];
+  * a served plain panel's straight from the fold's heap rows), and writes
+  * each series' `values` straight from its points array, as the reference
   * writes a series from its value vector. A `query_range` grid must be
   * finite and hold at most [[PromApi.MaxPoints]] points per series; a
   * request that breaks that is refused before anything is evaluated.
@@ -106,15 +106,15 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
     parsed match {
       case Left(err) => respondJson(exchange, 400, failure("queryError", err))
       case Right((q, start, end, step)) =>
-        respondResult(exchange, vector = false, engine.rangeSeries(q, start, end, step))
+        respondResult(exchange, vector = false, engine.rangeRows(q, start, end, step))
     }
   }
 
-  /** Collect `series` (one row per series) and answer with its `result`
-    * as a vector or a matrix; an evaluation error is a 400. */
-  private def respondResult(exchange: HttpExchange, vector: Boolean, series: => DataFrame): Unit =
+  /** Answer with `rows` (one row per series) as the `result` vector or
+    * matrix; an evaluation error is a 400. */
+  private def respondResult(exchange: HttpExchange, vector: Boolean, rows: => Array[InternalRow]): Unit =
     try {
-      val result = writeResult(GraftPlan.collectInternal(series), vector)
+      val result = writeResult(rows, vector)
       val resultType = if (vector) "vector" else "matrix"
       respondJson(exchange, 200, success(s"""{"resultType": "$resultType", "result": $result}"""))
     } catch {
@@ -125,17 +125,18 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
     if (t.isFinite) Right(t) else Left(s"invalid parameter '$name': $t is not a finite number")
 
   /** Real instant query (extension beyond the reference's "1+1" quirk):
-    * evaluate at `time` (default: the collection's max timestamp) and emit
-    * the Prometheus `vector` wire shape. */
+    * evaluate at `time` (default: the collection's max timestamp, moved
+    * into the query time frame) and emit the Prometheus `vector` wire
+    * shape. */
   private def handleInstantQuery(exchange: HttpExchange, params: Map[String, String]): Unit = {
     val parsed = for {
       q <- params.get("query").toRight("missing 'query'")
       t <- params.get("time").map(TimeParse.parseTimestamp)
-        .getOrElse(Right(engine.maxTime)).flatMap(finite("time"))
+        .getOrElse(Right(engine.maxTime + engine.queryTimeOffset.getOrElse(0.0))).flatMap(finite("time"))
     } yield (q, t)
     parsed match {
       case Left(err) => respondJson(exchange, 400, failure("queryError", err))
-      case Right((q, t)) => respondResult(exchange, vector = true, engine.instantSeries(q, t))
+      case Right((q, t)) => respondResult(exchange, vector = true, engine.instantRows(q, t))
     }
   }
 
@@ -149,16 +150,15 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
       return
     }
     try {
-      // one filter ORing the selectors, so the series grouping dedups
-      // series matched by more than one selector
-      val selected = matchers.map { sel =>
+      // one condition ORing the selectors, so a series matched by more
+      // than one selector is listed once
+      val selectors = matchers.map { sel =>
         graft.promql.Parser.parse(sel) match {
-          case graft.promql.VectorSel(ms, None, None) =>
-            ms.map(graft.operators.Selector.predicate).foldLeft(lit(true))(_ && _)
+          case graft.promql.VectorSel(ms, None, None) => ms
           case _ => throw new IllegalArgumentException(s"not a plain selector: $sel")
         }
-      }.reduce(_ || _)
-      val sets = engine.seriesMatching(selected)
+      }
+      val sets = engine.seriesMatching(selectors)
         .map(_.toSeq.sorted).sortBy(_.mkString(",")).map { labels =>
           labels.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
             .mkString("{", ", ", "}")
@@ -280,11 +280,7 @@ object PromApi {
 
   /** A series row (labels, points: array<struct<ts, value: double>>). */
   private def part(row: InternalRow): Part = {
-    val m = row.getMap(0)
-    val (keys, vals) = (m.keyArray, m.valueArray)
-    val labels = Array.tabulate(m.numElements()) { i =>
-      keys.getUTF8String(i).toString -> (if (vals.isNullAt(i)) null else vals.getUTF8String(i).toString)
-    }
+    val labels = graft.Model.labelPairs(row.getMap(0))
     val points = if (row.isNullAt(1)) null else row.getArray(1)
     val n = if (points == null) 0 else points.numElements()
     val ts = new Array[Double](n)
@@ -298,7 +294,7 @@ object PromApi {
   }
 
   /** The `result` array of a `query_range` (matrix) or `query` (vector)
-    * answer, from series rows ([[PromEngine.rangeSeries]]). */
+    * answer, from series rows ([[PromEngine.rangeRows]]). */
   private[graft] def writeResult(rows: Array[InternalRow], vector: Boolean): String =
     write(rows.map(part), vector)
 

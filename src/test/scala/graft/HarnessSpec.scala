@@ -82,6 +82,7 @@ class HarnessSpec extends SparkSpec {
     val long = """\b(queryRange|queryRangeRaw|queryInstant)\b|\.collect\(\)""".r
     val found = long.findAllIn(api).toSeq
     assert(found.isEmpty, found.mkString(", "))
-    assert(api.contains("GraftPlan.collectInternal(series)"))
+    // its one result read: the series rows, from heap for a served panel
+    assert(api.contains("engine.rangeRows(q, start, end, step)") && api.contains("engine.instantRows(q, t)"))
   }
 }

@@ -2,8 +2,12 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.server.PromApi
 
@@ -386,8 +390,123 @@ class PromApiSpec extends SparkSpec {
         assert(code == 200 && got.contains("\"value\": ["), s"$q: ${got.take(300)}")
         assert(got === body("vector", referenceVector(e.queryInstant(q, t).collect())), q)
       }
+      // every range function, each matcher kind and instants of windowed
+      // functions, on both engines
+      val fns = Seq("rate", "irate", "increase", "delta", "deriv", "idelta", "changes", "resets",
+        "rate_resets", "increase_resets", "irate_resets", "avg_over_time", "min_over_time", "max_over_time",
+        "sum_over_time", "count_over_time", "last_over_time", "present_over_time", "stddev_over_time",
+        "stdvar_over_time", "mad_over_time")
+      val matched = Seq("""events{event_type!="purchase"}""", s"""rate(events{event_type=~"purch|cli"}[5m])""",
+        s"""irate(events{event_type!~"purchase|view"}[5m])""", """events{event_type="click", props=~"7"}""")
+      for ((e, api) <- apis) {
+        val off = e.queryTimeOffset.getOrElse(0.0)
+        for (q <- fns.map(f => s"$f($sel[1h])") ++ matched) range(e, api, q, start + off, end + off, 300.0)
+        for (q <- Seq(s"avg_over_time($sel[1d])", s"stddev_over_time($sel[1d])", s"mad_over_time($sel[1d])")) {
+          val t = start + 3 * 3600.0 + 60.0 + off
+          val (code, got) = get(api.boundPort, s"/api/v1/query?query=${enc(q)}&time=$t")
+          assert(code == 200 && got.contains("\"value\": ["), s"$q: ${got.take(300)}")
+          assert(got === body("vector", referenceVector(e.queryInstant(q, t).collect())), q)
+        }
+        // a query the kernel refuses: the same 400 body as the Catalyst path gave
+        val refused = """{"status": "error", "errorType": "queryError", """ +
+          """"error": "requirement failed: avg_over_time: range <= 0"}"""
+        val zero = enc(s"avg_over_time($sel[0s])")
+        assert(get(api.boundPort, s"/api/v1/query_range?query=$zero&start=$start&end=$end&step=300") ===
+          (400, refused))
+        assert(get(api.boundPort, s"/api/v1/query?query=$zero&time=$end") === (400, refused))
+      }
+      // a label that some series lack: such a series matches no matcher on it
+      val zoned = {
+        import org.apache.spark.sql.functions.{col, concat, lit, map, when}
+        import spark.implicits._
+        (for (z <- 0 until 3; i <- 0 until 48) yield (z, start + i * 600.0, (z * 7 + i % 5).toDouble))
+          .toDF("z", "ts", "value")
+          .select(when(col("z") === 2, map(lit("__name__"), lit("zm")))
+            .otherwise(map(lit("__name__"), lit("zm"), lit("zone"), concat(lit("z"), col("z")))).as("labels"),
+            col("ts"), col("value")).cache()
+      }
+      val ze = new PromEngine(zoned)
+      val zapi = PromApi(ze, port = 0).start()
+      try {
+        assert(ze.served)
+        for (q <- Seq("zm", """zm{zone="z0"}""", """zm{zone!~"1"}""", """rate(zm{zone=~"z"}[1h])""",
+                      """avg_over_time(zm{zone!="q"}[1h])"""))
+          range(ze, zapi, q, start, end, 300.0)
+        val ne = range(ze, zapi, """zm{zone!="z0"}""", start, end, 300.0)
+        assert(ne.contains("\"zone\": \"z1\"") && !ne.contains("\"z0\"") && ne.split("\"metric\"").length == 2, ne)
+      } finally {
+        zapi.stop()
+        zoned.unpersist(blocking = true)
+      }
     } finally {
       apis.foreach(_._2.stop())
+      cached.unpersist(blocking = true)
+    }
+  }
+
+  test("query without time on a shifted engine answers at maxTime plus the offset") {
+    val cached = queries.TsQueries.events(spark, "/root/testdata/sf0.001").cache()
+    cached.count()
+    val shifted = new PromEngine(cached).withStartTime(1800000000.0)
+    val api = PromApi(shifted, port = 0).start()
+    try {
+      val t = shifted.maxTime + shifted.queryTimeOffset.get
+      val stamp = if (t == t.floor) t.toLong.toString else t.toString // the writer's form
+      for (q <- Seq("""events{event_type="purchase"}""", """avg_over_time(events{event_type="view"}[1d])""")) {
+        val enc = java.net.URLEncoder.encode(q, "UTF-8")
+        val (code, none) = get(api.boundPort, s"/api/v1/query?query=$enc")
+        assert(code == 200 && none.contains(s"\"value\": [$stamp, "), none.take(300))
+        assert(get(api.boundPort, s"/api/v1/query?query=$enc&time=$t") === (200, none), q)
+      }
+    } finally {
+      api.stop()
+      cached.unpersist(blocking = true)
+    }
+  }
+
+  test("served engine over HTTP: panels, instants and series start no SQL execution") {
+    val cached = queries.TsQueries.events(spark, "/root/testdata/sf0.001").cache()
+    cached.count()
+    val engine = new PromEngine(cached)
+    val api = PromApi(engine, port = 0).start()
+    val sc = spark.sparkContext
+    /** SQL executions and Spark jobs `body` started. */
+    def started(body: => Any): (Int, Int) = {
+      val sqls = new AtomicInteger
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case _: SparkListenerSQLExecutionStart => sqls.incrementAndGet(); ()
+          case _ => ()
+        }
+      }
+      GraftListenerBus.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        val jobs = Harness.run(spark)(body).jobs // drains the bus again before it returns
+        (sqls.get, jobs)
+      } finally sc.removeSparkListener(listener)
+    }
+    try {
+      val enc = (s: String) => java.net.URLEncoder.encode(s, "UTF-8")
+      val sel = """events{event_type="purchase"}"""
+      val grid = "&start=1704153600&end=1704175200&step=300"
+      def ok(path: String): Unit = {
+        val (code, body) = get(api.boundPort, path)
+        assert(code == 200 && body.contains("\"status\": \"success\""), s"$path: ${body.take(300)}")
+      }
+      ok("/api/v1/labels") // fills the fold
+      ok(s"/api/v1/query?query=${enc(sel)}") // reads the collection's time span once
+      for (path <- Seq(s"/api/v1/query_range?query=${enc(s"rate($sel[5m])")}$grid",
+                       s"/api/v1/query_range?query=${enc(sel)}$grid",
+                       s"/api/v1/query_range?query=${enc(s"avg_over_time($sel[1h])")}$grid",
+                       s"/api/v1/query?query=${enc(s"increase($sel[1h])")}&time=1704160800",
+                       s"/api/v1/query?query=${enc(sel)}",
+                       s"/api/v1/series?match[]=${enc(sel)}&match[]=${enc("""events{event_type=~"cli"}""")}"))
+        assert(started(ok(path)) === ((0, 0)), path)
+      val (sqls, jobs) = started(ok(s"/api/v1/query_range?query=${enc(s"sum by (event_type) (rate($sel[5m]))")}$grid"))
+      assert(sqls >= 1 && jobs >= 1, (sqls, jobs))
+    } finally {
+      api.stop()
       cached.unpersist(blocking = true)
     }
   }
