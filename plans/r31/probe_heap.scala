@@ -45,8 +45,7 @@ val shapes = (
   else panels.map(_ -> false) ++ Seq(s"rate($sel[5m])", s"increase($sel[1h])").map(_ -> true))
 def ms(t: Long): Double = (System.nanoTime - t) / 1e6
 def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-def md5(s: String): String = java.security.MessageDigest.getInstance("MD5")
-  .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+def md5(s: String): String = java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 for ((q, instant) <- shapes) {
   def once(): (Double, Double, String) = {
     val t0 = System.nanoTime

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, MapType, StringType, S
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.operators.{Grid, Resample, Selector}
+import graft.operators.{Grid, Resample}
 import graft.promql.Eval
 
 /** The engine facade — the Spark-native analogue of the reference's
@@ -101,7 +101,7 @@ final class PromEngine private (val collection: DataFrame, val queryStartTime: O
     * it: internal rows (labels, points: array<struct<ts, value: double>>),
     * ts in the query time frame ([[Eval.seriesRows]]). A served plain
     * panel comes straight from the fold's heap rows; anything else is
-    * collected from [[Eval.runSeries]]'s frame. */
+    * collected from its series-form frame. */
   def rangeRows(query: String, start: Double, end: Double, step: Double): Array[InternalRow] =
     edge(Eval.seriesRows(ctx, query, rangeGrid(start, end, step)))
 
@@ -172,24 +172,16 @@ final class PromEngine private (val collection: DataFrame, val queryStartTime: O
       .map(_.getMap[String, String](0).toMap).toSeq
 
   /** The label map of every series whose labels satisfy `predicate` (a
-    * condition on the `labels` column, e.g. ORed
-    * [[graft.operators.Selector.predicate]]s). A served engine filters the
-    * fold's local relation; otherwise the samples are filtered and
-    * grouped. */
+    * condition on the `labels` column, e.g.
+    * [[graft.operators.Selector.anyOf]] the selectors of
+    * `/api/v1/series`). A served engine filters the fold's heap rows
+    * ([[graft.operators.Resample.Folded.where]]), with no Spark query;
+    * otherwise the samples are filtered and grouped. */
   def seriesMatching(predicate: Column): Seq[Map[String, String]] = folded match {
-    case Some(f) => f.rows.filter(predicate).select(col(Model.LabelsCol)).collect()
-      .map(_.getMap[String, String](0).toMap).toSeq
+    case Some(f) =>
+      val labels = f.rows.schema.fieldIndex(Model.LabelsCol)
+      f.where(predicate).map(r => Model.labelPairs(r.getMap(labels)).toMap).toSeq
     case None => seriesLabels(collection.filter(predicate))
-  }
-
-  /** The label map of every series matched by any of `selectors`, each a
-    * plain selector's matchers ([[graft.operators.Selector.anyOf]]): what
-    * `/api/v1/series` answers. A served engine filters the fold's heap
-    * rows, with no Spark query; otherwise the same condition filters the
-    * samples and groups them. */
-  def seriesMatching(selectors: Seq[Seq[Selector.Matcher]]): Seq[Map[String, String]] = folded match {
-    case Some(f) => f.matching(selectors)
-    case None => seriesLabels(collection.filter(Selector.anyOf(selectors)))
   }
 
   /** Sorted distinct label names (timeseries.rs:459-476). */

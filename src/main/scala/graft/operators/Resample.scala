@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftExpr, GraftPlan}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -124,12 +126,12 @@ object Resample {
     *
     * A plain panel or instant, a range kernel over one selector's series,
     * is evaluated straight from those heap rows ([[points]]): the
-    * selector's matcher conditions ([[Selector.condition]]) and the
-    * [[RangeKernel]] expression are bound to the fold's row layout per
-    * request, the rows filtered and the kernel evaluated, with no Dataset
-    * and no Spark query. The same `compute` runs when Spark evaluates the
-    * kernel, so the points are bit-identical to [[seriesPoints]] over
-    * [[rows]]. Binding per request leaves no interpreted `RLike` state
+    * selector's matcher conditions ([[Selector.allOf]], through
+    * [[where]]) and the [[RangeKernel]] expression are bound to the fold's
+    * row layout per request, the rows filtered and the kernel evaluated,
+    * with no Dataset and no Spark query. The same `compute` runs when
+    * Spark evaluates the kernel, so the points are bit-identical to
+    * [[seriesPoints]] over [[rows]]. Binding per request leaves no interpreted `RLike` state
     * shared between threads.
     *
     * [[rows]] serves the same heap rows as a `LocalRelation` for every
@@ -146,7 +148,8 @@ object Resample {
     *
     * Selecting a series here selects all of its samples, so
     * `Selector.select(rows, ms)` equals `series(Selector.select(collection, ms))`
-    * row for row. [[labels]] is every series' label map, collected once. */
+    * row for row, and [[where]] over the heap rows keeps the same series.
+    * [[labels]] is every series' label map, collected once. */
   final class Folded(collection: DataFrame) {
     private lazy val (schema, data): (StructType, Array[InternalRow]) = {
       val fold = series(collection)
@@ -166,9 +169,23 @@ object Resample {
       BoundReference(i, schema(i).dataType, schema(i).nullable)
     }
 
-    /** The heap rows whose label map satisfies `cond`, bound per call. */
-    private def where(cond: Expression => Expression): Iterator[InternalRow] = {
-      val p = cond(ref(Model.LabelsCol))
+    /** The heap rows whose label map satisfies `cond`, a condition on the
+      * `labels` column ([[Selector.allOf]], [[Selector.anyOf]]), bound to
+      * the rows' layout per call: the `labels` attribute becomes the
+      * rows' label-map field. A condition that still needs Spark to
+      * resolve it (a function called by name, such as a `Column`'s `||`)
+      * is analyzed over [[rows]] instead; either way nothing is optimized
+      * or executed, and no bound expression is shared between calls. */
+    private[graft] def where(cond: Column): Iterator[InternalRow] = {
+      val labels = ref(Model.LabelsCol)
+      val bound = GraftExpr.expression(cond).transform {
+        case a: UnresolvedAttribute if a.nameParts == Seq(Model.LabelsCol) => labels
+      }
+      val evaluable = bound.resolved && !bound.exists(_.isInstanceOf[Unevaluable])
+      val p = if (evaluable) bound else rows.filter(cond).queryExecution.analyzed match {
+        case Filter(c, child) => BindReferences.bindReference(c, child.output)
+        case other => throw new IllegalStateException(s"not a filter: $other")
+      }
       data.iterator.filter(r => p.eval(r) == true)
     }
 
@@ -179,16 +196,9 @@ object Resample {
                range: Double, offset: Double): SeriesRows = {
       val kernel = RangeKernel(ref(Model.TsCol), ref("v"), fn, grid.start, grid.step, grid.length, range, offset)
       val (skey, labels) = (ref(Model.SkeyCol).ordinal, ref(Model.LabelsCol).ordinal)
-      val out = where(Selector.allOf(_, matchers))
+      val out = where(Selector.allOf(matchers))
         .map(r => InternalRow(r.getUTF8String(skey), r.getMap(labels), kernel.eval(r))).toArray
       SeriesRows(out, valueType(kernel.dataType))
-    }
-
-    /** The label map of every series matched by any of `selectors`
-      * ([[Selector.anyOf]]), from the heap rows. */
-    def matching(selectors: Seq[Seq[Selector.Matcher]]): Seq[Map[String, String]] = {
-      val labels = ref(Model.LabelsCol).ordinal
-      where(Selector.anyOf(_, selectors)).map(r => Model.labelPairs(r.getMap(labels)).toMap).toSeq
     }
   }
 

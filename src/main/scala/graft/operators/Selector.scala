@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftExpr}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, GetMapValue, Literal, Not, Or, RLike}
-import org.apache.spark.sql.functions._
 
 import graft.Model
 
@@ -11,11 +11,11 @@ import graft.Model
   * Pure Catalyst expressions over the label map — equality/`rlike` on
   * `labels[name]`, so Catalyst can push the name-equality conjunct into the
   * parquet scan when the collection is stored long-form (Spark infers the
-  * `IsNotNull` conjunct itself). One builder ([[condition]]) writes them
-  * over any label-map expression: [[predicate]] applies it to a frame's
-  * `labels` column, and a served engine's per-series fold
-  * ([[Resample.Folded]]) binds it to its heap rows' layout, so a request
-  * filters one row per series, in driver heap, with the same semantics.
+  * `IsNotNull` conjunct itself). One builder writes them over the `labels`
+  * column ([[predicate]], [[allOf]], [[anyOf]]): a frame filters on them,
+  * and a served engine's per-series fold ([[Resample.Folded.where]]) binds
+  * the same condition to its heap rows' layout, so a request filters one
+  * row per series, in driver heap, with the same semantics.
   *
   * Reference quirks preserved:
   *  - a series lacking the matched label NEVER matches, whatever the operator
@@ -38,14 +38,26 @@ object Selector {
   final case class Re(label: String, pattern: String) extends Matcher
   final case class Nre(label: String, pattern: String) extends Matcher
 
-  /** One matcher as a condition on `labels`, a label-map expression: the
-    * one definition of matcher semantics. A series lacking the label reads
+  /** One matcher as a condition on the `labels` column: the one
+    * definition of matcher semantics. A series lacking the label reads
     * `labels[name]` as null, so every operator's test is null there and a
     * filter drops the row: no separate `isNotNull` probe of the map. The
     * result is null, never false, for such a row — combine conditions only
     * with AND/OR inside a filter, never under a NOT. */
-  def condition(labels: Expression, m: Matcher): Expression = {
-    val v = GetMapValue(labels, Literal(m.label))
+  def predicate(m: Matcher): Column = GraftExpr.column(condition(m))
+
+  /** A selector: the AND of its matchers' conditions (true when it has
+    * none). */
+  def allOf(matchers: Seq[Matcher]): Column =
+    GraftExpr.column(matchers.map(condition).reduceOption(And).getOrElse(Literal(true)))
+
+  /** Series matched by any of `selectors` ([[allOf]] each): what
+    * `/api/v1/series` selects. */
+  def anyOf(selectors: Seq[Seq[Matcher]]): Column =
+    GraftExpr.column(selectors.map(s => GraftExpr.expression(allOf(s))).reduceOption(Or).getOrElse(Literal(false)))
+
+  private def condition(m: Matcher): Expression = {
+    val v = GetMapValue(UnresolvedAttribute(Seq(Model.LabelsCol)), Literal(m.label))
     m match {
       case Eq(_, x) => EqualTo(v, Literal(x))
       case Ne(_, x) => Not(EqualTo(v, Literal(x)))
@@ -54,28 +66,10 @@ object Selector {
     }
   }
 
-  /** A selector: the AND of its matchers' conditions (true when it has
-    * none). */
-  def allOf(labels: Expression, matchers: Seq[Matcher]): Expression =
-    matchers.map(condition(labels, _)).reduceOption(And).getOrElse(Literal(true))
-
-  /** Series matched by any of `selectors` ([[allOf]] each): what
-    * `/api/v1/series` selects. */
-  def anyOf(labels: Expression, selectors: Seq[Seq[Matcher]]): Expression =
-    selectors.map(allOf(labels, _)).reduceOption(Or).getOrElse(Literal(false))
-
-  /** One matcher as a filter condition on the `labels` column. */
-  def predicate(m: Matcher): Column = GraftExpr.column(condition(labelsCol, m))
-
-  /** [[anyOf]] as a filter condition on the `labels` column. */
-  def anyOf(selectors: Seq[Seq[Matcher]]): Column = GraftExpr.column(anyOf(labelsCol, selectors))
-
-  private def labelsCol: Expression = GraftExpr.expression(col(Model.LabelsCol))
-
   /** One `Filter`: [[allOf]] the matchers (null where a label is
     * missing, so such a row is dropped), none when there are none. */
   def select(df: DataFrame, matchers: Seq[Matcher]): DataFrame =
-    if (matchers.isEmpty) df else df.filter(GraftExpr.column(allOf(labelsCol, matchers)))
+    if (matchers.isEmpty) df else df.filter(allOf(matchers))
 
   /** Metric-name selector (reference timeseries.rs:447). */
   def byName(df: DataFrame, name: String): DataFrame =

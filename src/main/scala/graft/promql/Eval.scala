@@ -16,8 +16,8 @@ import graft.sources.RollupStore
   *
   * One evaluation, two shapes at the edge: [[run]] returns the long
   * (skey, labels, ts, value) rows the gates and oracles compare, and
-  * [[runSeries]] the same result one row per series, as the range kernel
-  * leaves it, for the HTTP writer; [[seriesRows]] is that result as rows.
+  * [[seriesRows]] the same result one row per series, as the range kernel
+  * leaves it, for the HTTP writer.
   * A range kernel's result builds its long form only when something
   * reads it (an aggregation, a binary operator, `topk`, `@`, [[run]]);
   * see [[Processed]]. On a served engine a range kernel over a plain
@@ -118,19 +118,16 @@ object Eval {
 
   def run(ctx: Ctx, query: String, grid: Grid): DataFrame = long(evaluate(ctx, query, grid))
 
-  /** Evaluate `query` like [[run]], one row per series: (skey, labels,
-    * points: array<struct<ts, value>>), points in ts order. A range
-    * kernel's result keeps the kernel's rows unexploded; a result that is
-    * long already (an aggregation, a rollup read, a per-step scalar) gives
-    * one single-point row per sample, which the writer groups on its label
-    * map. A series whose kernel emits no point has an empty `points`. */
-  def runSeries(ctx: Ctx, query: String, grid: Grid): DataFrame = seriesFrame(evaluate(ctx, query, grid))
-
-  /** [[runSeries]]'s rows, (skey, labels, points), with the type of a
-    * point's value. A range kernel over a served selector's series comes
-    * straight from the fold's heap rows: no Dataset, no Catalyst planning,
-    * no Spark query. Any other result is [[runSeries]]'s frame, collected
-    * as internal rows. */
+  /** Evaluate `query` like [[run]], one row per series, in driver heap:
+    * (skey, labels, points: array<struct<ts, value>>), points in ts
+    * order, with the type of a point's value. A range kernel over a
+    * served selector's series comes straight from the fold's heap rows:
+    * no Dataset, no Catalyst planning, no Spark query. Any other range
+    * kernel's result keeps the kernel's rows unexploded and is collected
+    * as internal rows; a result that is long already (an aggregation, a
+    * rollup read, a per-step scalar) gives one single-point row per
+    * sample, which the writer groups on its label map. A series whose
+    * kernel emits no point has an empty `points`. */
   def seriesRows(ctx: Ctx, query: String, grid: Grid): Resample.SeriesRows =
     evaluate(ctx, query, grid) match {
       case p: Processed if p.heap.isDefined => p.heap.get()

@@ -158,7 +158,7 @@ final class PromApi(engine: PromEngine, port: Int = 3003) {
           case _ => throw new IllegalArgumentException(s"not a plain selector: $sel")
         }
       }
-      val sets = engine.seriesMatching(selectors)
+      val sets = engine.seriesMatching(graft.operators.Selector.anyOf(selectors))
         .map(_.toSeq.sorted).sortBy(_.mkString(",")).map { labels =>
           labels.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
             .mkString("{", ", ", "}")

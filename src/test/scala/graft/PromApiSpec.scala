@@ -465,6 +465,8 @@ class PromApiSpec extends SparkSpec {
   }
 
   test("served engine over HTTP: panels, instants and series start no SQL execution") {
+    // built before the cache(), which would make it served too
+    val unserved = new PromEngine(queries.TsQueries.events(spark, "/root/testdata/sf0.001"))
     val cached = queries.TsQueries.events(spark, "/root/testdata/sf0.001").cache()
     cached.count()
     val engine = new PromEngine(cached)
@@ -505,6 +507,20 @@ class PromApiSpec extends SparkSpec {
         assert(started(ok(path)) === ((0, 0)), path)
       val (sqls, jobs) = started(ok(s"/api/v1/query_range?query=${enc(s"sum by (event_type) (rate($sel[5m]))")}$grid"))
       assert(sqls >= 1 && jobs >= 1, (sqls, jobs))
+      // the heap-served /api/v1/series answers what an unserved engine
+      // answers, a series matched by two selectors listed once
+      assert(engine.served && !unserved.served)
+      val plain = PromApi(unserved, port = 0).start()
+      try {
+        for (ms <- Seq(Seq(sel, """events{event_type=~"purchase|click"}"""),
+                       Seq("""events{event_type!="view"}""", """events{props!~": 1"}"""),
+                       Seq("""{props=~": 3"}"""))) {
+          val path = "/api/v1/series?" + ms.map(m => s"match[]=${enc(m)}").mkString("&")
+          val (code, body) = get(api.boundPort, path)
+          assert(code == 200 && body.contains("\"__name__\""), s"$path: ${body.take(300)}")
+          assert(get(plain.boundPort, path) === ((code, body)), path)
+        }
+      } finally plain.stop()
     } finally {
       api.stop()
       cached.unpersist(blocking = true)

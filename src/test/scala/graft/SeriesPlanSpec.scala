@@ -114,8 +114,11 @@ class SeriesPlanSpec extends SparkSpec {
     assert(fillJobs === 1)
     assert(fillPlans.last.isInstanceOf[LocalTableScanExec], fillPlans.last)
     assert(Harness.run(spark)(engine.allLabels()).jobs === 0)
-    zeroJob("seriesMatching")(engine.seriesMatching(
-      Selector.predicate(Selector.Eq("host", "h1"))))
+    // /api/v1/series binds its condition to the fold's heap rows: not even
+    // a local scan, no SQL execution at all
+    val (seriesJobs, seriesPlans) = traced(assert(engine.seriesMatching(
+      Selector.predicate(Selector.Eq("host", "h1"))).length === 2))
+    assert(seriesJobs === 0 && seriesPlans.isEmpty, seriesPlans)
     val panels = Seq("""rate(m{host="h1"}[5m])""", """m{host="h1"}""", """irate(m{host="h1"}[5m])""",
       """increase(m{host="h1"}[1h])""", """avg_over_time(m{host="h1"}[1h])""")
     for (q <- panels) {

@@ -90,6 +90,46 @@ class ServedEngineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(got.length === got.distinct.length && got.nonEmpty)
   }
 
+  test("served seriesMatching over the heap rows equals the unserved answer for /api/v1/series' conditions") {
+    import Selector.{Eq, Ne, Nre, Re}
+    import org.apache.spark.sql.catalyst.rules.RuleExecutor
+    val name = Eq(Model.NameLabel, "events")
+    served.seriesLabels() // fills the fold
+    for (selectors <- Seq(
+           Seq(Seq(name, Eq("event_type", "purchase")), Seq(name, Re("event_type", "purchase|click"))),
+           Seq(Seq(name, Ne("event_type", "view")), Seq(name, Nre("props", ": 1"))),
+           Seq(Seq(Re("props", ": 3")), Seq(Eq("absent", "x"))))) {
+      val p = Selector.anyOf(selectors)
+      // Selector's conditions bind to the heap rows as they are: no
+      // Catalyst rule runs, not even the analyzer's
+      val rules = RuleExecutor.getCurrentMetrics().numRuns
+      val got = served.seriesMatching(p)
+      assert(RuleExecutor.getCurrentMetrics().numRuns === rules, selectors)
+      assert(got.nonEmpty && got.length === got.distinct.length, selectors)
+      assert(got.toSet === unserved.seriesMatching(p).toSet, selectors)
+    }
+    // a condition Spark still resolves (an extraction, a function by name)
+    val p = col(Model.LabelsCol)("event_type") === "click" && length(col(Model.LabelsCol)("props")) > 4
+    assert(served.seriesMatching(p).toSet === unserved.seriesMatching(p).toSet)
+  }
+
+  test("served plain panels and instants in series form run no Catalyst rule per request") {
+    import org.apache.spark.sql.catalyst.rules.RuleExecutor
+    val start = 1704153600.0
+    val sel = """events{event_type=~"purchase|click", props!~": 1"}"""
+    def rules(body: => Any): Long = {
+      val before = RuleExecutor.getCurrentMetrics().numRuns
+      body
+      RuleExecutor.getCurrentMetrics().numRuns - before
+    }
+    served.rangeRows(sel, start, start + 3600.0, 300.0) // fills the fold, builds the keyed frame
+    for (q <- Seq(sel, s"rate($sel[5m])", s"avg_over_time($sel[1h])")) {
+      assert(rules(assert(served.rangeRows(q, start, start + 6 * 3600.0, 300.0).nonEmpty, q)) === 0, q)
+      assert(rules(assert(served.instantRows(q, start + 3600.0).nonEmpty, q)) === 0, q)
+    }
+    assert(rules(served.rangeRows(s"sum by (event_type) (rate($sel[5m]))", start, start + 3600.0, 300.0)) > 0)
+  }
+
   test("one fold per collection: derived engines share it; construction runs no job") {
     val base = queries.TsQueries.events(spark, Dir).filter(col(Model.ValueCol) >= 0).cache()
     base.count()
